@@ -24,8 +24,11 @@ import json
 import os
 import re
 import shutil
+import threading
 import time
 from dataclasses import dataclass, field
+
+import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +40,7 @@ from fusionspark.operators.context import pack_context
 from fusionspark.operators.embedder import embed_texts, mock_embed
 from fusionspark.operators.keyword import keyword_search
 from fusionspark.operators.knn import knn
+from fusionspark.operators.serving import ResidentIndex, Snapshot, block_filter, fits_driver
 
 
 @dataclass
@@ -53,6 +57,10 @@ _ROW_SCHEMA = (
     "id string, vector array<float>, content string, "
     "metadata map<string,string>, tenant_id string, ts long, ttl_ms long"
 )
+
+
+def _hits(rows) -> list[dict]:
+    return [{k: r[k] for k in ("id", "score", "distance", "rank")} for r in rows]
 
 
 class FusionSparkEngine:
@@ -80,10 +88,12 @@ class FusionSparkEngine:
         if os.path.exists(self._catalog_path):
             with open(self._catalog_path) as f:
                 self._catalog = json.load(f)
-        # collection -> {"idx": ResidentIndex, "at_mutation": int};
-        # process-local by design (like the reference's in-memory graph)
+        # process-local (like the reference's in-memory graph): a Snapshot,
+        # or above its size limit {"idx": ResidentIndex, "at_mutation": tok}
+        self._snapshots: dict[str, Snapshot] = {}
         self._resident: dict[str, dict] = {}
         self._resident_ivf: dict[str, dict] = {}
+        self._locks: dict[str, threading.RLock] = {}  # writes, mirrors, rebuilds
 
     # ── collections (S1-S6) ───────────────────────────────────────────────
 
@@ -125,6 +135,7 @@ class FusionSparkEngine:
         return out
 
     def drop_collection(self, name: str) -> bool:
+        self.unload_resident(name)  # a re-created name restarts its token
         cfg = self._catalog.pop(name, None)
         self._save_catalog()
         if cfg and cfg.get("external_delta"):
@@ -193,17 +204,32 @@ class FusionSparkEngine:
             return self._table(collection).read()
         return self.spark.read.parquet(self._path(collection))
 
-    def _append(self, collection: str, df: DataFrame) -> None:
-        if self.storage == "manifest":
-            from fusionspark.storage import ManifestTable
+    def _lock(self, collection: str) -> threading.RLock:
+        return self._locks.setdefault(collection, threading.RLock())
 
-            t = self._table(collection)
-            if not t.exists():
-                ManifestTable.create(self.spark, self._path(collection), df.schema)
-            t.append(df)
-        else:
-            df.write.mode("append").parquet(self._path(collection))
-        self._bump(collection)
+    def _write(self, collection: str, store, mirror) -> None:
+        """Run the storage write `store()` under the collection lock; a
+        snapshot fresh before it becomes `mirror(snapshot)` at the new token."""
+        with self._lock(collection):
+            cfg = self._catalog.get(collection) or {}
+            snap = self._snapshots.get(collection)
+            fresh = snap is not None and snap.token == self._mutation_token(cfg)
+            store()
+            if fresh:
+                self._snapshots[collection] = mirror(snap).at(self._mutation_token(cfg))
+
+    def _append(self, collection: str, df: DataFrame) -> None:
+        with self._lock(collection):
+            if self.storage == "manifest":
+                from fusionspark.storage import ManifestTable
+
+                t = self._table(collection)
+                if not t.exists():
+                    ManifestTable.create(self.spark, self._path(collection), df.schema)
+                t.append(df)
+            else:
+                df.write.mode("append").parquet(self._path(collection))
+            self._bump(collection)
 
     # ── mutation (S2, S4) ─────────────────────────────────────────────────
 
@@ -267,46 +293,42 @@ class FusionSparkEngine:
         hit = None
         if replace:
             groups: dict[str | None, list[str]] = {}
-            for e in entries:
-                groups.setdefault(e.get("tenant_id", tenant_id), []).append(
-                    str(e["id"])
-                )
+            for r in rows:
+                groups.setdefault(r[4], []).append(r[0])
             for t, ids in groups.items():
                 p = F.col("id").isin(ids) & F.col("tenant_id").eqNullSafe(F.lit(t))
                 hit = p if hit is None else hit | p
-        if hit is not None and self.storage == "manifest":
-            table = self._table(collection)
-            if table.exists():
-                table.upsert(df, hit)
-                self._bump(collection)
-                return len(rows)
-        elif hit is not None:
-            try:
-                collides = (
-                    self._load(collection).filter(hit).limit(1).count()
-                ) > 0
-            except Exception:  # noqa: BLE001 — collection not yet written
-                collides = False
-            if collides:
-                keep = self._load(collection).filter(
-                    ~F.coalesce(hit, F.lit(False))
-                )
-                self._rewrite(collection, keep.unionByName(df))
-                return len(rows)
-        self._append(collection, df)
-        # incremental resident maintenance: a raw append mirrors exactly
-        # into a loaded-and-fresh resident index (new blocks only — the
-        # reference's one-vector-at-a-time in-memory insert,
-        # HNSWIndex.js:126-180), keeping serve-many latency flat across
-        # ingest.  Any failure (e.g. a surrogate collision on string ids)
-        # just leaves the index stale → search falls back to exact.
-        ent = self._resident.get(collection)
-        if ent is not None and ent["at_mutation"] == cfg.get("mutations", 1) - 1:
-            try:
-                ent["idx"] = ent["idx"].append(df)
-                ent["at_mutation"] = cfg["mutations"]
-            except Exception:  # noqa: BLE001 — stale fallback is the contract
-                pass
+
+        def store() -> None:
+            if hit is not None and self.storage == "manifest":
+                table = self._table(collection)
+                if table.exists():
+                    table.upsert(df, hit)
+                    return self._bump(collection)
+            elif hit is not None:
+                try:
+                    collides = (
+                        self._load(collection).filter(hit).limit(1).count()
+                    ) > 0
+                except Exception:  # noqa: BLE001 — collection not yet written
+                    collides = False
+                if collides:
+                    keep = self._load(collection).filter(
+                        ~F.coalesce(hit, F.lit(False))
+                    )
+                    return self._rewrite(collection, keep.unionByName(df))
+            self._append(collection, df)
+            # a raw append extends fresh ResidentIndex blocks (HNSWIndex.js:
+            # 126-180); any failure leaves them stale → exact fallback
+            ent = self._resident.get(collection)
+            if ent is not None and ent["at_mutation"] == cfg.get("mutations", 1) - 1:
+                try:
+                    ent["idx"] = ent["idx"].append(df)
+                    ent["at_mutation"] = cfg["mutations"]
+                except Exception:  # noqa: BLE001 — stale fallback is the contract
+                    pass
+
+        self._write(collection, store, lambda snap: snap.upsert(rows, replace))
         return len(rows)
 
     def _rewrite(self, collection: str, keep: DataFrame) -> None:
@@ -316,21 +338,22 @@ class FusionSparkEngine:
         catalog still lists it.  In manifest mode the swap is the commit
         protocol itself: staged files + atomic versioned manifest, safe for
         concurrent writers (storage/manifest.py)."""
-        self._bump(collection)
-        if self.storage == "manifest":
-            self._table(collection).overwrite(keep)
-            return
-        live = self._path(collection)
-        tmp, old = live + ".tmp", live + ".old"
-        keep.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(live, old)
-        try:
-            os.rename(tmp, live)
-        except OSError:
-            os.rename(old, live)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
+        with self._lock(collection):
+            self._bump(collection)
+            if self.storage == "manifest":
+                self._table(collection).overwrite(keep)
+                return
+            live = self._path(collection)
+            tmp, old = live + ".tmp", live + ".old"
+            keep.write.mode("overwrite").parquet(tmp)
+            shutil.rmtree(old, ignore_errors=True)
+            os.rename(live, old)
+            try:
+                os.rename(tmp, live)
+            except OSError:
+                os.rename(old, live)
+                raise
+            shutil.rmtree(old, ignore_errors=True)
 
     def delete(
         self, collection: str, ids: list[str], tenant_id: str | None = None
@@ -344,12 +367,17 @@ class FusionSparkEngine:
         hit = F.col("id").isin([str(i) for i in ids])
         if tenant_id is not None:
             hit = hit & F.col("tenant_id").eqNullSafe(tenant_id)
-        if self.storage == "manifest":
-            # file-level copy-on-write: only files containing hits rewrite
-            self._table(collection).delete_where(hit)
-            self._bump(collection)
-            return
-        self._rewrite(collection, self._load(collection).filter(~hit))
+        self._delete_where(collection, hit, lambda s: s.delete(ids, tenant_id))
+
+    def _delete_where(self, collection: str, hit, mirror) -> None:
+        def store() -> None:
+            if self.storage == "manifest":
+                # file-level copy-on-write: only files containing hits rewrite
+                self._table(collection).delete_where(hit)
+                return self._bump(collection)
+            self._rewrite(collection, self._load(collection).filter(~hit))
+
+        self._write(collection, store, mirror)
 
     def _bump(self, collection: str) -> None:
         """Mutation counter: an IVF index built at an older count is stale
@@ -416,8 +444,6 @@ class FusionSparkEngine:
             "built_at": int(time.time() * 1000),
         }
         if pq:
-            import numpy as np
-
             from fusionspark.operators.ann import pq_codebooks_lloyd, pq_encode
 
             cbs = pq_codebooks_lloyd(
@@ -462,50 +488,55 @@ class FusionSparkEngine:
     # ── resident serving (build once, search many) ────────────────────────
 
     def load_resident(self, collection: str) -> dict:
-        """Build (or rebuild) the in-memory resident block index for the
-        collection — the serving analogue of the reference holding its HNSW
-        graph in process for the engine's lifetime (HNSWIndex.js:245-320):
-        build once, then search(resident=True) scores cached numpy blocks
-        instead of scanning the table per query.  tenant_id/ts/ttl_ms/
-        metadata are materialized into the blocks, so the resident path
-        applies the SAME pre-filter semantics as the exact path (V7),
-        inside each block.  Any mutation bumps cfg['mutations']; a stale
-        resident index falls back to exact at search time — never a silent
-        wrong answer.  Note: ids are namespaced per tenant, so one id may
-        legitimately appear on several rows; the resident path returns
-        each matching row, exactly like the exact scan."""
-        from fusionspark.operators.serving import ResidentIndex
-
+        """Build (or rebuild) the collection's resident copy, as the reference
+        holds its HNSW graph in process (HNSWIndex.js:245-320).  If
+        rows × dim × 8 bytes fit SNAPSHOT_MEM_FRACTION of the driver host's
+        MemAvailable, one Arrow pass makes a driver `Snapshot` (ids, float64
+        matrix, ts/ttl_ms, categorical tenant and metadata columns): resident
+        search then runs in numpy with no Spark job, pre-filters as
+        vectorised masks, distance ties by real id.  Freshness: insert,
+        upsert, delete and forget mirror into it under the collection lock;
+        any other token change (ingest, imports, external Delta commits)
+        makes the next search(resident=True) rebuild it in place, while
+        search_many raises.  Larger collections keep `ResidentIndex` blocks
+        in the Python workers (string-id ties in hash order; stale → exact)."""
         cfg = self._catalog[collection]
-        # token BEFORE the read (see build_index): a mid-build external
-        # commit must leave the cache stale, not stamp it fresh
-        tok = self._mutation_token(cfg)
-        idx = ResidentIndex.build(
-            self._load(collection), id_col="id", vector_col="vector",
-            metric=cfg["metric"],
-            attr_cols=("tenant_id", "ts", "ttl_ms", "metadata"),
-        )
-        old = self._resident.pop(collection, None)
-        if old is not None:
-            old["idx"].unpersist()
-        self._resident[collection] = {
-            "idx": idx,
-            "at_mutation": tok,
-        }
-        return {
-            "collection": collection,
-            "blocks": sum(p.getNumPartitions() for p in idx._parts),
-            "at_mutation": tok,
-        }
+        with self._lock(collection):
+            # token BEFORE the read (see build_index): a mid-build external
+            # commit must leave the cache stale, not stamp it fresh
+            tok = self._mutation_token(cfg)
+            df = self._load(collection)
+            if fits_driver(df.count(), cfg["dimensions"]):
+                snap = Snapshot.load(df, cfg["metric"], cfg["dimensions"], tok)
+                self._snapshots[collection] = snap  # readers swap over whole
+                self._unload_blocks(collection)
+                return {"collection": collection, "mode": "snapshot",
+                        "blocks": 1, "rows": len(snap), "at_mutation": tok}
+            idx = ResidentIndex.build(
+                df, id_col="id", vector_col="vector", metric=cfg["metric"],
+                attr_cols=("tenant_id", "ts", "ttl_ms", "metadata"),
+            )
+            self._snapshots.pop(collection, None)
+            self._unload_blocks(collection)
+            self._resident[collection] = {"idx": idx, "at_mutation": tok}
+            return {
+                "collection": collection, "mode": "blocks",
+                "blocks": sum(p.getNumPartitions() for p in idx._parts),
+                "at_mutation": tok,
+            }
 
     def unload_resident(self, collection: str) -> None:
-        """Release the collection's resident blocks (no-op if not loaded)."""
-        ent = self._resident.pop(collection, None)
-        if ent is not None:
-            ent["idx"].unpersist()
+        """Release the collection's resident copies (no-op if not loaded)."""
+        self._snapshots.pop(collection, None)
+        self._unload_blocks(collection)
         ivf = self._resident_ivf.pop(collection, None)
         if ivf is not None:
             ivf["idx"].unpersist()
+
+    def _unload_blocks(self, collection: str) -> None:
+        ent = self._resident.pop(collection, None)
+        if ent is not None:
+            ent["idx"].unpersist()
 
     def load_resident_ivf(
         self, collection: str, n_centroids: int | None = None
@@ -542,7 +573,17 @@ class FusionSparkEngine:
             "at_mutation": tok,
         }
 
-    def _resident_fresh(self, collection: str, cfg: dict):
+    def _resident_fresh(self, collection: str, cfg: dict, rebuild=False):
+        """The fresh Snapshot or ResidentIndex, else None; rebuild=True first
+        reloads a stale snapshot (once, however many searches find it)."""
+        snap = self._snapshots.get(collection)
+        if rebuild and snap is not None and snap.token != self._mutation_token(cfg):
+            with self._lock(collection):
+                if self._snapshots.get(collection) is snap:
+                    self.load_resident(collection)
+        snap = self._snapshots.get(collection)
+        if snap is not None and snap.token == self._mutation_token(cfg):
+            return snap
         ent = self._resident.get(collection)
         if ent is not None and ent["at_mutation"] == self._mutation_token(cfg):
             return ent["idx"]
@@ -607,10 +648,11 @@ class FusionSparkEngine:
         """§3.1: exact top-k with PRE-filtering (better recall than the
         reference's post-filter, SURVEY V7).  approximate=True searches a
         fresh build_index() IVF layout instead (partition-pruned scan, same
-        pre-filter semantics); resident=True searches a fresh
-        load_resident() block index (exact distances, no per-query table
-        scan — the serve-many path).  A stale or missing index either way
-        falls back to exact — never a silent wrong answer."""
+        pre-filter semantics).  resident=True searches the load_resident()
+        copy: a driver Snapshot (no Spark job; ties by real id; rebuilt in
+        place first if stale) or, above its size limit, ResidentIndex
+        blocks.  A missing copy or a stale index falls back to exact —
+        never a silent wrong answer."""
         cfg = self._catalog[collection]
         if query_vector is None:
             query_vector = self.embedder(query_text or "", cfg["dimensions"])
@@ -628,7 +670,6 @@ class FusionSparkEngine:
                     else:
                         conds.append(F.col("metadata").getItem(k) == str(v))
             # TTL lazy expiry (P4)
-            now = int(time.time() * 1000)
             conds.append(
                 (F.col("ttl_ms") == 0) | (F.lit(now) - F.col("ts") < F.col("ttl_ms"))
             )
@@ -637,52 +678,23 @@ class FusionSparkEngine:
                 pred = pred & c
             return pred
 
+        now = int(time.time() * 1000)
+        ridx = self._resident_fresh(collection, cfg, rebuild=True) if resident else None
+        if isinstance(ridx, Snapshot):
+            # a float32 probe, like the exact path's array<float> one
+            D, I = ridx.topk(np.asarray([query_vector], np.float32), top_k,
+                             ridx.attrs.mask(tenant_id, metadata_filter, now))
+            return [{"id": i, "score": 1.0 - d, "distance": d, "rank": r}
+                    for r, (d, i) in enumerate(zip(D[0].tolist(), I[0]), 1)]
         probes = self.spark.createDataFrame(
             [("q0", [float(x) for x in query_vector])],
             "probe_id: string, probe_embedding: array<float>",
         )
-        if resident:
-            ridx = self._resident_fresh(collection, cfg)
-            if ridx is not None:
-                import numpy as np
-
-                now = int(time.time() * 1000)
-                mf = metadata_filter or {}
-
-                def pre(ids, attrs):
-                    ts = np.asarray(attrs["ts"], dtype=np.int64)
-                    ttl = np.asarray(attrs["ttl_ms"], dtype=np.int64)
-                    mask = (ttl == 0) | (now - ts < ttl)
-                    if tenant_id is not None:
-                        mask &= np.asarray(
-                            [t == tenant_id for t in attrs["tenant_id"]]
-                        )
-                    for mk, mv in mf.items():
-                        if isinstance(mv, (list, tuple)):
-                            allowed = {str(x) for x in mv}
-                            mask &= np.asarray(
-                                [(m or {}).get(mk) in allowed
-                                 for m in attrs["metadata"]]
-                            )
-                        else:
-                            mask &= np.asarray(
-                                [(m or {}).get(mk) == str(mv)
-                                 for m in attrs["metadata"]]
-                            )
-                    return mask
-
-                out = ridx.search(
-                    probes, k=top_k, pre_filter=pre, merge="driver"
-                )
-                # the string-id decode join loses row order; rank carries it
-                return sorted(
-                    (
-                        {"id": r["id"], "score": r["score"],
-                         "distance": r["distance"], "rank": r["rank"]}
-                        for r in out.collect()
-                    ),
-                    key=lambda h: h["rank"],
-                )
+        if ridx is not None:
+            out = ridx.search(probes, k=top_k, merge="driver", pre_filter=(
+                block_filter(tenant_id, metadata_filter, now)))
+            # the string-id decode join loses row order; rank carries it
+            return _hits(sorted(out.collect(), key=lambda r: r["rank"]))
         if approximate and cfg["metric"] == "cosine" and self._index_fresh(cfg):
             from fusionspark.operators.ann import ivf_search_persisted
 
@@ -703,10 +715,7 @@ class FusionSparkEngine:
             df, probes, k=top_k, metric=cfg["metric"],
             vector_col="vector", id_col="id",
         )
-        return [
-            {"id": r["id"], "score": r["score"], "distance": r["distance"], "rank": r["rank"]}
-            for r in out.collect()
-        ]
+        return _hits(out.collect())
 
     def search_many(
         self,
@@ -732,9 +741,9 @@ class FusionSparkEngine:
         tie-kept exact refine of the top `refine_r` (needs
         build_index(pq=True)).
         method="resident" (with approximate=False) = exact search over a
-        fresh load_resident() block index — the serve-many path that skips
-        the per-batch table scan; a stale or missing resident index raises
-        for the same no-silent-fallback reason.
+        fresh load_resident() copy (Snapshot: numpy on the collected probes;
+        ResidentIndex: one Spark stage), no per-batch table scan; a stale
+        or missing copy raises for the same no-silent-fallback reason.
         method="resident_ivf" = pruned search over a fresh
         load_resident_ivf() list cache (each partition GEMMs only its
         routed lists; cosine only), same staleness contract."""
@@ -779,8 +788,6 @@ class FusionSparkEngine:
                 )
             path = os.path.join(self.root, f"index={collection}")
             if method == "ivf_pq":
-                import numpy as np
-
                 from fusionspark.operators.ann import ivf_pq_search
 
                 if "pq" not in cfg["index"]:
@@ -1002,13 +1009,10 @@ class FusionSparkEngine:
         rewrite — no ids ever reach the driver, so a tenant of any size
         deletes in one distributed pass (Delta `DELETE WHERE tenant_id = ?`
         at scale).  eqNullSafe keeps untenanted rows."""
-        coll = f"_memory_{mem_type}"
-        if self.storage == "manifest":
-            self._table(coll).delete_where(F.col("tenant_id").eqNullSafe(agent_id))
-            self._bump(coll)
-            return
-        keep = self._load(coll).filter(~F.col("tenant_id").eqNullSafe(agent_id))
-        self._rewrite(coll, keep)
+        self._delete_where(
+            f"_memory_{mem_type}", F.col("tenant_id").eqNullSafe(agent_id),
+            lambda s: s.forget(agent_id),
+        )
 
     # ── RAG (§3.3) ────────────────────────────────────────────────────────
 
@@ -1231,10 +1235,6 @@ class TenantProxy:
         self.engine.delete(self.collection, ids, tenant_id=self.tenant_id)
 
 
-class _EngineExtras:
-    """Mixin-style additions kept separate for readability; bound below."""
-
-
 def collaborative_recall(
     self, agent_ids: list[str], query: str, mem_type: str = "episodic", top_k: int = 5
 ) -> dict[str, list[dict]]:
@@ -1327,10 +1327,6 @@ def import_json(self, payload: dict) -> int:
     return self.insert(name, entries) if entries else 0
 
 
-# _ROW_SCHEMA is defined above FusionSparkEngine (shared by collections and
-# the JSONL interchange paths below)
-
-
 def export_jsonl(self, collection: str, path: str) -> int:
     """S7 at scale: per-partition JSONL export — every executor serializes
     its own partition with to_json and writes directly (one line per entry,
@@ -1351,10 +1347,13 @@ def import_jsonl(self, name: str, path: str, dimensions: int = 64, metric: str =
         self.create_collection(
             name, CollectionConfig(dimensions=dimensions, metric=metric)
         )
+    # rows without ts/ttl_ms get insert()'s defaults (now, never expire)
     rows = (
         self.spark.read.text(path)
         .select(F.from_json(F.col("value"), _ROW_SCHEMA).alias("r"))
         .select("r.*")
+        .withColumn("ts", F.coalesce("ts", F.lit(int(time.time() * 1000))))
+        .withColumn("ttl_ms", F.coalesce("ttl_ms", F.lit(0).cast("long")))
     )
     self._append(name, rows)
     return rows.count()

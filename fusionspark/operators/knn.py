@@ -175,16 +175,17 @@ def _numpy_score_topk(
 ) -> DataFrame:
     """Score + partition-local top-k in one Arrow pass: the probe matrix is
     tiny (collected to the driver, shipped in the task closure); each
-    partition computes a float64 GEMM against its batch and keeps k rows per
-    probe.  Output: partitions × probes × k rows for the global window."""
+    Arrow batch keeps its exact (distance, id) top-k per probe through the
+    serving kernel (GEMM candidates, row-local re-score — so a row's
+    distance does not depend on the batch it lands in).  Output:
+    batches × probes × k rows for the global window."""
+    from fusionspark.operators.serving import _prepare, _scored_topk
+
     if pre_filter is not None:
         corpus = corpus.filter(pre_filter)
     probe_rows = probes.select(probe_id_col, probe_vector_col).collect()
-    probe_ids = [r[probe_id_col] for r in probe_rows]
+    probe_ids = np.asarray([r[probe_id_col] for r in probe_rows])
     P = np.asarray([r[probe_vector_col] for r in probe_rows], dtype=np.float64)
-    if metric == "cosine":
-        pn = np.linalg.norm(P, axis=1)
-        pn[pn == 0] = 1.0
 
     src = corpus.select(F.col(id_col), F.col(vector_col).alias("_v"))
     out_schema = (
@@ -195,52 +196,17 @@ def _numpy_score_topk(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parts: list[pd.DataFrame] = []
         for pdf in batches:
-            if not len(pdf):
+            if not len(pdf) or not len(P):
                 continue
             E = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-            if metric == "cosine":
-                en = np.linalg.norm(E, axis=1)
-                en[en == 0] = 1.0
-                dist = 1.0 - (E @ P.T) / en[:, None] / pn[None, :]
-            elif metric == "dot":
-                dist = -(E @ P.T)
-            else:  # euclidean
-                e2 = (E * E).sum(axis=1)[:, None]
-                p2 = (P * P).sum(axis=1)[None, :]
-                dist = np.sqrt(np.maximum(e2 + p2 - 2.0 * (E @ P.T), 0.0))
-            ids = pdf[id_col].to_numpy()
-            kk = min(k, dist.shape[0])
-            # vectorized per-probe top-k: one argpartition over the whole
-            # (batch × probes) distance matrix.  Boundary ties then get the
-            # documented (distance, id ASC) treatment: for the (rare)
-            # probes where rows tied with the kth distance fall OUTSIDE
-            # the cut, every tied row joins the candidate pool — the
-            # sorted head(k) below resolves by id, so a larger id can
-            # never displace a smaller one (a bare argpartition cut made
-            # bench results differ run to run with duplicate vectors)
-            idx = np.argpartition(dist, kk - 1, axis=0)[:kk]  # (kk, Q)
-            dsel = np.take_along_axis(dist, idx, axis=0)
-            flat = idx.ravel(order="F")
-            d = dsel.ravel(order="F")
-            sel_p = list(np.repeat(np.asarray(probe_ids), kk))
-            sel_i = list(ids[flat])
-            sel_d = list(d)
-            if kk < dist.shape[0]:
-                boundary = dsel.max(axis=0)
-                n_tied_total = (dist == boundary[None, :]).sum(axis=0)
-                n_tied_inside = (dsel == boundary[None, :]).sum(axis=0)
-                for qi in np.flatnonzero(n_tied_total > n_tied_inside):
-                    tied = np.flatnonzero(dist[:, qi] == boundary[qi])
-                    extra = np.setdiff1d(tied, idx[:, qi])  # not already kept
-                    sel_p.extend([probe_ids[qi]] * len(extra))
-                    sel_i.extend(ids[extra])
-                    sel_d.extend(dist[extra, qi])
-            d = np.asarray(sel_d)
+            M, v2 = _prepare(E, metric)
+            Dk, Ik = _scored_topk(P, M, pdf[id_col].to_numpy(), k, metric, v2)
+            d = Dk.ravel()
             parts.append(
                 pd.DataFrame(
                     {
-                        probe_id_col: sel_p,
-                        id_col: sel_i,
+                        probe_id_col: np.repeat(probe_ids, Dk.shape[1]),
+                        id_col: Ik.ravel(),
                         "distance": d,
                         "score": 1.0 - d,
                     }

@@ -1,46 +1,48 @@
-"""Resident distributed vector index — the serving-path peer of the
-reference's in-memory HNSW (reference src/core/HNSWIndex.js:126-320 keeps
-the whole graph in process memory; search never touches storage).
+"""Resident vector serving — the peer of the reference's in-memory HNSW
+(reference src/core/HNSWIndex.js:126-320 keeps the whole graph in process
+memory; search never touches storage).
 
-The batch `knn(strategy="numpy")` path re-ships the corpus from the JVM to
-Python workers on EVERY search (~0.35 s of Arrow conversion per call for
-100k x 64-d locally — measured, see BENCH_DETAIL).  A serving engine builds
-once and searches many: here each partition's vectors are materialized ONCE
-into a numpy block (ids + row-major float64 matrix, pre-normalized for
-cosine) and persisted as Python objects, so a search stage is exactly one
-GEMM + one top-k per block with zero serialization of corpus data.
+Two resident forms, chosen per collection by size:
 
-Scale shape (1000 executors, 100 TB):
-  * blocks live WHERE the data lives — each executor holds its partitions'
-    blocks in memory; nothing reshuffles between searches;
-  * the probe batch ships once per stage in the task binary (chunk batches
-    beyond ~10k probes);
-  * per-partition candidates are fixed-width (n_probes x k) id/distance
-    matrices; the merge is associative, so it runs either as one driver
-    reduction (interactive batches) or as `treeReduce` partial merges on
-    executors (`merge="tree"`) — the same shape Spark's own TakeOrdered
-    uses.  At 1000 partitions x 1000 probes x k=10 the driver form moves
-    160 MB; the tree form cuts that by the fan-in per level.
+* `Snapshot` — the serving form.  One Arrow `toPandas` pass copies the
+  collection into the server process: the original string ids, a float64
+  matrix (row-normalized for cosine), `ts`/`ttl_ms` as int64 and tenant
+  plus each metadata key as categorical code arrays.  A search is numpy
+  only — vectorised tenant/metadata/TTL masks, then the exact top-k below
+  — so it runs no Spark job at all.  Snapshots are immutable: a write builds
+  a new one from the old plus the rows it already holds on the driver, and
+  a reader keeps whichever reference it took, so it never sees half a
+  write.  Freshness: each snapshot carries the collection's mutation token
+  of the storage state it mirrors; the engine serves it only while the
+  token matches and rebuilds it from storage (still the source of truth)
+  when it does not.
+* `ResidentIndex` — distributed blocks for collections above the size
+  limit: `rows × dim × 8` bytes over `SNAPSHOT_MEM_FRACTION` of the driver
+  host's MemAvailable (`fits_driver`).  Each partition's vectors are
+  materialized once into a numpy block persisted in the Python workers, so
+  a search is one Spark stage of GEMM + top-k per block with no corpus
+  serialization.  Blocks live where the data lives; the per-partition
+  (Q×k) candidates merge associatively, either on the driver or as
+  `treeReduce` partials (`merge="tree"`, the 1000-executor form).
 
-Exactness: float64 GEMM over the same vectors — identical semantics to
-`knn(strategy="numpy")` up to ulp-level reassociation (cosine is computed
-as 1 - normalized-rows GEMM instead of GEMM / |e| / |p|); ranks use the
-same documented (distance, id ASC) total order, with boundary ties resolved
-by an exact per-row re-selection.  Parity is pytest-attested against the
-attested knn kernel (tests/test_serving.py).
-
-Ids ride in an int64 candidate matrix.  String ids (the reference's ids ARE
-strings, HNSWIndex.js:27-35) are dict-encoded at build: surrogate =
-xxhash64(id), with a one-pass countDistinct collision check that fails
-loudly (p(collision) ~ n²/2⁶⁵ — vanishing below billions of ids), and a
-lazily-recomputable (surrogate, id) mapping joined back against the tiny
-(Q×k) broadcast result at search time to restore the original ids.  One
-documented deviation for string corpora: exact-distance boundary ties break
-on the surrogate (hash) order, not lexicographically on the original id.
+Exactness, shared by both forms and by `knn(strategy="numpy")`: every
+distance is scored row-locally with `einsum`, and the (distance ASC, id
+ASC) selection runs on those values (`_scored_topk`).  A single probe is
+scored that way against every row; for a probe batch GEMM only CHOOSES
+candidates — every row within the float64 dot-product error bound of the
+k-th distance — which are then re-scored.  A row's distance thus
+depends only on that row and the probe — never on block, strip or
+snapshot layout — so an appended or mirrored index answers bit-for-bit
+like a rebuilt one.  The snapshot breaks ties on the real string ids.
+`ResidentIndex` ranks string-keyed corpora on int64 surrogates
+(xxhash64(id), collision-checked at build, decoded by a join against the
+(surrogate, id) mapping), so its boundary ties follow hash order, not the
+lexicographic id order.
 """
 
 from __future__ import annotations
 
+import os
 from typing import Iterable, Iterator
 
 import numpy as np
@@ -49,7 +51,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["ResidentIndex", "ResidentIVF"]
+__all__ = ["ResidentIndex", "ResidentIVF", "Snapshot", "fits_driver"]
 
 _METRICS = ("cosine", "dot", "euclidean")
 
@@ -73,6 +75,28 @@ TILE_ROWS = 4096
 #: for — the common serving batch shape; larger real batches only fault
 #: the difference.
 WARM_Q = 1000
+
+#: a collection is served from a driver `Snapshot` while its matrix
+#: (rows × dim × 8 bytes) stays under this share of the driver host's
+#: MemAvailable; a write copies the matrix once, so the share leaves room
+#: for two copies plus search transients.  Above it, `ResidentIndex`.
+SNAPSHOT_MEM_FRACTION = 0.25
+
+
+def _mem_available() -> int:
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return os.sysconf("SC_AVPHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+
+
+def fits_driver(rows: int, dim: int) -> bool:
+    """Whether a rows × dim collection may be served from a `Snapshot`."""
+    return rows * dim * 8 <= SNAPSHOT_MEM_FRACTION * _mem_available()
 
 
 def _warm_kernel(it):
@@ -133,19 +157,79 @@ def _encode_string_ids(corpus: DataFrame, id_col: str):
 def _block_of(rows: list, id_name: str, vec_name: str, metric: str,
               attr_names: tuple = ()):
     """(ids int64, M float64, extra) where M is pre-normalized for cosine;
-    for euclidean the squared row norms ride in extra[None]; attr columns
+    the squared row norms of M ride in extra["__sqnorm__"]; attr columns
     (for pre-filtered serving) ride as numpy arrays in extra."""
     ids = np.asarray([r[id_name] for r in rows], dtype=np.int64)
     V = np.asarray([r[vec_name] for r in rows], dtype=np.float64)
     extra = {a: np.asarray([r[a] for r in rows]) for a in attr_names}
+    M, extra["__sqnorm__"] = _prepare(V, metric)
+    return ids, M, extra
+
+
+def _rowdot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise dot products.  `einsum` reduces each row in a fixed order
+    that depends only on the row, so a row scores bit-identically at any
+    offset in any matrix — unlike GEMM/GEMV, whose blocking does not."""
+    return np.einsum("ij,ij->i", A, B)
+
+
+def _prepare(V: np.ndarray, metric: str):
+    """(M, squared row norms of M): rows normalized for cosine, else V."""
     if metric == "cosine":
-        n = np.linalg.norm(V, axis=1)
+        n = np.sqrt(_rowdot(V, V))
         n[n == 0] = 1.0
-        return ids, V / n[:, None], extra or None
+        V = V / n[:, None]
+    return V, _rowdot(V, V)
+
+
+def _rescore(A: np.ndarray, B: np.ndarray, metric: str) -> np.ndarray:
+    """Row-local distances between row pairs (A[i], B[i]); euclidean as
+    sqrt(Σ(a-b)²), free of the cancellation in |a|²+|b|²-2a·b."""
     if metric == "euclidean":
-        extra["__sqnorm__"] = (V * V).sum(axis=1)
-        return ids, V, extra
-    return ids, V, extra or None
+        diff = A - B
+        return np.sqrt(_rowdot(diff, diff))
+    s = _rowdot(A, B)
+    return 1.0 - s if metric == "cosine" else -s
+
+
+def _scored_topk(P: np.ndarray, M: np.ndarray, ids: np.ndarray, k: int,
+                 metric: str, v2: np.ndarray):
+    """Exact per-probe top-k (distance ASC, id ASC) of the rows of M (already
+    `_prepare`d, squared norms v2) for raw probes P.  Every returned
+    distance is `_rescore`d row-locally and `_row_topk` selects on those
+    values, so the answer does not depend on how the rows are laid out.
+    One probe scores every row that way: it costs about a GEMV and leaves
+    no BLAS threads spin-waiting after the request.  For more probes GEMM
+    picks the candidates: every row whose GEMM distance is within twice
+    the error bound `err` of the k-th one.  A float64 dot product of
+    length d is within about d·2⁻⁵³·|p|·|m| of the true value in any
+    summation order, so GEMM and row-local values differ by less than
+    `err` (which doubles that bound) and no true top-k row can fall
+    outside the cut."""
+    Q, n = P.shape[0], M.shape[0]
+    if n == 0:
+        return np.empty((Q, 0)), ids[np.zeros((Q, 0), dtype=np.int64)]
+    P, p2 = _prepare(P, metric)
+    if Q == 1:
+        return _row_topk(
+            _rescore(np.broadcast_to(P, M.shape), M, metric)[None, :], ids, k
+        )
+    S = P @ M.T
+    vmax, d = v2.max(), P.shape[1]
+    if metric == "euclidean":
+        D = np.sqrt(np.maximum(p2[:, None] + v2[None, :] - 2.0 * S, 0.0))
+        err = np.sqrt((d + 2) * 2.0**-50 * (p2 + vmax))
+    else:
+        D = 1.0 - S if metric == "cosine" else -S
+        err = 4.0 * d * 2.0**-53 * np.sqrt(p2 * vmax)
+        if metric == "cosine":
+            err = err + 2.0**-50  # rounding of 1 - s
+    kk = min(k, n)
+    tau = np.partition(D, kk - 1, axis=1)[:, kk - 1]
+    qi, ci = np.nonzero(D <= (tau + 2.0 * err)[:, None])
+    Dx = np.full(D.shape, np.inf)
+    Dx[qi, ci] = _rescore(P[qi], M[ci], metric)
+    return _row_topk(Dx, ids, k)
 
 
 def _row_topk(D: np.ndarray, ids: np.ndarray, k: int):
@@ -236,6 +320,232 @@ def _result_df(
         "distance double, score double, rank int"
     )
     return spark.createDataFrame(pdf, schema=schema)
+
+
+def _codes(values, cats: dict | None = None):
+    """Categorical (codes int32, cats value→code) of `values`, None → -1;
+    `cats` is extended in a copy, never in place."""
+    cats = dict(cats or {})
+    codes = np.fromiter(
+        (-1 if v is None else cats.setdefault(v, len(cats)) for v in values),
+        dtype=np.int32, count=len(values),
+    )
+    return codes, cats
+
+
+def _meta_codes(maps) -> dict:
+    """metadata key -> categorical column over the rows' maps."""
+    cols: dict = {}
+    for i, m in enumerate(maps):
+        for key, v in (m or {}).items():
+            cols.setdefault(key, [None] * len(maps))[i] = v
+    return {key: _codes(col) for key, col in cols.items()}
+
+
+def _concat_codes(a, b, na: int, nb: int):
+    """Concatenate two categorical columns (None = all -1), re-coding b."""
+    ca, cats = a or (np.full(na, -1, dtype=np.int32), {})
+    cb, bcats = b or (np.full(nb, -1, dtype=np.int32), {})
+    cats = dict(cats)
+    # bcats iterates in code order; the trailing -1 maps b's NULLs
+    remap = np.asarray(
+        [cats.setdefault(v, len(cats)) for v in bcats] + [-1], dtype=np.int32
+    )
+    return np.concatenate([ca, remap[cb]]), cats
+
+
+class Attrs:
+    """The engine's filter columns in columnar form: tenant and each
+    metadata key as categorical codes, ts/ttl_ms as int64, and `live` =
+    both ts and ttl_ms non-NULL (a NULL makes the exact path's TTL
+    predicate NULL, so such rows are never visible)."""
+
+    __slots__ = ("tenant", "meta", "ts", "ttl", "live")
+
+    def __init__(self, tenant, meta, ts, ttl, live):
+        self.tenant, self.meta = tenant, meta
+        self.ts, self.ttl, self.live = ts, ttl, live
+
+    @classmethod
+    def of(cls, tenants, maps, ts, ttl, live=None) -> "Attrs":
+        """From per-row values; without `live`, None in ts/ttl is NULL."""
+        if live is None:
+            live = np.asarray([t is not None and x is not None
+                               for t, x in zip(ts, ttl)], dtype=bool)
+            ts = [t or 0 for t in ts]
+            ttl = [x or 0 for x in ttl]
+        return cls(_codes(tenants), _meta_codes(maps),
+                   np.asarray(ts, dtype=np.int64),
+                   np.asarray(ttl, dtype=np.int64), np.asarray(live, bool))
+
+    def take(self, keep) -> "Attrs":
+        return Attrs(
+            (self.tenant[0][keep], self.tenant[1]),
+            {k: (c[keep], cats) for k, (c, cats) in self.meta.items()},
+            self.ts[keep], self.ttl[keep], self.live[keep],
+        )
+
+    def concat(self, o: "Attrs") -> "Attrs":
+        na, nb = len(self.ts), len(o.ts)
+        return Attrs(
+            _concat_codes(self.tenant, o.tenant, na, nb),
+            {k: _concat_codes(self.meta.get(k), o.meta.get(k), na, nb)
+             for k in {**self.meta, **o.meta}},
+            np.concatenate([self.ts, o.ts]),
+            np.concatenate([self.ttl, o.ttl]),
+            np.concatenate([self.live, o.live]),
+        )
+
+    def tenant_is(self, tenant_id) -> np.ndarray:
+        """Null-safe tenant equality (None matches NULL tenants)."""
+        codes, cats = self.tenant
+        return codes == (-1 if tenant_id is None else cats.get(tenant_id, -2))
+
+    def mask(self, tenant_id, metadata_filter: dict | None, now: int):
+        """The exact path's pre-filter: tenant ==, metadata key == value
+        (or IN a list), and TTL lazy expiry."""
+        m = self.live & ((self.ttl == 0) | (now - self.ts < self.ttl))
+        if tenant_id is not None:
+            m &= self.tenant_is(tenant_id)
+        for key, v in (metadata_filter or {}).items():
+            vals = [str(x) for x in v] if isinstance(v, (list, tuple)) else [str(v)]
+            codes, cats = self.meta.get(key, (np.full(len(m), -1), {}))
+            m &= np.isin(codes, [cats[x] for x in vals if x in cats])
+        return m
+
+
+def block_filter(tenant_id, metadata_filter: dict | None, now: int):
+    """`ResidentIndex.search` pre_filter for blocks built with the engine's
+    attr_cols (tenant_id, ts, ttl_ms, metadata): the mask a `Snapshot`
+    applies, over each block's columns."""
+    def pre(_ids, attrs):
+        return Attrs.of(
+            attrs["tenant_id"], attrs["metadata"], attrs["ts"], attrs["ttl_ms"]
+        ).mask(tenant_id, metadata_filter, now)
+    return pre
+
+
+class Snapshot:
+    """Driver-local, immutable copy of one engine collection (id string,
+    vector array<float>, tenant_id, metadata, ts, ttl_ms) for resident
+    search with no Spark job.  `token` is the collection mutation token of
+    the storage state it mirrors.  Writes return a new snapshot."""
+
+    __slots__ = ("metric", "token", "ids", "M", "v2", "attrs")
+
+    def __init__(self, metric, token, ids, M, v2, attrs):
+        self.metric, self.token = metric, token
+        self.ids, self.M, self.v2, self.attrs = ids, M, v2, attrs
+
+    def __len__(self) -> int:
+        return len(self.ids)
+
+    @classmethod
+    def of(cls, metric, token, ids, V, attrs) -> "Snapshot":
+        M, v2 = _prepare(np.asarray(V, dtype=np.float64), metric)
+        return cls(metric, token, np.asarray(ids, dtype=object), M, v2, attrs)
+
+    @classmethod
+    def load(cls, df: DataFrame, metric: str, dim: int, token) -> "Snapshot":
+        """One Arrow `toPandas` pass over the collection DataFrame."""
+        pdf = df.filter(F.col("vector").isNotNull()).select(
+            "id", "vector", "tenant_id", "metadata",
+            F.coalesce("ts", F.lit(0)).alias("ts"),
+            F.coalesce("ttl_ms", F.lit(0)).alias("ttl_ms"),
+            (F.col("ts").isNotNull() & F.col("ttl_ms").isNotNull()).alias("live"),
+        ).toPandas()
+        V = (np.stack(pdf["vector"].to_numpy()) if len(pdf)
+             else np.empty((0, dim)))
+        return cls.of(
+            metric, token, pdf["id"].to_numpy(), V,
+            Attrs.of(pdf["tenant_id"].to_numpy(), pdf["metadata"].to_numpy(),
+                     pdf["ts"].to_numpy(), pdf["ttl_ms"].to_numpy(),
+                     pdf["live"].to_numpy()),
+        )
+
+    def at(self, token) -> "Snapshot":
+        return Snapshot(self.metric, token, self.ids, self.M, self.v2,
+                        self.attrs)
+
+    def _take(self, keep) -> "Snapshot":
+        return Snapshot(self.metric, self.token, self.ids[keep],
+                        self.M[keep], self.v2[keep], self.attrs.take(keep))
+
+    def upsert(self, rows: list, replace: bool) -> "Snapshot":
+        """The engine insert's rows (id, vector, content, metadata, tenant_id,
+        ts, ttl_ms): with `replace`, rows sharing a new row's (tenant, id)
+        go first, as in storage.  Vectors round through float32 exactly as
+        the array<float> column stores them."""
+        base = self
+        if replace:
+            by_tenant: dict = {}
+            for r in rows:
+                by_tenant.setdefault(r[4], []).append(r[0])
+            hit = np.zeros(len(self), dtype=bool)
+            for t, ids in by_tenant.items():
+                hit |= self.attrs.tenant_is(t) & np.isin(self.ids, ids)
+            base = self._take(~hit)
+        V = np.asarray([r[1] for r in rows], dtype=np.float32)
+        new = Snapshot.of(
+            self.metric, self.token, [r[0] for r in rows],
+            V.reshape(len(rows), self.M.shape[1]),
+            Attrs.of([r[4] for r in rows], [r[3] for r in rows],
+                     [r[5] for r in rows], [r[6] for r in rows]),
+        )
+        return Snapshot(
+            self.metric, self.token,
+            np.concatenate([base.ids, new.ids]),
+            np.concatenate([base.M, new.M]),
+            np.concatenate([base.v2, new.v2]),
+            base.attrs.concat(new.attrs),
+        )
+
+    def delete(self, ids: list, tenant_id=None) -> "Snapshot":
+        """Drop rows whose id is in `ids` and, when `tenant_id` is given,
+        whose tenant equals it."""
+        hit = np.isin(self.ids, [str(i) for i in ids])
+        if tenant_id is not None:
+            hit &= self.attrs.tenant_is(tenant_id)
+        return self._take(~hit)
+
+    def forget(self, tenant_id) -> "Snapshot":
+        """Drop every row of the tenant (None: the untenanted rows)."""
+        return self._take(~self.attrs.tenant_is(tenant_id))
+
+    def search(self, probes: DataFrame, k: int = 10,
+               probe_id_col: str = "probe_id",
+               probe_vector_col: str = "probe_embedding") -> DataFrame:
+        """`ResidentIndex.search`'s (probe_id, id, distance, score, rank)
+        DataFrame over every row; the probes are collected, scored here."""
+        from fusionspark.operators.knn import id_sql_type
+
+        rows = probes.select(probe_id_col, probe_vector_col).collect()
+        D, I = self.topk([r[1] for r in rows], k)
+        return _result_df(
+            probes.sparkSession, [r[0] for r in rows], D, I, probe_id_col,
+            "id", id_sql_type(probes, probe_id_col), "string",
+        )
+
+    def topk(self, P, k: int, mask=None):
+        """(D, I): per probe, the top-k (distance ASC, id ASC) over the rows
+        in `mask` (all rows if None), as (Q, kk) distances and string ids
+        sorted by rank."""
+        P = np.asarray(P, dtype=np.float64).reshape(-1, self.M.shape[1])
+        M, ids, v2 = self.M, self.ids, self.v2
+        if mask is not None and not mask.all():
+            rows = np.flatnonzero(mask)
+            M, ids, v2 = M[rows], ids[rows], v2[rows]
+        Q, kk = P.shape[0], min(k, len(ids))
+        D, I = np.empty((Q, kk)), np.empty((Q, kk), dtype=object)
+        # probe chunks bound the (chunk, rows) transients like a
+        # ResidentIndex strip at WARM_Q probes
+        step = max(1, TILE_ROWS * WARM_Q // max(len(ids), 1))
+        for s in range(0, Q, step):
+            d, i = _scored_topk(P[s:s + step], M, ids, k, self.metric, v2)
+            for qi in range(d.shape[0]):
+                o = np.lexsort((i[qi], d[qi]))
+                D[s + qi], I[s + qi] = d[qi][o], i[qi][o]
+        return D, I
 
 
 class ResidentIndex:
@@ -394,50 +704,34 @@ class ResidentIndex:
             P = np.asarray([r[probe_vector_col] for r in rows], dtype=np.float64)
             probe_t = id_sql_type(probes, probe_id_col)
         metric = self.metric
-        if metric == "cosine":
-            pn = np.linalg.norm(P, axis=1)
-            pn[pn == 0] = 1.0
-            P = P / pn[:, None]
-        p2 = (P * P).sum(axis=1)[:, None] if metric == "euclidean" else None
 
         def kernel(it: Iterator[tuple]) -> Iterator[tuple]:
             for ids, M, extra in it:
+                v2 = extra["__sqnorm__"]
                 if pre_filter is not None:
-                    ex = extra or {}
                     mask = np.asarray(
-                        pre_filter(ex.get("__orig_id__", ids), ex),
+                        pre_filter(extra.get("__orig_id__", ids), extra),
                         dtype=bool,
                     )
                     if not mask.any():
                         continue
-                    ids, M = ids[mask], M[mask]
-                    if extra and "__sqnorm__" in extra:
-                        extra = dict(extra)
-                        extra["__sqnorm__"] = extra["__sqnorm__"][mask]
+                    ids, M, v2 = ids[mask], M[mask], v2[mask]
                 # GEMM over corpus-row STRIPS with a running exact top-k
                 # merge, never the full (Q, n) distance matrix: at 1M rows
                 # a single-shot kernel allocates ~750 MB of transients per
                 # task, and 32 tasks first-touching ~24 GB of fresh pages
-                # cost a measured 80s on this host's first search (vs 1.5s
-                # warm).  Strips keep the task's transient at Q×TILE_ROWS
-                # (~32 MB) — measured faster than the single shot even
-                # warm, with NO cold-start spike, and the exact
+                # cost a measured 80s on a 32-core host's first search (vs
+                # 1.5s warm).  Strips keep the task's transient at
+                # Q×TILE_ROWS (~32 MB) — measured faster than the single
+                # shot even warm, with NO cold-start spike, and the exact
                 # (distance ASC, id ASC) order is preserved because a
                 # global top-k element is always in its strip's top-k.
                 acc = None
                 for s in range(0, M.shape[0], TILE_ROWS):
-                    Ms = M[s:s + TILE_ROWS]
-                    S = P @ Ms.T  # (Q, strip)
-                    if metric == "cosine":
-                        D = 1.0 - S
-                    elif metric == "dot":
-                        D = -S
-                    else:
-                        v2 = extra["__sqnorm__"][s:s + TILE_ROWS]
-                        D = np.sqrt(
-                            np.maximum(p2 + v2[None, :] - 2.0 * S, 0.0)
-                        )
-                    part = _row_topk(D, ids[s:s + TILE_ROWS], k)
+                    part = _scored_topk(
+                        P, M[s:s + TILE_ROWS], ids[s:s + TILE_ROWS], k,
+                        metric, v2[s:s + TILE_ROWS],
+                    )
                     acc = part if acc is None else _merge_candidates(
                         [acc, part], k
                     )

@@ -506,25 +506,30 @@ def test_search_many_resident_parity(engine, spark):
 
 
 def test_resident_auto_append_on_insert(engine):
-    """A raw append into a collection with a fresh resident index extends
-    the index in place (new blocks only) — the serve-many path sees new
-    rows WITHOUT a rebuild and without falling back to the scan."""
+    """A raw append into a collection with a fresh resident snapshot
+    extends it in place — the serve-many path sees new rows WITHOUT a
+    rebuild and without falling back to the scan; an upsert does too."""
     engine.create_collection("ra", CollectionConfig(dimensions=4))
     engine.insert("ra", [{"id": "a", "vector": [1, 0, 0, 0]}])
     engine.load_resident("ra")
-    before = engine._resident["ra"]["at_mutation"]
+    before = engine._snapshots["ra"].token
     engine.insert("ra", [{"id": "b", "vector": [0.9, 0.1, 0, 0]}])
-    # index caught up with the mutation counter — still fresh
-    assert engine._resident["ra"]["at_mutation"] == before + 1
+    # snapshot caught up with the mutation counter — still fresh
+    assert engine._snapshots["ra"].token == before + 1
     cfg = engine._catalog["ra"]
     assert engine._resident_fresh("ra", cfg) is not None
     hits = engine.search("ra", query_vector=[1, 0, 0, 0], top_k=5, resident=True)
     assert [h["id"] for h in hits] == ["a", "b"]
-    # a replace-collision rewrite invalidates (append cannot mirror it)
+    # a replace-collision upsert mirrors into the snapshot as well: it
+    # stays fresh and answers like the exact scan
     engine.insert("ra", [{"id": "a", "vector": [0, 1, 0, 0]}])
-    assert engine._resident_fresh("ra", cfg) is None
+    assert engine._resident_fresh("ra", cfg) is not None
     hits2 = engine.search("ra", query_vector=[0, 1, 0, 0], top_k=5, resident=True)
-    assert hits2[0]["id"] == "a"  # exact fallback sees the replacement
+    assert hits2[0]["id"] == "a"
+    exact = engine.search("ra", query_vector=[0, 1, 0, 0], top_k=5)
+    assert [h["id"] for h in hits2] == [h["id"] for h in exact]
+    for e, g in zip(exact, hits2):
+        assert abs(e["score"] - g["score"]) < 1e-9
 
 
 def test_search_many_resident_ivf(engine, spark):
