@@ -36,9 +36,10 @@ from pyspark.sql import functions as F
 from fusionspark.functions import vector as V
 from fusionspark.operators import fusion as fusion_ops
 from fusionspark.operators.chunking import chunk_documents
-from fusionspark.operators.context import pack_context
+from fusionspark.operators.context import pack_rows
+from fusionspark.operators.context import pack_context  # noqa: F401 — perfbench/tracing.py wraps it
 from fusionspark.operators.embedder import embed_texts, mock_embed
-from fusionspark.operators.keyword import keyword_search
+from fusionspark.operators.keyword import keyword_rank, keyword_search
 from fusionspark.operators.knn import knn
 from fusionspark.operators.serving import ResidentIndex, Snapshot, block_filter, fits_driver
 
@@ -61,6 +62,33 @@ _ROW_SCHEMA = (
 
 def _hits(rows) -> list[dict]:
     return [{k: r[k] for k in ("id", "score", "distance", "rank")} for r in rows]
+
+
+def _visible(now: int, tenant_id=None, metadata_filter: dict | None = None):
+    """The exact path's pre-filter: tenant ==, metadata key == value (or IN
+    a list), and TTL lazy expiry (P4)."""
+    pred = (F.col("ttl_ms") == 0) | (F.lit(now) - F.col("ts") < F.col("ttl_ms"))
+    if tenant_id is not None:
+        pred = (F.col("tenant_id") == tenant_id) & pred
+    for k, v in (metadata_filter or {}).items():
+        vals = [str(x) for x in v] if isinstance(v, (list, tuple)) else [str(v)]
+        pred = pred & F.col("metadata").getItem(k).isin(vals)
+    return pred
+
+
+def _checked_vector(col, dim: int):
+    """`col` where its width is `dim`, else a job-failing error (a NULL
+    array lands in the error branch too): the executor-side form of
+    insert()'s per-row dimension check."""
+    return F.when(F.size(col) == F.lit(dim), col).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit("embedding width "),
+                F.coalesce(F.size(col).cast("string"), F.lit("NULL")),
+                F.lit(f" != collection dimensions {dim}"),
+            )
+        )
+    )
 
 
 class FusionSparkEngine:
@@ -89,8 +117,10 @@ class FusionSparkEngine:
             with open(self._catalog_path) as f:
                 self._catalog = json.load(f)
         # process-local (like the reference's in-memory graph): a Snapshot,
-        # or above its size limit {"idx": ResidentIndex, "at_mutation": tok}
+        # or above its size limit {"idx": ResidentIndex, "at_mutation": tok};
+        # _oversize holds the token at which a collection did not fit
         self._snapshots: dict[str, Snapshot] = {}
+        self._oversize: dict[str, object] = {}
         self._resident: dict[str, dict] = {}
         self._resident_ivf: dict[str, dict] = {}
         self._locks: dict[str, threading.RLock] = {}  # writes, mirrors, rebuilds
@@ -211,12 +241,20 @@ class FusionSparkEngine:
         """Run the storage write `store()` under the collection lock; a
         snapshot fresh before it becomes `mirror(snapshot)` at the new token."""
         with self._lock(collection):
-            cfg = self._catalog.get(collection) or {}
             snap = self._snapshots.get(collection)
-            fresh = snap is not None and snap.token == self._mutation_token(cfg)
+            fresh = snap is not None and snap.token == self._mutation_token(collection)
             store()
-            if fresh:
-                self._snapshots[collection] = mirror(snap).at(self._mutation_token(cfg))
+            tok = self._mutation_token(collection)
+            if fresh and self._one_write_on(snap.token, tok):
+                self._snapshots[collection] = mirror(snap).at(tok)
+
+    def _one_write_on(self, before, after) -> bool:
+        """Whether token `after` is exactly this engine's one write past
+        `before`: in manifest storage another engine's commit may have
+        landed too, and a cache mirroring only ours must then go stale."""
+        if self.storage == "manifest":
+            return after == [before[0] + 1, before[1] + 1]
+        return after == before + 1
 
     def _append(self, collection: str, df: DataFrame) -> None:
         with self._lock(collection):
@@ -285,11 +323,12 @@ class FusionSparkEngine:
                     int(e.get("ttl_ms", ttl_ms)),
                 )
             )
+        # one partition: a small append writes one file, not an empty one too
         df = self.spark.createDataFrame(
             rows,
             "id: string, vector: array<float>, content: string, "
             "metadata: map<string,string>, tenant_id: string, ts: long, ttl_ms: long",
-        )
+        ).coalesce(1)
         hit = None
         if replace:
             groups: dict[str | None, list[str]] = {}
@@ -317,14 +356,17 @@ class FusionSparkEngine:
                         ~F.coalesce(hit, F.lit(False))
                     )
                     return self._rewrite(collection, keep.unionByName(df))
+            tok = self._mutation_token(collection)
             self._append(collection, df)
             # a raw append extends fresh ResidentIndex blocks (HNSWIndex.js:
             # 126-180); any failure leaves them stale → exact fallback
             ent = self._resident.get(collection)
-            if ent is not None and ent["at_mutation"] == cfg.get("mutations", 1) - 1:
+            after = self._mutation_token(collection)
+            if (ent is not None and ent["at_mutation"] == tok
+                    and self._one_write_on(tok, after)):
                 try:
                     ent["idx"] = ent["idx"].append(df)
-                    ent["at_mutation"] = cfg["mutations"]
+                    ent["at_mutation"] = after
                 except Exception:  # noqa: BLE001 — stale fallback is the contract
                     pass
 
@@ -420,7 +462,7 @@ class FusionSparkEngine:
         # token BEFORE the read: if an external Delta commit lands during
         # the build, the stamp is older than the data and the index reads
         # as stale (the safe direction) — never stale-data-marked-fresh
-        tok = self._mutation_token(cfg)
+        tok = self._mutation_token(collection)
         df = self._load(collection)
         n = df.count()
         k = n_centroids or max(2, int(math.sqrt(max(n, 4))))
@@ -461,15 +503,18 @@ class FusionSparkEngine:
         self._save_catalog()
         return cfg["index"]
 
-    def _mutation_token(self, cfg: dict):
+    def _mutation_token(self, collection: str):
         """Freshness key for index/resident caches: cfg['mutations'] for
-        engine-owned collections.  For attach_delta collections the
+        engine-owned collections; in manifest storage [mutations, table
+        version] (an os.listdir), so another engine's commit to the same
+        root makes this engine's caches stale.  For attach_delta collections the
         engine never mutates (external commits can't bump the counter),
         so the key is the RESOLVED Delta version — a pinned attach is
         constant, an unpinned (follow-latest) attach re-lists the
         `_delta_log` (an os.listdir, metadata-only) so an external commit
         marks every cache stale and search falls back to exact / raises
         per the no-silent-stale contract (ADVICE r14)."""
+        cfg = self._catalog.get(collection) or {}
         if cfg.get("external_delta"):
             # a LIST, not a tuple: cfg['index'] round-trips through the
             # catalog JSON and must compare equal after reload
@@ -479,44 +524,48 @@ class FusionSparkEngine:
 
             commits, ckpts, _files, v2 = _list_log(cfg["external_delta"])
             return ["delta", max(commits + ckpts + v2)]
+        if self.storage == "manifest":
+            try:
+                version = self._table(collection).version()
+            except FileNotFoundError:  # created, not yet written
+                version = -1
+            return [cfg.get("mutations", 0), version]
         return cfg.get("mutations", 0)
 
-    def _index_fresh(self, cfg: dict) -> bool:
-        idx = cfg.get("index")
-        return bool(idx) and idx["at_mutation"] == self._mutation_token(cfg)
+    def _index_fresh(self, collection: str) -> bool:
+        idx = self._catalog[collection].get("index")
+        return bool(idx) and idx["at_mutation"] == self._mutation_token(collection)
 
     # ── resident serving (build once, search many) ────────────────────────
 
     def load_resident(self, collection: str) -> dict:
         """Build (or rebuild) the collection's resident copy, as the reference
-        holds its HNSW graph in process (HNSWIndex.js:245-320).  If
-        rows × dim × 8 bytes fit SNAPSHOT_MEM_FRACTION of the driver host's
-        MemAvailable, one Arrow pass makes a driver `Snapshot` (ids, float64
-        matrix, ts/ttl_ms, categorical tenant and metadata columns): resident
-        search then runs in numpy with no Spark job, pre-filters as
-        vectorised masks, distance ties by real id.  Freshness: insert,
-        upsert, delete and forget mirror into it under the collection lock;
-        any other token change (ingest, imports, external Delta commits)
-        makes the next search(resident=True) rebuild it in place, while
-        search_many raises.  Larger collections keep `ResidentIndex` blocks
-        in the Python workers (string-id ties in hash order; stale → exact)."""
-        cfg = self._catalog[collection]
+        holds its HNSW graph in process (HNSWIndex.js:245-320).  A collection
+        that fits (`fits_driver`: its rows × dim × 8 matrix bytes plus content
+        bytes, with every other loaded snapshot, within SNAPSHOT_MEM_FRACTION
+        of the driver host's MemAvailable) becomes a driver `Snapshot` in one
+        Arrow pass — the copy every interactive read (search with or without
+        `resident`, recall, retrieve, build_context) is served from with no
+        Spark job.  Reads load it on first use too, so calling this is only
+        a warm-up.  Freshness: insert, upsert, delete and forget mirror into
+        it under the collection lock; any other token change (ingest,
+        imports, another engine's manifest commit, external Delta commits)
+        makes the next read reload it, while search_many raises.  Larger
+        collections get `ResidentIndex` blocks in the Python workers for
+        search(resident=True) (string-id ties in hash order; stale → exact);
+        their other reads run on Spark."""
         with self._lock(collection):
-            # token BEFORE the read (see build_index): a mid-build external
-            # commit must leave the cache stale, not stamp it fresh
-            tok = self._mutation_token(cfg)
-            df = self._load(collection)
-            if fits_driver(df.count(), cfg["dimensions"]):
-                snap = Snapshot.load(df, cfg["metric"], cfg["dimensions"], tok)
-                self._snapshots[collection] = snap  # readers swap over whole
-                self._unload_blocks(collection)
+            if self._load_snapshot(collection) is not None:
+                snap = self._snapshots[collection]
                 return {"collection": collection, "mode": "snapshot",
-                        "blocks": 1, "rows": len(snap), "at_mutation": tok}
+                        "blocks": 1, "rows": len(snap), "at_mutation": snap.token}
+            cfg = self._catalog[collection]
+            tok = self._mutation_token(collection)  # before the read
             idx = ResidentIndex.build(
-                df, id_col="id", vector_col="vector", metric=cfg["metric"],
+                self._load(collection), id_col="id", vector_col="vector",
+                metric=cfg["metric"],
                 attr_cols=("tenant_id", "ts", "ttl_ms", "metadata"),
             )
-            self._snapshots.pop(collection, None)
             self._unload_blocks(collection)
             self._resident[collection] = {"idx": idx, "at_mutation": tok}
             return {
@@ -525,9 +574,51 @@ class FusionSparkEngine:
                 "at_mutation": tok,
             }
 
+    def _load_snapshot(self, collection: str) -> Snapshot | None:
+        """(Re)load the collection's Snapshot from storage if it fits, else
+        drop it and remember the token at which it did not fit."""
+        cfg = self._catalog[collection]
+        with self._lock(collection):
+            # token BEFORE the read (see build_index): a mid-build external
+            # commit must leave the cache stale, not stamp it fresh
+            tok = self._mutation_token(collection)
+            df = self._load(collection)
+            size = df.agg(F.count(F.lit(1)).alias("n"),
+                          F.sum(F.octet_length("content")).alias("b")).first()
+            held = sum(s.nbytes() for c, s in list(self._snapshots.items())
+                       if c != collection)
+            self._snapshots.pop(collection, None)
+            if not fits_driver(size["n"], cfg["dimensions"], size["b"] or 0, held):
+                self._oversize[collection] = tok
+                return None
+            snap = Snapshot.load(df, cfg["metric"], cfg["dimensions"], tok)
+            self._snapshots[collection] = snap  # readers swap over whole
+            self._oversize.pop(collection, None)
+            self._unload_blocks(collection)
+            return snap
+
+    def _snapshot(self, collection: str) -> Snapshot | None:
+        """The collection's fresh Snapshot, loading or rebuilding it first —
+        once, under the collection lock, however many reads find it missing
+        or stale.  None while the collection is over the size limit (checked
+        once per token)."""
+        snap = self._snapshots.get(collection)
+        if snap is not None and snap.token == self._mutation_token(collection):
+            return snap
+        with self._lock(collection):
+            tok = self._mutation_token(collection)
+            snap = self._snapshots.get(collection)
+            if snap is not None and snap.token == tok:
+                return snap
+            if self._oversize.get(collection) == tok:
+                return None
+            return self._load_snapshot(collection)
+
     def unload_resident(self, collection: str) -> None:
-        """Release the collection's resident copies (no-op if not loaded)."""
+        """Release the collection's resident copies (no-op if not loaded);
+        the next read of a collection that fits loads its snapshot again."""
         self._snapshots.pop(collection, None)
+        self._oversize.pop(collection, None)
         self._unload_blocks(collection)
         ivf = self._resident_ivf.pop(collection, None)
         if ivf is not None:
@@ -553,7 +644,7 @@ class FusionSparkEngine:
         cfg = self._catalog[collection]
         if cfg["metric"] != "cosine":
             raise ValueError("resident IVF supports the cosine metric only")
-        tok = self._mutation_token(cfg)  # before the read, see build_index
+        tok = self._mutation_token(collection)  # before the read, see build_index
         df = self._load(collection)
         k = n_centroids or max(2, int(math.sqrt(max(df.count(), 4))))
         idx = ResidentIVF.build(
@@ -573,19 +664,14 @@ class FusionSparkEngine:
             "at_mutation": tok,
         }
 
-    def _resident_fresh(self, collection: str, cfg: dict, rebuild=False):
-        """The fresh Snapshot or ResidentIndex, else None; rebuild=True first
-        reloads a stale snapshot (once, however many searches find it)."""
+    def _resident_fresh(self, collection: str):
+        """The fresh Snapshot or ResidentIndex, else None (no reload)."""
+        tok = self._mutation_token(collection)
         snap = self._snapshots.get(collection)
-        if rebuild and snap is not None and snap.token != self._mutation_token(cfg):
-            with self._lock(collection):
-                if self._snapshots.get(collection) is snap:
-                    self.load_resident(collection)
-        snap = self._snapshots.get(collection)
-        if snap is not None and snap.token == self._mutation_token(cfg):
+        if snap is not None and snap.token == tok:
             return snap
         ent = self._resident.get(collection)
-        if ent is not None and ent["at_mutation"] == self._mutation_token(cfg):
+        if ent is not None and ent["at_mutation"] == tok:
             return ent["idx"]
         return None
 
@@ -646,56 +732,34 @@ class FusionSparkEngine:
         resident: bool = False,
     ) -> list[dict]:
         """§3.1: exact top-k with PRE-filtering (better recall than the
-        reference's post-filter, SURVEY V7).  approximate=True searches a
-        fresh build_index() IVF layout instead (partition-pruned scan, same
-        pre-filter semantics).  resident=True searches the load_resident()
-        copy: a driver Snapshot (no Spark job; ties by real id; rebuilt in
-        place first if stale) or, above its size limit, ResidentIndex
-        blocks.  A missing copy or a stale index falls back to exact —
-        never a silent wrong answer."""
+        reference's post-filter, SURVEY V7): tenant, metadata and TTL.
+        A collection that fits the driver is answered from its `Snapshot`
+        with no Spark job, `resident` or not (ties by real id); a missing
+        or stale snapshot is reloaded first (see load_resident).
+        approximate=True (without `resident`) searches a fresh build_index()
+        IVF layout instead (partition-pruned scan, same pre-filter
+        semantics).  Above the size limit, resident=True searches fresh
+        ResidentIndex blocks and everything else is an exact Spark scan; a
+        missing copy or a stale index falls back to that scan — never a
+        silent wrong answer."""
         cfg = self._catalog[collection]
         if query_vector is None:
             query_vector = self.embedder(query_text or "", cfg["dimensions"])
-
-        def _pred():
-            conds = []
-            if tenant_id is not None:
-                conds.append(F.col("tenant_id") == tenant_id)
-            if metadata_filter:
-                for k, v in metadata_filter.items():
-                    if isinstance(v, (list, tuple)):
-                        conds.append(
-                            F.col("metadata").getItem(k).isin([str(x) for x in v])
-                        )
-                    else:
-                        conds.append(F.col("metadata").getItem(k) == str(v))
-            # TTL lazy expiry (P4)
-            conds.append(
-                (F.col("ttl_ms") == 0) | (F.lit(now) - F.col("ts") < F.col("ttl_ms"))
-            )
-            pred = conds[0]
-            for c in conds[1:]:
-                pred = pred & c
-            return pred
-
         now = int(time.time() * 1000)
-        ridx = self._resident_fresh(collection, cfg, rebuild=True) if resident else None
-        if isinstance(ridx, Snapshot):
-            # a float32 probe, like the exact path's array<float> one
-            D, I = ridx.topk(np.asarray([query_vector], np.float32), top_k,
-                             ridx.attrs.mask(tenant_id, metadata_filter, now))
-            return [{"id": i, "score": 1.0 - d, "distance": d, "rank": r}
-                    for r, (d, i) in enumerate(zip(D[0].tolist(), I[0]), 1)]
-        probes = self.spark.createDataFrame(
-            [("q0", [float(x) for x in query_vector])],
-            "probe_id: string, probe_embedding: array<float>",
-        )
+        ivf = (approximate and not resident and cfg["metric"] == "cosine"
+               and self._index_fresh(collection))
+        snap = None if ivf else self._snapshot(collection)
+        if snap is not None:
+            return snap.hits(query_vector, top_k,
+                             snap.attrs.mask(tenant_id, metadata_filter, now))
+        probes = self._probe(query_vector)
+        ridx = self._resident_fresh(collection) if resident else None
         if ridx is not None:
             out = ridx.search(probes, k=top_k, merge="driver", pre_filter=(
                 block_filter(tenant_id, metadata_filter, now)))
             # the string-id decode join loses row order; rank carries it
             return _hits(sorted(out.collect(), key=lambda r: r["rank"]))
-        if approximate and cfg["metric"] == "cosine" and self._index_fresh(cfg):
+        if ivf:
             from fusionspark.operators.ann import ivf_search_persisted
 
             out = ivf_search_persisted(
@@ -703,19 +767,27 @@ class FusionSparkEngine:
                 os.path.join(self.root, f"index={collection}"),
                 probes, k=top_k,
                 n_probe=min(n_probe, cfg["index"]["n_centroids"]),
-                id_col="id", vector_col="vector", pre_filter=_pred(),
+                id_col="id", vector_col="vector",
+                pre_filter=_visible(now, tenant_id, metadata_filter),
             )
             return [
                 {"id": r["id"], "score": r["sim"], "distance": 1.0 - r["sim"],
                  "rank": r["rnk"]}
                 for r in out.collect()
             ]
-        df = self._load(collection).filter(_pred())
+        df = self._load(collection).filter(_visible(now, tenant_id, metadata_filter))
         out = knn(
             df, probes, k=top_k, metric=cfg["metric"],
             vector_col="vector", id_col="id",
         )
         return _hits(out.collect())
+
+    def _probe(self, vec) -> DataFrame:
+        """One-row probe DataFrame (array<float>, like the stored vectors)."""
+        return self.spark.createDataFrame(
+            [("q0", [float(x) for x in vec])],
+            "probe_id: string, probe_embedding: array<float>",
+        )
 
     def search_many(
         self,
@@ -751,7 +823,7 @@ class FusionSparkEngine:
         if method == "resident":
             if approximate:
                 raise ValueError("method='resident' is an exact path")
-            ridx = self._resident_fresh(collection, cfg)
+            ridx = self._resident_fresh(collection)
             if ridx is None:
                 raise ValueError(
                     f"resident index for {collection!r} is stale or "
@@ -765,7 +837,7 @@ class FusionSparkEngine:
             )
         if method == "resident_ivf":
             ent = self._resident_ivf.get(collection)
-            if ent is None or ent["at_mutation"] != self._mutation_token(cfg):
+            if ent is None or ent["at_mutation"] != self._mutation_token(collection):
                 raise ValueError(
                     f"resident IVF index for {collection!r} is stale or "
                     "missing; call load_resident_ivf() first (batch search "
@@ -780,7 +852,7 @@ class FusionSparkEngine:
         if approximate:
             if cfg["metric"] != "cosine":
                 raise ValueError("approximate batch search is cosine-only")
-            if not self._index_fresh(cfg):
+            if not self._index_fresh(collection):
                 raise ValueError(
                     f"index for {collection!r} is stale or missing; call "
                     "build_index() first (batch search will not silently "
@@ -831,29 +903,33 @@ class FusionSparkEngine:
         weights: dict[str, float] | None = None,
     ) -> list[dict]:
         """HybridRetriever.retrieve: vector + keyword branches (over-fetched
-        2×k) fused with weighted RRF (HybridRetriever.js:115-219,336-362)."""
+        2×k) fused with weighted RRF (HybridRetriever.js:115-219,336-362).
+        Both branches read every row, with no tenant or TTL filter.  A
+        collection that fits the driver runs both from its `Snapshot` (no
+        Spark job); above the limit each branch is a Spark search whose
+        2×k candidates are collected.  RRF always runs on the driver
+        (fusion.rrf_rank)."""
         cfg = self._catalog[collection]
-        df = self._load(collection)
         qvec = self.embedder(query, cfg["dimensions"])
-        probes = self.spark.createDataFrame(
-            [("q0", [float(x) for x in qvec])],
-            "probe_id: string, probe_embedding: array<float>",
-        )
-        vec = (
-            knn(df, probes, k=top_k * fusion_ops.OVERFETCH, metric=cfg["metric"],
-                vector_col="vector", id_col="id")
-            .select(F.col("id").alias("doc_id"), "score")
-        )
-        kw = keyword_search(
-            df.withColumn("text", F.coalesce("content", F.lit(""))),
-            query, top_k=top_k * fusion_ops.OVERFETCH, id_col="id",
-        ).withColumnRenamed("id", "doc_id")
-        fused = fusion_ops.rrf_fuse(
-            {"vector": vec, "keyword": kw},
-            top_k=top_k,
+        n = top_k * fusion_ops.OVERFETCH
+        snap = self._snapshot(collection)
+        if snap is not None:
+            vec = [(h["id"], h["score"]) for h in snap.hits(qvec, n)]
+            kw = keyword_rank(snap.ids, snap.content, query, n)
+        else:
+            df = self._load(collection)
+            vec = [(r["id"], r["score"]) for r in knn(
+                df, self._probe(qvec), k=n, metric=cfg["metric"],
+                vector_col="vector", id_col="id",
+            ).collect()]
+            kw = [(r["id"], r["score"]) for r in keyword_search(
+                df.withColumn("text", F.coalesce("content", F.lit(""))),
+                query, top_k=n, id_col="id",
+            ).collect()]
+        return fusion_ops.rrf_rank(
+            {"vector": vec, "keyword": kw}, top_k=top_k,
             weights=weights or {"vector": 0.5, "keyword": 0.5},
         )
-        return [r.asDict() for r in fused.collect()]
 
     # ── multi-tenancy facade (FusionEngine.js:246-271) ────────────────────
 
@@ -1029,7 +1105,8 @@ class FusionSparkEngine:
             self.create_collection(collection, CollectionConfig())
         docs = self.spark.createDataFrame([(doc_id, text)], "doc_id: string, text: string")
         chunks = chunk_documents(docs, strategy)
-        self._append(collection, self._ingest_entries(chunks, collection))
+        # one document's chunks: one file per append
+        self._append(collection, self._ingest_entries(chunks, collection).coalesce(1))
         return chunks.count()
 
     def _ingest_entries(self, chunks: DataFrame, collection: str) -> DataFrame:
@@ -1041,22 +1118,10 @@ class FusionSparkEngine:
         dim = self._catalog[collection]["dimensions"]
         now = int(time.time() * 1000)
         emb = embed_texts(chunks, "chunk_text", dim, self.embedder)
-        # distributed width check (insert()'s per-row check, kept on the
-        # executors): a provider whose dimensions differ from the collection
-        # config fails the write job instead of silently storing wrong-width
-        # vectors — size(NULL embedding) is NULL, so a missing embedding
-        # (unjoined chunk) also lands in the error branch
-        checked_vec = F.when(
-            F.size(F.col("embedding")) == F.lit(dim), F.col("embedding")
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("embedding width "),
-                    F.coalesce(F.size(F.col("embedding")).cast("string"), F.lit("NULL")),
-                    F.lit(f" != collection dimensions {dim}"),
-                )
-            )
-        )
+        # a provider whose dimensions differ from the collection config (or
+        # a missing embedding of an unjoined chunk) fails the write job
+        # instead of silently storing wrong-width vectors
+        checked_vec = _checked_vector(F.col("embedding"), dim)
         return (
             chunks.join(F.broadcast(emb), chunks["chunk_text"] == emb["text"], "left")
             .select(
@@ -1109,21 +1174,34 @@ class FusionSparkEngine:
         self, collection: str, query: str, max_tokens: int = 2000, top_k: int = 10
     ) -> dict:
         """RAGPipeline.buildContext: top-k → greedy token-budget pack (W3) →
-        prompt assembly (RAGPipeline.js:174-241)."""
-        hits = self.search(collection, query_text=query, top_k=top_k)
+        prompt assembly (RAGPipeline.js:174-241).  The top-k is search()'s
+        (TTL-filtered, every tenant), each hit with its own row's content:
+        from the `Snapshot` with no Spark job when the collection fits the
+        driver, else one Spark search that carries the content.  The pack
+        (context.pack_rows) always runs on the driver."""
+        cfg = self._catalog[collection]
+        qvec = self.embedder(query, cfg["dimensions"])
+        now = int(time.time() * 1000)
+        snap = self._snapshot(collection)
+        if snap is not None:
+            hits = snap.hits(qvec, top_k, snap.attrs.mask(None, None, now),
+                             content=True)
+        else:
+            hits = knn(
+                self._load(collection).filter(_visible(now)), self._probe(qvec),
+                k=top_k, metric=cfg["metric"], vector_col="vector", id_col="id",
+                keep_cols=("content",),
+            ).collect()
         if not hits:
             return {"prompt": query, "sources": [], "chunks": []}
-        ids = [h["id"] for h in hits]
-        df = self._load(collection).filter(F.col("id").isin(ids)).select("id", "content")
-        scores = {h["id"]: h["score"] for h in hits}
-        rows = [(r["id"], scores[r["id"]], r["content"] or "") for r in df.collect()]
-        ranked = self.spark.createDataFrame(rows, "doc_id: string, score: double, text: string")
-        packed = pack_context(ranked, max_tokens=max_tokens).collect()
-        chunks = [r["text"] for r in packed]
+        packed = pack_rows(
+            [(h["id"], h["score"], h["content"] or "") for h in hits], max_tokens
+        )
+        chunks = [r[2] for r in packed]
         context = "\n\n".join(chunks)
         return {
             "prompt": f"Context:\n{context}\n\nQuestion: {query}",
-            "sources": [r["doc_id"] for r in packed],
+            "sources": [r[0] for r in packed],
             "chunks": chunks,
         }
 
@@ -1347,11 +1425,14 @@ def import_jsonl(self, name: str, path: str, dimensions: int = 64, metric: str =
         self.create_collection(
             name, CollectionConfig(dimensions=dimensions, metric=metric)
         )
-    # rows without ts/ttl_ms get insert()'s defaults (now, never expire)
+    # rows without ts/ttl_ms get insert()'s defaults (now, never expire); a
+    # row with a missing or wrong-width vector fails the import job
+    dim = self._catalog[name]["dimensions"]
     rows = (
         self.spark.read.text(path)
         .select(F.from_json(F.col("value"), _ROW_SCHEMA).alias("r"))
         .select("r.*")
+        .withColumn("vector", _checked_vector(F.col("vector"), dim))
         .withColumn("ts", F.coalesce("ts", F.lit(int(time.time() * 1000))))
         .withColumn("ttl_ms", F.coalesce("ttl_ms", F.lit(0).cast("long")))
     )

@@ -38,3 +38,17 @@ def pack_context(
         .withColumn("running_tokens", F.sum("tokens").over(w))
         .filter(F.col("running_tokens") <= max_tokens)
     )
+
+
+def pack_rows(ranked: list[tuple], max_tokens: int = 2000) -> list[tuple]:
+    """pack_context on the driver over (id, score, text) rows: by score DESC
+    then id ASC, keep rows while the inclusive running sum of
+    ceil(len(text)/4) tokens fits the budget (tokens are never negative,
+    so the first row that overflows ends the pack)."""
+    out, used = [], 0
+    for row in sorted(ranked, key=lambda r: (-r[1], r[0])):
+        used += -(-len(row[2]) // 4)
+        if used > max_tokens:
+            break
+        out.append(row)
+    return out

@@ -67,3 +67,33 @@ def rrf_fuse(
         .orderBy(F.col("fused_score").desc(), F.col(id_col).asc())
         .limit(top_k)
     )
+
+
+def rrf_rank(
+    branches: dict[str, list[tuple]],
+    top_k: int = 10,
+    weights: dict[str, float] | None = None,
+    rrf_k: int = RRF_K,
+) -> list[dict]:
+    """rrf_fuse on the driver over ranked (id, score) lists: each branch is
+    ranked by score DESC then id ASC; an id's fused score sums its
+    w/(rrfK + rank) per branch in rank order, then across branches, as the
+    partial and final aggregates do.  A repeated id (one per tenant)
+    contributes once per row, like the groupBy.  Returns rrf_fuse's rows
+    as dicts (doc_id, fused_score, n_strategies, best_rank)."""
+    weights = weights or DEFAULT_WEIGHTS
+    fused: dict = {}
+    for name, rows in branches.items():
+        w = float(weights.get(name, 0.0))
+        part: dict = {}
+        for rank, (i, _s) in enumerate(sorted(rows, key=lambda r: (-r[1], r[0])), 1):
+            s, n, best = part.get(i, (0.0, 0, rank))
+            part[i] = (s + w / (float(rrf_k) + rank), n + 1, best)
+        for i, (s, n, best) in part.items():
+            s0, n0, best0 = fused.get(i, (0.0, 0, best))
+            fused[i] = (s0 + s, n0 + n, min(best0, best))
+    top = sorted(fused.items(), key=lambda kv: (-kv[1][0], kv[0]))[:top_k]
+    return [
+        {"doc_id": i, "fused_score": s, "n_strategies": n, "best_rank": best}
+        for i, (s, n, best) in top
+    ]

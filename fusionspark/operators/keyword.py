@@ -92,6 +92,31 @@ def keyword_search(
     )
 
 
+def keyword_rank(
+    ids, texts, query: str, top_k: int = 10
+) -> list[tuple[str, float]]:
+    """keyword_search on the driver over parallel id / text sequences (None
+    text = ""): the same terms, the same non-overlapping count in the
+    lowercased text, and the same tf-saturation sum in the same order, so
+    every score is bit-identical.  (id, score) pairs with score > 0, by
+    score DESC then id ASC, at most `top_k`."""
+    terms = extract_terms(query)
+    if not terms:
+        return []
+    n = float(len(terms))
+    out = []
+    for i, text in zip(ids, texts):
+        low = (text or "").lower()
+        total = 0.0
+        for t in terms:
+            c = low.count(t)
+            total = total + c * 2.2 / (c + 1.2)
+        if total > 0:
+            out.append((i, total / n))
+    out.sort(key=lambda p: (-p[1], p[0]))
+    return out[:top_k]
+
+
 def build_keyword_index(
     documents: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

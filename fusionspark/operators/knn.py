@@ -106,6 +106,7 @@ def knn(
     id_col: str = "vec_id",
     pre_filter: Column | None = None,
     strategy: str = "window",
+    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Exact k-NN for every probe row.
 
@@ -115,7 +116,12 @@ def knn(
     strategy: "window" (score expr + one window), "partitioned" (expr +
     per-partition top-k pre-reduction), "numpy" (GEMM scoring + local top-k
     in one Arrow pass — highest throughput for many probes).
+
+    `keep_cols` carries corpus columns through to each hit ("window"
+    only), so a caller needs no join back by id.
     """
+    if keep_cols and strategy != "window":
+        raise ValueError("keep_cols needs strategy='window'")
     if strategy == "numpy":
         scored = _numpy_score_topk(
             corpus, probes, k, metric, vector_col, probe_vector_col,
@@ -127,14 +133,15 @@ def knn(
         )
         # drop the vector payloads before the top-k shuffle — the window
         # exchange should carry (ids, distance), not the embeddings
-        scored = scored.select(probe_id_col, id_col, "distance", "score")
+        scored = scored.select(probe_id_col, id_col, "distance", "score",
+                               *keep_cols)
         if strategy == "partitioned":
             scored = _local_topk(scored, k, probe_id_col, id_col)
     w = Window.partitionBy(probe_id_col).orderBy(F.col("distance").asc(), F.col(id_col).asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(probe_id_col, id_col, "distance", "score", "rank")
+        .select(probe_id_col, id_col, "distance", "score", "rank", *keep_cols)
     )
 
 

@@ -6,24 +6,29 @@ Two resident forms, chosen per collection by size:
 
 * `Snapshot` — the serving form.  One Arrow `toPandas` pass copies the
   collection into the server process: the original string ids, a float64
-  matrix (row-normalized for cosine), `ts`/`ttl_ms` as int64 and tenant
-  plus each metadata key as categorical code arrays.  A search is numpy
-  only — vectorised tenant/metadata/TTL masks, then the exact top-k below
-  — so it runs no Spark job at all.  Snapshots are immutable: a write builds
-  a new one from the old plus the rows it already holds on the driver, and
-  a reader keeps whichever reference it took, so it never sees half a
-  write.  Freshness: each snapshot carries the collection's mutation token
-  of the storage state it mirrors; the engine serves it only while the
-  token matches and rebuilds it from storage (still the source of truth)
-  when it does not.
+  matrix (row-normalized for cosine), the `content` texts, `ts`/`ttl_ms` as
+  int64 and tenant plus each metadata key as categorical code arrays.  The
+  engine answers every interactive read from it with no Spark job: exact
+  and resident search, recall, both branches of hybrid retrieve and the
+  RAG context (vectorised tenant/metadata/TTL masks, the exact top-k
+  below, and the driver twins of keyword scoring, RRF and the token-budget
+  pack next to their Spark operators).  Snapshots are immutable: a write
+  builds a new one from the old plus the rows it already holds on the
+  driver, and a reader keeps whichever reference it took, so it never sees
+  half a write.  One freshness rule: each snapshot carries the collection's
+  mutation token of the storage state it mirrors; the engine serves it only
+  while the token matches and otherwise reloads it from storage (still the
+  source of truth) before the read.
 * `ResidentIndex` — distributed blocks for collections above the size
-  limit: `rows × dim × 8` bytes over `SNAPSHOT_MEM_FRACTION` of the driver
-  host's MemAvailable (`fits_driver`).  Each partition's vectors are
-  materialized once into a numpy block persisted in the Python workers, so
-  a search is one Spark stage of GEMM + top-k per block with no corpus
-  serialization.  Blocks live where the data lives; the per-partition
-  (Q×k) candidates merge associatively, either on the driver or as
-  `treeReduce` partials (`merge="tree"`, the 1000-executor form).
+  limit (`fits_driver`): a collection's `rows × dim × 8` matrix bytes plus
+  its content bytes, together with every other loaded snapshot, must stay
+  under `SNAPSHOT_MEM_FRACTION` of the driver host's MemAvailable.  Each
+  partition's vectors are materialized once into a numpy block persisted
+  in the Python workers, so a search is one Spark stage of GEMM + top-k per
+  block with no corpus serialization.  Blocks live where the data lives;
+  the per-partition (Q×k) candidates merge associatively, either on the
+  driver or as `treeReduce` partials (`merge="tree"`, the 1000-executor
+  form).
 
 Exactness, shared by both forms and by `knn(strategy="numpy")`: every
 distance is scored row-locally with `einsum`, and the (distance ASC, id
@@ -76,10 +81,11 @@ TILE_ROWS = 4096
 #: the difference.
 WARM_Q = 1000
 
-#: a collection is served from a driver `Snapshot` while its matrix
-#: (rows × dim × 8 bytes) stays under this share of the driver host's
-#: MemAvailable; a write copies the matrix once, so the share leaves room
-#: for two copies plus search transients.  Above it, `ResidentIndex`.
+#: collections are served from driver `Snapshot`s while all of them
+#: together (matrix rows × dim × 8 bytes plus content bytes) stay under
+#: this share of the driver host's MemAvailable; a write copies the matrix
+#: once, so the share leaves room for two copies plus search transients.
+#: Above it, `ResidentIndex` blocks and Spark reads.
 SNAPSHOT_MEM_FRACTION = 0.25
 
 
@@ -94,9 +100,12 @@ def _mem_available() -> int:
     return os.sysconf("SC_AVPHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
 
 
-def fits_driver(rows: int, dim: int) -> bool:
-    """Whether a rows × dim collection may be served from a `Snapshot`."""
-    return rows * dim * 8 <= SNAPSHOT_MEM_FRACTION * _mem_available()
+def fits_driver(rows: int, dim: int, content_bytes: int = 0,
+                held: int = 0) -> bool:
+    """Whether a rows × dim collection with `content_bytes` of text may be
+    served from a `Snapshot` while other snapshots hold `held` bytes."""
+    need = rows * dim * 8 + content_bytes + held
+    return need <= SNAPSHOT_MEM_FRACTION * _mem_available()
 
 
 def _warm_kernel(it):
@@ -427,29 +436,33 @@ def block_filter(tenant_id, metadata_filter: dict | None, now: int):
 
 class Snapshot:
     """Driver-local, immutable copy of one engine collection (id string,
-    vector array<float>, tenant_id, metadata, ts, ttl_ms) for resident
-    search with no Spark job.  `token` is the collection mutation token of
+    vector array<float>, content, tenant_id, metadata, ts, ttl_ms) for
+    reads with no Spark job.  `token` is the collection mutation token of
     the storage state it mirrors.  Writes return a new snapshot."""
 
-    __slots__ = ("metric", "token", "ids", "M", "v2", "attrs")
+    __slots__ = ("metric", "token", "ids", "M", "v2", "content", "attrs",
+                 "_keys")
 
-    def __init__(self, metric, token, ids, M, v2, attrs):
+    def __init__(self, metric, token, ids, M, v2, content, attrs):
         self.metric, self.token = metric, token
-        self.ids, self.M, self.v2, self.attrs = ids, M, v2, attrs
+        self.ids, self.M, self.v2 = ids, M, v2
+        self.content, self.attrs = content, attrs
+        self._keys = None
 
     def __len__(self) -> int:
         return len(self.ids)
 
     @classmethod
-    def of(cls, metric, token, ids, V, attrs) -> "Snapshot":
+    def of(cls, metric, token, ids, V, content, attrs) -> "Snapshot":
         M, v2 = _prepare(np.asarray(V, dtype=np.float64), metric)
-        return cls(metric, token, np.asarray(ids, dtype=object), M, v2, attrs)
+        return cls(metric, token, np.asarray(ids, dtype=object), M, v2,
+                   np.asarray(content, dtype=object), attrs)
 
     @classmethod
     def load(cls, df: DataFrame, metric: str, dim: int, token) -> "Snapshot":
         """One Arrow `toPandas` pass over the collection DataFrame."""
         pdf = df.filter(F.col("vector").isNotNull()).select(
-            "id", "vector", "tenant_id", "metadata",
+            "id", "vector", "content", "tenant_id", "metadata",
             F.coalesce("ts", F.lit(0)).alias("ts"),
             F.coalesce("ttl_ms", F.lit(0)).alias("ttl_ms"),
             (F.col("ts").isNotNull() & F.col("ttl_ms").isNotNull()).alias("live"),
@@ -457,19 +470,23 @@ class Snapshot:
         V = (np.stack(pdf["vector"].to_numpy()) if len(pdf)
              else np.empty((0, dim)))
         return cls.of(
-            metric, token, pdf["id"].to_numpy(), V,
+            metric, token, pdf["id"].to_numpy(), V, pdf["content"].to_numpy(),
             Attrs.of(pdf["tenant_id"].to_numpy(), pdf["metadata"].to_numpy(),
                      pdf["ts"].to_numpy(), pdf["ttl_ms"].to_numpy(),
                      pdf["live"].to_numpy()),
         )
 
+    def nbytes(self) -> int:
+        """What `fits_driver` counts: matrix bytes plus UTF-8 content bytes."""
+        return self.M.nbytes + sum(len(c.encode()) for c in self.content if c)
+
     def at(self, token) -> "Snapshot":
         return Snapshot(self.metric, token, self.ids, self.M, self.v2,
-                        self.attrs)
+                        self.content, self.attrs)
 
     def _take(self, keep) -> "Snapshot":
-        return Snapshot(self.metric, self.token, self.ids[keep],
-                        self.M[keep], self.v2[keep], self.attrs.take(keep))
+        return Snapshot(self.metric, self.token, self.ids[keep], self.M[keep],
+                        self.v2[keep], self.content[keep], self.attrs.take(keep))
 
     def upsert(self, rows: list, replace: bool) -> "Snapshot":
         """The engine insert's rows (id, vector, content, metadata, tenant_id,
@@ -488,7 +505,7 @@ class Snapshot:
         V = np.asarray([r[1] for r in rows], dtype=np.float32)
         new = Snapshot.of(
             self.metric, self.token, [r[0] for r in rows],
-            V.reshape(len(rows), self.M.shape[1]),
+            V.reshape(len(rows), self.M.shape[1]), [r[2] for r in rows],
             Attrs.of([r[4] for r in rows], [r[3] for r in rows],
                      [r[5] for r in rows], [r[6] for r in rows]),
         )
@@ -497,6 +514,7 @@ class Snapshot:
             np.concatenate([base.ids, new.ids]),
             np.concatenate([base.M, new.M]),
             np.concatenate([base.v2, new.v2]),
+            np.concatenate([base.content, new.content]),
             base.attrs.concat(new.attrs),
         )
 
@@ -520,32 +538,57 @@ class Snapshot:
         from fusionspark.operators.knn import id_sql_type
 
         rows = probes.select(probe_id_col, probe_vector_col).collect()
-        D, I = self.topk([r[1] for r in rows], k)
+        D, R = self.topk([r[1] for r in rows], k)
         return _result_df(
-            probes.sparkSession, [r[0] for r in rows], D, I, probe_id_col,
-            "id", id_sql_type(probes, probe_id_col), "string",
+            probes.sparkSession, [r[0] for r in rows], D, self.ids[R],
+            probe_id_col, "id", id_sql_type(probes, probe_id_col), "string",
         )
 
+    def hits(self, query_vector, k: int, mask=None,
+             content: bool = False) -> list[dict]:
+        """The engine search's hits (id, score, distance, rank; with
+        `content`, each row's text too) for one query vector, rounded
+        through float32 like the exact path's array<float> probe."""
+        D, R = self.topk(np.asarray([query_vector], np.float32), k, mask)
+        out = []
+        for rank, (d, row) in enumerate(zip(D[0].tolist(), R[0].tolist()), 1):
+            h = {"id": self.ids[row], "score": 1.0 - d, "distance": d,
+                 "rank": rank}
+            if content:
+                h["content"] = self.content[row]
+            out.append(h)
+        return out
+
     def topk(self, P, k: int, mask=None):
-        """(D, I): per probe, the top-k (distance ASC, id ASC) over the rows
-        in `mask` (all rows if None), as (Q, kk) distances and string ids
+        """(D, R): per probe, the top-k (distance ASC, id ASC) over the rows
+        in `mask` (all rows if None), as (Q, kk) distances and row numbers
         sorted by rank."""
         P = np.asarray(P, dtype=np.float64).reshape(-1, self.M.shape[1])
-        M, ids, v2 = self.M, self.ids, self.v2
+        if self._keys is None:
+            # unique int64 sort keys in (id, row) order, NULL ids first as
+            # in Spark's ASC: the kernel's id tie-break on them is the
+            # string-id order, and a key maps back to its row via `order`
+            null = np.equal(self.ids, None)
+            order = np.lexsort((np.where(null, "", self.ids), ~null))
+            keys = np.empty(len(order), dtype=np.int64)
+            keys[order] = np.arange(len(order))
+            self._keys = (keys, order)
+        keys, order = self._keys
+        M, v2 = self.M, self.v2
         if mask is not None and not mask.all():
             rows = np.flatnonzero(mask)
-            M, ids, v2 = M[rows], ids[rows], v2[rows]
-        Q, kk = P.shape[0], min(k, len(ids))
-        D, I = np.empty((Q, kk)), np.empty((Q, kk), dtype=object)
+            M, keys, v2 = M[rows], keys[rows], v2[rows]
+        Q, kk = P.shape[0], min(k, len(keys))
+        D, K = np.empty((Q, kk)), np.empty((Q, kk), dtype=np.int64)
         # probe chunks bound the (chunk, rows) transients like a
         # ResidentIndex strip at WARM_Q probes
-        step = max(1, TILE_ROWS * WARM_Q // max(len(ids), 1))
+        step = max(1, TILE_ROWS * WARM_Q // max(len(keys), 1))
         for s in range(0, Q, step):
-            d, i = _scored_topk(P[s:s + step], M, ids, k, self.metric, v2)
+            d, i = _scored_topk(P[s:s + step], M, keys, k, self.metric, v2)
             for qi in range(d.shape[0]):
                 o = np.lexsort((i[qi], d[qi]))
-                D[s + qi], I[s + qi] = d[qi][o], i[qi][o]
-        return D, I
+                D[s + qi], K[s + qi] = d[qi][o], i[qi][o]
+        return D, order[K]
 
 
 class ResidentIndex:

@@ -252,14 +252,14 @@ def test_attach_delta_freshness_follows_external_commits(spark, tmp_path):
     eng.attach_delta("pin0", t, version=0)       # pinned
     eng.load_resident("live")
     eng.load_resident("pin0")
-    assert eng._resident_fresh("live", eng._catalog["live"]) is not None
-    assert eng._resident_fresh("pin0", eng._catalog["pin0"]) is not None
+    assert eng._resident_fresh("live") is not None
+    assert eng._resident_fresh("pin0") is not None
 
     # external commit: the unpinned resident cache must go stale...
     write_delta_table(
         spark, _engine_table_df(spark, 12, 16), t, mode="append"
     )
-    assert eng._resident_fresh("live", eng._catalog["live"]) is None
+    assert eng._resident_fresh("live") is None
     # ...and the serve-many path refuses rather than serving the stale
     # snapshot
     probes = spark.createDataFrame(
@@ -268,11 +268,11 @@ def test_attach_delta_freshness_follows_external_commits(spark, tmp_path):
     with pytest.raises(ValueError, match="stale or missing"):
         eng.search_many("live", probes, method="resident", approximate=False)
     # the pinned attach is unaffected
-    assert eng._resident_fresh("pin0", eng._catalog["pin0"]) is not None
+    assert eng._resident_fresh("pin0") is not None
 
     # rebuild picks up the new snapshot and is fresh again
     eng.load_resident("live")
-    assert eng._resident_fresh("live", eng._catalog["live"]) is not None
+    assert eng._resident_fresh("live") is not None
     # the exact path already sees the new rows (follow-latest read)
     sizes = {c["name"]: c["size"] for c in eng.list_collections()}
     assert sizes["live"] == 16 and sizes["pin0"] == 12

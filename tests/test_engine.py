@@ -516,14 +516,13 @@ def test_resident_auto_append_on_insert(engine):
     engine.insert("ra", [{"id": "b", "vector": [0.9, 0.1, 0, 0]}])
     # snapshot caught up with the mutation counter — still fresh
     assert engine._snapshots["ra"].token == before + 1
-    cfg = engine._catalog["ra"]
-    assert engine._resident_fresh("ra", cfg) is not None
+    assert engine._resident_fresh("ra") is not None
     hits = engine.search("ra", query_vector=[1, 0, 0, 0], top_k=5, resident=True)
     assert [h["id"] for h in hits] == ["a", "b"]
     # a replace-collision upsert mirrors into the snapshot as well: it
     # stays fresh and answers like the exact scan
     engine.insert("ra", [{"id": "a", "vector": [0, 1, 0, 0]}])
-    assert engine._resident_fresh("ra", cfg) is not None
+    assert engine._resident_fresh("ra") is not None
     hits2 = engine.search("ra", query_vector=[0, 1, 0, 0], top_k=5, resident=True)
     assert hits2[0]["id"] == "a"
     exact = engine.search("ra", query_vector=[0, 1, 0, 0], top_k=5)

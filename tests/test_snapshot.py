@@ -1,7 +1,8 @@
-"""Driver-local resident snapshot: parity with exact search across writes,
-zero Spark jobs per resident search, bit-identical answers after a rebuild,
-reads during concurrent writes, the size-limit fallback to ResidentIndex
-blocks, and import_jsonl's ts/ttl_ms defaults."""
+"""Driver-local snapshot: every read (search with or without `resident`,
+recall, retrieve, build_context) equals the Spark path across writes and
+runs no Spark job; bit-identical answers after a rebuild, reads during
+concurrent writes, the size-limit fallback to ResidentIndex blocks,
+freshness across engines, and the import and append write paths."""
 
 from __future__ import annotations
 
@@ -11,9 +12,11 @@ import math
 import sys
 import threading
 import time
+from unittest import mock
 
 import pytest
 
+import fusionspark.operators.serving as sv
 from fusionspark.engine import CollectionConfig, FusionSparkEngine
 from fusionspark.server import Router
 
@@ -56,18 +59,34 @@ def _jobs(spark, fn):
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _on_spark(engine, method, *args, **kw):
+    """engine.<method>(...) on the Spark path: a second engine over the same
+    root, with no snapshot loaded and none allowed to load."""
+    other = FusionSparkEngine(engine.spark, engine.root, engine.embedder,
+                              storage=engine.storage)
+    with mock.patch.object(sv, "SNAPSHOT_MEM_FRACTION", 0.0):
+        return getattr(other, method)(*args, **kw)
+
+
 def _assert_resident_equals_exact(engine, coll, cases=ALL, k=10,
                                   zero_jobs=True):
+    """search() with and without `resident` equals the Spark exact scan."""
     for q, kw in cases:
-        exact = engine.search(coll, query_vector=q, top_k=k, **kw)
-        res, jobs = _jobs(engine.spark, lambda: engine.search(
-            coll, query_vector=q, top_k=k, resident=True, **kw))
-        if zero_jobs:
-            assert jobs == [], kw
-        assert [h["id"] for h in res] == [h["id"] for h in exact], kw
-        for e, g in zip(exact, res):
-            assert abs(e["score"] - g["score"]) < 1e-9
-            assert g["rank"] == e["rank"]
+        exact = _on_spark(engine, "search", coll, query_vector=q, top_k=k, **kw)
+        for resident in (True, False):
+            res, jobs = _jobs(engine.spark, lambda: engine.search(
+                coll, query_vector=q, top_k=k, resident=resident, **kw))
+            if zero_jobs:
+                assert jobs == [], kw
+            _assert_same_hits(res, exact)
+
+
+def _assert_same_hits(got, want):
+    assert [h["id"] for h in got] == [h["id"] for h in want]
+    for e, g in zip(want, got):
+        assert abs(e["distance"] - g["distance"]) < 1e-9
+        assert abs(e["score"] - g["score"]) < 1e-9
+        assert g["rank"] == e["rank"]
 
 
 def _resident_answers(engine, coll):
@@ -78,16 +97,27 @@ def _resident_answers(engine, coll):
     ]
 
 
+WORDS = ("alpha", "Beta", "gamma", "c++", "a.b", "Émile", "ÆTHER", "delta")
+
+
+def _text(i: int, tenant: str) -> str:
+    words = [WORDS[(i * 3 + j + len(tenant)) % len(WORDS)] for j in range(i % 4 + 1)]
+    return " ".join(words + [f"{tenant}-doc{i}"] * (i % 3))
+
+
 def _populate(engine, coll, metric):
+    """r0..r29 under both tenants (different texts per tenant), an
+    untenanted row and an expired row whose text holds every query word."""
     engine.create_collection(coll, CollectionConfig(dimensions=DIM, metric=metric))
     cats = ("x", "y", "z")
     engine.insert(coll, [
         {"id": f"r{i}", "vector": _vec(off + i), "tenant_id": t,
-         "metadata": {"cat": cats[i % 3]}}
+         "content": _text(i, t), "metadata": {"cat": cats[i % 3]}}
         for t, off in (("t1", 0), ("t2", 100)) for i in range(30)
     ] + [
-        {"id": "u", "vector": _vec(500)},  # untenanted
-        {"id": "old", "vector": _vec(501), "tenant_id": "t1",  # expired
+        {"id": "u", "vector": _vec(500), "content": "alpha gamma"},
+        {"id": "old", "vector": _vec(501), "tenant_id": "t1",
+         "content": " ".join(WORDS) * 3,
          "ts": int(time.time() * 1000) - 10_000, "ttl_ms": 1},
     ])
 
@@ -101,8 +131,9 @@ def test_writes_keep_snapshot_exact(engine, spark, metric):
     _populate(engine, "w", metric)
     info = engine.load_resident("w")
     assert info["mode"] == "snapshot" and info["rows"] == 62
-    _, jobs = _jobs(spark, lambda: engine.search("w", query_vector=QUERIES[0]))
-    assert jobs, "the job counter must see the exact path's jobs"
+    _, jobs = _jobs(spark, lambda: _on_spark(engine, "search", "w",
+                                             query_vector=QUERIES[0]))
+    assert jobs, "the job counter must see the Spark path's jobs"
     _assert_resident_equals_exact(engine, "w", ONE)
 
     engine.insert("w", [{"id": f"n{i}", "vector": _vec(200 + i),
@@ -122,7 +153,7 @@ def test_writes_keep_snapshot_exact(engine, spark, metric):
 
     cfg = engine._catalog["w"]
     mirrored = engine._snapshots["w"]
-    assert engine._resident_fresh("w", cfg) is mirrored
+    assert engine._resident_fresh("w") is mirrored
     assert len(mirrored) == 62 + 5 - 2
     before = _resident_answers(engine, "w")
     engine.load_resident("w")
@@ -220,7 +251,7 @@ def test_import_jsonl_defaults_ts_ttl_and_stale_rebuild(engine, tmp_path):
         for i in range(20, 30):
             f.write(json.dumps({"id": f"j{i}", "vector": _vec(600 + i)}) + "\n")
     engine.import_jsonl("imp", str(path), dimensions=DIM)
-    assert engine._resident_fresh("imp", engine._catalog["imp"]) is None
+    assert engine._resident_fresh("imp") is None
     probes = engine.spark.createDataFrame(
         [("p", QUERIES[0])], "probe_id: string, probe_embedding: array<float>")
     with pytest.raises(ValueError, match="stale or missing"):
@@ -229,3 +260,108 @@ def test_import_jsonl_defaults_ts_ttl_and_stale_rebuild(engine, tmp_path):
     assert len(hits) == 30
     assert engine._snapshots["imp"] is not snap
     _assert_resident_equals_exact(engine, "imp", ALL[:2], k=30)
+
+
+# ── every interactive read from the snapshot ─────────────────────────────
+
+TEXT_QUERIES = ["alpha gamma", "C++ and a.b", "émile æther delta", "a an the"]
+
+
+@pytest.mark.parametrize("metric", ["cosine", "dot", "euclidean"])
+def test_reads_equal_spark_path(engine, spark, metric):
+    """search (tenant and metadata filters, an expired row), retrieve and
+    build_context from the snapshot equal the Spark path: ids, order and
+    ranks equal, distances within 1e-9, hybrid and RAG payloads exactly
+    equal (the query "a an the" has no usable keyword terms); each read
+    runs no Spark job once the snapshot is loaded."""
+    _populate(engine, "rd", metric)
+    engine.search("rd", query_vector=QUERIES[0])  # loads the snapshot
+    assert engine._snapshots["rd"].token == engine._catalog["rd"]["mutations"]
+    _assert_resident_equals_exact(engine, "rd", ALL + [(_vec(501), {})])
+    for q in TEXT_QUERIES:
+        for kw, read in (({"top_k": 5}, "retrieve"),
+                         ({"top_k": 6, "max_tokens": 12}, "build_context")):
+            want = _on_spark(engine, read, "rd", q, **kw)
+            got, jobs = _jobs(spark, lambda: getattr(engine, read)("rd", q, **kw))
+            assert jobs == [], (read, q)
+            assert got == want, (read, q)
+    # the expired row is hybrid's best keyword match but never searchable
+    hybrid = engine.retrieve("rd", "alpha gamma delta", top_k=60)
+    assert "old" in [h["doc_id"] for h in hybrid]
+    assert all(h["id"] != "old" for h in engine.search(
+        "rd", query_vector=_vec(501), top_k=70))
+    # r0..r29 exist under both tenants: a shared id fuses both rows
+    assert max(h["n_strategies"] for h in hybrid) > 2
+
+
+def test_recall_equals_spark_path(engine, spark):
+    """Agent memory recall (tenant = agent) from the snapshot equals the
+    Spark path and runs no Spark job after the first recall."""
+    for i in range(6):
+        engine.remember("a1" if i % 2 else "a2", f"note {i} about alpha {i * i}")
+    engine.recall("a1", "alpha")  # loads the snapshot
+    for agent, q in (("a1", "alpha 9"), ("a2", "note 4"), ("a3", "alpha")):
+        want = _on_spark(engine, "recall", agent, q)
+        got, jobs = _jobs(spark, lambda: engine.recall(agent, q))
+        assert jobs == []
+        _assert_same_hits(got, want)
+
+
+def test_manifest_commit_by_another_engine_is_seen(spark, tmp_path):
+    """Two engines on one manifest root: B's insert moves the table version
+    past A's snapshot, so A's next search reloads and returns the row."""
+    root = str(tmp_path / "m")
+    a = FusionSparkEngine(spark, root, storage="manifest")
+    a.create_collection("m", CollectionConfig(dimensions=DIM))
+    a.insert("m", [{"id": f"m{i}", "vector": _vec(i)} for i in range(10)])
+    assert a.search("m", query_vector=QUERIES[0], top_k=1)[0]["id"] != "new"
+    snap = a._snapshots["m"]
+    b = FusionSparkEngine(spark, root, storage="manifest")
+    b.insert("m", [{"id": "new", "vector": QUERIES[0]}])
+    assert a.search("m", query_vector=QUERIES[0], top_k=1)[0]["id"] == "new"
+    assert a._snapshots["m"] is not snap
+    # A's own write mirrors and stays fresh at the new version
+    a.insert("m", [{"id": "mine", "vector": QUERIES[1]}])
+    assert a._resident_fresh("m") is not None
+    assert a.search("m", query_vector=QUERIES[1], top_k=1)[0]["id"] == "mine"
+
+
+@pytest.mark.parametrize("row", [
+    {"id": "bad", "vector": [1.0, 2.0]},  # 2 wide in an 8-d collection
+    {"id": "bad"},  # no vector
+])
+def test_import_jsonl_rejects_bad_vectors(engine, tmp_path, row):
+    """A row with a missing or wrong-width vector fails the import job, as
+    insert() and ingest() refuse it; the collection is left unchanged."""
+    engine.create_collection("iv", CollectionConfig(dimensions=DIM))
+    engine.insert("iv", [{"id": f"g{i}", "vector": _vec(i)} for i in range(5)])
+    before = engine.search("iv", query_vector=QUERIES[0], top_k=10)
+    before_spark = _on_spark(engine, "search", "iv", query_vector=QUERIES[0],
+                             top_k=10)
+    path = tmp_path / "bad.jsonl"
+    with open(path, "w") as f:
+        f.write(json.dumps({"id": "ok", "vector": _vec(9)}) + "\n")
+        f.write(json.dumps(row) + "\n")
+    with pytest.raises(Exception, match="collection dimensions 8"):
+        engine.import_jsonl("iv", str(path), dimensions=DIM)
+    assert engine._load("iv").count() == 5
+    assert _on_spark(engine, "search", "iv", query_vector=QUERIES[0],
+                     top_k=10) == before_spark
+    assert engine.search("iv", query_vector=QUERIES[0], top_k=10) == before
+
+
+def test_one_row_insert_writes_one_file(engine):
+    """A one-row append adds exactly one parquet file (no empty part)."""
+    import glob
+    import os
+
+    engine.create_collection("f", CollectionConfig(dimensions=DIM))
+    engine.insert("f", [{"id": "a", "vector": _vec(1)}])
+    path = engine._path("f")
+
+    def files():
+        return glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+
+    n = len(files())
+    engine.insert("f", [{"id": "b", "vector": _vec(2)}])
+    assert len(files()) == n + 1

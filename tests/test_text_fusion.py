@@ -4,13 +4,14 @@ tests (mirroring /root/reference/test/fusionpact.test.js:140-223,340-554)."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from fusionspark import fixtures as FX
 from fusionspark.io import load_table
 from fusionspark.operators import fusion, memory as mem_ops
-from fusionspark.operators.keyword import extract_terms, keyword_search
-from fusionspark.operators.context import pack_context
+from fusionspark.operators.keyword import extract_terms, keyword_rank, keyword_search
+from fusionspark.operators.context import pack_context, pack_rows
 
 
 def test_extract_terms_stopwords_and_length():
@@ -136,3 +137,53 @@ def test_keyword_terms_with_regex_metachars_both_paths(spark):
     assert scan == indexed
     ids = {r[0] for r in scan}
     assert ids == {1, 2, 3}  # doc 3 matches only via literal "c++"; "3x14" not "3.14"
+
+
+# ── driver twins of the Spark operators ──────────────────────────────────
+
+_ALPHABET = "aAbBcC+.É éßÆæΩω\n"
+_texts = st.text(alphabet=_ALPHABET, max_size=40)
+
+
+@settings(max_examples=25, deadline=None)
+@given(texts=st.lists(_texts, min_size=1, max_size=12),
+       query=st.text(alphabet=_ALPHABET, max_size=20),
+       words=st.lists(st.sampled_from(["c++", "a.b", "ÉÉé", "abc", "AbC"]),
+                      max_size=3))
+def test_keyword_rank_equals_keyword_search(spark, texts, query, words):
+    """keyword_rank scores bit-identically to keyword_search (upper case,
+    regex metacharacters, non-ASCII letters, texts with no match)."""
+    query = " ".join([query, *words])
+    rows = [(f"d{i:02d}", t) for i, t in enumerate(texts)]
+    df = spark.createDataFrame(rows, "doc_id: string, text: string")
+    want = [(r["doc_id"], r["score"])
+            for r in keyword_search(df, query, top_k=8).collect()]
+    got = keyword_rank([r[0] for r in rows], [r[1] for r in rows], query, 8)
+    assert got == want
+
+
+def test_rrf_rank_equals_rrf_fuse(spark):
+    """rrf_rank returns rrf_fuse's rows exactly, including an id listed
+    twice in a branch (one row per tenant) and score ties broken by id."""
+    vec = [("a", 0.9), ("b", 0.8), ("c", 0.8), ("a", 0.7), ("d", 0.1)]
+    kw = [("c", 2.0), ("a", 1.5), ("e", 1.5), ("a", 0.2)]
+    schema = "doc_id: string, score: double"
+    for weights, k in (({"vector": 0.5, "keyword": 0.5}, 4),
+                       ({"vector": 0.7}, 10), (None, 3)):
+        want = [r.asDict() for r in fusion.rrf_fuse(
+            {"vector": spark.createDataFrame(vec, schema),
+             "keyword": spark.createDataFrame(kw, schema)},
+            top_k=k, weights=weights).collect()]
+        got = fusion.rrf_rank({"vector": vec, "keyword": kw}, top_k=k,
+                              weights=weights)
+        assert got == want
+
+
+def test_pack_rows_equals_pack_context(spark):
+    rows = [("b", 0.5, "x" * 40), ("a", 0.5, "y" * 3), ("c", 0.9, ""),
+            ("d", 0.1, "z" * 9)]
+    df = spark.createDataFrame(rows, "doc_id: string, score: double, text: string")
+    for budget in (0, 1, 10, 11, 12, 100):
+        want = [(r["doc_id"], r["score"], r["text"])
+                for r in pack_context(df, max_tokens=budget).collect()]
+        assert pack_rows(rows, budget) == want
