@@ -338,8 +338,6 @@ def bench_queries(spark):
         "consolidation_decay",
         "merge_candidates",
         "conversation_tail",
-        "stream_tumbling",
-        "stream_session",
         "dedup_exact",
         "dedup_minhash",
         "simhash_values",
@@ -353,13 +351,11 @@ def bench_queries(spark):
         "tpch_pricing_summary",
         "tpch_top_customers",
         "rollup_orders",
-        "stream_sliding",
         "searchall_quota",
-        # round 3: the scale-path near-dups, PNG codec pipeline, M5 routing
+        # round 3: the scale-path near-dups, PNG codec pipeline
         "neardup_ngram_lsh",
         "neardup_embedding_ivf",
         "png_features",
-        "message_deliveries",
         # round 5: training-pipeline additions (clustering, quality rules,
         # sampling, packing, PII)
         "dedup_clusters",
@@ -400,11 +396,9 @@ def bench_queries(spark):
         "hll_distinct",
         "wav_windows",
         "ann_sq8",
-        # round 6 (session 4): sparse lexical similarity join, batch
-        # sessionization, robust anomaly gate, k-core peeling
+        # round 6 (session 4): sparse lexical similarity join, k-core
+        # peeling
         "tfidf_pairs",
-        "sessionize",
-        "ts_anomalies",
         "kcore_docs",
         "ngram_novelty",
         # round 8: families newly driver-attested this round — measured so
@@ -420,7 +414,6 @@ def bench_queries(spark):
         "pca_embeddings",
         "pca_doc_scores",
         "kmeans_assign",
-        "stream_interval_join",
         "weighted_sample",
         "bfs_hops",
         # round 8 (session 5): corpus-distribution diagnostics — word-law
@@ -803,7 +796,7 @@ def main() -> None:
             ),
             "r8_session3_entries": (
                 "covariance_topk / pca_embeddings / pca_doc_scores / "
-                "kmeans_assign / stream_interval_join / weighted_sample / "
+                "kmeans_assign / weighted_sample / "
                 "bfs_hops first appear in r8 — BENCH history starts the same "
                 "round as their code; all are sub-3s medians (the spectral "
                 "family's corpus pass is one Arrow GEMM partial, the rest "

@@ -23,6 +23,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import secrets
 import shutil
 import threading
 import time
@@ -76,6 +77,14 @@ def _visible(now: int, tenant_id=None, metadata_filter: dict | None = None):
     return pred
 
 
+def _time_id(prefix: str) -> str:
+    """`prefix_<µs since epoch>_<random hex>`: the time prefix keeps ids
+    ordered across microseconds (get_conversation breaks ts ties by id),
+    the suffix keeps two calls in the same microsecond from upserting over
+    each other."""
+    return f"{prefix}_{int(time.time() * 1e6)}_{secrets.token_hex(4)}"
+
+
 def _checked_vector(col, dim: int):
     """`col` where its width is `dim`, else a job-failing error (a NULL
     array lands in the error branch too): the executor-side form of
@@ -124,12 +133,25 @@ class FusionSparkEngine:
         self._resident: dict[str, dict] = {}
         self._resident_ivf: dict[str, dict] = {}
         self._locks: dict[str, threading.RLock] = {}  # writes, mirrors, rebuilds
+        # catalog edits and writes; taken last, after any collection lock
+        self._catalog_lock = threading.RLock()
 
     # ── collections (S1-S6) ───────────────────────────────────────────────
 
     def _save_catalog(self) -> None:
-        with open(self._catalog_path, "w") as f:
-            json.dump(self._catalog, f, indent=2)
+        """Replace the catalog file atomically: a crash mid-write leaves
+        the previous catalog, never a truncated one."""
+        with self._catalog_lock:
+            tmp = f"{self._catalog_path}.{os.getpid()}.{threading.get_ident()}.tmp"
+            try:
+                with open(tmp, "w") as f:
+                    json.dump(self._catalog, f, indent=2)
+                    f.flush()
+                    os.fsync(f.fileno())
+                os.replace(tmp, self._catalog_path)
+            finally:
+                if os.path.exists(tmp):  # the write failed before the rename
+                    os.unlink(tmp)
 
     def _path(self, collection: str) -> str:
         return os.path.join(self.root, f"collection={collection}")
@@ -141,22 +163,23 @@ class FusionSparkEngine:
                 f"invalid collection name {name!r}: names become filesystem "
                 "path components, allowed chars are [A-Za-z0-9_.-]"
             )
-        if name in self._catalog:
-            raise ValueError(f"collection {name!r} exists")
         cfg = config or CollectionConfig()
-        self._catalog[name] = {
-            "dimensions": cfg.dimensions,
-            "metric": cfg.metric,
-            "created_at": int(time.time() * 1000),
-            "metadata": cfg.metadata,
-        }
-        self._save_catalog()
+        with self._catalog_lock:
+            if name in self._catalog:
+                raise ValueError(f"collection {name!r} exists")
+            self._catalog[name] = {
+                "dimensions": cfg.dimensions,
+                "metric": cfg.metric,
+                "created_at": int(time.time() * 1000),
+                "metadata": cfg.metadata,
+            }
+            self._save_catalog()
         return {"name": name, "config": self._catalog[name]}
 
     def list_collections(self) -> list[dict]:
         """S6 (FusionEngine.js:118-144)."""
         out = []
-        for name, cfg in self._catalog.items():
+        for name, cfg in list(self._catalog.items()):
             try:
                 n = self._load(name).count()
             except Exception:  # noqa: BLE001 — not yet written
@@ -166,8 +189,9 @@ class FusionSparkEngine:
 
     def drop_collection(self, name: str) -> bool:
         self.unload_resident(name)  # a re-created name restarts its token
-        cfg = self._catalog.pop(name, None)
-        self._save_catalog()
+        with self._catalog_lock:
+            cfg = self._catalog.pop(name, None)
+            self._save_catalog()
         if cfg and cfg.get("external_delta"):
             # detach only — NEVER delete a user's external table files
             return True
@@ -194,19 +218,20 @@ class FusionSparkEngine:
 
         if not re.fullmatch(r"[A-Za-z0-9_.-]+", name):
             raise ValueError(f"invalid collection name {name!r}")
-        if name in self._catalog:
-            raise ValueError(f"collection {name!r} exists")
         snap = resolve_snapshot(self.spark, path, version)  # validates log
-        self._catalog[name] = {
-            "external_delta": path,
-            "pinned_version": version,
-            "attached_version": snap.version,
-            "dimensions": dimensions,
-            "metric": metric,
-            "created_at": int(time.time() * 1000),
-            "metadata": {"source": "delta"},
-        }
-        self._save_catalog()
+        with self._catalog_lock:
+            if name in self._catalog:
+                raise ValueError(f"collection {name!r} exists")
+            self._catalog[name] = {
+                "external_delta": path,
+                "pinned_version": version,
+                "attached_version": snap.version,
+                "dimensions": dimensions,
+                "metric": metric,
+                "created_at": int(time.time() * 1000),
+                "metadata": {"source": "delta"},
+            }
+            self._save_catalog()
         return {"name": name, "config": self._catalog[name]}
 
     def _guard_writable(self, collection: str) -> None:
@@ -426,10 +451,11 @@ class FusionSparkEngine:
         and approximate search falls back to exact (the reference never
         goes stale — its collection IS the index — so correctness-first
         fallback is the honest port)."""
-        if collection in self._catalog:
-            cfg = self._catalog[collection]
-            cfg["mutations"] = cfg.get("mutations", 0) + 1
-            self._save_catalog()
+        with self._catalog_lock:
+            if collection in self._catalog:
+                cfg = self._catalog[collection]
+                cfg["mutations"] = cfg.get("mutations", 0) + 1
+                self._save_catalog()
 
     # ── index lifecycle (V6 analogue) ─────────────────────────────────────
 
@@ -479,7 +505,7 @@ class FusionSparkEngine:
             df, path,
             n_centroids=k, id_col="id", vector_col="vector", centroids=cents,
         )
-        cfg["index"] = {
+        index = {
             "n_centroids": k,
             "rows": n,
             "at_mutation": tok,
@@ -499,9 +525,11 @@ class FusionSparkEngine:
             ).write.mode("overwrite").partitionBy("centroid_id").parquet(
                 f"{path}/codes"
             )
-            cfg["index"]["pq"] = {"m": pq_m, "ksub": pq_ksub}
-        self._save_catalog()
-        return cfg["index"]
+            index["pq"] = {"m": pq_m, "ksub": pq_ksub}
+        with self._catalog_lock:
+            cfg["index"] = index
+            self._save_catalog()
+        return index
 
     def _mutation_token(self, collection: str):
         """Freshness key for index/resident caches: cfg['mutations'] for
@@ -992,7 +1020,7 @@ class FusionSparkEngine:
         return self.insert(
             coll,
             [{
-                "id": f"mem_{mem_type}_{int(time.time() * 1e6)}",
+                "id": _time_id(f"mem_{mem_type}"),
                 "content": content,
                 "metadata": {"importance": importance},
             }],
@@ -1032,7 +1060,7 @@ class FusionSparkEngine:
         return self.insert(
             coll,
             [{
-                "id": f"msg_{int(time.time() * 1e6)}",
+                "id": _time_id("msg"),
                 "content": content,
                 "metadata": {"thread_id": thread_id, "role": role},
             }],

@@ -162,13 +162,8 @@ agents AS (
 # ── messages ──────────────────────────────────────────────────────────────
 
 def messages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return messages_select(load_table(spark, sf_dir, "events"))
-
-
-def messages_select(e: DataFrame) -> DataFrame:
-    """events → messages projection; works on batch AND streaming frames
-    (the streaming delivery job applies it to readStream events)."""
-    return e.select(
+    """events → messages projection."""
+    return load_table(spark, sf_dir, "events").select(
         F.col("event_id").alias("msg_id"),
         F.concat(F.lit("agent-"), (F.col("user_id") % 5).cast("string")).alias("from_agent"),
         F.when(F.col("event_id") % 7 == 0, F.lit("*"))

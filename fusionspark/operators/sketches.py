@@ -37,9 +37,7 @@ def hll_rho(tail: Column, tail_bits: int) -> Column:
 
 def hll_bucket_rho(value: Column, p: int = 8) -> tuple[Column, Column]:
     """(bucket, rho) columns for one value — the per-row sketch
-    contribution.  Exposed so STREAMING aggregation can reuse the exact
-    same law (groupBy(bucket).max(rho) is an incrementally-maintainable
-    streaming aggregate; see tests/test_streaming.py)."""
+    contribution (groupBy(bucket).max(rho) gives the registers)."""
     tail_bits = 32 - p
     h = md5_hash32(value)
     return (

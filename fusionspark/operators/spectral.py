@@ -120,10 +120,8 @@ def covariance_int(
 
 
 def covariance_from_gram(g: DataFrame, scale: int = SCALE) -> DataFrame:
-    """covariance_int from an already-computed Gram frame — the entry
-    point for the streaming-maintained state
-    (streaming/pipeline.py::maintain_gram_stream), where the corpus is
-    never rescanned."""
+    """covariance_int from an already-computed Gram frame, so the corpus
+    is not rescanned."""
     sxy = g.filter(F.col("i") >= 0)
     sx = g.filter(F.col("i") == -1).select(F.col("j"), F.col("s").alias("sx"))
     # loud overflow guard on the documented bound |n·Σxy| ≤ n²·scale²:
@@ -308,8 +306,8 @@ def spectrum_stats(
 def spectrum_from_gram(
     g: DataFrame, dim: int = 64, scale: int = SCALE
 ) -> DataFrame:
-    """spectrum_stats from an existing Gram frame (streaming-maintained
-    state, or a slice Gram already computed by drift)."""
+    """spectrum_stats from an existing Gram frame (a slice Gram already
+    computed by drift)."""
     c = _cov_double(covariance_from_gram(g, scale=scale), scale=scale).select(
         "i", "j", "c"
     )

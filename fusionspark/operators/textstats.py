@@ -413,80 +413,6 @@ def nb_quality_scores(
     )
 
 
-def nb_weights(df, pos, neg, text_col: str = "text"):
-    """Collect the trained NB model to the driver: (weights dict, default
-    unseen-word weight, class prior).  The model is O(vocab) — KB-to-MB —
-    which is what makes the closure-broadcast scoring form (nb_score_rows)
-    and stream scoring possible."""
-    words = df.select(
-        pos.cast("int").alias("is_pos"),
-        neg.cast("int").alias("is_neg"),
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("w"),
-    ).filter(F.col("w") != "")
-    counts = (
-        words.filter((F.col("is_pos") == 1) | (F.col("is_neg") == 1))
-        .groupBy("w")
-        .agg(F.sum("is_pos").alias("n_pos"), F.sum("is_neg").alias("n_neg"))
-        .collect()
-    )
-    import math
-
-    t_pos = sum(r["n_pos"] for r in counts)
-    t_neg = sum(r["n_neg"] for r in counts)
-    v = len(counts)
-    weights = {
-        r["w"]: (
-            math.log(r["n_pos"] + 1) - math.log(t_pos + v)
-            - math.log(r["n_neg"] + 1) + math.log(t_neg + v)
-        )
-        for r in counts
-    }
-    default = math.log(t_neg + v) - math.log(t_pos + v)
-    agg = df.agg(
-        F.sum(pos.cast("int")).alias("np"), F.sum(neg.cast("int")).alias("nn")
-    ).first()
-    prior = math.log(agg["np"] / agg["nn"])
-    return weights, default, prior
-
-
-def nb_score_rows(
-    docs,
-    weights: dict,
-    default_weight: float,
-    prior: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """Stateless NB scoring: the model ships in the kernel closure, each
-    row scores in one Arrow pass — zero shuffle, no aggregation state, so
-    the SAME plan serves batch and Structured Streaming micro-batches
-    (the streaming form of nb_quality_scores, whose token-join form needs
-    a per-doc aggregation that streaming would have to checkpoint)."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            ids, ntok, scores, preds = [], [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                toks = [w for w in str(text).lower().split(" ") if w]
-                s = prior + sum(
-                    weights.get(w, default_weight) for w in toks
-                )
-                ids.append(did)
-                ntok.append(len(toks))
-                scores.append(round(s, 6))
-                preds.append(1 if s > 0 else 0)
-            yield pd.DataFrame(
-                {id_col: ids, "n_tokens": ntok, "nb_score": scores,
-                 "quality_pred": preds}
-            )
-
-    return docs.select(id_col, text_col).mapInPandas(
-        run,
-        schema=f"{id_col} long, n_tokens long, nb_score double, quality_pred int",
-    )
-
-
 def lm_perplexity_scores(
     df,
     id_col: str = "doc_id",

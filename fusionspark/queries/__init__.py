@@ -49,20 +49,20 @@ PRIORITY: list[str] = [
     "silhouette_simplified", "pr_auc", "score_ks", "mcc_binary",
     "lift_gains", "brier_decomposition", "mrr_multi", "map_at10",
     "delta_time_travel",
-    # 16 code-changed re-attests (r14 round6_stable sweep + ranking
+    # 15 code-changed re-attests (r14 round6_stable sweep + ranking
     # div/materialization) not refreshed by the r14 board or the r5 slice
     "systematic_sample", "range_bounds_plan", "neardup_containment",
     "neardup_prefix", "split_leakage", "conversion_latency",
-    "user_retention", "png_features", "image_features", "jpeg_features",
+    "png_features", "image_features", "jpeg_features",
     "video_frames", "bmp_features", "gif_features", "gif_interlaced",
     "png_interlaced", "qoi_features",
-    # 16 remaining r5-stale rows (registry order; includes the two
+    # 15 remaining r5-stale rows (registry order; includes the two
     # r14-code-changed rows neardup_ngram_lsh / dedup_incremental)
     "neardup_embedding", "neardup_ngram_lsh", "neardup_embedding_ivf",
     "dedup_clusters", "c4_filter", "hash_sample", "pack_sequences",
     "pii_redact", "repetition_stats", "vocab_coverage", "domain_mix",
     "contamination_check", "dedup_incremental", "messages_significant",
-    "message_deliveries", "merge_candidates",
+    "merge_candidates",
 ]
 
 
@@ -101,7 +101,6 @@ def load_all() -> None:
         rag_queries,
         relational_queries,
         spectral_queries,
-        streaming_queries,
         text_queries,
         tree_queries,
         url_queries,

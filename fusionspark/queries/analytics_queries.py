@@ -988,8 +988,7 @@ def histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one groupBy(bin) with map-side combine; the cumulative
     window runs over the GRID (≤ ~50k bins here, fixed by value range ×
-    resolution), never over the corpus.  The same two operators back the
-    streaming form (streaming/pipeline.py::maintain_histogram_stream)."""
+    resolution), never over the corpus."""
     from fusionspark.operators.sketches import cents_histogram, quantiles_from_bins
 
     e = load_table(spark, sf_dir, "events")

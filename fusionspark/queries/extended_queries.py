@@ -1,5 +1,5 @@
 """Coverage completion: F6/F7 (searchAll flat rank + per-doc quota),
-M5 (auto-remember), ST2 (sliding window), T6 (plaintext sections),
+M5 (auto-remember), T6 (plaintext sections),
 A13 (weight adjustment, rows-only) — plus classic relational queries over
 the TPC-H-ish tables (lineitem is the scale-stress table) exercising the
 grouped-aggregate / join / rollup machinery the agent-state operators
@@ -231,60 +231,6 @@ def messages_significant(spark: SparkSession, sf_dir: str) -> DataFrame:
         "from_agent",
         "type",
         F.substring("payload", 1, 500).alias("remembered"),
-    )
-
-
-# ── M5: message routing (broadcast fan-out) ───────────────────────────────
-
-@query(
-    "message_deliveries",
-    f"WITH {FX.MESSAGES_SQL.strip()},\n"
-    """
-    agents AS (SELECT DISTINCT from_agent AS agent_id FROM messages)
-    SELECT msg_id, from_agent, recipient, type FROM (
-        SELECT m.msg_id, m.from_agent, m.to_agent AS recipient, m.type
-        FROM messages m WHERE m.to_agent <> '*'
-        UNION ALL
-        SELECT m.msg_id, m.from_agent, a.agent_id AS recipient, m.type
-        FROM messages m JOIN agents a ON a.agent_id <> m.from_agent
-        WHERE m.to_agent = '*'
-    )
-    """,
-)
-def message_deliveries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M5 routing (AgentOrchestrator.js:152-160): '*' fans out to every
-    registered agent except the sender via a broadcast join against the
-    agent registry; direct messages pass through.  Same plan serves the
-    Structured Streaming delivery job (streaming/routing.py)."""
-    from fusionspark.streaming.routing import route_messages
-
-    m = FX.messages_df(spark, sf_dir)
-    agents = m.select(F.col("from_agent").alias("agent_id")).distinct()
-    return route_messages(m, agents).select("msg_id", "from_agent", "recipient", "type")
-
-
-# ── ST2: sliding window ───────────────────────────────────────────────────
-
-@query(
-    "stream_sliding",
-    """
-    SELECT window_start_s, event_type, COUNT(*)::BIGINT AS n FROM (
-        SELECT e.event_type,
-               ((floor(epoch(e.ts) / 900) - o.i) * 900)::BIGINT AS window_start_s
-        FROM events e
-        CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS i) o
-        WHERE (floor(epoch(e.ts) / 900) - o.i) * 900 + 3600 > epoch(e.ts)
-    ) GROUP BY window_start_s, event_type
-    """,
-)
-def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST2: 1h window sliding by 15m — each event lands in 4 windows; the
-    oracle replays it as an offset join."""
-    from fusionspark.streaming.windows import sliding_counts
-
-    df = sliding_counts(load_table(spark, sf_dir, "events"))
-    return df.select(
-        F.unix_timestamp("window_start").alias("window_start_s"), "event_type", "n"
     )
 
 

@@ -15,10 +15,22 @@ ours is a SparkSession).
 
 from __future__ import annotations
 
+import hashlib
 import json
+import logging
+import uuid
 from typing import Any
 
 VERSION = "2.0.0"
+
+log = logging.getLogger(__name__)
+
+
+def _text_id(text: str) -> str:
+    """Default document id: a digest of the text, so the same text gets
+    the same id in every process (the built-in str hash is salted per
+    process)."""
+    return "doc_" + hashlib.sha256(text.encode("utf-8")).hexdigest()[:16]
 
 
 class Router:
@@ -47,7 +59,7 @@ class Router:
                 return 201, self.engine.create_collection(body["name"], cfg)
             if path == "/api/insert" and method == "POST":
                 entry = {
-                    "id": body.get("id") or f"doc_{abs(hash(body.get('text', '')))}",
+                    "id": body.get("id") or _text_id(body.get("text", "")),
                     "metadata": body.get("metadata") or {},
                 }
                 if body.get("vector") is not None:
@@ -103,7 +115,7 @@ class Router:
             if path == "/api/rag/ingest" and method == "POST":
                 n = self.engine.ingest(
                     body.get("collection", "rag"),
-                    body.get("docId") or f"doc_{abs(hash(body['text']))}",
+                    body.get("docId") or _text_id(body["text"]),
                     body["text"],
                     strategy=body.get("strategy", "recursive"),
                 )
@@ -170,8 +182,12 @@ class Router:
             return 404, {"error": f"Not found: {method} {path}"}
         except KeyError as e:
             return 400, {"error": f"missing field {e}"}
-        except Exception as e:  # noqa: BLE001 — protocol boundary
+        except ValueError as e:
             return 400, {"error": str(e)}
+        except Exception:  # noqa: BLE001 — protocol boundary: a server fault
+            error_id = uuid.uuid4().hex
+            log.exception("%s %s failed (errorId %s)", method, path, error_id)
+            return 500, {"error": "internal server error", "errorId": error_id}
 
     # ── MCP-style tools (MCPServer.js:50-107) ─────────────────────────────
 
@@ -243,7 +259,7 @@ class Router:
                 "One-click RAG: chunk, embed, and index text.",
                 lambda a: {"chunks": e.ingest(
                     a.get("collection", "rag"),
-                    a.get("docId") or f"doc_{abs(hash(a['text']))}", a["text"],
+                    a.get("docId") or _text_id(a["text"]), a["text"],
                 )},
             ),
             "fusionspark_rag_query": (

@@ -1,12 +1,10 @@
 """Unit + plan-shape tests for the round-6 session-4 analytics family:
-sessionization, last-touch attribution, robust outliers, TF-IDF pair
-join, co-occurrence lift, and k-core peeling."""
+TF-IDF pair join and k-core peeling."""
 
 from __future__ import annotations
 
 import contextlib
 import io as _io
-from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,80 +15,6 @@ def _plan(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-def _ts(sec: int):
-    return datetime.fromtimestamp(sec, tz=timezone.utc).replace(tzinfo=None)
-
-
-def _events(spark, rows):
-    """rows: (event_id, user_id, sec, event_type, value)"""
-    return spark.createDataFrame(
-        [(i, u, _ts(s), t, float(v)) for i, u, s, t, v in rows],
-        "event_id long, user_id long, ts timestamp, event_type string, value double",
-    )
-
-
-def test_sessionize_gap_split(spark):
-    from fusionspark.operators.temporal import sessionize
-
-    ev = _events(
-        spark,
-        [
-            (1, 7, 0, "view", 0),
-            (2, 7, 10, "click", 0),
-            (3, 7, 2000, "view", 0),   # 1990s gap > 1800 → new session
-            (4, 7, 2100, "click", 0),
-            (5, 8, 50, "view", 0),     # other user: own numbering
-        ],
-    )
-    out = {
-        (r.user_id, r.session_no): r
-        for r in sessionize(ev, gap_sec=1800).collect()
-    }
-    assert set(out) == {(7, 1), (7, 2), (8, 1)}
-    assert out[(7, 1)].n_events == 2 and out[(7, 1)].duration_sec == 10.0
-    assert out[(7, 2)].n_events == 2 and out[(7, 2)].start_s == 2000.0
-    assert out[(8, 1)].n_events == 1 and out[(8, 1)].duration_sec == 0.0
-
-
-def test_last_touch_carries_past_conversions(spark):
-    from fusionspark.operators.temporal import last_touch_attribution
-
-    ev = _events(
-        spark,
-        [
-            (1, 1, 0, "view", 0),
-            (2, 1, 10, "purchase", 0),   # touch = view@0
-            (3, 1, 20, "purchase", 0),   # still view@0 (carries past #2)
-            (4, 1, 30, "click", 0),
-            (5, 1, 40, "purchase", 0),   # touch = click@30
-            (6, 2, 5, "purchase", 0),    # direct: no prior touch → NULLs
-        ],
-    )
-    got = {
-        r.conversion_id: r for r in last_touch_attribution(ev).collect()
-    }
-    assert got[2].touch_id == 1 and got[2].touch_type == "view"
-    assert got[2].touch_age_sec == 10.0
-    assert got[3].touch_id == 1 and got[3].touch_age_sec == 20.0
-    assert got[5].touch_id == 4 and got[5].touch_type == "click"
-    assert got[6].touch_id is None and got[6].touch_type is None
-
-
-def test_robust_outliers_flags_spike_and_skips_flat_groups(spark):
-    from fusionspark.operators.temporal import robust_outliers
-
-    rows = [(i, 1, i, "a", float(v)) for i, v in enumerate([1, 2, 3, 4, 5, 6, 7, 8, 9, 1000])]
-    rows += [(100 + i, 1, i, "flat", 5.0) for i in range(4)]
-    out = robust_outliers(_events(spark, rows)).collect()
-    by_id = {r.event_id: r for r in out}
-    spike = by_id[9]
-    assert spike.is_outlier and spike.robust_z > 100
-    assert all(not by_id[i].is_outlier for i in range(9))
-    # MAD = 0 → no robust scale: NULL score, never flagged, never a div error
-    for i in range(100, 104):
-        assert by_id[i].robust_z is None and by_id[i].is_outlier is False
 
 
 def test_tfidf_pairs_identical_docs_cosine_one(spark):
@@ -123,28 +47,6 @@ def test_tfidf_max_df_drops_boilerplate_terms(spark):
     assert tfidf_pairs(docs, threshold=0.01, min_df=2, max_df=2).count() == 0
 
 
-def test_cooccurrence_lift_values(spark):
-    # users 1,2 do {a,b}; user 3 does {a}; lift(a,b) = 3 * 2 / (3*2) = 1.0
-    ev = _events(
-        spark,
-        [(1, 1, 0, "a", 0), (2, 1, 1, "b", 0),
-         (3, 2, 0, "a", 0), (4, 2, 1, "b", 0),
-         (5, 3, 0, "a", 0)],
-    )
-    # exercise the registered plan body on a local frame
-    ut = ev.select("user_id", "event_type").distinct()
-    a = ut.withColumnRenamed("event_type", "type_a")
-    b = ut.select("user_id", F.col("event_type").alias("type_b"))
-    pairs = (
-        a.join(b, "user_id")
-        .filter(F.col("type_a") < F.col("type_b"))
-        .groupBy("type_a", "type_b")
-        .count()
-    )
-    got = {(r.type_a, r.type_b): r["count"] for r in pairs.collect()}
-    assert got == {("a", "b"): 2}
-
-
 def test_kcore_k5_plus_tail(spark):
     from fusionspark.operators.graph import kcore
 
@@ -173,30 +75,11 @@ def test_kcore_raises_loudly_on_deep_peel(spark):
 
 
 def test_session4_plan_shapes(spark, sf_dir):
-    """Plan contracts: sessionize/attribution run on ONE user_id exchange;
-    robust_outliers broadcasts its stats (no sort-merge join against the
-    events stream); tfidf_pairs never degenerates into a nested-loop or
+    """Plan contract: tfidf_pairs never degenerates into a nested-loop or
     cartesian join."""
     from fusionspark.io import load_table
     from fusionspark.operators.keyword import tfidf_pairs
-    from fusionspark.operators.temporal import (
-        last_touch_attribution,
-        robust_outliers,
-        sessionize,
-    )
 
-    import re
-
-    def _n_shuffles(p: str) -> int:
-        # formatted-plan node headers, e.g. "(4) Exchange" (the tree section
-        # prints "+- Exchange (4)", which this pattern deliberately skips)
-        return len(re.findall(r"^\(\d+\) Exchange", p, re.M))
-
-    ev = load_table(spark, sf_dir, "events")
-    assert _n_shuffles(_plan(sessionize(ev))) == 1
-    assert _n_shuffles(_plan(last_touch_attribution(ev))) == 1
-    p = _plan(robust_outliers(ev))
-    assert "SortMergeJoin" not in p and "BroadcastHashJoin" in p
     d = load_table(spark, sf_dir, "documents")
     p = _plan(tfidf_pairs(d))
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
@@ -213,19 +96,6 @@ def test_ngram_novelty_dup_doc_scores_zero(spark):
     assert got[1].novelty == 1.0 and got[1].n_grams == 2
     assert got[2].novelty == 0.0 and got[2].n_novel == 0
     assert got[3].novelty == 1.0
-
-
-def test_winsorize_clamps_tails_only(spark):
-    from fusionspark.operators.temporal import winsorize
-
-    rows = [(i, 1, i, "a", float(v)) for i, v in enumerate(range(1, 101))]
-    out = {r.event_id: r for r in
-           winsorize(_events(spark, rows), lo=0.05, hi=0.95).collect()}
-    # P5 of 1..100 (type-7) = 5.95, P95 = 95.05
-    assert out[0].was_clipped and out[0].clamped == 5.95
-    assert out[99].was_clipped and out[99].clamped == 95.05
-    assert not out[49].was_clipped and out[49].clamped == 50.0
-    assert sum(1 for r in out.values() if r.was_clipped) == 10
 
 
 def test_incremental_rollup_merge_equals_direct(spark, sf_dir):

@@ -77,3 +77,24 @@ def test_date_partitioned_layout_prunes(spark, sf_dir, tmp_path):
     assert "event_date" in pf          # predicate reached the partition layer
     n_day = df.count()
     assert 0 < n_day < ev.count()
+
+
+def test_load_table_is_timezone_neutral(spark, sf_dir):
+    """load_table must not mutate the caller's session timezone (ADVICE r5),
+    and the NTZ→timestamp conversion must be zone-FREE: epoch micros of the
+    events ts column are identical whatever zone the session is in."""
+    original = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        df = load_table(spark, sf_dir, "events")
+        assert (
+            spark.conf.get("spark.sql.session.timeZone") == "America/New_York"
+        ), "load_table mutated the session timezone"
+        ny = df.agg(F.min(F.unix_micros("ts")).alias("m")).first()["m"]
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        utc = load_table(spark, sf_dir, "events").agg(
+            F.min(F.unix_micros("ts")).alias("m")
+        ).first()["m"]
+        assert ny == utc
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", original)

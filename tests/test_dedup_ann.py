@@ -603,3 +603,56 @@ def test_ivf_persisted_autoswitch_honors_strategy(
         ann.ivf_search_persisted(
             spark, path, probes, k=5, n_probe=2, strategy="expression"
         ).collect()
+
+
+def test_streaming_ivf_append_matches_batch(spark, sf_dir, tmp_path):
+    """Streaming ANN ingestion: foreachBatch ivf_append per micro-batch
+    must leave the SAME persisted index as one batch append (frozen
+    quantizer ⇒ assignment is per-row and order-free), and searches over
+    it must match."""
+    from fusionspark.operators.ann import ivf_append, ivf_search_persisted, persist_ivf
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    base = emb.filter(F.col("vec_id") < 300)
+    extra = emb.filter(F.col("vec_id") >= 300)
+
+    p_stream, p_batch = str(tmp_path / "ivf_s"), str(tmp_path / "ivf_b")
+    for p in (p_stream, p_batch):
+        persist_ivf(base, p, n_centroids=16)
+    ivf_append(spark, p_batch, extra)
+
+    src = str(tmp_path / "src")
+    # two micro-batch files
+    extra.filter(F.col("vec_id") % 2 == 0).write.parquet(src + "/a")
+    extra.filter(F.col("vec_id") % 2 == 1).write.parquet(src + "/b")
+    stream = spark.readStream.schema(extra.schema).option(
+        "maxFilesPerTrigger", 1
+    ).parquet(src + "/*")
+    q = (
+        stream.writeStream.foreachBatch(
+            lambda df, _eid: ivf_append(spark, p_stream, df)
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+
+    sa = spark.read.parquet(f"{p_stream}/data")
+    sb = spark.read.parquet(f"{p_batch}/data")
+    assert sa.count() == sb.count() == emb.count()
+    # same (vec_id -> centroid) assignment everywhere
+    diff = (
+        sa.select("vec_id", F.col("centroid_id").alias("ca"))
+        .join(sb.select("vec_id", F.col("centroid_id").alias("cb")), "vec_id")
+        .filter(F.col("ca") != F.col("cb"))
+    )
+    assert diff.count() == 0
+    probes = self_probes(emb, 20)
+    ra = {(r["probe_id"], r["vec_id"])
+          for r in ivf_search_persisted(spark, p_stream, probes, k=5,
+                                        n_probe=4, strategy="numpy").collect()}
+    rb = {(r["probe_id"], r["vec_id"])
+          for r in ivf_search_persisted(spark, p_batch, probes, k=5,
+                                        n_probe=4, strategy="numpy").collect()}
+    assert ra == rb

@@ -593,3 +593,116 @@ def test_analyze_spectrum_and_clusters(engine):
     out2 = engine.analyze("an")
     assert "clusters" not in out2
     assert len(engine.analyze("an", k=50)["clusters"]) <= 20
+
+
+def test_engine_ingest_stream_matches_batch(spark, tmp_path):
+    """Continuous RAG ingestion: the streaming sink lands exactly the rows
+    batch ingest produces (same chunk→embed plan per micro-batch)."""
+    docs = [(f"d{i}", "alpha beta gamma delta. " * (20 + 7 * i)) for i in range(4)]
+    src = tmp_path / "docs_src"
+    spark.createDataFrame(docs, "doc_id string, text string").coalesce(1).write.parquet(
+        str(src)
+    )
+
+    batch_eng = FusionSparkEngine(spark, str(tmp_path / "eb"))
+    for d, t in docs:
+        batch_eng.ingest("rag", d, t)
+
+    stream_eng = FusionSparkEngine(spark, str(tmp_path / "es"))
+    stream = spark.readStream.schema("doc_id string, text string").parquet(str(src))
+    q = stream_eng.ingest_stream("rag", stream, str(tmp_path / "ck"))
+    q.awaitTermination(120)
+
+    want = {
+        (r["id"], r["content"], tuple(r["vector"]))
+        for r in batch_eng._load("rag").collect()
+    }
+    got = {
+        (r["id"], r["content"], tuple(r["vector"]))
+        for r in stream_eng._load("rag").collect()
+    }
+    assert got == want and want
+
+
+def test_failed_catalog_write_keeps_previous_catalog(engine, monkeypatch, tmp_path):
+    """A catalog write that dies mid-dump leaves the previous catalog on
+    disk, loadable by a new engine, and no temp file behind."""
+    import json
+    import os
+
+    engine.create_collection("kept", CollectionConfig(dimensions=4))
+
+    def torn_dump(obj, f, **kw):
+        f.write('{"kept": {"dimen')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        engine.create_collection("lost", CollectionConfig(dimensions=4))
+    monkeypatch.undo()
+
+    root = str(tmp_path / "store")
+    assert sorted(os.listdir(root)) == ["_catalog.json"]
+    reopened = FusionSparkEngine(engine.spark, root)
+    assert list(reopened._catalog) == ["kept"]
+    assert reopened._catalog["kept"]["dimensions"] == 4
+
+
+def test_concurrent_inserts_leave_a_whole_catalog(engine, tmp_path):
+    """Writers to different collections share the one catalog file: after
+    threaded inserts it parses and lists every collection."""
+    import json
+    import sys
+    import threading
+
+    names = [f"c{i}" for i in range(6)]
+    for n in names:
+        engine.create_collection(n, CollectionConfig(dimensions=4))
+    errors = []
+
+    def writer(n):
+        try:
+            for j in range(3):
+                engine.insert(n, [{"id": f"{n}_{j}", "vector": [1.0, j, 0.0, 0.0]}])
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=writer, args=(n,)) for n in names]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and errors == []
+    with open(tmp_path / "store" / "_catalog.json") as f:
+        on_disk = json.load(f)
+    assert sorted(on_disk) == names
+    assert all(on_disk[n]["mutations"] == engine._catalog[n]["mutations"] for n in names)
+    reopened = FusionSparkEngine(engine.spark, str(tmp_path / "store"))
+    assert {c["name"]: c["size"] for c in reopened.list_collections()} == dict.fromkeys(names, 3)
+
+
+def test_same_microsecond_writes_keep_distinct_ids(engine, monkeypatch):
+    """remember and add_message ids stay unique when the clock does not
+    move between two calls."""
+    import time
+    import types
+
+    import fusionspark.engine as engine_mod
+
+    frozen = time.time()
+    monkeypatch.setattr(engine_mod, "time", types.SimpleNamespace(time=lambda: frozen))
+
+    engine.remember("a1", "first note about spark")
+    engine.remember("a1", "second note about spark")
+    hits = engine.recall("a1", "note about spark", top_k=5)
+    assert len(hits) == 2 and len({h["id"] for h in hits}) == 2
+
+    engine.add_message("a1", "t1", "user", "hello")
+    engine.add_message("a1", "t1", "assistant", "hi there")
+    convo = engine.get_conversation("a1", "t1")
+    assert sorted(m["content"] for m in convo) == ["hello", "hi there"]

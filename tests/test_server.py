@@ -270,3 +270,66 @@ def test_every_tool_has_input_schema(srv_engine):
         if t["name"] == "fusionspark_list_collections":
             continue  # genuinely arg-free
         assert schema.get("properties"), t["name"]
+
+
+def test_router_status_codes(srv_engine, monkeypatch, caplog):
+    """Client faults are 400; anything else is a 500 with an errorId whose
+    traceback is logged once."""
+    import logging
+
+    r = Router(srv_engine)
+    status, out = r.route("POST", "/api/collections", {"dimensions": 4})
+    assert status == 400 and "name" in out["error"]
+
+    r.route("POST", "/api/collections", {"name": "w", "dimensions": 4})
+    status, out = r.route("POST", "/api/insert", {
+        "collection": "w", "id": "x", "vector": [1.0, 0.0],
+    })
+    assert status == 400 and "dimension" in out["error"]
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("engine bug")
+
+    monkeypatch.setattr(srv_engine, "search", broken)
+    with caplog.at_level(logging.ERROR, logger="fusionspark.server"):
+        status, out = r.route("POST", "/api/search", {
+            "collection": "w", "vector": [1.0, 0.0, 0.0, 0.0],
+        })
+    assert status == 500 and out["errorId"]
+    logged = [rec for rec in caplog.records if out["errorId"] in rec.getMessage()]
+    assert len(logged) == 1 and "engine bug" in logged[0].exc_text
+
+
+def test_default_ids_survive_a_restart():
+    """/api/insert, /api/rag/ingest and the MCP ingest tool default ids
+    from the text alone, so two processes with different hash seeds agree."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "from fusionspark.server import Router\n"
+        "class Stub:\n"
+        "    def insert(self, collection, rows, tenant_id=None):\n"
+        "        return len(rows)\n"
+        "    def ingest(self, collection, doc_id, text, strategy='recursive'):\n"
+        "        print(doc_id)\n"
+        "        return 1\n"
+        "r = Router(Stub())\n"
+        "print(r.route('POST', '/api/insert', {'collection': 'c', 'text': 'same text'})[1]['id'])\n"
+        "r.route('POST', '/api/rag/ingest', {'text': 'same text'})\n"
+        "r.call_tool('fusionspark_rag_ingest', {'text': 'same text'})\n"
+    )
+
+    def ids(seed):
+        env = {**os.environ, "PYTHONHASHSEED": seed}
+        out = subprocess.run(
+            [sys.executable, "-c", script], env=env, cwd=repo,
+            capture_output=True, text=True, timeout=120, check=True,
+        )
+        return out.stdout.split()
+
+    first = ids("1")
+    assert len(first) == 3 and len(set(first)) == 1
+    assert ids("2") == first
