@@ -424,12 +424,7 @@ def bench_queries(spark):
         "zipf_fit",
         "heaps_law",
         "distance_outliers",
-        # round 8 (session 5, batch 2): mergeable histogram quantiles,
-        # Holt-trend forecast, l-diversity audit, exact-cents Pearson,
-        # per-doc tf-idf keywords
-        "histogram_quantiles",
-        "ets_forecast",
-        "lineitem_corr",
+        # round 8 (session 5, batch 2): per-doc tf-idf keywords
         "doc_keywords",
         # round 8 (session 6): data-mining family — apriori-pruned basket
         # pair self-join, digest-only substring-span dedup, timeline-fold
@@ -440,47 +435,36 @@ def bench_queries(spark):
         # round 8 (session 7): positional phrase search (per-term-pruned
         # posting equi-joins), split-leakage audit (broadcast shingle
         # vocabulary), item-item CF (customer-basket pair self-join +
-        # rank pushdown), DQ expectation suite (one folded aggregate +
-        # distinct + broadcast anti-join)
+        # rank pushdown)
         "phrase_search",
         "split_leakage",
         "item_cf",
-        "dq_expectations",
         # round 8 (session 7, batch 2): lossless prefix-filtered exact
-        # similarity join, Poisson-bootstrap CI (×200 explode, 2B-scalar
-        # shuffle), HITS ordered-fold iterations, real BMP decode,
-        # Theil-Sen exact rational median
+        # similarity join, HITS ordered-fold iterations, real BMP decode
         "neardup_prefix",
-        "bootstrap_ci",
         "hits_docs",
         "bmp_features",
-        "theil_sen_trend",
         # round 9: real MP4/AVC pixel decode (I_PCM IDR frames through the
         # stsd/avcC/stco container path — the r8 verdict's last codec
         # boundary closed) and the trained hashed-NB language classifier
         # (broadcast weight grid + dim-ordered scoring fold)
         "mp4_video_frames",
         "lang_id_trained",
-        # round 9 second wave: density clustering (blocked eps-graph +
-        # star CC), RAKE phrase extraction, Hilbert-clustered pruning
-        "dbscan_users",
+        # round 9 second wave: RAKE phrase extraction, Hilbert-clustered
+        # pruning
         "rake_keywords",
         "hilbert_pruning",
         # round 10: entity resolution e2e (block join + Levenshtein + CC),
-        # Kneser-Ney LM (broadcast continuation-count model), Spearman
-        # rank correlations (value-grid rank joins + one moment pass),
-        # Burrows's Delta stylometry (token explode + bounded-cell folds)
+        # Kneser-Ney LM (broadcast continuation-count model), Burrows's
+        # Delta stylometry (token explode + bounded-cell folds)
         "entity_resolution",
         "kn_perplexity",
-        "spearman_corr",
         "burrows_delta",
         # round 11: content-defined chunking (zero-shuffle Arrow kernel +
-        # hash-keyed dedup), ordered funnel fold, log-rank survival
-        # comparison, PRF query expansion (BM25 feedback + offer weights),
-        # Adam7 PNG round-trip
+        # hash-keyed dedup), ordered funnel fold, PRF query expansion
+        # (BM25 feedback + offer weights), Adam7 PNG round-trip
         "cdc_chunking",
         "window_funnel",
-        "logrank_test",
         "prf_expansion",
         "png_interlaced",
         # round 11 continuation: fixed-point integer TextRank (5 vocab-
@@ -501,13 +485,6 @@ def bench_queries(spark):
         "rouge_l_eval",
         "winnowing_fingerprints",
         "kmv_intersect",
-        # round 13: the heaviest three of the 17 inference additions —
-        # Jonckheere-Terpstra (5 cumulative windows over the distinct-
-        # cents grid), CvM two-sample (128-bit exact grid fold), Moran's
-        # I (grid-blocked spatial pair join + id-keyed value joins)
-        "jonckheere_terpstra",
-        "cvm_two_sample",
-        "morans_i",
         # round 14: the heaviest of the 17 eval additions — silhouette
         # (the k-fan-out all-centroid distance frame), NMI (kmeans pass
         # + entropy grid folds), PR-AUC (NB scoring pass + score-grid

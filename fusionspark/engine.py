@@ -21,6 +21,7 @@ in fusionspark.operators.*.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import re
 import secrets
@@ -43,6 +44,8 @@ from fusionspark.operators.embedder import embed_texts, mock_embed
 from fusionspark.operators.keyword import keyword_rank, keyword_search
 from fusionspark.operators.knn import knn
 from fusionspark.operators.serving import ResidentIndex, Snapshot, block_filter, fits_driver
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -67,8 +70,12 @@ def _hits(rows) -> list[dict]:
 
 def _visible(now: int, tenant_id=None, metadata_filter: dict | None = None):
     """The exact path's pre-filter: tenant ==, metadata key == value (or IN
-    a list), and TTL lazy expiry (P4)."""
-    pred = (F.col("ttl_ms") == 0) | (F.lit(now) - F.col("ts") < F.col("ttl_ms"))
+    a list), and TTL lazy expiry (P4).  A NULL ts or ttl_ms never expires,
+    like `import_jsonl`'s default ttl_ms 0."""
+    pred = (
+        F.col("ts").isNull() | F.col("ttl_ms").isNull() | (F.col("ttl_ms") == 0)
+        | (F.lit(now) - F.col("ts") < F.col("ttl_ms"))
+    )
     if tenant_id is not None:
         pred = (F.col("tenant_id") == tenant_id) & pred
     for k, v in (metadata_filter or {}).items():
@@ -180,10 +187,7 @@ class FusionSparkEngine:
         """S6 (FusionEngine.js:118-144)."""
         out = []
         for name, cfg in list(self._catalog.items()):
-            try:
-                n = self._load(name).count()
-            except Exception:  # noqa: BLE001 — not yet written
-                n = 0
+            n = self._load(name).count() if self._written(name) else 0
             out.append({"name": name, "size": n, **cfg})
         return out
 
@@ -246,6 +250,16 @@ class FusionSparkEngine:
         from fusionspark.storage import ManifestTable
 
         return ManifestTable(self.spark, self._path(collection))
+
+    def _written(self, collection: str) -> bool:
+        """Whether the collection has storage to read: an attached table
+        always does, an engine-owned one from its first write on."""
+        cfg = self._catalog.get(collection) or {}
+        if cfg.get("external_delta"):
+            return True
+        if self.storage == "manifest":
+            return self._table(collection).exists()
+        return os.path.isdir(self._path(collection))
 
     def _load(self, collection: str) -> DataFrame:
         cfg = self._catalog.get(collection) or {}
@@ -364,19 +378,11 @@ class FusionSparkEngine:
                 hit = p if hit is None else hit | p
 
         def store() -> None:
-            if hit is not None and self.storage == "manifest":
-                table = self._table(collection)
-                if table.exists():
-                    table.upsert(df, hit)
+            if hit is not None and self._written(collection):
+                if self.storage == "manifest":
+                    self._table(collection).upsert(df, hit)
                     return self._bump(collection)
-            elif hit is not None:
-                try:
-                    collides = (
-                        self._load(collection).filter(hit).limit(1).count()
-                    ) > 0
-                except Exception:  # noqa: BLE001 — collection not yet written
-                    collides = False
-                if collides:
+                if self._load(collection).filter(hit).limit(1).count() > 0:
                     keep = self._load(collection).filter(
                         ~F.coalesce(hit, F.lit(False))
                     )
@@ -393,7 +399,8 @@ class FusionSparkEngine:
                     ent["idx"] = ent["idx"].append(df)
                     ent["at_mutation"] = after
                 except Exception:  # noqa: BLE001 — stale fallback is the contract
-                    pass
+                    log.exception("resident append to %r failed; blocks stay "
+                                  "stale until rebuilt", collection)
 
         self._write(collection, store, lambda snap: snap.upsert(rows, replace))
         return len(rows)

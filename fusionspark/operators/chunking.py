@@ -1,5 +1,5 @@
 """Document chunkers — bit-exact ports of the reference's three strategies
-(SURVEY §2.10 T1-T3), wrapped as Arrow-batched Spark UDTFs.
+(SURVEY §2.10 T1-T3), wrapped as one Arrow-batched mapInPandas pass.
 
 Reference: /root/reference/src/rag/RAGPipeline.js:246-339.
 The chunk-boundary logic (separator cascade, tail overlap, 1.5× re-split)
@@ -106,10 +106,13 @@ def paragraph_chunk(text: str, chunk_size: int = CHUNK_SIZE) -> list[str]:
     return chunks
 
 
+#: strategy → chunker(text, chunk_size, chunk_overlap)
 CHUNKERS = {
-    "recursive": split_recursive,
+    "recursive": lambda text, size, overlap: split_recursive(
+        text, chunk_size=size, chunk_overlap=overlap
+    ),
     "sentence": sentence_chunk,
-    "paragraph": paragraph_chunk,
+    "paragraph": lambda text, size, _overlap: paragraph_chunk(text, size),
 }
 
 
@@ -147,14 +150,7 @@ def chunk_documents(
                 "doc_id": [], "chunk_index": [], "total_chunks": [], "chunk_text": []
             }
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if strategy == "paragraph":
-                    chunks = paragraph_chunk(text or "", chunk_size)
-                elif strategy == "sentence":
-                    chunks = sentence_chunk(text or "", chunk_size, chunk_overlap)
-                else:
-                    chunks = split_recursive(
-                        text or "", chunk_size=chunk_size, chunk_overlap=chunk_overlap
-                    )
+                chunks = chunker(text or "", chunk_size, chunk_overlap)
                 n = len(chunks)
                 for i, c in enumerate(chunks):
                     out["doc_id"].append(doc_id)
@@ -165,37 +161,3 @@ def chunk_documents(
 
     return src.mapInPandas(run, schema=CHUNK_SCHEMA)
 
-
-def chunk_udtf(
-    strategy: str = "recursive",
-    chunk_size: int = CHUNK_SIZE,
-    chunk_overlap: int = CHUNK_OVERLAP,
-):
-    """Spark 4 Python UDTF form of the chunkers (SURVEY §2.13): one input
-    row → N chunk rows, usable directly in SQL via LATERAL —
-
-        spark.udtf.register("chunks", chunk_udtf())
-        SELECT d.doc_id, c.* FROM documents d,
-               LATERAL chunks(d.doc_id, d.text) c
-
-    Same bit-exact boundary rules as chunk_documents (both call the same
-    split functions), parity-tested in tests/test_chunking.py.  Arrow-
-    optimized; per-row fan-out happens executor-side, so the plan is the
-    same scan → generate shape as the mapInPandas form."""
-    from pyspark.sql.functions import udtf
-
-    split = {
-        "recursive": lambda t: split_recursive(
-            t, chunk_size=chunk_size, chunk_overlap=chunk_overlap
-        ),
-        "sentence": lambda t: sentence_chunk(t, chunk_size, chunk_overlap),
-        "paragraph": lambda t: paragraph_chunk(t, chunk_size),
-    }[strategy]
-
-    @udtf(returnType="doc_id bigint, chunk_idx int, chunk string, n_chars int")
-    class ChunkUDTF:
-        def eval(self, doc_id: int, text: str):  # noqa: D102
-            for i, c in enumerate(split(text or "")):
-                yield doc_id, i, c, len(c)
-
-    return ChunkUDTF

@@ -1,9 +1,8 @@
 """Declarative data-quality expectations (the Great-Expectations /
 dbt-test shape): a rule suite compiled into ONE aggregate pass over the
-table, plus table-level checks (uniqueness, referential integrity) that
-need a distinct-count or an anti-join.  Every check returns the same
-summary row — (rule, n_rows, n_violations, passed) — so suites compose
-by unionAll and land in one report.
+table, plus a table-level uniqueness check that needs a distinct-count.
+Every check returns the same summary row — (rule, n_rows, n_violations,
+passed) — so suites compose by unionAll and land in one report.
 
 Not in the reference (north-star addition): the reference validates
 per-insert (dimension checks, Collection.js) but has no corpus-level
@@ -12,9 +11,7 @@ publishing a partition.
 
 Scale shape: row-predicate rules fold into a single map-side aggregate
 (one scan, zero shuffle, one tiny reduce); uniqueness is one
-distinct-count shuffle on the key; referential integrity broadcasts the
-dimension's key set (dims are small; for fact-to-fact integrity swap to
-a shuffled anti-join keyed on the id — the contract is unchanged).
+distinct-count shuffle on the key.
 """
 
 from __future__ import annotations
@@ -72,20 +69,6 @@ def dq_unique(df: DataFrame, cols: list[str], rule: str) -> DataFrame:
         F.count_distinct(*[F.col(c) for c in cols]).cast("long").alias("d"),
     )
     return _summarize(rule, F.col("n"), F.col("n") - F.col("d"), row)
-
-
-def dq_ref_integrity(
-    df: DataFrame, col: str, dim: DataFrame, dim_col: str, rule: str
-) -> DataFrame:
-    """Referential integrity: fact rows whose key has no dimension match.
-    The dimension key set is deduped then broadcast into an anti-join."""
-    keys = dim.select(F.col(dim_col).alias(col)).distinct()
-    miss = df.join(F.broadcast(keys), col, "left_anti").agg(
-        F.count("*").cast("long").alias("v")
-    )
-    tot = df.agg(F.count("*").cast("long").alias("n"))
-    row = tot.crossJoin(F.broadcast(miss))
-    return _summarize(rule, F.col("n"), F.col("v"), row)
 
 
 def dq_suite(parts: list[DataFrame]) -> DataFrame:

@@ -42,67 +42,3 @@ def salted_join(
     out = big_s.join(small_s, [key, "_salt"], how)
     return out.drop("_salt")
 
-
-def grid_proximity_join(
-    points: DataFrame,
-    radius: int,
-    id_col: str = "id",
-    x_col: str = "x",
-    y_col: str = "y",
-    d2_max: int | None = None,
-) -> DataFrame:
-    """All pairs of points within `radius` (Euclidean) via GRID BLOCKING —
-    the spatial join every geo pipeline needs, expressed without a
-    spatial index: bucket points into radius-sized cells, replicate each
-    LEFT point into its 3×3 cell neighborhood (a bounded 9× fan-out —
-    cheaper than replicating both sides, and cell size == radius
-    guarantees every qualifying pair shares one of the 9 keys), equi-join
-    on the cell key, then the exact integer distance filter.
-
-    No cross join exists at any scale: per-cell pair work is bounded by
-    local point density, and a dense hot cell is exactly the skew AQE's
-    runtime split (or salted_join above) handles — same remedy as any
-    hot key.  Distances stay in INTEGER d² (sqrt would add a float for
-    no pruning power), so the oracle replay is exact.
-
-    `d2_max` (optional) sets the EXACT squared-distance threshold
-    independently of the blocking cell: pass radius ≥ ceil(sqrt(d2_max))
-    and the 3×3 neighborhood stays complete while the filter keeps
-    integer-exact semantics (cell size affects candidates only, never
-    the pair set) — the DBSCAN eps-graph uses this with a
-    density-adaptive integer eps²."""
-    lim = int(d2_max) if d2_max is not None else radius * radius
-    cx = F.floor(F.col(x_col) / F.lit(radius))
-    cy = F.floor(F.col(y_col) / F.lit(radius))
-    left = points.select(
-        F.col(id_col).alias("id_a"),
-        F.col(x_col).alias("xa"),
-        F.col(y_col).alias("ya"),
-        cx.alias("cxa"),
-        cy.alias("cya"),
-    ).select(
-        "*",
-        F.explode(F.array(*[F.lit(d) for d in (-1, 0, 1)])).alias("dx"),
-    ).select(
-        "*",
-        F.explode(F.array(*[F.lit(d) for d in (-1, 0, 1)])).alias("dy"),
-    ).select(
-        "id_a", "xa", "ya",
-        (F.col("cxa") + F.col("dx")).alias("cx"),
-        (F.col("cya") + F.col("dy")).alias("cy"),
-    )
-    right = points.select(
-        F.col(id_col).alias("id_b"),
-        F.col(x_col).alias("xb"),
-        F.col(y_col).alias("yb"),
-        cx.alias("cx"),
-        cy.alias("cy"),
-    )
-    d2 = (F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb")) + (
-        F.col("ya") - F.col("yb")
-    ) * (F.col("ya") - F.col("yb"))
-    return (
-        left.join(right, ["cx", "cy"])
-        .filter((F.col("id_a") < F.col("id_b")) & (d2 <= F.lit(lim)))
-        .select("id_a", "id_b", d2.cast("long").alias("dist_sq"))
-    )

@@ -365,33 +365,29 @@ def _concat_codes(a, b, na: int, nb: int):
 
 class Attrs:
     """The engine's filter columns in columnar form: tenant and each
-    metadata key as categorical codes, ts/ttl_ms as int64, and `live` =
-    both ts and ttl_ms non-NULL (a NULL makes the exact path's TTL
-    predicate NULL, so such rows are never visible)."""
+    metadata key as categorical codes, ts/ttl_ms as int64."""
 
-    __slots__ = ("tenant", "meta", "ts", "ttl", "live")
+    __slots__ = ("tenant", "meta", "ts", "ttl")
 
-    def __init__(self, tenant, meta, ts, ttl, live):
+    def __init__(self, tenant, meta, ts, ttl):
         self.tenant, self.meta = tenant, meta
-        self.ts, self.ttl, self.live = ts, ttl, live
+        self.ts, self.ttl = ts, ttl
 
     @classmethod
-    def of(cls, tenants, maps, ts, ttl, live=None) -> "Attrs":
-        """From per-row values; without `live`, None in ts/ttl is NULL."""
-        if live is None:
-            live = np.asarray([t is not None and x is not None
-                               for t, x in zip(ts, ttl)], dtype=bool)
-            ts = [t or 0 for t in ts]
-            ttl = [x or 0 for x in ttl]
+    def of(cls, tenants, maps, ts, ttl) -> "Attrs":
+        """From per-row values.  A row whose ts or ttl_ms is None (NULL)
+        never expires, so it gets ttl 0 (`_visible`'s rule)."""
+        ttl = [0 if t is None or x is None else x for t, x in zip(ts, ttl)]
+        ts = [0 if t is None else t for t in ts]
         return cls(_codes(tenants), _meta_codes(maps),
                    np.asarray(ts, dtype=np.int64),
-                   np.asarray(ttl, dtype=np.int64), np.asarray(live, bool))
+                   np.asarray(ttl, dtype=np.int64))
 
     def take(self, keep) -> "Attrs":
         return Attrs(
             (self.tenant[0][keep], self.tenant[1]),
             {k: (c[keep], cats) for k, (c, cats) in self.meta.items()},
-            self.ts[keep], self.ttl[keep], self.live[keep],
+            self.ts[keep], self.ttl[keep],
         )
 
     def concat(self, o: "Attrs") -> "Attrs":
@@ -402,7 +398,6 @@ class Attrs:
              for k in {**self.meta, **o.meta}},
             np.concatenate([self.ts, o.ts]),
             np.concatenate([self.ttl, o.ttl]),
-            np.concatenate([self.live, o.live]),
         )
 
     def tenant_is(self, tenant_id) -> np.ndarray:
@@ -413,7 +408,7 @@ class Attrs:
     def mask(self, tenant_id, metadata_filter: dict | None, now: int):
         """The exact path's pre-filter: tenant ==, metadata key == value
         (or IN a list), and TTL lazy expiry."""
-        m = self.live & ((self.ttl == 0) | (now - self.ts < self.ttl))
+        m = (self.ttl == 0) | (now - self.ts < self.ttl)
         if tenant_id is not None:
             m &= self.tenant_is(tenant_id)
         for key, v in (metadata_filter or {}).items():
@@ -464,16 +459,16 @@ class Snapshot:
         pdf = df.filter(F.col("vector").isNotNull()).select(
             "id", "vector", "content", "tenant_id", "metadata",
             F.coalesce("ts", F.lit(0)).alias("ts"),
-            F.coalesce("ttl_ms", F.lit(0)).alias("ttl_ms"),
-            (F.col("ts").isNotNull() & F.col("ttl_ms").isNotNull()).alias("live"),
+            # a NULL ts or ttl_ms never expires: ttl 0, as in Attrs.of
+            F.when(F.col("ts").isNull(), F.lit(0))
+            .otherwise(F.coalesce("ttl_ms", F.lit(0))).alias("ttl_ms"),
         ).toPandas()
         V = (np.stack(pdf["vector"].to_numpy()) if len(pdf)
              else np.empty((0, dim)))
         return cls.of(
             metric, token, pdf["id"].to_numpy(), V, pdf["content"].to_numpy(),
             Attrs.of(pdf["tenant_id"].to_numpy(), pdf["metadata"].to_numpy(),
-                     pdf["ts"].to_numpy(), pdf["ttl_ms"].to_numpy(),
-                     pdf["live"].to_numpy()),
+                     pdf["ts"].to_numpy(), pdf["ttl_ms"].to_numpy()),
         )
 
     def nbytes(self) -> int:

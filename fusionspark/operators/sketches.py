@@ -310,46 +310,3 @@ def theta_estimates(
         F.round(F.col("n_inter").cast("double") / frac, 6).alias("est_intersect"),
     )
 
-
-# ── cents-grid histogram (mergeable quantile sketch) ──────────────────────
-
-
-def cents_histogram(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """(b, c): exact BIGINT count per round(value·100) cents bin — the
-    mergeable quantile sketch behind histogram_quantiles.  Cardinality is
-    bounded by the GRID (value range × resolution), not the row count;
-    partitions (and micro-batches, see maintain_histogram_stream)
-    aggregate independently and merge by plain addition — the same
-    mergeability contract as the HLL/CMS/theta family."""
-    return (
-        df.select(
-            F.floor(F.col(value_col) * 100.0 + 0.5).cast("long").alias("b")
-        )
-        .groupBy("b")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
-
-
-def quantiles_from_bins(bins: DataFrame, permilles: list[int]) -> DataFrame:
-    """Quantile estimates off a cents-histogram frame: q = the smallest
-    bin whose cumulative count reaches ceil(q‰·n), thresholds computed in
-    integers ((n·q‰ + 999) div 1000) so the cut cannot drift.  Error is
-    bounded by the bin width.  The cumulative window runs over the
-    bounded grid, never a corpus."""
-    from pyspark.sql import Window
-
-    spark = bins.sparkSession
-    nn = bins.agg(F.sum("c").cast("long").alias("n"))
-    wb = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cum = bins.select("b", F.sum("c").over(wb).cast("long").alias("cum"))
-    qs = spark.createDataFrame([(int(q),) for q in permilles], "q_permille long")
-    thr = qs.crossJoin(F.broadcast(nn)).select(
-        "q_permille",
-        F.expr("(n * q_permille + 999) div 1000").alias("threshold"),
-    )
-    return (
-        cum.join(F.broadcast(thr), cum.cum >= thr.threshold)
-        .groupBy("q_permille")
-        .agg(F.round(F.min("b").cast("double") / 100.0, 6).alias("est_value"))
-        .orderBy("q_permille")
-    )

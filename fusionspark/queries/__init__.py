@@ -49,11 +49,11 @@ PRIORITY: list[str] = [
     "silhouette_simplified", "pr_auc", "score_ks", "mcc_binary",
     "lift_gains", "brier_decomposition", "mrr_multi", "map_at10",
     "delta_time_travel",
-    # 15 code-changed re-attests (r14 round6_stable sweep + ranking
+    # 14 code-changed re-attests (r14 round6_stable sweep + ranking
     # div/materialization) not refreshed by the r14 board or the r5 slice
     "systematic_sample", "range_bounds_plan", "neardup_containment",
-    "neardup_prefix", "split_leakage", "conversion_latency",
-    "png_features", "image_features", "jpeg_features",
+    "neardup_prefix", "split_leakage", "png_features", "image_features",
+    "jpeg_features",
     "video_frames", "bmp_features", "gif_features", "gif_interlaced",
     "png_interlaced", "qoi_features",
     # 15 remaining r5-stale rows (registry order; includes the two
@@ -92,7 +92,6 @@ def load_all() -> None:
         composition_queries,
         embedding_queries,
         eval_queries,
-        inference_queries,
         layout_queries,
         extended_queries,
         mining_queries,

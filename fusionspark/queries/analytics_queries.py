@@ -1,10 +1,12 @@
-"""Product/ops-analytics query family over the events table (round 6,
-session 4): data profiling, trend fitting, experiment readouts, cohort
-retention matrices.
+"""Statistics queries over the events, documents and TPC-H tables that
+the round-12 operator tests (tests/test_round12_ops.py,
+tests/test_round12b_ops.py and their property files) still check, plus
+conformal_interval, skyline_parts, cumulative_users and
+poisson_rate_test.  No front door reaches them; ROADMAP item 5 lists
+the module for deletion.
 
 Float-parity discipline (COVERAGE.md round-3 classes): every statistic
-here reduces to INTEGER sums first — OLS via (n·Σxy − ΣxΣy), the z-score
-via integer success/total counts — with doubles entering only in the
+here reduces to INTEGER sums first, with doubles entering only in the
 final closed-form expression, written identically on both engines.
 """
 
@@ -15,1336 +17,6 @@ from pyspark.sql import functions as F
 
 from fusionspark.io import load_table
 from fusionspark.queries import query
-
-
-@query(
-    "table_profile",
-    """
-    WITH s AS (
-        SELECT COUNT(*)::BIGINT AS n,
-               COUNT(event_id)::BIGINT AS nn_event_id,
-               COUNT(DISTINCT event_id)::BIGINT AS nd_event_id,
-               MIN(event_id)::DOUBLE AS mn_event_id,
-               MAX(event_id)::DOUBLE AS mx_event_id,
-               COUNT(user_id)::BIGINT AS nn_user_id,
-               COUNT(DISTINCT user_id)::BIGINT AS nd_user_id,
-               MIN(user_id)::DOUBLE AS mn_user_id,
-               MAX(user_id)::DOUBLE AS mx_user_id,
-               COUNT(value)::BIGINT AS nn_value,
-               COUNT(DISTINCT value)::BIGINT AS nd_value,
-               ROUND(MIN(value), 6) AS mn_value,
-               ROUND(MAX(value), 6) AS mx_value,
-               COUNT(event_type)::BIGINT AS nn_event_type,
-               COUNT(DISTINCT event_type)::BIGINT AS nd_event_type
-        FROM events
-    )
-    SELECT 'event_id' AS col, n, nn_event_id AS n_nonnull,
-           nd_event_id AS n_distinct, mn_event_id AS min_v, mx_event_id AS max_v
-    FROM s
-    UNION ALL
-    SELECT 'user_id', n, nn_user_id, nd_user_id, mn_user_id, mx_user_id FROM s
-    UNION ALL
-    SELECT 'value', n, nn_value, nd_value, mn_value, mx_value FROM s
-    UNION ALL
-    SELECT 'event_type', n, nn_event_type, nd_event_type, NULL, NULL FROM s
-    """,
-)
-def table_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column profiler — the ingest-gate report every pipeline runs first:
-    row count, non-nulls, exact distincts, numeric ranges, ONE scan, one
-    wide aggregate unpivoted to long form (explicit stack, not a
-    per-column loop of scans).  At 100 TB exact COUNT(DISTINCT) becomes
-    approx_count_distinct (HLL, mergeable) — the query shape is
-    unchanged; exact is kept here because the oracle can check it."""
-    e = load_table(spark, sf_dir, "events")
-    s = e.agg(
-        F.count("*").cast("long").alias("n"),
-        F.count("event_id").cast("long").alias("nn_event_id"),
-        F.count_distinct("event_id").cast("long").alias("nd_event_id"),
-        F.min("event_id").cast("double").alias("mn_event_id"),
-        F.max("event_id").cast("double").alias("mx_event_id"),
-        F.count("user_id").cast("long").alias("nn_user_id"),
-        F.count_distinct("user_id").cast("long").alias("nd_user_id"),
-        F.min("user_id").cast("double").alias("mn_user_id"),
-        F.max("user_id").cast("double").alias("mx_user_id"),
-        F.count("value").cast("long").alias("nn_value"),
-        F.count_distinct("value").cast("long").alias("nd_value"),
-        F.round(F.min("value"), 6).alias("mn_value"),
-        F.round(F.max("value"), 6).alias("mx_value"),
-        F.count("event_type").cast("long").alias("nn_event_type"),
-        F.count_distinct("event_type").cast("long").alias("nd_event_type"),
-    )
-    return s.selectExpr(
-        """stack(4,
-            'event_id',   nn_event_id,   nd_event_id,   mn_event_id, mx_event_id,
-            'user_id',    nn_user_id,    nd_user_id,    mn_user_id,  mx_user_id,
-            'value',      nn_value,      nd_value,      mn_value,    mx_value,
-            'event_type', nn_event_type, nd_event_type, CAST(NULL AS DOUBLE),
-                                                        CAST(NULL AS DOUBLE)
-        ) AS (col, n_nonnull, n_distinct, min_v, max_v)""",
-        "n",
-    ).select("col", "n", "n_nonnull", "n_distinct", "min_v", "max_v")
-
-
-@query(
-    "trend_daily_events",
-    """
-    WITH daily AS (
-        SELECT event_type,
-               (epoch_us(ts) // 86400000000) AS day,
-               COUNT(*)::BIGINT AS y
-        FROM events GROUP BY event_type, (epoch_us(ts) // 86400000000)
-    ),
-    x AS (
-        SELECT event_type,
-               (day - MIN(day) OVER (PARTITION BY event_type))::BIGINT AS xi, y
-        FROM daily
-    ),
-    sums AS (
-        SELECT event_type, COUNT(*)::BIGINT AS n,
-               SUM(xi)::BIGINT AS sx, SUM(y)::BIGINT AS sy,
-               SUM(xi * y)::BIGINT AS sxy, SUM(xi * xi)::BIGINT AS sxx
-        FROM x GROUP BY event_type
-    )
-    SELECT event_type, n,
-           ROUND((n * sxy - sx * sy)::DOUBLE / (n * sxx - sx * sx), 6) AS slope,
-           ROUND((sy::DOUBLE - ((n * sxy - sx * sy)::DOUBLE
-                  / (n * sxx - sx * sx)) * sx) / n, 6) AS intercept
-    FROM sums WHERE n * sxx - sx * sx <> 0
-    """,
-)
-def trend_daily_events_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type daily-volume OLS trend: slope/intercept from the
-    closed-form normal equations over INTEGER sums (n·Σxy − ΣxΣy etc.) —
-    the numerically-naive-but-exact form that makes the regression
-    bit-reproducible under any aggregation order (built-in regr_slope
-    folds doubles and drifts ulps between engines).  Day index is
-    per-type-rebased so the integers stay small.  Degenerate one-day
-    types are excluded (zero variance ⇒ undefined slope)."""
-    from pyspark.sql.window import Window
-
-    e = load_table(spark, sf_dir, "events")
-    daily = (
-        e.select(
-            "event_type",
-            F.floor(F.unix_micros("ts") / F.lit(86_400_000_000)).alias("day"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.count("*").cast("long").alias("y"))
-    )
-    w = Window.partitionBy("event_type")
-    x = daily.select(
-        "event_type",
-        (F.col("day") - F.min("day").over(w)).cast("long").alias("xi"),
-        "y",
-    )
-    sums = x.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("xi").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("xi") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("xi") * F.col("xi")).cast("long").alias("sxx"),
-    )
-    det = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    slope_num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    slope = slope_num.cast("double") / det
-    intercept = (
-        F.col("sy").cast("double") - slope * F.col("sx")
-    ) / F.col("n")
-    return sums.filter(det != 0).select(
-        "event_type",
-        "n",
-        F.round(slope, 6).alias("slope"),
-        F.round(intercept, 6).alias("intercept"),
-    )
-
-
-@query(
-    "ab_test_zscore",
-    """
-    WITH assign AS (
-        SELECT user_id, user_id % 2 AS variant,
-               MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                   AS converted
-        FROM events GROUP BY user_id
-    ),
-    arms AS (
-        SELECT variant, COUNT(*)::BIGINT AS n,
-               SUM(converted)::BIGINT AS conv
-        FROM assign GROUP BY variant
-    ),
-    wide AS (
-        SELECT
-            MAX(CASE WHEN variant = 0 THEN n END)::BIGINT AS n0,
-            MAX(CASE WHEN variant = 0 THEN conv END)::BIGINT AS c0,
-            MAX(CASE WHEN variant = 1 THEN n END)::BIGINT AS n1,
-            MAX(CASE WHEN variant = 1 THEN conv END)::BIGINT AS c1
-        FROM arms
-    )
-    SELECT n0, c0, n1, c1,
-           ROUND(c0::DOUBLE / n0, 6) AS p0,
-           ROUND(c1::DOUBLE / n1, 6) AS p1,
-           CASE WHEN c0 + c1 > 0 AND c0 + c1 < n0 + n1 THEN
-           ROUND((c1::DOUBLE / n1 - c0::DOUBLE / n0)
-                 / sqrt(((c0 + c1)::DOUBLE / (n0 + n1))
-                        * (1.0::DOUBLE - (c0 + c1)::DOUBLE / (n0 + n1))
-                        * (1.0::DOUBLE / n0 + 1.0::DOUBLE / n1)), 6)
-           END AS z
-    FROM wide
-    """,
-)
-def ab_test_zscore_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-proportion experiment readout: users split into arms by a
-    deterministic rule (user_id parity standing in for the assignment
-    hash), per-user conversion collapsed FIRST (MAX per user — a user
-    converting twice is one success, the unit-of-analysis rule A/B
-    tooling gets wrong at its peril), then the pooled two-proportion
-    z-score from four integers in one closed-form expression.  Two hash
-    aggs total; the arms table is 2 rows."""
-    e = load_table(spark, sf_dir, "events")
-    assign = e.groupBy("user_id").agg(
-        F.max((F.col("event_type") == "purchase").cast("int")).alias("converted")
-    ).select((F.col("user_id") % 2).alias("variant"), "converted")
-    arms = assign.groupBy("variant").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("converted").cast("long").alias("conv"),
-    )
-    wide = arms.agg(
-        F.max(F.when(F.col("variant") == 0, F.col("n"))).cast("long").alias("n0"),
-        F.max(F.when(F.col("variant") == 0, F.col("conv"))).cast("long").alias("c0"),
-        F.max(F.when(F.col("variant") == 1, F.col("n"))).cast("long").alias("n1"),
-        F.max(F.when(F.col("variant") == 1, F.col("conv"))).cast("long").alias("c1"),
-    )
-    p0 = F.col("c0").cast("double") / F.col("n0")
-    p1 = F.col("c1").cast("double") / F.col("n1")
-    pp = (F.col("c0") + F.col("c1")).cast("double") / (F.col("n0") + F.col("n1"))
-    z = (p1 - p0) / F.sqrt(
-        pp * (F.lit(1.0) - pp)
-        * (F.lit(1.0) / F.col("n0") + F.lit(1.0) / F.col("n1"))
-    )
-    # zero pooled variance (nobody / everybody converted) ⇒ z undefined;
-    # gate on the INTEGER counts so both engines agree exactly
-    c = F.col("c0") + F.col("c1")
-    n = F.col("n0") + F.col("n1")
-    return wide.select(
-        "n0", "c0", "n1", "c1",
-        F.round(p0, 6).alias("p0"),
-        F.round(p1, 6).alias("p1"),
-        F.when((c > 0) & (c < n), F.round(z, 6)).alias("z"),
-    )
-
-
-@query(
-    "cohort_weekly",
-    """
-    WITH act AS (
-        SELECT DISTINCT user_id,
-               (epoch_us(ts) // 604800000000) AS week
-        FROM events
-    ),
-    first_w AS (
-        SELECT user_id, MIN(week) AS cohort FROM act GROUP BY user_id
-    )
-    SELECT f.cohort, (a.week - f.cohort)::BIGINT AS week_offset,
-           COUNT(*)::BIGINT AS active_users
-    FROM act a JOIN first_w f USING (user_id)
-    GROUP BY f.cohort, (a.week - f.cohort)
-    """,
-)
-def cohort_weekly_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly cohort-retention matrix: distinct (user, week) activity,
-    each user's first week as their cohort, counts per (cohort, offset).
-    The cohort join runs on the distinct frame's own user partitioning —
-    one extra shuffle only for the final (cohort, offset) rollup.  The
-    user_retention query is this matrix's day-over-day diagonal."""
-    e = load_table(spark, sf_dir, "events")
-    act = e.select(
-        "user_id",
-        F.floor(F.unix_micros("ts") / F.lit(604_800_000_000)).alias("week"),
-    ).distinct()
-    first_w = act.groupBy("user_id").agg(F.min("week").alias("cohort"))
-    return (
-        act.join(first_w, "user_id")
-        .groupBy("cohort", (F.col("week") - F.col("cohort")).cast("long").alias("week_offset"))
-        .agg(F.count("*").cast("long").alias("active_users"))
-    )
-
-
-@query(
-    "geo_neighbors",
-    """
-    WITH pts AS (SELECT DISTINCT user_id FROM events),
-    p AS (
-        SELECT user_id AS id,
-               ('0x' || substr(md5('gx:' || user_id), 1, 8))::BIGINT % 10000 AS x,
-               ('0x' || substr(md5('gy:' || user_id), 1, 8))::BIGINT % 10000 AS y
-        FROM pts
-    )
-    SELECT a.id AS id_a, b.id AS id_b,
-           ((a.x - b.x) * (a.x - b.x)
-            + (a.y - b.y) * (a.y - b.y))::BIGINT AS dist_sq
-    FROM p a
-    CROSS JOIN (SELECT unnest([-1, 0, 1]) AS dx) dx
-    CROSS JOIN (SELECT unnest([-1, 0, 1]) AS dy) dy
-    JOIN p b ON (a.x // 100) + dx.dx = (b.x // 100)
-            AND (a.y // 100) + dy.dy = (b.y // 100)
-            AND a.id < b.id
-    WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 10000
-    """,
-)
-def geo_neighbors_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spatial proximity self-join (operators/joins.py::
-    grid_proximity_join): users mapped to deterministic integer plane
-    coordinates, all pairs within Euclidean radius 100 via radius-sized
-    grid cells + 3×3 neighborhood replication — a bounded 9× fan-out
-    equi-join, never a cross join.  Each qualifying pair shares exactly
-    one of the nine keys, so no distinct pass is needed; distances stay
-    integer d² end-to-end."""
-    from fusionspark.operators.joins import grid_proximity_join
-
-    from fusionspark.operators.dedup import md5_hash32
-
-    users = load_table(spark, sf_dir, "events").select("user_id").distinct()
-    uid = F.col("user_id").cast("string")
-    pts = users.select(
-        F.col("user_id").alias("id"),
-        (md5_hash32(F.concat(F.lit("gx:"), uid)) % 10000).alias("x"),
-        (md5_hash32(F.concat(F.lit("gy:"), uid)) % 10000).alias("y"),
-    )
-    return grid_proximity_join(pts, radius=100)
-
-
-@query(
-    "event_transitions",
-    """
-    WITH tr AS (
-        SELECT lag(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-               ) AS from_t,
-               event_type AS to_t
-        FROM events
-    ),
-    cnt AS (
-        SELECT from_t, to_t, COUNT(*)::BIGINT AS n
-        FROM tr WHERE from_t IS NOT NULL GROUP BY from_t, to_t
-    ),
-    tot AS (SELECT from_t, SUM(n)::BIGINT AS t FROM cnt GROUP BY from_t)
-    SELECT c.from_t, c.to_t, c.n, ROUND(c.n::DOUBLE / t.t, 6) AS p
-    FROM cnt c JOIN tot t USING (from_t)
-    """,
-)
-def event_transitions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix of the per-user event stream:
-    lag pairs on one user_id shuffle, then a |types|² count + row-
-    normalized probabilities (integer counts, ONE final division).  The
-    behavioral-model / anomalous-sequence baseline every event pipeline
-    eventually wants; event_funnel is a fixed path through this
-    matrix."""
-    from pyspark.sql.window import Window
-
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
-    tr = e.select(
-        F.lag("event_type").over(w).alias("from_t"),
-        F.col("event_type").alias("to_t"),
-    ).filter(F.col("from_t").isNotNull())
-    cnt = tr.groupBy("from_t", "to_t").agg(F.count("*").cast("long").alias("n"))
-    tot = cnt.groupBy("from_t").agg(F.sum("n").cast("long").alias("t"))
-    return (
-        cnt.join(F.broadcast(tot), "from_t")
-        .select(
-            "from_t", "to_t", "n",
-            F.round(F.col("n").cast("double") / F.col("t"), 6).alias("p"),
-        )
-    )
-
-
-@query(
-    "session_paths",
-    """
-    WITH e AS (
-        SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us,
-               lag(epoch_us(ts)) OVER (
-                   PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-               ) AS prev_us
-        FROM events
-    ),
-    n AS (
-        SELECT user_id, event_id, event_type, ts_us,
-               SUM(CASE WHEN prev_us IS NULL OR ts_us - prev_us > 1800000000
-                        THEN 1 ELSE 0 END) OVER (
-                   PARTITION BY user_id ORDER BY ts_us ASC, event_id ASC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               )::BIGINT AS session_no
-        FROM e
-    ),
-    paths AS (
-        SELECT user_id, session_no,
-               string_agg(event_type, '>' ORDER BY ts_us, event_id) AS path
-        FROM n GROUP BY user_id, session_no
-    )
-    SELECT path, COUNT(*)::BIGINT AS n_sessions
-    FROM paths GROUP BY path
-    ORDER BY n_sessions DESC, path LIMIT 20
-    """,
-)
-def session_paths_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top session paths: the sessionize numbering (same single user_id
-    shuffle) rolled up to an ORDERED in-row type sequence — sort_array
-    over (ts, event_id, type) structs then join, because a bare
-    collect_list is partition-racy (the chat_render rule) — and counted.
-    Fully-keyed ORDER BY before the LIMIT keeps the top-20 cut
-    deterministic."""
-    from pyspark.sql.window import Window
-
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
-    ts_us = F.unix_micros(F.col("ts"))
-    prev = F.lag("ts").over(w)
-    is_new = (prev.isNull() | (ts_us - F.unix_micros(prev) > 1_800_000_000)).cast("int")
-    n = e.select(
-        "user_id",
-        "event_id",
-        "event_type",
-        ts_us.alias("ts_us"),
-        F.sum(is_new)
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("session_no"),
-    )
-    paths = n.groupBy("user_id", "session_no").agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(F.struct("ts_us", "event_id", "event_type"))
-                ),
-                lambda s: s["event_type"],
-            ),
-            ">",
-        ).alias("path")
-    )
-    return (
-        paths.groupBy("path")
-        .agg(F.count("*").cast("long").alias("n_sessions"))
-        .orderBy(F.desc("n_sessions"), "path")
-        .limit(20)
-    )
-
-
-@query(
-    "conversion_latency",
-    """
-    WITH firsts AS (
-        SELECT user_id,
-               MIN(CASE WHEN event_type = 'view' THEN epoch_us(ts) END) AS v,
-               MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS p
-        FROM events GROUP BY user_id
-    ),
-    lat AS (
-        SELECT (p - v)::BIGINT AS us FROM firsts
-        WHERE v IS NOT NULL AND p IS NOT NULL AND p > v
-    )
-    SELECT COUNT(*)::BIGINT AS n,
-           FLOOR(((SUM(us)::DOUBLE / COUNT(*)) / 1e6)
-                 * 1000000.0 + 0.5) / 1000000.0 AS avg_sec,
-           FLOOR((quantile_cont(us, 0.5) / 1e6)
-                 * 1000000.0 + 0.5) / 1000000.0 AS p50_sec,
-           FLOOR((quantile_cont(us, 0.9) / 1e6)
-                 * 1000000.0 + 0.5) / 1000000.0 AS p90_sec
-    FROM lat
-    """,
-)
-def conversion_latency_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-view → first-purchase latency distribution: conditional MINs
-    per user (one agg, no self-join — the event_funnel shape), then
-    count / mean / exact P50 / P90 over the integer microsecond gaps in
-    one 1-row aggregate.  The mean divides ONE integer sum; the
-    percentiles are the attested type-7 `percentile` ≡ quantile_cont
-    pair."""
-    e = load_table(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts"))
-    firsts = e.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "view", us)).alias("v"),
-        F.min(F.when(F.col("event_type") == "purchase", us)).alias("p"),
-    )
-    lat = firsts.filter(
-        F.col("v").isNotNull() & F.col("p").isNotNull() & (F.col("p") > F.col("v"))
-    ).select((F.col("p") - F.col("v")).cast("long").alias("us"))
-    # r14: interpolated percentiles of integer microseconds land on exact
-    # .5 midpoints, and /1e6 puts that halfway at the 7th decimal — the
-    # shortest-string ROUND divergence class (audit-flagged at sf0.1);
-    # round6_stable reads only the binary value
-    from fusionspark.operators.textstats import round6_stable
-
-    return lat.agg(
-        F.count("*").cast("long").alias("n"),
-        round6_stable(
-            (F.sum("us").cast("double") / F.count("*")) / F.lit(1e6)
-        ).alias("avg_sec"),
-        round6_stable(F.expr("percentile(us, 0.5)") / F.lit(1e6)).alias(
-            "p50_sec"
-        ),
-        round6_stable(F.expr("percentile(us, 0.9)") / F.lit(1e6)).alias(
-            "p90_sec"
-        ),
-    )
-
-
-@query(
-    "revenue_deciles",
-    """
-    WITH rev AS (
-        SELECT user_id,
-               SUM(CASE WHEN event_type = 'purchase'
-                        THEN floor(value * 1e6)::BIGINT ELSE 0 END)::BIGINT
-                   AS rev_micros
-        FROM events GROUP BY user_id
-    ),
-    ranked AS (
-        SELECT user_id, rev_micros,
-               ntile(10) OVER (ORDER BY rev_micros, user_id)::INT AS decile
-        FROM rev
-    )
-    SELECT decile, COUNT(*)::BIGINT AS n_users,
-           SUM(rev_micros)::BIGINT AS total_rev_micros,
-           ROUND(SUM(rev_micros)::DOUBLE / COUNT(*) / 1e6, 6) AS avg_rev
-    FROM ranked GROUP BY decile
-    """,
-)
-def revenue_deciles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user revenue deciles (the LTV report): purchase revenue folds
-    as exact integer micro-units per user, ntile(10) over the FULLY-KEYED
-    (revenue, user_id) order — a bare revenue order leaves equal-revenue
-    users engine-ordered and the decile boundaries racy.  The global
-    ntile is a single-partition sort over one row per USER (already
-    aggregated), not per event; at 100 TB swap ntile for percent_rank
-    over pre-aggregated range boundaries."""
-    from pyspark.sql.window import Window
-
-    e = load_table(spark, sf_dir, "events")
-    rev = e.groupBy("user_id").agg(
-        F.sum(
-            F.when(
-                F.col("event_type") == "purchase",
-                F.floor(F.col("value") * F.lit(1e6)).cast("long"),
-            ).otherwise(F.lit(0))
-        )
-        .cast("long")
-        .alias("rev_micros")
-    )
-    ranked = rev.select(
-        "rev_micros",
-        F.ntile(10).over(Window.orderBy("rev_micros", "user_id")).alias("decile"),
-    )
-    return ranked.groupBy("decile").agg(
-        F.count("*").cast("long").alias("n_users"),
-        F.sum("rev_micros").cast("long").alias("total_rev_micros"),
-        F.round(
-            F.sum("rev_micros").cast("double") / F.count("*") / F.lit(1e6), 6
-        ).alias("avg_rev"),
-    )
-
-
-@query(
-    "seasonal_decompose",
-    """
-    WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day, COUNT(*)::BIGINT AS cnt
-        FROM events GROUP BY 1
-    ),
-    trended AS (
-        SELECT day, cnt,
-               SUM(cnt) OVER (ORDER BY day
-                              ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-                   ::BIGINT AS win_sum,
-               COUNT(*) OVER (ORDER BY day
-                              ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-                   ::BIGINT AS win_n
-        FROM daily
-    ),
-    interior AS (
-        SELECT day, cnt, 7 * cnt - win_sum AS detrend7,
-               (day - DATE '1970-01-01') % 7 AS dow
-        FROM trended WHERE win_n = 7
-    )
-    SELECT dow::INT AS dow, COUNT(*)::BIGINT AS n_days,
-           SUM(detrend7)::BIGINT AS detrend7_sum,
-           ROUND(SUM(detrend7)::DOUBLE / 7 / COUNT(*), 6) AS seasonal
-    FROM interior GROUP BY dow
-    """,
-)
-def seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly seasonal decomposition of the daily event series
-    (seasonal-naive / classical-decomposition shape): trend = 7-row
-    centered moving sum over observed days; detrended values stay exact
-    BIGINTs by scaling ×7 (7·cnt − window_sum) instead of dividing per
-    row, so the per-weekday seasonal means fold exactly on both engines
-    and divide ONCE at the end — the float-fold drift class designed
-    out, same as trend_daily_events' integer normal equations.  Edge
-    days with partial windows are excluded (win_n = 7); dow is epoch-day
-    mod 7 (0 = Thursday), engine-independent unlike dayofweek().
-    One scan → one day aggregate → one window → one 7-row aggregate;
-    the single-partition window runs over the PRE-AGGREGATED daily
-    series (one row per day — ~37k rows for a century), not the events."""
-    from pyspark.sql import Window
-
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.count("*").cast("long").alias("cnt")
-    )
-    w = Window.orderBy("day").rowsBetween(-3, 3)
-    trended = daily.select(
-        "day",
-        "cnt",
-        F.sum("cnt").over(w).cast("long").alias("win_sum"),
-        F.count("*").over(w).cast("long").alias("win_n"),
-    )
-    interior = trended.filter(F.col("win_n") == 7).select(
-        (7 * F.col("cnt") - F.col("win_sum")).alias("detrend7"),
-        (F.datediff(F.col("day"), F.lit("1970-01-01")) % 7).alias("dow"),
-    )
-    return interior.groupBy(F.col("dow").cast("int").alias("dow")).agg(
-        F.count("*").cast("long").alias("n_days"),
-        F.sum("detrend7").cast("long").alias("detrend7_sum"),
-        F.round(
-            F.sum("detrend7").cast("double") / 7 / F.count("*"), 6
-        ).alias("seasonal"),
-    )
-
-
-@query(
-    "changepoint_cusum",
-    """
-    WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day, COUNT(*)::BIGINT AS cnt
-        FROM events GROUP BY 1
-    ),
-    stats AS (
-        SELECT COUNT(*)::BIGINT AS n, SUM(cnt)::BIGINT AS total FROM daily
-    ),
-    cusum AS (
-        SELECT day,
-               SUM((SELECT n FROM stats) * cnt - (SELECT total FROM stats))
-                   OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)::BIGINT
-                   AS cusum_n
-        FROM daily
-    )
-    SELECT strftime(day, '%Y-%m-%d') AS day, cusum_n,
-           abs(cusum_n)::BIGINT AS magnitude
-    FROM cusum
-    ORDER BY abs(cusum_n) DESC, day ASC
-    LIMIT 5
-    """,
-)
-def changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM changepoint candidates on the daily event series: the running
-    sum of (count − mean) peaks in magnitude at a level shift.  Deviations
-    scale by N (N·cnt − total) so the cumulative sum is an exact BIGINT —
-    no float fold anywhere; top-5 by |cusum| with (magnitude DESC, day
-    ASC) determinism.  Complements ts_anomalies (point outliers) with
-    level-shift detection.  The running window orders the pre-aggregated
-    daily series; the one-row stats broadcast."""
-    from pyspark.sql import Window
-
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.count("*").cast("long").alias("cnt")
-    )
-    stats = daily.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("cnt").cast("long").alias("total"),
-    )
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    cusum = (
-        daily.crossJoin(F.broadcast(stats))
-        .withColumn(
-            "cusum_n",
-            F.sum(F.col("n") * F.col("cnt") - F.col("total")).over(w).cast("long"),
-        )
-    )
-    return (
-        cusum.select(
-            F.date_format("day", "yyyy-MM-dd").alias("day"),
-            "cusum_n",
-            F.abs("cusum_n").cast("long").alias("magnitude"),
-        )
-        .orderBy(F.col("magnitude").desc(), F.col("day").asc())
-        .limit(5)
-    )
-
-
-@query(
-    "k_anonymity",
-    """
-    WITH quasi AS (
-        SELECT lang, source, (n_chars // 100) * 100 AS len_bucket,
-               COUNT(*)::BIGINT AS group_size
-        FROM documents
-        GROUP BY lang, source, (n_chars // 100) * 100
-    )
-    SELECT lang, source, len_bucket::BIGINT AS len_bucket, group_size
-    FROM quasi WHERE group_size < 5
-    """,
-)
-def k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity audit over the quasi-identifier tuple (lang, source,
-    length bucket): groups smaller than k=5 are re-identification risks a
-    release pipeline must suppress or generalize (Sweeney 2002) — the
-    governance sibling of pii_redact (which removes direct identifiers;
-    this finds INDIRECT ones).  One hash aggregate on the quasi key; the
-    under-k report is tiny by construction."""
-    d = load_table(spark, sf_dir, "documents")
-    quasi = d.groupBy(
-        "lang",
-        "source",
-        ((F.col("n_chars") / 100).cast("long") * 100).alias("len_bucket"),
-    ).agg(F.count("*").cast("long").alias("group_size"))
-    return quasi.filter(F.col("group_size") < 5)
-
-
-@query(
-    "autocorr_weekly",
-    """
-    WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day, COUNT(*)::BIGINT AS cnt
-        FROM events GROUP BY 1
-    ),
-    lagged AS (
-        SELECT day, cnt,
-               LAG(cnt, 7) OVER (ORDER BY day) AS cnt7
-        FROM daily
-    ),
-    pairs AS (SELECT cnt, cnt7 FROM lagged WHERE cnt7 IS NOT NULL),
-    s AS (
-        SELECT COUNT(*)::BIGINT AS n,
-               SUM(cnt)::BIGINT AS sx, SUM(cnt7)::BIGINT AS sy,
-               SUM(cnt * cnt7)::BIGINT AS sxy,
-               SUM(cnt * cnt)::BIGINT AS sxx,
-               SUM(cnt7 * cnt7)::BIGINT AS syy
-        FROM pairs
-    )
-    SELECT n,
-           ROUND(CASE WHEN (n * sxx - sx * sx) > 0 AND (n * syy - sy * sy) > 0
-                      THEN (n * sxy - sx * sy)::DOUBLE
-                           / SQRT((n * sxx - sx * sx)::DOUBLE)
-                           / SQRT((n * syy - sy * sy)::DOUBLE)
-                      ELSE 0.0 END, 6) AS acf7
-    FROM s
-    """,
-)
-def autocorr_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lag-7 autocorrelation of the daily event series — the scalar
-    confirmation of the weekly cycle seasonal_decompose extracts.  All
-    moments are exact BIGINT sums over integer counts (N·Σxy − ΣxΣy
-    numerator, same for the variances), so both engines compute identical
-    integers and divide/sqrt once — the trend_daily_events integer
-    normal-equations pattern applied to correlation."""
-    from pyspark.sql import Window
-
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.count("*").cast("long").alias("cnt")
-    )
-    lagged = daily.withColumn(
-        "cnt7", F.lag("cnt", 7).over(Window.orderBy("day"))
-    ).filter(F.col("cnt7").isNotNull())
-    s = lagged.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("cnt").cast("long").alias("sx"),
-        F.sum("cnt7").cast("long").alias("sy"),
-        F.sum(F.col("cnt") * F.col("cnt7")).cast("long").alias("sxy"),
-        F.sum(F.col("cnt") * F.col("cnt")).cast("long").alias("sxx"),
-        F.sum(F.col("cnt7") * F.col("cnt7")).cast("long").alias("syy"),
-    )
-    num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    vx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    vy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    return s.select(
-        "n",
-        F.round(
-            F.when(
-                (vx > 0) & (vy > 0),
-                num.cast("double") / F.sqrt(vx.cast("double")) / F.sqrt(vy.cast("double")),
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("acf7"),
-    )
-
-
-@query(
-    "revenue_gini",
-    """
-    WITH ltv AS (
-        SELECT o_custkey,
-               SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT))::BIGINT AS cents
-        FROM orders GROUP BY o_custkey
-    ),
-    ranked AS (
-        SELECT cents,
-               ROW_NUMBER() OVER (ORDER BY cents ASC, o_custkey ASC) AS i
-        FROM ltv
-    ),
-    s AS (
-        SELECT COUNT(*)::BIGINT AS n, SUM(cents)::BIGINT AS total,
-               SUM(i * cents)::BIGINT AS weighted
-        FROM ranked
-    )
-    SELECT n, total,
-           ROUND((2 * weighted - (n + 1) * total)::DOUBLE / (n * total), 6)
-               AS gini
-    FROM s
-    """,
-)
-def revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini coefficient of customer lifetime revenue — the concentration
-    scalar behind revenue_deciles' table (how top-heavy is the customer
-    base).  Prices become exact BIGINT cents (two-decimal TPC-H prices;
-    .5-boundary rounding cannot occur), the rank window orders the
-    PRE-AGGREGATED per-customer series with an id tie-break, and
-    G = (2·Σi·x − (N+1)·Σx) / (N·Σx) stays in exact integers until one
-    final division."""
-    from pyspark.sql import Window
-
-    o = load_table(spark, sf_dir, "orders")
-    ltv = o.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
-        .cast("long")
-        .alias("cents")
-    )
-    ranked = ltv.withColumn(
-        "i", F.row_number().over(Window.orderBy(F.asc("cents"), F.asc("o_custkey")))
-    )
-    s = ranked.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("cents").cast("long").alias("total"),
-        F.sum(F.col("i") * F.col("cents")).cast("long").alias("weighted"),
-    )
-    return s.select(
-        "n",
-        "total",
-        F.round(
-            (2 * F.col("weighted") - (F.col("n") + 1) * F.col("total")).cast("double")
-            / (F.col("n") * F.col("total")),
-            6,
-        ).alias("gini"),
-    )
-
-
-@query(
-    "event_burstiness",
-    """
-    WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*)::BIGINT AS cnt
-        FROM events GROUP BY 1, 2
-    ),
-    s AS (
-        SELECT event_type, COUNT(*)::BIGINT AS n_days,
-               SUM(cnt)::BIGINT AS sx, SUM(cnt * cnt)::BIGINT AS sxx
-        FROM daily GROUP BY event_type
-    )
-    SELECT event_type, n_days, sx AS total_events,
-           ROUND((n_days * sxx - sx * sx)::DOUBLE / (n_days * sx), 6)
-               AS fano
-    FROM s
-    """,
-)
-def event_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fano factor (variance-to-mean of daily counts) per event type —
-    burstiness beyond ts_anomalies' point outliers: ≈1 is Poisson-like
-    arrival, >1 is bursty/overdispersed traffic.  (N·Σx² − (Σx)²) and
-    N·Σx are exact BIGINTs over integer counts; one division per type.
-    Days with zero events for a type are absent from BOTH engines' daily
-    series identically (observed-day convention)."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(F.count("*").cast("long").alias("cnt"))
-    s = daily.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n_days"),
-        F.sum("cnt").cast("long").alias("sx"),
-        F.sum(F.col("cnt") * F.col("cnt")).cast("long").alias("sxx"),
-    )
-    return s.select(
-        "event_type",
-        "n_days",
-        F.col("sx").alias("total_events"),
-        F.round(
-            (F.col("n_days") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-            / (F.col("n_days") * F.col("sx")),
-            6,
-        ).alias("fano"),
-    )
-
-
-def _stationary_oracle(iters: int) -> str:
-    """Unrolled power iteration over the event-type transition matrix —
-    the pagerank-oracle pattern: float products replayed in the same
-    structure on both engines, rounded once at the end."""
-    sql = """
-    WITH tr AS (
-        SELECT lag(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-               ) AS from_t,
-               event_type AS to_t
-        FROM events
-    ),
-    cnt AS (
-        SELECT from_t, to_t, COUNT(*)::BIGINT AS n
-        FROM tr WHERE from_t IS NOT NULL GROUP BY from_t, to_t
-    ),
-    tot AS (SELECT from_t, SUM(n)::BIGINT AS t FROM cnt GROUP BY from_t),
-    types AS (SELECT DISTINCT event_type AS ty FROM events),
-    p0 AS (
-        SELECT ty, 1.0 / (SELECT COUNT(*) FROM types) AS p FROM types
-    )"""
-    for i in range(iters):
-        sql += f""",
-    p{i + 1} AS (
-        SELECT m.to_t AS ty, SUM(pk.p * (m.n::DOUBLE / tt.t)) AS p
-        FROM p{i} pk
-        JOIN cnt m ON m.from_t = pk.ty
-        JOIN tot tt ON tt.from_t = m.from_t
-        GROUP BY m.to_t
-    )"""
-    sql += f"""
-    SELECT ty AS event_type, ROUND(p, 6) AS stationary_p FROM p{iters}
-    """
-    return sql
-
-
-@query("markov_stationary", _stationary_oracle(iters=5))
-def markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stationary distribution of the event-type Markov chain — 5 power
-    iterations from uniform over event_transitions' matrix (where does a
-    user's session settle in the long run).  Each iteration is one join
-    against the (types², tiny) transition matrix + one aggregate; the
-    oracle unrolls the same 5 iterations (pagerank's oracle pattern).
-    Types that never emit (appear only session-final) would absorb mass
-    identically on both engines; none exist in this corpus."""
-    from pyspark.sql import Window
-
-    e = load_table(spark, sf_dir, "events")
-    tr = e.select(
-        F.lag("event_type")
-        .over(Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id")))
-        .alias("from_t"),
-        F.col("event_type").alias("to_t"),
-    ).filter(F.col("from_t").isNotNull())
-    cnt = tr.groupBy("from_t", "to_t").agg(F.count("*").cast("long").alias("n"))
-    tot = cnt.groupBy("from_t").agg(F.sum("n").cast("long").alias("t"))
-    m = cnt.join(tot, "from_t").select(
-        "from_t", "to_t", (F.col("n").cast("double") / F.col("t")).alias("pij")
-    )
-    n_types = e.select("event_type").distinct().count()
-    pi = e.select(F.col("event_type").alias("ty")).distinct().select(
-        "ty", (F.lit(1.0) / F.lit(n_types)).alias("p")
-    )
-    for _ in range(5):
-        pi = (
-            pi.join(m, pi["ty"] == m["from_t"])
-            .groupBy(F.col("to_t").alias("ty2"))
-            .agg(F.sum(F.col("p") * F.col("pij")).alias("p"))
-            .withColumnRenamed("ty2", "ty")
-        )
-    return pi.select(
-        F.col("ty").alias("event_type"), F.round("p", 6).alias("stationary_p")
-    )
-
-
-@query(
-    "histogram_quantiles",
-    """
-    WITH b AS (
-        SELECT FLOOR(value * 100.0 + 0.5)::BIGINT AS b, COUNT(*)::BIGINT AS c
-        FROM events GROUP BY 1
-    ),
-    nn AS (SELECT SUM(c)::BIGINT AS n FROM b),
-    cum AS (
-        SELECT b, SUM(c) OVER (ORDER BY b
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS cum
-        FROM b
-    ),
-    qs AS (SELECT unnest([500, 900, 990, 999])::BIGINT AS q_permille),
-    thr AS (
-        SELECT q_permille,
-               ((SELECT n FROM nn) * q_permille + 999) // 1000 AS threshold
-        FROM qs
-    )
-    SELECT t.q_permille,
-           ROUND(MIN(c.b)::DOUBLE / 100.0, 6) AS est_value
-    FROM thr t JOIN cum c ON c.cum >= t.threshold
-    GROUP BY t.q_permille
-    ORDER BY t.q_permille
-    """,
-)
-def histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable fixed-grid quantile sketch over event values: bin =
-    round(value·100) (exact for 2-decimal data), so the sketch is ONE
-    bounded-cardinality integer histogram — partitions aggregate
-    independently and merge by addition, the property exact
-    percentile_disc (a full sort-shuffle of the corpus) does not have.
-    Quantile q = the smallest bin whose cumulative count reaches
-    ceil(q·n), computed in integers ((n·q‰ + 999) div 1000) — estimate
-    error is bounded by the bin width, engine drift is impossible.
-
-    Scale shape: one groupBy(bin) with map-side combine; the cumulative
-    window runs over the GRID (≤ ~50k bins here, fixed by value range ×
-    resolution), never over the corpus."""
-    from fusionspark.operators.sketches import cents_histogram, quantiles_from_bins
-
-    e = load_table(spark, sf_dir, "events")
-    return quantiles_from_bins(cents_histogram(e), [500, 900, 990, 999])
-
-
-# Holt's linear-trend recursion replayed as an ordered fold whose
-# accumulator is a [level, trend] DOUBLE array on BOTH engines (Spark
-# F.aggregate / DuckDB list_reduce over single-element lists — the
-# accumulator and element types must match in DuckDB, hence the [y]
-# wrapping).  α = β = 0.5: exact binary fractions, and the l' expression
-# is textually duplicated in the trend update on both sides so the IEEE
-# trees are identical.
-_ETS_SQL_STEP = """(a, y) -> CASE WHEN len(a) = 1
-            THEN [y[1], y[1] - a[1]]
-            ELSE [0.5 * y[1] + 0.5 * (a[1] + a[2]),
-                  0.5 * ((0.5 * y[1] + 0.5 * (a[1] + a[2])) - a[1])
-                  + 0.5 * a[2]]
-            END"""
-
-
-@query(
-    "ets_forecast",
-    f"""
-    WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day, COUNT(*)::BIGINT AS cnt
-        FROM events GROUP BY 1
-    ),
-    ys AS (SELECT list(CAST(cnt AS DOUBLE) ORDER BY day) AS ys FROM daily),
-    st AS (
-        SELECT list_reduce(list_transform(ys, y -> [y]), {_ETS_SQL_STEP}) AS s
-        FROM ys
-    ),
-    hs AS (SELECT unnest(range(1, 8))::BIGINT AS h)
-    SELECT h, ROUND((SELECT s[1] + h * s[2] FROM st), 6) AS forecast
-    FROM hs ORDER BY h
-    """,
-)
-def ets_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """7-day-ahead forecast of the daily event count by Holt's
-    linear-trend exponential smoothing (α = β = 0.5, init l₂ = y₂,
-    b₂ = y₂ − y₁): the capacity-planning readout over the same daily
-    series trend_daily_events fits linearly — ETS tracks level changes
-    the global OLS line averages away.  The recursion is a
-    left-to-right fold over the day-ordered counts with a [level,
-    trend] accumulator, bit-identical across engines (exact-fraction
-    coefficients, duplicated-subexpression update, ordered list).
-
-    Scale shape: one groupBy(day) with map-side combine; the fold runs
-    over the DAY COUNT (30 rows), not the corpus."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(F.to_date("ts").alias("day")).agg(
-        F.count("*").cast("long").alias("cnt")
-    )
-    ys = daily.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "cnt"))),
-            lambda s: s["cnt"].cast("double"),
-        ).alias("ys")
-    )
-
-    def step(a, y):
-        lnew = 0.5 * y + 0.5 * (F.element_at(a, 1) + F.element_at(a, 2))
-        return F.when(
-            F.size(a) == 1,
-            F.array(y, y - F.element_at(a, 1)),
-        ).otherwise(
-            F.array(
-                lnew,
-                0.5 * (lnew - F.element_at(a, 1)) + 0.5 * F.element_at(a, 2),
-            )
-        )
-
-    st = ys.select(
-        F.aggregate(
-            F.slice(F.col("ys"), 2, F.size("ys") - 1),
-            F.array(F.element_at("ys", 1)),
-            step,
-        ).alias("s")
-    )
-    hs = spark.range(1, 8).select(F.col("id").alias("h"))
-    return (
-        hs.crossJoin(F.broadcast(st))
-        .select(
-            "h",
-            F.round(
-                F.element_at("s", 1) + F.col("h") * F.element_at("s", 2), 6
-            ).alias("forecast"),
-        )
-        .orderBy("h")
-    )
-
-
-@query(
-    "l_diversity",
-    """
-    WITH g AS (
-        SELECT CAST(ts AS DATE) AS day, event_type,
-               COUNT(DISTINCT user_id)::BIGINT AS l,
-               COUNT(*)::BIGINT AS group_size
-        FROM events GROUP BY 1, 2
-    )
-    SELECT strftime(day, '%Y-%m-%d') AS day, event_type, l, group_size
-    FROM g ORDER BY l ASC, day ASC, event_type ASC LIMIT 10
-    """,
-)
-def l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """l-diversity audit (Machanavajjhala 2007) — k_anonymity's
-    sensitive-attribute sibling: per quasi-identifier cell (day,
-    event_type), how many DISTINCT users stand behind it; the 10
-    lowest-diversity cells are where a released aggregate is closest to
-    naming someone even when every cell is k-large.  One distinct-agg
-    shuffle on the quasi key; the report is a top-10 TakeOrdered."""
-    e = load_table(spark, sf_dir, "events")
-    g = e.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
-        F.count_distinct("user_id").cast("long").alias("l"),
-        F.count("*").cast("long").alias("group_size"),
-    )
-    return (
-        g.orderBy(F.col("l").asc(), F.col("day").asc(), F.col("event_type").asc())
-        .limit(10)
-        .select(
-            F.date_format("day", "yyyy-MM-dd").alias("day"),
-            "event_type",
-            "l",
-            "group_size",
-        )
-    )
-
-
-@query(
-    "lineitem_corr",
-    """
-    WITH q AS (
-        SELECT FLOOR(l_quantity * 100.0 + 0.5)::BIGINT AS x,
-               FLOOR(l_extendedprice * 100.0 + 0.5)::BIGINT AS y,
-               FLOOR(l_discount * 100.0 + 0.5)::BIGINT AS z
-        FROM lineitem
-    ),
-    s AS (
-        SELECT COUNT(*)::HUGEINT AS n,
-               SUM(x)::HUGEINT AS sx, SUM(y)::HUGEINT AS sy,
-               SUM(z)::HUGEINT AS sz,
-               SUM((x * y)::HUGEINT) AS sxy, SUM((x * z)::HUGEINT) AS sxz,
-               SUM((y * z)::HUGEINT) AS syz,
-               SUM((x * x)::HUGEINT) AS sxx, SUM((y * y)::HUGEINT) AS syy,
-               SUM((z * z)::HUGEINT) AS szz
-        FROM q
-    )
-    SELECT ROUND((n * sxy - sx * sy)::DOUBLE
-                 / SQRT((n * sxx - sx * sx)::DOUBLE)
-                 / SQRT((n * syy - sy * sy)::DOUBLE), 6) AS corr_qty_price,
-           ROUND((n * sxz - sx * sz)::DOUBLE
-                 / SQRT((n * sxx - sx * sx)::DOUBLE)
-                 / SQRT((n * szz - sz * sz)::DOUBLE), 6) AS corr_qty_disc,
-           ROUND((n * syz - sy * sz)::DOUBLE
-                 / SQRT((n * syy - sy * sy)::DOUBLE)
-                 / SQRT((n * szz - sz * sz)::DOUBLE), 6) AS corr_price_disc
-    FROM s
-    """,
-)
-def lineitem_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Pearson correlations between the lineitem measures
-    (quantity/price/discount) — the numeric-profiling companion of
-    table_profile.  The 2-decimal doubles quantize losslessly to cents
-    (round(v·100)), every moment is an exact integer sum
-    (decimal(38)/HUGEINT — ~1e22 at sf100, far inside 38 digits), and
-    doubles appear only in the one closed-form display expression
-    written identically on both engines (the autocorr_weekly /SQRT/SQRT
-    shape).  One pass, map-side-combined; no corpus shuffle."""
-    li = load_table(spark, sf_dir, "lineitem")
-    q = li.select(
-        F.floor(F.col("l_quantity") * 100.0 + 0.5).cast("long").alias("x"),
-        F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast("long").alias("y"),
-        F.floor(F.col("l_discount") * 100.0 + 0.5).cast("long").alias("z"),
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    s = q.agg(
-        F.count("*").cast("decimal(38,0)").alias("n"),
-        F.sum(dec(F.col("x"))).cast("decimal(38,0)").alias("sx"),
-        F.sum(dec(F.col("y"))).cast("decimal(38,0)").alias("sy"),
-        F.sum(dec(F.col("z"))).cast("decimal(38,0)").alias("sz"),
-        F.sum(dec(F.col("x") * F.col("y"))).cast("decimal(38,0)").alias("sxy"),
-        F.sum(dec(F.col("x") * F.col("z"))).cast("decimal(38,0)").alias("sxz"),
-        F.sum(dec(F.col("y") * F.col("z"))).cast("decimal(38,0)").alias("syz"),
-        F.sum(dec(F.col("x") * F.col("x"))).cast("decimal(38,0)").alias("sxx"),
-        F.sum(dec(F.col("y") * F.col("y"))).cast("decimal(38,0)").alias("syy"),
-        F.sum(dec(F.col("z") * F.col("z"))).cast("decimal(38,0)").alias("szz"),
-    )
-
-    def corr(sab, sa, sb, saa, sbb):
-        return F.round(
-            (F.col("n") * F.col(sab) - F.col(sa) * F.col(sb)).cast("double")
-            / F.sqrt((F.col("n") * F.col(saa) - F.col(sa) * F.col(sa)).cast("double"))
-            / F.sqrt((F.col("n") * F.col(sbb) - F.col(sb) * F.col(sb)).cast("double")),
-            6,
-        )
-
-    return s.select(
-        corr("sxy", "sx", "sy", "sxx", "syy").alias("corr_qty_price"),
-        corr("sxz", "sx", "sz", "sxx", "szz").alias("corr_qty_disc"),
-        corr("syz", "sy", "sz", "syy", "szz").alias("corr_price_disc"),
-    )
-
-
-@query(
-    "benford_digits",
-    """
-    WITH c AS (
-        SELECT substr(CAST(FLOOR(value * 100.0 + 0.5)::BIGINT AS VARCHAR),
-                      1, 1)::BIGINT AS digit
-        FROM events WHERE value > 0
-    ),
-    nn AS (SELECT COUNT(*)::BIGINT AS n FROM c),
-    obs AS (SELECT digit, COUNT(*)::BIGINT AS observed FROM c GROUP BY digit),
-    d9 AS (SELECT unnest(range(1, 10))::BIGINT AS digit)
-    SELECT d.digit,
-           COALESCE(o.observed, 0)::BIGINT AS observed,
-           ROUND(log10(1.0 + 1.0 / CAST(d.digit AS DOUBLE)), 6) AS benford_p,
-           ROUND(CAST(COALESCE(o.observed, 0) AS DOUBLE)
-                 / CAST((SELECT n FROM nn) AS DOUBLE), 6) AS observed_p,
-           ROUND(CAST(COALESCE(o.observed, 0) AS DOUBLE)
-                 / CAST((SELECT n FROM nn) AS DOUBLE)
-                 - log10(1.0 + 1.0 / CAST(d.digit AS DOUBLE)), 6) AS deviation
-    FROM d9 d LEFT JOIN obs o ON o.digit = d.digit
-    ORDER BY d.digit
-    """,
-)
-def benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford's-law digit test over event values — the fraud / synthetic-
-    data forensics screen: natural multi-scale amounts put digit d first
-    with p = log₁₀(1 + 1/d); a flat or spiked profile means generated or
-    manipulated values.  The first digit is extracted from the INTEGER
-    cents string (no float log bucketing — engine-identical by
-    construction); all 9 digits are kept via the left join so absent
-    digits report observed = 0 rather than vanishing.  One digit groupBy
-    (map-side combine); the readout is 9 rows."""
-    e = load_table(spark, sf_dir, "events")
-    c = e.filter(F.col("value") > 0).select(
-        F.substring(
-            F.floor(F.col("value") * 100.0 + 0.5).cast("long").cast("string"), 1, 1
-        )
-        .cast("long")
-        .alias("digit")
-    )
-    nn = c.agg(F.count("*").cast("long").alias("n"))
-    obs = c.groupBy("digit").agg(F.count("*").cast("long").alias("observed"))
-    d9 = spark.range(1, 10).select(F.col("id").alias("digit"))
-    bp = F.log10(1.0 + 1.0 / F.col("digit").cast("double"))
-    op = F.col("observed").cast("double") / F.col("n").cast("double")
-    return (
-        d9.join(F.broadcast(obs), "digit", "left")
-        .crossJoin(F.broadcast(nn))
-        .select(
-            "digit",
-            F.coalesce("observed", F.lit(0)).cast("long").alias("observed"),
-            F.round(bp, 6).alias("benford_p"),
-            F.round(
-                F.coalesce("observed", F.lit(0)).cast("double")
-                / F.col("n").cast("double"),
-                6,
-            ).alias("observed_p"),
-            F.round(
-                F.coalesce("observed", F.lit(0)).cast("double")
-                / F.col("n").cast("double")
-                - bp,
-                6,
-            ).alias("deviation"),
-        )
-        .orderBy("digit")
-    )
-
-
-@query(
-    "t_closeness",
-    """
-    WITH gc AS (
-        SELECT CAST(ts AS DATE) AS day, event_type, COUNT(*)::BIGINT AS cnt
-        FROM events GROUP BY 1, 2
-    ),
-    gn AS (SELECT day, SUM(cnt)::BIGINT AS group_n FROM gc GROUP BY day),
-    gl AS (SELECT event_type, SUM(cnt)::BIGINT AS gcnt FROM gc GROUP BY event_type),
-    tot AS (SELECT SUM(cnt)::BIGINT AS n FROM gc),
-    grid AS (SELECT gn.day, gn.group_n, gl.event_type, gl.gcnt FROM gn CROSS JOIN gl),
-    diffs AS (
-        SELECT g.day, g.group_n,
-               ABS(COALESCE(c.cnt, 0) * t.n - g.gcnt * g.group_n)::BIGINT AS num
-        FROM grid g
-        LEFT JOIN gc c ON g.day = c.day AND g.event_type = c.event_type
-        CROSS JOIN tot t
-    ),
-    scored AS (
-        SELECT day, group_n,
-               SUM(num)::BIGINT AS num_sum
-        FROM diffs GROUP BY day, group_n
-    )
-    SELECT strftime(s.day, '%Y-%m-%d') AS day, s.group_n AS group_size,
-           ROUND(0.5 * s.num_sum / (s.group_n * t.n)::DOUBLE, 6) AS t_dist
-    FROM scored s CROSS JOIN tot t
-    ORDER BY t_dist DESC, day ASC LIMIT 10
-    """,
-)
-def t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t-closeness audit (Li et al. 2007) — completes the privacy triad
-    with k_anonymity and l_diversity: per quasi-identifier group (day),
-    the total-variation distance between the group's sensitive-attribute
-    (event_type) distribution and the global one; the 10 farthest groups
-    are where a released cell leaks attribute skew even when k-large and
-    l-diverse.  Exact arithmetic: the TV sum is folded over a common
-    denominator — Σ|cnt·N − gcnt·gn| in BIGINT (≤ N² ≈ 10¹⁰ at sf0.1,
-    envelope to 2⁶³ at ~3M events per the spectral overflow discipline) —
-    with ONE closed-form double at the end.
-
-    Plan: one groupBy(day, type) shuffle; days and the 5-type global
-    histogram are tiny and broadcast into a dense grid so absent types
-    count their full global mass; the report is a top-10 TakeOrdered."""
-    e = load_table(spark, sf_dir, "events")
-    gc = e.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
-        F.count("*").cast("long").alias("cnt")
-    )
-    gn = gc.groupBy("day").agg(F.sum("cnt").cast("long").alias("group_n"))
-    gl = gc.groupBy("event_type").agg(F.sum("cnt").cast("long").alias("gcnt"))
-    tot = gc.agg(F.sum("cnt").cast("long").alias("n"))
-    grid = gn.crossJoin(F.broadcast(gl))
-    diffs = (
-        grid.join(gc, ["day", "event_type"], "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "day",
-            "group_n",
-            "n",
-            F.abs(
-                F.coalesce(F.col("cnt"), F.lit(0)) * F.col("n")
-                - F.col("gcnt") * F.col("group_n")
-            )
-            .cast("long")
-            .alias("num"),
-        )
-    )
-    scored = diffs.groupBy("day", "group_n", "n").agg(
-        F.sum("num").cast("long").alias("num_sum")
-    )
-    return (
-        scored.select(
-            F.date_format("day", "yyyy-MM-dd").alias("day"),
-            F.col("group_n").alias("group_size"),
-            F.round(
-                F.lit(0.5)
-                * F.col("num_sum")
-                / (F.col("group_n") * F.col("n")).cast("double"),
-                6,
-            ).alias("t_dist"),
-        )
-        .orderBy(F.col("t_dist").desc(), F.col("day").asc())
-        .limit(10)
-    )
 
 
 @query(
@@ -1425,536 +97,6 @@ def skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "dq_expectations",
-    """
-    WITH n AS (SELECT COUNT(*)::BIGINT AS n FROM lineitem)
-    SELECT 'l_quantity_not_null' AS rule, n.n AS n_rows,
-           (SELECT COUNT(*) FILTER (WHERE l_quantity IS NULL) FROM lineitem)::BIGINT
-           AS n_violations,
-           (SELECT COUNT(*) FILTER (WHERE l_quantity IS NULL) FROM lineitem) = 0
-           AS passed
-    FROM n
-    UNION ALL
-    SELECT 'l_discount_in_range', n.n,
-           (SELECT COUNT(*) FILTER (WHERE NOT (l_discount >= 0.0 AND l_discount <= 0.1))
-            FROM lineitem)::BIGINT,
-           (SELECT COUNT(*) FILTER (WHERE NOT (l_discount >= 0.0 AND l_discount <= 0.1))
-            FROM lineitem) = 0
-    FROM n
-    UNION ALL
-    SELECT 'l_returnflag_accepted', n.n,
-           (SELECT COUNT(*) FILTER (WHERE l_returnflag NOT IN ('A', 'N', 'R'))
-            FROM lineitem)::BIGINT,
-           (SELECT COUNT(*) FILTER (WHERE l_returnflag NOT IN ('A', 'N', 'R'))
-            FROM lineitem) = 0
-    FROM n
-    UNION ALL
-    SELECT 'l_quantity_max_50', n.n,
-           (SELECT COUNT(*) FILTER (WHERE l_quantity > 50.0) FROM lineitem)::BIGINT,
-           (SELECT COUNT(*) FILTER (WHERE l_quantity > 50.0) FROM lineitem) = 0
-    FROM n
-    UNION ALL
-    SELECT 'lineitem_pk_unique', n.n,
-           (n.n - (SELECT COUNT(DISTINCT (l_orderkey, l_linenumber)) FROM lineitem))::BIGINT,
-           n.n = (SELECT COUNT(DISTINCT (l_orderkey, l_linenumber)) FROM lineitem)
-    FROM n
-    UNION ALL
-    SELECT 'l_orderkey_in_orders', n.n,
-           (SELECT COUNT(*) FROM lineitem l
-            WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey))::BIGINT,
-           (SELECT COUNT(*) FROM lineitem l
-            WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)) = 0
-    FROM n
-    """,
-)
-def dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-quality expectation suite over lineitem (operators/dq.py):
-    four row-predicate rules folded into ONE scan-side aggregate, a
-    composite-key uniqueness check (one distinct-count shuffle), and
-    orders referential integrity (broadcast anti-join) — the publish
-    gate a pipeline runs on every new partition."""
-    from fusionspark.operators import dq
-
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    rules = dq.dq_check(
-        li,
-        [
-            ("l_quantity_not_null", F.col("l_quantity").isNull()),
-            (
-                "l_discount_in_range",
-                ~((F.col("l_discount") >= 0.0) & (F.col("l_discount") <= 0.1)),
-            ),
-            (
-                "l_returnflag_accepted",
-                ~F.col("l_returnflag").isin("A", "N", "R"),
-            ),
-            ("l_quantity_max_50", F.col("l_quantity") > 50.0),
-        ],
-    )
-    uniq = dq.dq_unique(li, ["l_orderkey", "l_linenumber"], "lineitem_pk_unique")
-    ref = dq.dq_ref_integrity(li, "l_orderkey", o, "o_orderkey", "l_orderkey_in_orders")
-    return dq.dq_suite([rules, uniq, ref])
-
-
-@query(
-    "theil_sen_trend",
-    """
-    WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day, COUNT(*)::BIGINT AS y
-        FROM events GROUP BY 1
-    ),
-    mn AS (SELECT MIN(day) AS d0 FROM daily),
-    idx AS (
-        SELECT (day - mn.d0)::BIGINT AS d, y FROM daily CROSS JOIN mn
-    ),
-    pairs AS (
-        SELECT (b.y - a.y)::BIGINT AS num, (b.d - a.d)::BIGINT AS den
-        FROM idx a JOIN idx b ON b.d > a.d
-    ),
-    m AS (SELECT COUNT(*)::BIGINT AS m, (COUNT(*) - 1) // 2 AS t FROM pairs),
-    dist AS (SELECT DISTINCT num, den FROM pairs),
-    ranked AS (
-        SELECT p.num, p.den,
-               SUM(CASE WHEN q.num * p.den < p.num * q.den THEN 1 ELSE 0 END)::BIGINT AS n_less,
-               SUM(CASE WHEN q.num * p.den = p.num * q.den THEN 1 ELSE 0 END)::BIGINT AS n_eq
-        FROM dist p CROSS JOIN pairs q
-        GROUP BY p.num, p.den
-    ),
-    med AS (
-        SELECT r.num, r.den FROM ranked r CROSS JOIN m
-        WHERE r.n_less <= m.t AND r.n_less + r.n_eq > m.t
-        ORDER BY r.den, r.num LIMIT 1
-    ),
-    ic AS (
-        SELECT i.y * med.den - med.num * i.d AS ic_num, i.d
-        FROM idx i CROSS JOIN med
-    ),
-    icr AS (
-        SELECT ic_num,
-               ROW_NUMBER() OVER (ORDER BY ic_num ASC, d ASC) AS rn,
-               COUNT(*) OVER () AS n
-        FROM ic
-    ),
-    icm AS (
-        SELECT AVG(ic_num) AS ic_avg FROM icr
-        WHERE rn = (n + 1) // 2 OR rn = (n + 2) // 2
-    )
-    SELECT ROUND(med.num::DOUBLE / med.den, 6) AS slope,
-           ROUND(icm.ic_avg / med.den, 6) AS intercept,
-           (SELECT COUNT(*)::BIGINT FROM idx) AS n_days,
-           m.m AS n_pairs
-    FROM med CROSS JOIN icm CROSS JOIN m
-    """,
-)
-def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil–Sen robust trend of daily event counts — the
-    breakdown-resistant sibling of trend_daily_events' OLS: slope =
-    median of all pairwise (Δy/Δd) fractions, intercept = median of
-    (yᵢ − slope·dᵢ).  ZERO float comparisons anywhere: fractions are
-    ranked by BIGINT cross-multiplication (rank = #strictly-smaller over
-    all m pairs, the median is the fraction whose below-count brackets
-    (m−1)//2), and the intercept median orders exact integer numerators
-    over the slope's common denominator; doubles appear only in the two
-    final display divisions (IEEE division is correctly rounded, so any
-    equal-valued fraction representation yields the identical double).
-
-    Plan: the corpus collapses to ≤ |days| rows in one groupBy; pairs
-    (m = days²/2 ≈ 435) and the m×m rank comparison (~190k rows) are
-    bounded-grid broadcasts (the histogram_quantiles discipline), never
-    corpus-sized."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(F.to_date("ts").alias("day")).agg(
-        F.count("*").cast("long").alias("y")
-    )
-    mn = daily.agg(F.min("day").alias("d0"))
-    # one corpus scan: the ≤|days|-row frame is checkpointed, so the many
-    # bounded-grid reuses below (pairs, ranks, intercepts) never re-read
-    # the events table
-    idx = (
-        daily.crossJoin(F.broadcast(mn))
-        .select(F.datediff("day", "d0").cast("long").alias("d"), "y")
-        .localCheckpoint(eager=True)
-    )
-    a, b = idx.alias("a"), idx.alias("b")
-    pairs = (
-        a.join(b, F.col("b.d") > F.col("a.d"))
-        .select(
-            (F.col("b.y") - F.col("a.y")).cast("long").alias("num"),
-            (F.col("b.d") - F.col("a.d")).cast("long").alias("den"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    m = pairs.agg(
-        F.count("*").cast("long").alias("m"),
-        F.expr("(count(*) - 1) div 2").cast("long").alias("t"),
-    )
-    dist = pairs.select("num", "den").distinct()
-    p, q = dist.alias("p"), pairs.alias("q")
-    ranked = (
-        p.crossJoin(F.broadcast(q))
-        .groupBy(F.col("p.num").alias("num"), F.col("p.den").alias("den"))
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("q.num") * F.col("p.den") < F.col("p.num") * F.col("q.den"),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_less"),
-            F.sum(
-                F.when(
-                    F.col("q.num") * F.col("p.den") == F.col("p.num") * F.col("q.den"),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_eq"),
-        )
-    )
-    med = (
-        ranked.crossJoin(F.broadcast(m))
-        .filter(
-            (F.col("n_less") <= F.col("t"))
-            & (F.col("n_less") + F.col("n_eq") > F.col("t"))
-        )
-        .orderBy("den", "num")
-        .limit(1)
-        .select("num", "den")
-    )
-    ic = idx.crossJoin(F.broadcast(med)).select(
-        (F.col("y") * F.col("den") - F.col("num") * F.col("d")).alias("ic_num"),
-        "d",
-    )
-    wn = Window.orderBy(F.col("ic_num").asc(), F.col("d").asc())
-    icr = ic.withColumn("rn", F.row_number().over(wn)).crossJoin(
-        F.broadcast(idx.agg(F.count("*").cast("long").alias("n")))
-    )
-    icm = icr.filter(
-        (F.col("rn") == F.expr("(n + 1) div 2")) | (F.col("rn") == F.expr("(n + 2) div 2"))
-    ).agg(F.avg("ic_num").alias("ic_avg"))
-    nd = idx.agg(F.count("*").cast("long").alias("n_days"))
-    return (
-        med.crossJoin(F.broadcast(icm))
-        .crossJoin(F.broadcast(nd))
-        .crossJoin(F.broadcast(m.select("m")))
-        .select(
-            F.round(F.col("num").cast("double") / F.col("den"), 6).alias("slope"),
-            F.round(F.col("ic_avg") / F.col("den"), 6).alias("intercept"),
-            "n_days",
-            F.col("m").alias("n_pairs"),
-        )
-    )
-
-
-@query(
-    "mann_whitney",
-    """
-    WITH s AS (
-        SELECT event_type AS g, FLOOR(value * 100.0 + 0.5)::BIGINT AS v
-        FROM events WHERE event_type IN ('click', 'purchase')
-    ),
-    grid AS (
-        SELECT v, COUNT(*)::BIGINT AS cnt,
-               SUM(CASE WHEN g = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS cnt1
-        FROM s GROUP BY v
-    ),
-    ranked AS (
-        SELECT v, cnt, cnt1,
-               COALESCE(SUM(cnt) OVER (ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-        FROM grid
-    ),
-    agg AS (
-        SELECT SUM(cnt1 * (2 * cum_before + cnt + 1))::BIGINT AS r1d,
-               SUM(cnt1)::BIGINT AS n1,
-               SUM(cnt - cnt1)::BIGINT AS n2,
-               SUM(cnt * cnt * cnt - cnt)::BIGINT AS tsum
-        FROM ranked
-    )
-    SELECT n1, n2,
-           ROUND((r1d - n1 * (n1 + 1)) / 2.0, 6) AS u1,
-           ROUND(
-               ((r1d - n1 * (n1 + 1)) / 2.0 - (n1 * n2) / 2.0)
-               / SQRT(((n1 * n2) * ((n1 + n2 + 1) - tsum / ((n1 + n2) * (n1 + n2 - 1)))) / 12.0),
-               6) AS z
-    FROM agg
-    """,
-)
-def mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann–Whitney U (Wilcoxon rank-sum) between 'purchase' and 'click'
-    event values — the nonparametric sibling of ab_test_zscore.  EXACT
-    rank arithmetic on the bounded cents grid: per distinct cents value
-    one (count, group-count) row, average tie ranks kept integral by
-    DOUBLING (2·min_rank + t − 1), the rank sum, tie term Σ(t³−t), and
-    group sizes all BIGINT; the tie-corrected normal approximation is one
-    closed-form double written identically on both engines.
-
-    Plan: the corpus does ONE groupBy(cents) shuffle; the running rank
-    walks the distinct-value grid (≤ 10k rows — the histogram_quantiles
-    discipline), never the event rows; the readout is a single row."""
-    e = load_table(spark, sf_dir, "events")
-    s = e.filter(F.col("event_type").isin("click", "purchase")).select(
-        F.col("event_type").alias("g"),
-        F.floor(F.col("value") * 100.0 + 0.5).cast("long").alias("v"),
-    )
-    grid = s.groupBy("v").agg(
-        F.count("*").cast("long").alias("cnt"),
-        F.sum(F.when(F.col("g") == "purchase", 1).otherwise(0))
-        .cast("long")
-        .alias("cnt1"),
-    )
-    wb = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = grid.withColumn(
-        "cum_before", F.coalesce(F.sum("cnt").over(wb), F.lit(0))
-    )
-    agg = ranked.agg(
-        F.sum(F.col("cnt1") * (2 * F.col("cum_before") + F.col("cnt") + 1))
-        .cast("long")
-        .alias("r1d"),
-        F.sum("cnt1").cast("long").alias("n1"),
-        F.sum(F.col("cnt") - F.col("cnt1")).cast("long").alias("n2"),
-        F.sum(F.col("cnt") * F.col("cnt") * F.col("cnt") - F.col("cnt"))
-        .cast("long")
-        .alias("tsum"),
-    )
-    n1, n2, r1d, tsum = F.col("n1"), F.col("n2"), F.col("r1d"), F.col("tsum")
-    u1 = (r1d - n1 * (n1 + 1)) / F.lit(2.0)
-    num = u1 - (n1 * n2) / F.lit(2.0)
-    inner = (n1 + n2 + 1) - tsum / ((n1 + n2) * (n1 + n2 - 1))
-    z = num / F.sqrt(((n1 * n2) * inner) / F.lit(12.0))
-    return agg.select(
-        "n1", "n2", F.round(u1, 6).alias("u1"), F.round(z, 6).alias("z")
-    )
-
-
-@query(
-    "chi2_independence",
-    """
-    WITH cells AS (
-        SELECT event_type AS g, (dayofweek(ts) + 1)::BIGINT AS wd,
-               COUNT(*)::BIGINT AS o
-        FROM events GROUP BY 1, 2
-    ),
-    rm AS (SELECT g, SUM(o)::BIGINT AS r FROM cells GROUP BY g),
-    cm AS (SELECT wd, SUM(o)::BIGINT AS c FROM cells GROUP BY wd),
-    nn AS (SELECT SUM(o)::BIGINT AS n FROM cells),
-    grid AS (
-        SELECT rm.g, cm.wd, rm.r, cm.c, COALESCE(cells.o, 0)::BIGINT AS o
-        FROM rm CROSS JOIN cm
-        LEFT JOIN cells ON cells.g = rm.g AND cells.wd = cm.wd
-    ),
-    terms AS (
-        SELECT g, wd,
-               ((o * nn.n - r * c)::DOUBLE * (o * nn.n - r * c)::DOUBLE)
-               / (nn.n * r * c)::DOUBLE AS term
-        FROM grid CROSS JOIN nn
-    ),
-    folded AS (
-        SELECT list_reduce(list_prepend(0.0, list(term ORDER BY g, wd)),
-                           (a, x) -> a + x) AS chi2,
-               COUNT(*)::BIGINT AS n_cells
-        FROM terms
-    )
-    SELECT ROUND(folded.chi2, 6) AS chi2,
-           (((SELECT COUNT(*) FROM rm) - 1)
-            * ((SELECT COUNT(*) FROM cm) - 1))::BIGINT AS dof,
-           folded.n_cells
-    FROM folded
-    """,
-)
-def chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """χ² test of independence between event_type and weekday — the
-    contingency-table sibling of ab_test_zscore/mann_whitney.  Per cell
-    the statistic is rewritten over the common denominator,
-    (O·N − R·C)²/(N·R·C), so every ingredient is an exact BIGINT (the
-    difference ≤ N² ≈ 10¹⁰ converts to double EXACTLY before squaring);
-    the 35-term sum is a (type, weekday)-ordered IEEE fold on both
-    engines (the source_divergence discipline), so no aggregation-order
-    drift is possible.
-
-    Plan: ONE groupBy(type, weekday) over the corpus; margins, the dense
-    grid, and the fold all run on ≤ |types|·7 rows."""
-    e = load_table(spark, sf_dir, "events")
-    # the ≤ |types|·7-row contingency table is checkpointed so margins,
-    # grid, and dof derive from ONE corpus scan
-    cells = (
-        e.groupBy(
-            F.col("event_type").alias("g"),
-            F.dayofweek("ts").cast("long").alias("wd"),
-        )
-        .agg(F.count("*").cast("long").alias("o"))
-        .localCheckpoint(eager=True)
-    )
-    rm = cells.groupBy("g").agg(F.sum("o").cast("long").alias("r"))
-    cm = cells.groupBy("wd").agg(F.sum("o").cast("long").alias("c"))
-    nn = cells.agg(F.sum("o").cast("long").alias("n"))
-    grid = (
-        rm.crossJoin(F.broadcast(cm))
-        .join(cells, ["g", "wd"], "left")
-        .select(
-            "g", "wd", "r", "c", F.coalesce(F.col("o"), F.lit(0)).cast("long").alias("o")
-        )
-    )
-    x = (F.col("o") * F.col("n") - F.col("r") * F.col("c")).cast("double")
-    terms = grid.crossJoin(F.broadcast(nn)).select(
-        "g",
-        "wd",
-        ((x * x) / (F.col("n") * F.col("r") * F.col("c")).cast("double")).alias("term"),
-    )
-    folded = terms.agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("g", "wd", "term"))),
-            F.lit(0.0),
-            lambda acc, s: acc + s["term"],
-        ).alias("chi2"),
-        F.count("*").cast("long").alias("n_cells"),
-    )
-    dof = (
-        rm.agg(F.count("*").alias("ng"))
-        .crossJoin(F.broadcast(cm.agg(F.count("*").alias("nw"))))
-        .select(((F.col("ng") - 1) * (F.col("nw") - 1)).cast("long").alias("dof"))
-    )
-    return folded.crossJoin(F.broadcast(dof)).select(
-        F.round("chi2", 6).alias("chi2"), "dof", "n_cells"
-    )
-
-
-# Poisson(1) inverse-CDF cutoffs scaled to the md5_hash32 range [0, 2^32):
-# T_k = ceil(CDF(k) * 2^32).  Weights compare the INTEGER hash against
-# these BIGINT literals, so the resampling plan has zero float ops — any
-# engine that agrees on md5 agrees on every weight.
-_POIS_T = [1580030169, 3160060338, 3950075422, 4213413784, 4279248374,
-           4292415292, 4294609778]
-_B_BOOT = 200
-
-
-def _pois_w_sql(h: str) -> str:
-    out = f"CASE WHEN {h} < {_POIS_T[0]} THEN 0"
-    for k in range(1, len(_POIS_T)):
-        out += f" WHEN {h} < {_POIS_T[k]} THEN {k}"
-    return out + f" ELSE {len(_POIS_T)} END"
-
-
-@query(
-    "bootstrap_ci",
-    f"""
-    WITH v AS (
-        SELECT event_id, FLOOR(value * 100.0 + 0.5)::BIGINT AS cents
-        FROM events
-    ),
-    h AS (
-        SELECT cents,
-               ('0x' || substr(md5('boot:' || event_id::VARCHAR), 1, 8))::BIGINT AS hr
-        FROM v
-    ),
-    expl AS (
-        SELECT b.b, h.cents,
-               {_pois_w_sql("((h.hr * (2 * b.b + 1) + b.b * 2654435761) % 4294967296)")} AS w
-        FROM h CROSS JOIN (SELECT unnest(generate_series(0, {_B_BOOT - 1})) AS b) b
-    ),
-    means AS (
-        SELECT b, SUM(w * cents)::BIGINT AS s, SUM(w)::BIGINT AS n
-        FROM expl GROUP BY b
-    ),
-    ranked AS (
-        SELECT b, s, n,
-               ROW_NUMBER() OVER (
-                   ORDER BY s * 1.0 / n ASC, b ASC
-               ) AS rn
-        FROM means WHERE n > 0
-    ),
-    pt AS (
-        SELECT SUM(cents)::BIGINT AS s, COUNT(*)::BIGINT AS n FROM v
-    )
-    SELECT ROUND(pt.s * 1.0 / pt.n / 100.0, 6) AS mean_value,
-           ROUND((SELECT s * 1.0 / n FROM ranked WHERE rn = 5) / 100.0, 6) AS ci_lo,
-           ROUND((SELECT s * 1.0 / n FROM ranked WHERE rn = 196) / 100.0, 6) AS ci_hi,
-           (SELECT COUNT(*)::BIGINT FROM ranked) AS n_resamples
-    FROM pt
-    """,
-)
-def bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """95% bootstrap confidence interval for the mean event value via the
-    POISSON bootstrap (the resample-without-coordination trick for
-    distributed data: each (row, replicate) draws an independent
-    Poisson(1) multiplicity, so no replicate needs a global sample):
-    B = 200 replicates, weight = inverse-CDF lookup of the md5 hash
-    against INTEGER cutoffs (zero float ops until each replicate's one
-    mean division), CI bounds = rank 5 / rank 196 of the replicate means
-    (2.5%/97.5%), tie-broken by replicate id.
-
-    Plan: one scan explodes ×B into (replicate, weight) partial sums —
-    map-side combinable, shuffle carries 2B scalars per partition; the
-    rank walks the B-row replicate table.  B is a constant: 100 TB costs
-    the same shuffle width."""
-    e = load_table(spark, sf_dir, "events")
-    v = e.select(
-        "event_id", F.floor(F.col("value") * 100.0 + 0.5).cast("long").alias("cents")
-    )
-    b = spark.range(_B_BOOT).select(F.col("id").cast("long").alias("b"))
-    # ONE md5 per row; each replicate draws its uniform via a
-    # Carter-Wegman integer mix (odd multiplier 2b+1 is a bijection mod
-    # 2^32) — 200× less hashing than md5('boot:'||b||':'||id) per pair,
-    # still engine-exact BIGINT arithmetic
-    hr = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("boot:"), F.col("event_id").cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    # checkpoint pins the one-md5-per-row evaluation: Catalyst would
-    # otherwise collapse this projection into the ×B join and recompute
-    # the hash per (row, replicate)
-    hv = v.select("cents", hr.alias("hr")).localCheckpoint(eager=True)
-    h = (F.col("hr") * (2 * F.col("b") + 1) + F.col("b") * F.lit(2654435761)) % F.lit(
-        4294967296
-    )
-    w = F.when(h < _POIS_T[0], 0)
-    for k in range(1, len(_POIS_T)):
-        w = w.when(h < _POIS_T[k], k)
-    w = w.otherwise(len(_POIS_T))
-    expl = hv.crossJoin(F.broadcast(b)).select("b", "cents", w.alias("w"))
-    # the B-row replicate table is checkpointed: the rank walk, both CI
-    # bounds, and the count reuse it without re-exploding the corpus
-    means = (
-        expl.groupBy("b")
-        .agg(
-            F.sum(F.col("w") * F.col("cents")).cast("long").alias("s"),
-            F.sum("w").cast("long").alias("n"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    wr = Window.orderBy((F.col("s") * 1.0 / F.col("n")).asc(), F.col("b").asc())
-    ranked = means.filter(F.col("n") > 0).withColumn("rn", F.row_number().over(wr))
-    lo = ranked.filter(F.col("rn") == 5).select(
-        (F.col("s") * 1.0 / F.col("n") / 100.0).alias("lo")
-    )
-    hi = ranked.filter(F.col("rn") == 196).select(
-        (F.col("s") * 1.0 / F.col("n") / 100.0).alias("hi")
-    )
-    nres = ranked.agg(F.count("*").cast("long").alias("n_resamples"))
-    pt = v.agg(
-        (F.sum("cents").cast("long") * 1.0 / F.count("*").cast("long") / 100.0).alias(
-            "mean_value"
-        )
-    )
-    return (
-        pt.crossJoin(F.broadcast(lo))
-        .crossJoin(F.broadcast(hi))
-        .crossJoin(F.broadcast(nres))
-        .select(
-            F.round("mean_value", 6).alias("mean_value"),
-            F.round("lo", 6).alias("ci_lo"),
-            F.round("hi", 6).alias("ci_hi"),
-            "n_resamples",
-        )
-    )
-
-
-@query(
     "cumulative_users",
     """
     WITH firstseen AS (
@@ -1995,2340 +137,11 @@ def cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "median_by_type",
-    """
-    WITH grid AS (
-        SELECT event_type, FLOOR(value * 100.0 + 0.5)::BIGINT AS v,
-               COUNT(*)::BIGINT AS cnt
-        FROM events GROUP BY 1, 2
-    ),
-    walked AS (
-        SELECT event_type, v, cnt,
-               SUM(cnt) OVER (PARTITION BY event_type ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-               SUM(cnt) OVER (PARTITION BY event_type) AS tot
-        FROM grid
-    ),
-    med AS (
-        SELECT event_type,
-               MIN(CASE WHEN cum * 2 >= tot THEN v END) AS lo,
-               MIN(CASE WHEN cum * 2 >= tot + 2 THEN v END) AS hi_even,
-               MAX(tot) AS tot
-        FROM walked GROUP BY event_type
-    )
-    SELECT event_type,
-           ROUND(CASE WHEN tot % 2 = 1 THEN lo / 100.0
-                      ELSE (lo + COALESCE(hi_even, lo)) / 200.0 END, 6) AS median_value,
-           tot::BIGINT AS n
-    FROM med
-    """,
-)
-def median_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT per-group median of event values: one groupBy((type, cents))
-    collapses the corpus, a partitioned cumulative walk over the bounded
-    cents grid finds the middle element(s) — odd n takes the rank-⌈n/2⌉
-    value, even n averages ranks n/2 and n/2+1 (both found by cumulative
-    threshold, the halves exact in double).  No global sort, no
-    percentile_approx."""
-    e = load_table(spark, sf_dir, "events")
-    grid = e.groupBy(
-        "event_type", F.floor(F.col("value") * 100.0 + 0.5).cast("long").alias("v")
-    ).agg(F.count("*").cast("long").alias("cnt"))
-    wcum = (
-        Window.partitionBy("event_type")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wall = Window.partitionBy("event_type")
-    walked = grid.withColumn("cum", F.sum("cnt").over(wcum)).withColumn(
-        "tot", F.sum("cnt").over(wall)
-    )
-    med = walked.groupBy("event_type").agg(
-        F.min(F.when(F.col("cum") * 2 >= F.col("tot"), F.col("v"))).alias("lo"),
-        F.min(F.when(F.col("cum") * 2 >= F.col("tot") + 2, F.col("v"))).alias(
-            "hi_even"
-        ),
-        F.max("tot").alias("tot"),
-    )
-    return med.select(
-        "event_type",
-        F.round(
-            F.when(F.col("tot") % 2 == 1, F.col("lo") / 100.0).otherwise(
-                (F.col("lo") + F.coalesce(F.col("hi_even"), F.col("lo"))) / 200.0
-            ),
-            6,
-        ).alias("median_value"),
-        F.col("tot").cast("long").alias("n"),
-    )
-
-
-@query(
-    "forecast_backtest",
-    """
-    WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day, COUNT(*)::BIGINT AS y
-        FROM events GROUP BY 1
-    ),
-    idx AS (
-        SELECT ROW_NUMBER() OVER (ORDER BY day) AS i, y FROM daily
-    ),
-    joined AS (
-        SELECT c.i, c.y,
-               n.y AS naive_pred, s.y AS seasonal_pred
-        FROM idx c
-        JOIN idx n ON n.i = c.i - 1
-        JOIN idx s ON s.i = c.i - 7
-        WHERE c.i > (SELECT MAX(i) FROM idx) - 14
-    )
-    SELECT COUNT(*)::BIGINT AS n_days,
-           SUM(ABS(y - naive_pred))::BIGINT AS naive_abs_err,
-           SUM(ABS(y - seasonal_pred))::BIGINT AS seasonal_abs_err,
-           ROUND(SUM(ABS(y - naive_pred)) * 1.0 / COUNT(*) , 6) AS naive_mae,
-           ROUND(SUM(ABS(y - seasonal_pred)) * 1.0 / COUNT(*), 6) AS seasonal_mae
-    FROM joined
-    """,
-)
-def forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forecast backtest over the last 14 days of the daily event-count
-    series: naive (ŷ = yesterday) vs seasonal-naive (ŷ = same weekday
-    last week) absolute error — the baseline pair every forecast (ets,
-    Theil–Sen) must beat before anyone ships it.  Errors are exact
-    BIGINT sums; the MAEs are two final divisions.  The corpus collapses
-    in one groupBy; the lag joins walk the ≤|days| frame."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(F.to_date("ts").alias("day")).agg(
-        F.count("*").cast("long").alias("y")
-    )
-    idx = daily.select(
-        F.row_number().over(Window.orderBy("day")).alias("i"), "y"
-    ).localCheckpoint(eager=True)
-    mx = idx.agg(F.max("i").alias("mx"))
-    c, nv, s = idx.alias("c"), idx.alias("n"), idx.alias("s")
-    joined = (
-        c.join(nv, F.col("n.i") == F.col("c.i") - 1)
-        .join(s, F.col("s.i") == F.col("c.i") - 7)
-        .crossJoin(F.broadcast(mx))
-        .filter(F.col("c.i") > F.col("mx") - 14)
-        .select(
-            F.col("c.y").alias("y"),
-            F.col("n.y").alias("naive_pred"),
-            F.col("s.y").alias("seasonal_pred"),
-        )
-    )
-    return joined.agg(
-        F.count("*").cast("long").alias("n_days"),
-        F.sum(F.abs(F.col("y") - F.col("naive_pred"))).cast("long").alias("naive_abs_err"),
-        F.sum(F.abs(F.col("y") - F.col("seasonal_pred")))
-        .cast("long")
-        .alias("seasonal_abs_err"),
-        F.round(
-            F.sum(F.abs(F.col("y") - F.col("naive_pred"))) * 1.0 / F.count("*"), 6
-        ).alias("naive_mae"),
-        F.round(
-            F.sum(F.abs(F.col("y") - F.col("seasonal_pred"))) * 1.0 / F.count("*"), 6
-        ).alias("seasonal_mae"),
-    )
-
-
-@query(
-    "quantiles_by_type",
-    """
-    WITH grid AS (
-        SELECT event_type, FLOOR(value * 100.0 + 0.5)::BIGINT AS v,
-               COUNT(*)::BIGINT AS cnt
-        FROM events GROUP BY 1, 2
-    ),
-    walked AS (
-        SELECT event_type, v, cnt,
-               SUM(cnt) OVER (PARTITION BY event_type ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-               SUM(cnt) OVER (PARTITION BY event_type) AS tot
-        FROM grid
-    )
-    SELECT event_type,
-           ROUND(MIN(CASE WHEN cum >= (tot * 500 + 999) // 1000 THEN v END) / 100.0, 6) AS p50,
-           ROUND(MIN(CASE WHEN cum >= (tot * 900 + 999) // 1000 THEN v END) / 100.0, 6) AS p90,
-           ROUND(MIN(CASE WHEN cum >= (tot * 990 + 999) // 1000 THEN v END) / 100.0, 6) AS p99,
-           MAX(tot)::BIGINT AS n
-    FROM walked GROUP BY event_type
-    """,
-)
-def quantiles_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT per-type p50/p90/p99 of event values (lower-value quantile
-    law: smallest v whose cumulative count reaches ⌈p·n⌉, the rank
-    computed in integer arithmetic) — the per-dimension SLO readout
-    beside the global histogram_quantiles sketch.  One corpus
-    groupBy((type, cents)); the cumulative walk and threshold cuts run on
-    the bounded grid."""
-    e = load_table(spark, sf_dir, "events")
-    grid = e.groupBy(
-        "event_type", F.floor(F.col("value") * 100.0 + 0.5).cast("long").alias("v")
-    ).agg(F.count("*").cast("long").alias("cnt"))
-    wcum = (
-        Window.partitionBy("event_type")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wall = Window.partitionBy("event_type")
-    walked = grid.withColumn("cum", F.sum("cnt").over(wcum)).withColumn(
-        "tot", F.sum("cnt").over(wall)
-    )
-
-    def q(perm: int):
-        rank = F.expr(f"(tot * {perm} + 999) div 1000")
-        return F.round(
-            F.min(F.when(F.col("cum") >= rank, F.col("v"))) / 100.0, 6
-        )
-
-    return walked.groupBy("event_type").agg(
-        q(500).alias("p50"),
-        q(900).alias("p90"),
-        q(990).alias("p99"),
-        F.max("tot").cast("long").alias("n"),
-    )
-
-
-# Holt-Winters ADDITIVE seasonal step (weekly ring): accumulator is
-# [L, T, s1..s7] where s1 is the seasonal due NOW; coefficients are
-# exact binary fractions (alpha 1/4, beta 1/8, gamma 1/4) so literals
-# parse identically everywhere, and L' is textually duplicated in the
-# T'/s' updates so the IEEE trees match Spark's reused expression tree.
-_HW_SQL_STEP = """(a, y) -> [
-            0.25 * (y[1] - a[3]) + 0.75 * (a[1] + a[2]),
-            0.125 * ((0.25 * (y[1] - a[3]) + 0.75 * (a[1] + a[2])) - a[1])
-                + 0.875 * a[2],
-            a[4], a[5], a[6], a[7], a[8], a[9],
-            0.25 * (y[1] - (0.25 * (y[1] - a[3]) + 0.75 * (a[1] + a[2])))
-                + 0.75 * a[3]
-        ]"""
-
-_HW_SQL_L0 = (
-    "((((((ys[1] + ys[2]) + ys[3]) + ys[4]) + ys[5]) + ys[6]) + ys[7]) / 7.0"
-)
-
-
-@query(
-    "hw_forecast",
-    f"""
-    WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day, COUNT(*)::BIGINT AS cnt
-        FROM events GROUP BY 1
-    ),
-    ys AS (SELECT list(CAST(cnt AS DOUBLE) ORDER BY day) AS ys FROM daily),
-    init AS (
-        SELECT ys, list_prepend(
-            [{_HW_SQL_L0}, 0.0,
-             ys[1] - ({_HW_SQL_L0}), ys[2] - ({_HW_SQL_L0}),
-             ys[3] - ({_HW_SQL_L0}), ys[4] - ({_HW_SQL_L0}),
-             ys[5] - ({_HW_SQL_L0}), ys[6] - ({_HW_SQL_L0}),
-             ys[7] - ({_HW_SQL_L0})],
-            list_transform(ys[8:], y -> [y])) AS seq
-        FROM ys
-    ),
-    st AS (SELECT list_reduce(seq, {_HW_SQL_STEP}) AS s FROM init),
-    hs AS (SELECT unnest(range(1, 8))::BIGINT AS h)
-    SELECT h, ROUND((SELECT s[1] + h * s[2] + s[h + 2] FROM st), 6)
-               AS forecast
-    FROM hs ORDER BY h
-    """,
-)
-def hw_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """7-day-ahead Holt-Winters ADDITIVE forecast of the daily event
-    count (weekly seasonality) — completes the forecasting ladder:
-    trend_daily_events (global OLS) → ets_forecast (Holt level+trend) →
-    hw_forecast (level+trend+season), with forecast_backtest carrying
-    the naive baselines they must beat.  Classical init over the first
-    week (L0 = week mean, T0 = 0, s_i = y_i − L0), then the textbook
-    recursion with α=1/4, β=1/8, γ=1/4 — all exact binary fractions —
-    folded left-to-right over the day-ordered counts with a
-    [L, T, s-ring(7)] accumulator, bit-identical across engines (the
-    ets_forecast parity pattern with a 9-element state).
-
-    Scale shape: one groupBy(day) with map-side combine; the fold runs
-    over the DAY COUNT (30 rows), never the corpus."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(F.to_date("ts").alias("day")).agg(
-        F.count("*").cast("long").alias("cnt")
-    )
-    ys = daily.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "cnt"))),
-            lambda s: s["cnt"].cast("double"),
-        ).alias("ys")
-    )
-
-    def y(i: int):
-        return F.element_at("ys", i)
-
-    l0 = ((((((y(1) + y(2)) + y(3)) + y(4)) + y(5)) + y(6)) + y(7)) / 7.0
-    init = F.array(
-        l0, F.lit(0.0),
-        y(1) - l0, y(2) - l0, y(3) - l0, y(4) - l0,
-        y(5) - l0, y(6) - l0, y(7) - l0,
-    )
-    rest = F.transform(
-        F.slice(F.col("ys"), 8, F.size("ys")), lambda v: F.array(v)
-    )
-
-    def step(a, yv):
-        yy = F.element_at(yv, 1)
-        lnew = 0.25 * (yy - F.element_at(a, 3)) + 0.75 * (
-            F.element_at(a, 1) + F.element_at(a, 2)
-        )
-        tnew = 0.125 * (lnew - F.element_at(a, 1)) + 0.875 * F.element_at(a, 2)
-        snew = 0.25 * (yy - lnew) + 0.75 * F.element_at(a, 3)
-        return F.array(
-            lnew, tnew,
-            F.element_at(a, 4), F.element_at(a, 5), F.element_at(a, 6),
-            F.element_at(a, 7), F.element_at(a, 8), F.element_at(a, 9),
-            snew,
-        )
-
-    st = ys.select(F.aggregate(rest, init, step).alias("s"))
-    hs = spark.range(1, 8).select(F.col("id").alias("h"))
-    return (
-        hs.crossJoin(F.broadcast(st))
-        .select(
-            "h",
-            F.round(
-                F.element_at("s", 1)
-                + F.col("h") * F.element_at("s", 2)
-                + F.element_at("s", (F.col("h") + 2).cast("int")),
-                6,
-            ).alias("forecast"),
-        )
-        .orderBy("h")
-    )
-
-
-@query(
-    "dbscan_users",
-    """
-    WITH RECURSIVE pts AS (SELECT DISTINCT user_id FROM events),
-    p AS (
-        SELECT user_id AS id,
-               ('0x' || substr(md5('gx:' || user_id), 1, 8))::BIGINT % 10000 AS x,
-               ('0x' || substr(md5('gy:' || user_id), 1, 8))::BIGINT % 10000 AS y
-        FROM pts
-    ),
-    nn AS (SELECT COUNT(*)::BIGINT AS c FROM p),
-    pr AS (
-        SELECT a.id AS ia, b.id AS ib
-        FROM p a JOIN p b ON a.id < b.id, nn
-        WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-              <= 190000000 // nn.c
-    ),
-    sym AS (
-        SELECT ia AS s, ib AS d FROM pr
-        UNION ALL SELECT ib, ia FROM pr
-    ),
-    deg AS (SELECT s AS id, COUNT(*)::BIGINT AS n FROM sym GROUP BY 1),
-    cores AS (SELECT id FROM deg WHERE n >= 3),
-    csym AS (
-        SELECT s, d FROM sym
-        WHERE s IN (SELECT id FROM cores) AND d IN (SELECT id FROM cores)
-    ),
-    walk(node, lbl) AS (
-        SELECT id, id FROM cores
-        UNION
-        SELECT csym.d, walk.lbl FROM walk JOIN csym ON walk.node = csym.s
-    ),
-    clab AS (SELECT node AS id, MIN(lbl)::BIGINT AS cluster FROM walk GROUP BY 1),
-    border AS (
-        SELECT sym.s AS id, MIN(clab.cluster)::BIGINT AS cluster
-        FROM sym JOIN clab ON sym.d = clab.id
-        WHERE sym.s NOT IN (SELECT id FROM cores)
-        GROUP BY sym.s
-    )
-    SELECT p.id,
-           CASE WHEN c.id IS NOT NULL THEN 'core'
-                WHEN b.id IS NOT NULL THEN 'border'
-                ELSE 'noise' END AS role,
-           COALESCE(c.cluster, b.cluster) AS cluster
-    FROM p
-    LEFT JOIN clab c ON p.id = c.id
-    LEFT JOIN border b ON p.id = b.id
-    """,
-)
-def dbscan_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DBSCAN density clustering (operators/density.py) over the
-    deterministic user plane geo_neighbors uses — completes the
-    clustering triad (centroid: kmeans, connectivity: dedup_clusters/
-    community_lpa, density: this).  eps is DENSITY-ADAPTIVE so every
-    scale factor exercises real clusters: eps² = 190_000_000 // n_users
-    keeps the expected neighbor count ~6 as the plane fills (an exact
-    integer both engines derive from the same count — sqrt never enters
-    the parity surface; the blocking cell uses isqrt(eps²)+1, which
-    affects candidates only, never the pair set).  min_pts = 3 neighbors
-    (self excluded); clusters = min-label components over CORE-CORE
-    edges; borders attach to the MINIMUM adjacent core cluster
-    (deterministic, where textbook DBSCAN is scan-order-dependent);
-    noise keeps a NULL cluster.
-
-    Scale shape: one blocked proximity self-join + one degree groupBy on
-    the corpus; the CC iteration touches core-incident edges only
-    (diameter-bounded rounds, the dedup_clusters machinery); the n_users
-    scalar is a documented driver-bounded collect."""
-    from fusionspark.operators.dedup import md5_hash32
-    from fusionspark.operators.density import dbscan
-
-    users = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id")
-        .distinct()
-        .localCheckpoint(eager=True)  # one distinct scan feeds count + plan
-    )
-    uid = F.col("user_id").cast("string")
-    pts = users.select(
-        F.col("user_id").alias("id"),
-        (md5_hash32(F.concat(F.lit("gx:"), uid)) % 10000).alias("x"),
-        (md5_hash32(F.concat(F.lit("gy:"), uid)) % 10000).alias("y"),
-    )
-    n = users.count()  # one scalar; eps adapts to density (see docstring)
-    d2_max = 190_000_000 // n
-    return dbscan(pts, d2_max, min_pts=3)
-
-
-def _esd_oracle_sql(k: int = 5) -> str:
-    """Generated k-round generalized-ESD replay (unrolled MATERIALIZED
-    rounds — the mmr/kmeans oracle pattern).  Each round's argmax runs
-    on the exact BIGINT key |v·n − sum| (argmax of |z| needs no σ — σ is
-    constant within a round); z itself is one closed-form double per
-    pick, the identical expression both engines."""
-    parts = [
-        """vals AS MATERIALIZED (
-        SELECT event_id, FLOOR(value * 100.0 + 0.5)::BIGINT AS v FROM events
-    )"""
-    ]
-    excl = ""
-    picks = []
-    for i in range(1, k + 1):
-        parts.append(
-            f"""st{i} AS MATERIALIZED (
-        SELECT COUNT(*)::BIGINT AS n, SUM(v)::BIGINT AS s,
-               SUM(v * v)::BIGINT AS ss
-        FROM vals{excl}
-    )"""
-        )
-        parts.append(
-            f"""pick{i} AS MATERIALIZED (
-        SELECT {i} AS round, event_id, v,
-               abs(v - s::DOUBLE / n)
-               / sqrt((ss - s * (s::DOUBLE / n)) / (n - 1)) AS z
-        FROM vals, st{i}{excl}
-        ORDER BY abs(v * n - s) DESC, v ASC, event_id ASC LIMIT 1
-    )"""
-        )
-        picks.append(f"SELECT * FROM pick{i}")
-        prev = " UNION ALL ".join(
-            f"SELECT event_id FROM pick{j}" for j in range(1, i + 1)
-        )
-        excl = f" WHERE event_id NOT IN ({prev})"
-    un = " UNION ALL ".join(picks)
-    return (
-        "WITH "
-        + ",\n    ".join(parts)
-        + f"""
-    SELECT round::INT AS round, event_id, v AS cents, ROUND(z, 6) AS z
-    FROM ({un}) ORDER BY round"""
-    )
-
-
-@query("anomaly_esd", _esd_oracle_sql())
-def anomaly_esd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Generalized ESD outlier extraction (Rosner 1983) over event-value
-    cents — the ITERATIVE sibling of ts_anomalies' one-shot MAD screen:
-    each of 5 rounds removes the remaining set's most extreme value
-    before recomputing the moments, so a cluster of outliers cannot mask
-    itself (the failure mode single-pass z-scores have).  The per-round
-    argmax runs on the exact BIGINT key |v·n − sum| (σ is round-constant,
-    so the |z| argmax needs no float comparison); ties break value-asc
-    then event_id-asc; the reported z is one closed-form double.
-
-    Scale shape: per round one moments aggregate + one TakeOrdered(1)
-    over the corpus — 2k bounded jobs with one scalar row collected each
-    (the kmeans per-round contract); nothing corpus-sized shuffles."""
-    e = load_table(spark, sf_dir, "events")
-    vals = e.select(
-        "event_id",
-        F.floor(F.col("value") * 100.0 + 0.5).cast("long").alias("v"),
-    ).localCheckpoint(eager=True)
-    picked: list[int] = []
-    out_rows = []
-    for rnd in range(1, 6):
-        rem = vals.filter(~F.col("event_id").isin(picked)) if picked else vals
-        st = rem.agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("v").cast("long").alias("s"),
-            F.sum(F.col("v") * F.col("v")).cast("long").alias("ss"),
-        ).collect()[0]
-        n, s, ss = st.n, st.s, st.ss
-        pick = (
-            rem.select(
-                "event_id", "v",
-                (
-                    F.abs(F.col("v") - F.lit(s) / F.lit(n))
-                    / F.sqrt(
-                        (F.lit(ss) - F.lit(s) * (F.lit(s) / F.lit(n)))
-                        / F.lit(n - 1)
-                    )
-                ).alias("z"),
-                F.abs(F.col("v") * F.lit(n) - F.lit(s)).alias("key"),
-            )
-            .orderBy(F.col("key").desc(), F.col("v").asc(), F.col("event_id").asc())
-            .limit(1)
-            .collect()[0]
-        )
-        out_rows.append((rnd, pick.event_id, pick.v, float(pick.z)))
-        picked.append(pick.event_id)
-    out = spark.createDataFrame(
-        out_rows, "round int, event_id long, cents long, z double"
-    )
-    return out.select(
-        "round", "event_id", "cents", F.round("z", 6).alias("z")
-    ).orderBy("round")
-
-
-@query(
-    "diff_in_diff",
-    """
-    WITH bounds AS (
-        SELECT CAST(MIN(ts) AS DATE) AS d0, CAST(MAX(ts) AS DATE) AS d1
-        FROM events
-    ),
-    cells AS (
-        SELECT ('0x' || substr(md5('did:' || e.user_id), 1, 8))::BIGINT % 2
-                   = 0 AS is_treated,
-               (CAST(e.ts AS DATE) - b.d0) * 2 >= (b.d1 - b.d0) AS is_post,
-               SUM(FLOOR(e.value * 100.0 + 0.5)::BIGINT)::BIGINT AS cents,
-               COUNT(*)::BIGINT AS n
-        FROM events e
-        CROSS JOIN bounds b
-        GROUP BY 1, 2
-    ),
-    m AS (
-        SELECT is_treated, is_post, n,
-               cents::DOUBLE / n / 100 AS mean_value
-        FROM cells
-    )
-    SELECT ROUND(tp.mean_value - tr.mean_value
-                 - (cp.mean_value - cr.mean_value), 6) AS did,
-           ROUND(tp.mean_value, 6) AS treated_post,
-           ROUND(tr.mean_value, 6) AS treated_pre,
-           ROUND(cp.mean_value, 6) AS control_post,
-           ROUND(cr.mean_value, 6) AS control_pre,
-           (tp.n + tr.n)::BIGINT AS n_treated_events,
-           (cp.n + cr.n)::BIGINT AS n_control_events
-    FROM (SELECT * FROM m WHERE is_treated AND is_post) tp,
-         (SELECT * FROM m WHERE is_treated AND NOT is_post) tr,
-         (SELECT * FROM m WHERE NOT is_treated AND is_post) cp,
-         (SELECT * FROM m WHERE NOT is_treated AND NOT is_post) cr
-    """,
-)
-def diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Difference-in-differences — the causal-inference readout beside
-    ab_test_zscore (cross-sectional) and the robust-test family: split
-    the event window at its midpoint (pre/post), assign users to
-    treatment by a deterministic md5 coin (the train_split pattern —
-    every user here triggers every event type, so no behavioral split
-    exists; randomized assignment is also the clean DiD demo), and
-    estimate the treatment effect on event value as
-    (ȳ_T,post − ȳ_T,pre) − (ȳ_C,post − ȳ_C,pre) — the parallel-trends
-    estimator.  Group/period sums are exact BIGINT cents; the four cell
-    means and the DiD are closed-form doubles with the subtraction tree
-    written identically on both engines.
-
-    Scale shape: one corpus scan into a 4-cell groupBy (map-side
-    combine) with the treated set as a broadcast-able semi-join side;
-    the estimator arithmetic runs on 4 rows."""
-    from fusionspark.operators.dedup import md5_hash32
-
-    e = load_table(spark, sf_dir, "events")
-    bounds = e.agg(
-        F.min(F.to_date("ts")).alias("d0"), F.max(F.to_date("ts")).alias("d1")
-    )
-    coin = (
-        F.pmod(
-            md5_hash32(
-                F.concat(F.lit("did:"), F.col("user_id").cast("string"))
-            ),
-            F.lit(2),
-        )
-        == 0
-    )
-    cells = (
-        e.crossJoin(F.broadcast(bounds))
-        .select(
-            coin.alias("is_treated"),
-            (
-                F.datediff(F.to_date("ts"), F.col("d0")) * 2
-                >= F.datediff(F.col("d1"), F.col("d0"))
-            ).alias("is_post"),
-            F.floor(F.col("value") * 100.0 + 0.5).cast("long").alias("cents"),
-        )
-        .groupBy("is_treated", "is_post")
-        .agg(
-            F.sum("cents").cast("long").alias("cents"),
-            F.count("*").cast("long").alias("n"),
-        )
-        .select(
-            "is_treated", "is_post", "n",
-            (F.col("cents").cast("double") / F.col("n") / 100).alias("mean_value"),
-        )
-    )
-    rows = {(r.is_treated, r.is_post): r for r in cells.collect()}  # 4 rows
-    tp, tr = rows[(True, True)], rows[(True, False)]
-    cp, cr = rows[(False, True)], rows[(False, False)]
-    did = tp.mean_value - tr.mean_value - (cp.mean_value - cr.mean_value)
-    out = spark.createDataFrame(
-        [(
-            float(did), float(tp.mean_value), float(tr.mean_value),
-            float(cp.mean_value), float(cr.mean_value),
-            tp.n + tr.n, cp.n + cr.n,
-        )],
-        "did double, treated_post double, treated_pre double, "
-        "control_post double, control_pre double, "
-        "n_treated_events long, n_control_events long",
-    )
-    return out.select(
-        F.round("did", 6).alias("did"),
-        F.round("treated_post", 6).alias("treated_post"),
-        F.round("treated_pre", 6).alias("treated_pre"),
-        F.round("control_post", 6).alias("control_post"),
-        F.round("control_pre", 6).alias("control_pre"),
-        "n_treated_events", "n_control_events",
-    )
-
-
-@query(
-    "propensity_match",
-    """
-    WITH u AS (
-        SELECT user_id,
-               ('0x' || substr(md5('did:' || user_id), 1, 8))::BIGINT % 2 = 0
-                   AS is_treated,
-               SUM(FLOOR(value * 100.0 + 0.5)::BIGINT)::BIGINT AS score,
-               COUNT(*)::BIGINT AS y
-        FROM events GROUP BY user_id
-    ),
-    w AS (
-        SELECT *,
-               LAST_VALUE(CASE WHEN NOT is_treated THEN user_id END
-                          IGNORE NULLS) OVER ord AS prev_id,
-               LAST_VALUE(CASE WHEN NOT is_treated THEN score END
-                          IGNORE NULLS) OVER ord AS prev_score,
-               LAST_VALUE(CASE WHEN NOT is_treated THEN y END
-                          IGNORE NULLS) OVER ord AS prev_y,
-               FIRST_VALUE(CASE WHEN NOT is_treated THEN user_id END
-                           IGNORE NULLS) OVER fwd AS next_id,
-               FIRST_VALUE(CASE WHEN NOT is_treated THEN score END
-                           IGNORE NULLS) OVER fwd AS next_score,
-               FIRST_VALUE(CASE WHEN NOT is_treated THEN y END
-                           IGNORE NULLS) OVER fwd AS next_y
-        FROM u
-        WINDOW ord AS (ORDER BY score, user_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-               fwd AS (ORDER BY score, user_id
-                       ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-    ),
-    matched AS (
-        SELECT user_id, score, y,
-               CASE WHEN prev_id IS NULL THEN next_id
-                    WHEN next_id IS NULL THEN prev_id
-                    WHEN abs(score - prev_score) < abs(score - next_score)
-                         THEN prev_id
-                    WHEN abs(score - next_score) < abs(score - prev_score)
-                         THEN next_id
-                    WHEN prev_id < next_id THEN prev_id ELSE next_id
-               END AS m_id,
-               CASE WHEN prev_id IS NULL THEN next_y
-                    WHEN next_id IS NULL THEN prev_y
-                    WHEN abs(score - prev_score) < abs(score - next_score)
-                         THEN prev_y
-                    WHEN abs(score - next_score) < abs(score - prev_score)
-                         THEN next_y
-                    WHEN prev_id < next_id THEN prev_y ELSE next_y
-               END AS m_y,
-               CASE WHEN prev_id IS NULL THEN next_score
-                    WHEN next_id IS NULL THEN prev_score
-                    WHEN abs(score - prev_score) < abs(score - next_score)
-                         THEN prev_score
-                    WHEN abs(score - next_score) < abs(score - prev_score)
-                         THEN next_score
-                    WHEN prev_id < next_id THEN prev_score ELSE next_score
-               END AS m_score
-        FROM w WHERE is_treated
-    )
-    SELECT COUNT(*)::BIGINT AS n_treated,
-           COUNT(DISTINCT m_id)::BIGINT AS n_distinct_controls,
-           ROUND(SUM(y - m_y)::DOUBLE / COUNT(*), 6) AS att,
-           ROUND(SUM(abs(score - m_score))::DOUBLE / COUNT(*) / 100, 6)
-               AS mean_score_gap
-    FROM matched
-    """,
-)
-def propensity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-neighbor matching with replacement — diff_in_diff's
-    cross-sectional sibling (together the causal pair): per user a
-    deterministic md5-coin treatment flag, an exact-cents LTV matching
-    score, and an event-count outcome; each treated user matches the
-    control with the CLOSEST score (the two candidates are the as-of
-    carries in score order — last control ≤ and first control ≥ —
-    so matching needs no pairwise join), ties to the smaller |Δ| then
-    the lower control id; ATT = mean(y_treated − y_matched).
-
-    Parity: scores/outcomes are exact BIGINTs, candidate selection
-    compares integer |Δ|s, and the two output ratios are closed-form
-    doubles.
-
-    Scale shape: one corpus groupBy(user) collapses to the USER frame;
-    the two carries are windows over that bounded model-sized frame
-    (the theil_sen collapsed-frame contract — at 100 TB the user table
-    is the small side, and the window can partition by score bucket
-    with boundary overlap if it ever isn't)."""
-    from pyspark.sql import Window
-
-    from fusionspark.operators.dedup import md5_hash32
-
-    e = load_table(spark, sf_dir, "events")
-    u = e.groupBy("user_id").agg(
-        F.sum(F.floor(F.col("value") * 100.0 + 0.5).cast("long"))
-        .cast("long")
-        .alias("score"),
-        F.count("*").cast("long").alias("y"),
-    ).select(
-        "user_id",
-        (
-            F.pmod(
-                md5_hash32(
-                    F.concat(F.lit("did:"), F.col("user_id").cast("string"))
-                ),
-                F.lit(2),
-            )
-            == 0
-        ).alias("is_treated"),
-        "score",
-        "y",
-    )
-    ctl = lambda c: F.when(~F.col("is_treated"), F.col(c))
-    ord_w = Window.orderBy("score", "user_id").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    fwd_w = Window.orderBy("score", "user_id").rowsBetween(
-        0, Window.unboundedFollowing
-    )
-    w = u.select(
-        "*",
-        F.last(ctl("user_id"), ignorenulls=True).over(ord_w).alias("prev_id"),
-        F.last(ctl("score"), ignorenulls=True).over(ord_w).alias("prev_score"),
-        F.last(ctl("y"), ignorenulls=True).over(ord_w).alias("prev_y"),
-        F.first(ctl("user_id"), ignorenulls=True).over(fwd_w).alias("next_id"),
-        F.first(ctl("score"), ignorenulls=True).over(fwd_w).alias("next_score"),
-        F.first(ctl("y"), ignorenulls=True).over(fwd_w).alias("next_y"),
-    ).filter(F.col("is_treated"))
-
-    def pick(prev_c: str, next_c: str):
-        dp = F.abs(F.col("score") - F.col("prev_score"))
-        dn = F.abs(F.col("score") - F.col("next_score"))
-        return (
-            F.when(F.col("prev_id").isNull(), F.col(next_c))
-            .when(F.col("next_id").isNull(), F.col(prev_c))
-            .when(dp < dn, F.col(prev_c))
-            .when(dn < dp, F.col(next_c))
-            .when(F.col("prev_id") < F.col("next_id"), F.col(prev_c))
-            .otherwise(F.col(next_c))
-        )
-
-    m = w.select(
-        "user_id", "score", "y",
-        pick("prev_id", "next_id").alias("m_id"),
-        pick("prev_y", "next_y").alias("m_y"),
-        pick("prev_score", "next_score").alias("m_score"),
-    )
-    return m.agg(
-        F.count("*").cast("long").alias("n_treated"),
-        F.count_distinct("m_id").cast("long").alias("n_distinct_controls"),
-        F.round(
-            F.sum(F.col("y") - F.col("m_y")).cast("double") / F.count("*"), 6
-        ).alias("att"),
-        F.round(
-            F.sum(F.abs(F.col("score") - F.col("m_score"))).cast("double")
-            / F.count("*")
-            / 100,
-            6,
-        ).alias("mean_score_gap"),
-    )
-
-
-@query(
-    "pettitt_test",
-    """
-    WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day,
-               SUM(FLOOR(value * 100.0 + 0.5)::BIGINT)::BIGINT AS x
-        FROM events GROUP BY 1
-    ),
-    idx AS (
-        SELECT x, ROW_NUMBER() OVER (ORDER BY day)::BIGINT AS i,
-               COUNT(*) OVER ()::BIGINT AS n, day
-        FROM daily
-    ),
-    pairs AS (
-        SELECT a.i AS ia, b.i AS ib,
-               CASE WHEN a.x > b.x THEN 1
-                    WHEN a.x < b.x THEN -1 ELSE 0 END::BIGINT AS sg
-        FROM idx a JOIN idx b ON a.i < b.i
-    ),
-    u AS (
-        SELECT t.i AS t,
-               SUM(CASE WHEN p.ia <= t.i AND p.ib > t.i THEN p.sg
-                        ELSE 0 END)::BIGINT AS u_t
-        FROM (SELECT i FROM idx WHERE i < n) t
-        CROSS JOIN pairs p
-        GROUP BY t.i
-    ),
-    best AS (
-        SELECT t, u_t, abs(u_t) AS k
-        FROM u ORDER BY abs(u_t) DESC, t ASC LIMIT 1
-    )
-    SELECT (SELECT strftime(day, '%Y-%m-%d') FROM idx
-            WHERE i = (SELECT t FROM best)) AS change_day,
-           (SELECT u_t FROM best)::BIGINT AS u_stat,
-           (SELECT k FROM best)::BIGINT AS k_stat,
-           ROUND(2 * exp(-6.0 * (SELECT k FROM best)
-                         * (SELECT k FROM best)
-                         / ((SELECT MAX(n) FROM idx) * (SELECT MAX(n) FROM idx)
-                            * (SELECT MAX(n) FROM idx)
-                            + (SELECT MAX(n) FROM idx)
-                              * (SELECT MAX(n) FROM idx))), 6) AS p_approx
-    """,
-)
-def pettitt_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pettitt change-point test (Pettitt 1979) on the daily revenue
-    series — the NONPARAMETRIC sibling of changepoint_cusum (rank-based:
-    robust to outliers, no variance estimate): U_t = Σ_{i≤t<j}
-    sgn(x_i − x_j), change point = argmax |U_t| (ties → earliest day),
-    with the standard p ≈ 2·exp(−6K²/(n³+n²)) approximation as the only
-    float (one closed-form double; everything else exact BIGINT).
-
-    Scale shape: one corpus groupBy(day) collapses to the ≤|days| frame;
-    the sign grid and the t-sweep run on that bounded frame (n² pairs ×
-    n cuts with n = |days| ≈ 30 — the theil_sen collapsed-frame
-    contract), never on events."""
-    from pyspark.sql import Window
-
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(F.to_date("ts").alias("day")).agg(
-        F.sum(F.floor(F.col("value") * 100.0 + 0.5).cast("long"))
-        .cast("long")
-        .alias("x")
-    )
-    idx = daily.select(
-        "day",
-        "x",
-        F.row_number().over(Window.orderBy("day")).cast("long").alias("i"),
-        F.count("*").over(Window.partitionBy()).cast("long").alias("n"),
-    ).localCheckpoint(eager=True)
-    a = idx.select(F.col("i").alias("ia"), F.col("x").alias("xa"))
-    b = idx.select(F.col("i").alias("ib"), F.col("x").alias("xb"))
-    pairs = (
-        a.join(b, F.col("ia") < F.col("ib"))
-        .select(
-            "ia", "ib",
-            F.when(F.col("xa") > F.col("xb"), 1)
-            .when(F.col("xa") < F.col("xb"), -1)
-            .otherwise(0)
-            .cast("long")
-            .alias("sg"),
-        )
-    )
-    ts = idx.filter(F.col("i") < F.col("n")).select(F.col("i").alias("t"))
-    u = (
-        ts.crossJoin(pairs)
-        .groupBy("t")
-        .agg(
-            F.sum(
-                F.when(
-                    (F.col("ia") <= F.col("t")) & (F.col("ib") > F.col("t")),
-                    F.col("sg"),
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("u_t")
-        )
-    )
-    best = (
-        u.orderBy(F.abs(F.col("u_t")).desc(), F.col("t").asc()).limit(1)
-        .collect()[0]
-    )  # bounded: one row from the <=|days| frame
-    n = idx.collect()[0].n
-    day = idx.filter(F.col("i") == best.t).collect()[0].day
-    import math
-
-    k = abs(best.u_t)
-    p = 2 * math.exp(-6.0 * k * k / (n * n * n + n * n))
-    out = spark.createDataFrame(
-        [(day.strftime("%Y-%m-%d"), int(best.u_t), int(k), float(p))],
-        "change_day string, u_stat long, k_stat long, p_approx double",
-    )
-    return out.select(
-        "change_day", "u_stat", "k_stat",
-        F.round("p_approx", 6).alias("p_approx"),
-    )
-
-
-# ── round 10: rank / distribution statistics ───────────────────────────────
-# Same float-parity classes as the rest of the module: every statistic
-# reduces to exact integer (or decimal-38/HUGEINT) sums first; doubles
-# enter only in one closed-form display expression written identically
-# on both engines.
-
-
-@query(
-    "spearman_corr",
-    """
-    WITH q AS (
-        SELECT FLOOR(l_quantity * 100.0 + 0.5)::BIGINT AS x,
-               FLOOR(l_extendedprice * 100.0 + 0.5)::BIGINT AS y,
-               FLOOR(l_discount * 100.0 + 0.5)::BIGINT AS z
-        FROM lineitem
-    ),
-    rx AS (SELECT x, (2 * SUM(cnt) OVER (ORDER BY x) - cnt + 1)::BIGINT AS r
-           FROM (SELECT x, COUNT(*)::BIGINT AS cnt FROM q GROUP BY x)),
-    ry AS (SELECT y, (2 * SUM(cnt) OVER (ORDER BY y) - cnt + 1)::BIGINT AS r
-           FROM (SELECT y, COUNT(*)::BIGINT AS cnt FROM q GROUP BY y)),
-    rz AS (SELECT z, (2 * SUM(cnt) OVER (ORDER BY z) - cnt + 1)::BIGINT AS r
-           FROM (SELECT z, COUNT(*)::BIGINT AS cnt FROM q GROUP BY z)),
-    ranked AS (
-        SELECT rx.r AS ax, ry.r AS ay, rz.r AS az
-        FROM q JOIN rx USING (x) JOIN ry USING (y) JOIN rz USING (z)
-    ),
-    s AS (
-        SELECT COUNT(*)::HUGEINT AS n,
-               SUM(ax)::HUGEINT AS sx, SUM(ay)::HUGEINT AS sy,
-               SUM(az)::HUGEINT AS sz,
-               SUM((ax * ay)::HUGEINT) AS sxy, SUM((ax * az)::HUGEINT) AS sxz,
-               SUM((ay * az)::HUGEINT) AS syz,
-               SUM((ax * ax)::HUGEINT) AS sxx, SUM((ay * ay)::HUGEINT) AS syy,
-               SUM((az * az)::HUGEINT) AS szz
-        FROM ranked
-    )
-    SELECT ROUND((n * sxy - sx * sy)::DOUBLE
-                 / SQRT((n * sxx - sx * sx)::DOUBLE)
-                 / SQRT((n * syy - sy * sy)::DOUBLE), 6) AS rho_qty_price,
-           ROUND((n * sxz - sx * sz)::DOUBLE
-                 / SQRT((n * sxx - sx * sx)::DOUBLE)
-                 / SQRT((n * szz - sz * sz)::DOUBLE), 6) AS rho_qty_disc,
-           ROUND((n * syz - sy * sz)::DOUBLE
-                 / SQRT((n * syy - sy * sy)::DOUBLE)
-                 / SQRT((n * szz - sz * sz)::DOUBLE), 6) AS rho_price_disc
-    FROM s
-    """,
-)
-def spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spearman rank correlations between the lineitem measures — the
-    rank-based (outlier- and monotone-transform-robust) companion of
-    lineitem_corr's Pearson.  Ties get average ranks, kept EXACT by
-    working with 2·avg_rank = 2·(#smaller) + #equal + 1 (an integer —
-    Pearson is affine-invariant, so doubling every rank leaves rho
-    unchanged); moments are decimal(38)/HUGEINT sums and doubles appear
-    only in the lineitem_corr closed-form shape.
-
-    Scale shape: two tiny per-axis groupBys (bounded by distinct values)
-    + a window cumsum, joined back onto the rows — the rank join is the
-    inherent cost of a rank statistic; the moment pass is one map-side-
-    combined aggregate.  At extreme n the 2·rank products approach the
-    decimal-38 bound around n ≈ 1e11 rows — far past any per-partition
-    frame this runs on."""
-    li = load_table(spark, sf_dir, "lineitem")
-    from fusionspark.io import spread
-
-    # r15 note: io.spread tried and REVERTED (in-suite regression; the
-    # rank joins dominate, not the projection map)
-    q = li.select(
-        F.floor(F.col("l_quantity") * 100.0 + 0.5).cast("long").alias("x"),
-        F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast("long").alias("y"),
-        F.floor(F.col("l_discount") * 100.0 + 0.5).cast("long").alias("z"),
-    )
-
-    def rank2(col: str) -> DataFrame:
-        g = q.groupBy(col).agg(F.count("*").cast("long").alias("cnt"))
-        w = Window.orderBy(col)
-        return g.select(
-            col,
-            (2 * F.sum("cnt").over(w) - F.col("cnt") + 1)
-            .cast("long")
-            .alias(f"r_{col}"),
-        )
-
-    ranked = (
-        q.join(rank2("x"), "x").join(rank2("y"), "y").join(rank2("z"), "z")
-        .select(
-            F.col("r_x").alias("ax"), F.col("r_y").alias("ay"),
-            F.col("r_z").alias("az"),
-        )
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    s = ranked.agg(
-        F.count("*").cast("decimal(38,0)").alias("n"),
-        F.sum(dec(F.col("ax"))).cast("decimal(38,0)").alias("sx"),
-        F.sum(dec(F.col("ay"))).cast("decimal(38,0)").alias("sy"),
-        F.sum(dec(F.col("az"))).cast("decimal(38,0)").alias("sz"),
-        F.sum(dec(F.col("ax") * F.col("ay"))).cast("decimal(38,0)").alias("sxy"),
-        F.sum(dec(F.col("ax") * F.col("az"))).cast("decimal(38,0)").alias("sxz"),
-        F.sum(dec(F.col("ay") * F.col("az"))).cast("decimal(38,0)").alias("syz"),
-        F.sum(dec(F.col("ax") * F.col("ax"))).cast("decimal(38,0)").alias("sxx"),
-        F.sum(dec(F.col("ay") * F.col("ay"))).cast("decimal(38,0)").alias("syy"),
-        F.sum(dec(F.col("az") * F.col("az"))).cast("decimal(38,0)").alias("szz"),
-    )
-
-    def rho(sab, sa, sb, saa, sbb):
-        return F.round(
-            (F.col("n") * F.col(sab) - F.col(sa) * F.col(sb)).cast("double")
-            / F.sqrt((F.col("n") * F.col(saa) - F.col(sa) * F.col(sa)).cast("double"))
-            / F.sqrt((F.col("n") * F.col(sbb) - F.col(sb) * F.col(sb)).cast("double")),
-            6,
-        )
-
-    return s.select(
-        rho("sxy", "sx", "sy", "sxx", "syy").alias("rho_qty_price"),
-        rho("sxz", "sx", "sz", "sxx", "szz").alias("rho_qty_disc"),
-        rho("syz", "sy", "sz", "syy", "szz").alias("rho_price_disc"),
-    )
-
-
-_DAILY_CTE = """
-    daily AS (
-        SELECT CAST(ts AS DATE) AS day,
-               SUM(FLOOR(value * 100.0 + 0.5)::BIGINT)::BIGINT AS x,
-               COUNT(*)::BIGINT AS c
-        FROM events GROUP BY 1
-    )
-"""
-
-
-def _daily_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """day → (revenue cents, event count): the bounded ≤|days| frame the
-    time-series statistics run on (the theil_sen/pettitt contract — the
-    corpus collapses in ONE groupBy, tests never touch raw events)."""
-    e = load_table(spark, sf_dir, "events")
-    return e.groupBy(F.to_date("ts").alias("day")).agg(
-        F.sum(F.floor(F.col("value") * 100.0 + 0.5).cast("long"))
-        .cast("long")
-        .alias("x"),
-        F.count("*").cast("long").alias("c"),
-    )
-
-
-@query(
-    "kendall_tau_daily",
-    f"""
-    WITH {_DAILY_CTE},
-    p AS (
-        SELECT CASE WHEN (a.x - b.x) * (a.c - b.c) > 0 THEN 1 ELSE 0 END::BIGINT AS con,
-               CASE WHEN (a.x - b.x) * (a.c - b.c) < 0 THEN 1 ELSE 0 END::BIGINT AS dis,
-               CASE WHEN a.x = b.x THEN 1 ELSE 0 END::BIGINT AS tx,
-               CASE WHEN a.c = b.c THEN 1 ELSE 0 END::BIGINT AS tc
-        FROM daily a JOIN daily b ON a.day < b.day
-    ),
-    s AS (
-        SELECT SUM(con)::BIGINT AS nc, SUM(dis)::BIGINT AS nd,
-               SUM(tx)::BIGINT AS n1, SUM(tc)::BIGINT AS n2,
-               COUNT(*)::BIGINT AS n0
-        FROM p
-    )
-    SELECT n0, nc, nd, n1, n2,
-           ROUND((nc - nd)::DOUBLE
-                 / SQRT((n0 - n1)::DOUBLE) / SQRT((n0 - n2)::DOUBLE), 6) AS tau_b
-    FROM s
-    """,
-)
-def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kendall tau-b between daily revenue and daily event count — the
-    concordance-based trend-association test (is a busier day a
-    higher-revenue day?).  All pair counts (concordant, discordant,
-    per-axis ties) are exact integers over the bounded-frame pair grid
-    (|days|² ≈ 450 pairs); tau-b's tie-corrected denominator
-    √(n0−n1)·√(n0−n2) is the single closed-form double.
-
-    Scale: the corpus collapses in one groupBy(day); the O(|days|²)
-    self-join runs on the ≤|days| frame only (a full-corpus Kendall
-    needs a global merge-sort inversion count — out of scope by
-    design, documented here)."""
-    d = _daily_frame(spark, sf_dir).localCheckpoint(eager=True)
-    a = d.select(F.col("day").alias("da"), F.col("x").alias("xa"), F.col("c").alias("ca"))
-    b = d.select(F.col("day").alias("db"), F.col("x").alias("xb"), F.col("c").alias("cb"))
-    p = a.join(b, F.col("da") < F.col("db")).select(
-        F.when((F.col("xa") - F.col("xb")) * (F.col("ca") - F.col("cb")) > 0, 1)
-        .otherwise(0).cast("long").alias("con"),
-        F.when((F.col("xa") - F.col("xb")) * (F.col("ca") - F.col("cb")) < 0, 1)
-        .otherwise(0).cast("long").alias("dis"),
-        F.when(F.col("xa") == F.col("xb"), 1).otherwise(0).cast("long").alias("tx"),
-        F.when(F.col("ca") == F.col("cb"), 1).otherwise(0).cast("long").alias("tc"),
-    )
-    s = p.agg(
-        F.sum("con").cast("long").alias("nc"),
-        F.sum("dis").cast("long").alias("nd"),
-        F.sum("tx").cast("long").alias("n1"),
-        F.sum("tc").cast("long").alias("n2"),
-        F.count("*").cast("long").alias("n0"),
-    )
-    return s.select(
-        "n0", "nc", "nd", "n1", "n2",
-        F.round(
-            (F.col("nc") - F.col("nd")).cast("double")
-            / F.sqrt((F.col("n0") - F.col("n1")).cast("double"))
-            / F.sqrt((F.col("n0") - F.col("n2")).cast("double")),
-            6,
-        ).alias("tau_b"),
-    )
-
-
-@query(
-    "mann_kendall",
-    f"""
-    WITH {_DAILY_CTE},
-    s AS (
-        SELECT SUM(CASE WHEN b.x > a.x THEN 1
-                        WHEN b.x < a.x THEN -1 ELSE 0 END)::BIGINT AS s_stat
-        FROM daily a JOIN daily b ON a.day < b.day
-    ),
-    n AS (SELECT COUNT(*)::BIGINT AS n FROM daily),
-    ties AS (
-        SELECT COALESCE(SUM(t * (t - 1) * (2 * t + 5)), 0)::BIGINT AS tie_term
-        FROM (SELECT COUNT(*)::BIGINT AS t FROM daily GROUP BY x) g
-        WHERE t > 1
-    )
-    SELECT s_stat,
-           (n.n * (n.n - 1) * (2 * n.n + 5) - tie_term)::BIGINT AS var18,
-           CASE WHEN s_stat > 0 THEN 'increasing'
-                WHEN s_stat < 0 THEN 'decreasing' ELSE 'no trend' END AS trend,
-           ROUND(CASE WHEN s_stat > 0 THEN (s_stat - 1)::DOUBLE
-                      WHEN s_stat < 0 THEN (s_stat + 1)::DOUBLE
-                      ELSE 0.0 END
-                 / SQRT((n.n * (n.n - 1) * (2 * n.n + 5) - tie_term)::DOUBLE
-                        / 18.0), 6) AS z
-    FROM s, n, ties
-    """,
-)
-def mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Kendall trend test on the daily revenue series — the
-    rank-sign trend detector that needs no linear model (complements
-    theil_sen_trend's slope estimate and pettitt_test's change point):
-    S = Σ_{{i<j}} sgn(x_j − x_i) exact BIGINT over the bounded pair grid,
-    tie-corrected Var·18 kept as an exact integer, and the
-    continuity-corrected z the one closed-form double."""
-    d = _daily_frame(spark, sf_dir).localCheckpoint(eager=True)
-    a = d.select(F.col("day").alias("da"), F.col("x").alias("xa"))
-    b = d.select(F.col("day").alias("db"), F.col("x").alias("xb"))
-    s = (
-        a.join(b, F.col("da") < F.col("db"))
-        .agg(
-            F.sum(
-                F.when(F.col("xb") > F.col("xa"), 1)
-                .when(F.col("xb") < F.col("xa"), -1)
-                .otherwise(0)
-            )
-            .cast("long")
-            .alias("s_stat")
-        )
-    )
-    n = d.agg(F.count("*").cast("long").alias("n"))
-    ties = (
-        d.groupBy("x").agg(F.count("*").cast("long").alias("t"))
-        .filter(F.col("t") > 1)
-        .agg(
-            F.coalesce(
-                F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("tie_term")
-        )
-    )
-    out = s.crossJoin(n).crossJoin(ties)
-    var18 = (
-        F.col("n") * (F.col("n") - 1) * (2 * F.col("n") + 5) - F.col("tie_term")
-    ).cast("long")
-    num = (
-        F.when(F.col("s_stat") > 0, (F.col("s_stat") - 1).cast("double"))
-        .when(F.col("s_stat") < 0, (F.col("s_stat") + 1).cast("double"))
-        .otherwise(F.lit(0.0))
-    )
-    return out.select(
-        "s_stat",
-        var18.alias("var18"),
-        F.when(F.col("s_stat") > 0, "increasing")
-        .when(F.col("s_stat") < 0, "decreasing")
-        .otherwise("no trend")
-        .alias("trend"),
-        F.round(num / F.sqrt(var18.cast("double") / 18.0), 6).alias("z"),
-    )
-
-
-@query(
-    "runs_test",
-    f"""
-    WITH {_DAILY_CTE},
-    ordered AS (
-        SELECT day, x, ROW_NUMBER() OVER (ORDER BY x, day)::BIGINT AS i,
-               COUNT(*) OVER ()::BIGINT AS n
-        FROM daily
-    ),
-    med AS (
-        SELECT (SELECT x FROM ordered WHERE i = (n + 1) // 2 LIMIT 1)
-             + (SELECT x FROM ordered WHERE i = (n + 2) // 2 LIMIT 1) AS med2
-        FROM ordered LIMIT 1
-    ),
-    signs AS (
-        SELECT day, CASE WHEN 2 * x > med2 THEN 1 ELSE 0 END AS s
-        FROM daily, med
-        WHERE 2 * x <> med2
-    ),
-    runs AS (
-        SELECT SUM(CASE WHEN prev IS NULL OR s <> prev THEN 1 ELSE 0 END)::BIGINT AS r,
-               SUM(s)::BIGINT AS n1,
-               SUM(1 - s)::BIGINT AS n2
-        FROM (SELECT s, LAG(s) OVER (ORDER BY day) AS prev FROM signs)
-    )
-    SELECT r, n1, n2,
-           ROUND((r::DOUBLE - (2.0 * n1 * n2 / (n1 + n2) + 1.0))
-                 / SQRT(2.0 * n1 * n2 * (2.0 * n1 * n2 - n1 - n2)
-                        / ((n1 + n2)::DOUBLE * (n1 + n2) * (n1 + n2 - 1))),
-                 6) AS z
-    FROM runs
-    """,
-)
-def runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald-Wolfowitz runs test for randomness of the daily revenue
-    series around its median: days above/below the median form runs;
-    too few runs = trending/clustered, too many = oscillating.  The
-    median cut is EXACT (2·x vs the sum of the two middle order
-    statistics — no float median; exact-median days are excluded, the
-    standard treatment), the runs/above/below counts are integers from
-    a lag over the bounded frame, and the normal-approximation z is the
-    one closed-form double."""
-    from pyspark.sql import Window as W
-
-    d = _daily_frame(spark, sf_dir).localCheckpoint(eager=True)
-    o = d.select(
-        "day", "x",
-        F.row_number().over(W.orderBy("x", "day")).cast("long").alias("i"),
-        F.count("*").over(W.partitionBy()).cast("long").alias("n"),
-    )
-    m1 = o.filter(F.col("i") == F.floor((F.col("n") + 1) / 2)).select("x")
-    m2 = o.filter(F.col("i") == F.floor((F.col("n") + 2) / 2)).select("x")
-    med2 = m1.crossJoin(m2.withColumnRenamed("x", "x2")).select(
-        (F.col("x") + F.col("x2")).alias("med2")
-    )
-    signs = (
-        d.crossJoin(F.broadcast(med2))
-        .filter(2 * F.col("x") != F.col("med2"))
-        .select(
-            "day", F.when(2 * F.col("x") > F.col("med2"), 1).otherwise(0).alias("s")
-        )
-    )
-    lagged = signs.select(
-        "s", F.lag("s").over(W.orderBy("day")).alias("prev")
-    )
-    runs = lagged.agg(
-        F.sum(
-            F.when(F.col("prev").isNull() | (F.col("s") != F.col("prev")), 1)
-            .otherwise(0)
-        )
-        .cast("long")
-        .alias("r"),
-        F.sum("s").cast("long").alias("n1"),
-        F.sum(1 - F.col("s")).cast("long").alias("n2"),
-    )
-    n1, n2, r = F.col("n1"), F.col("n2"), F.col("r")
-    mu = 2.0 * n1 * n2 / (n1 + n2) + 1.0
-    var = (
-        2.0 * n1 * n2 * (2.0 * n1 * n2 - n1 - n2)
-        / ((n1 + n2).cast("double") * (n1 + n2) * (n1 + n2 - 1))
-    )
-    return runs.select(
-        "r", "n1", "n2",
-        F.round((r.cast("double") - mu) / F.sqrt(var), 6).alias("z"),
-    )
-
-
-@query(
-    "ks_two_sample",
-    """
-    WITH cnts AS (
-        SELECT n_chars AS v,
-               SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)::BIGINT AS ca,
-               SUM(CASE WHEN lang = 'zh' THEN 1 ELSE 0 END)::BIGINT AS cb
-        FROM documents WHERE lang IN ('en', 'zh') GROUP BY 1
-    ),
-    cum AS (
-        SELECT SUM(ca) OVER (ORDER BY v)::BIGINT AS fa,
-               SUM(cb) OVER (ORDER BY v)::BIGINT AS fb,
-               (SELECT SUM(ca)::BIGINT FROM cnts) AS n,
-               (SELECT SUM(cb)::BIGINT FROM cnts) AS m
-        FROM cnts
-    ),
-    d AS (
-        SELECT MAX(ABS(fa * m - fb * n))::BIGINT AS d_num,
-               MAX(n)::BIGINT AS n, MAX(m)::BIGINT AS m
-        FROM cum
-    )
-    SELECT n, m, d_num,
-           ROUND(d_num::DOUBLE / (n::DOUBLE * m), 6) AS d,
-           ROUND(2 * EXP(-2.0 * (d_num::DOUBLE / (n::DOUBLE * m))
-                              * (d_num::DOUBLE / (n::DOUBLE * m))
-                              * n * m / (n + m)), 6) AS p_approx
-    FROM d
-    """,
-)
-def ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample Kolmogorov-Smirnov test: does English doc length follow
-    the same distribution as Chinese doc length?  The distribution-free
-    screen a curation pipeline runs before pooling sources.  The KS
-    statistic is kept EXACT: D = max|F_a − F_b| is computed as the
-    integer max of |cum_a·m − cum_b·n| over the pooled value grid (no
-    float ECDFs), with D itself and the one-term asymptotic p-value
-    2·exp(−2D²nm/(n+m)) the only closed-form doubles.
-
-    Scale: one groupBy(value) collapse (bounded by distinct lengths), a
-    window cumsum over that bounded grid, one max — the corpus shuffles
-    once as (value, two counts)."""
-    from pyspark.sql import Window as W
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("lang").isin("en", "zh")
-    )
-    cnts = docs.groupBy(F.col("n_chars").alias("v")).agg(
-        F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
-        .cast("long")
-        .alias("ca"),
-        F.sum(F.when(F.col("lang") == "zh", 1).otherwise(0))
-        .cast("long")
-        .alias("cb"),
-    )
-    w = W.orderBy("v")
-    tot = W.partitionBy()
-    cum = cnts.select(
-        F.sum("ca").over(w).cast("long").alias("fa"),
-        F.sum("cb").over(w).cast("long").alias("fb"),
-        F.sum("ca").over(tot).cast("long").alias("n"),
-        F.sum("cb").over(tot).cast("long").alias("m"),
-    )
-    d = cum.agg(
-        F.max(F.abs(F.col("fa") * F.col("m") - F.col("fb") * F.col("n")))
-        .cast("long")
-        .alias("d_num"),
-        F.max("n").cast("long").alias("n"),
-        F.max("m").cast("long").alias("m"),
-    )
-    dd = F.col("d_num").cast("double") / (F.col("n").cast("double") * F.col("m"))
-    return d.select(
-        "n", "m", "d_num",
-        F.round(dd, 6).alias("d"),
-        F.round(
-            2
-            * F.exp(
-                -2.0 * dd * dd * F.col("n") * F.col("m") / (F.col("n") + F.col("m"))
-            ),
-            6,
-        ).alias("p_approx"),
-    )
-
-
-@query(
-    "cramers_v",
-    """
-    WITH cells AS (
-        SELECT lang AS g, source AS s, COUNT(*)::BIGINT AS o
-        FROM documents GROUP BY 1, 2
-    ),
-    rm AS (SELECT g, SUM(o)::BIGINT AS r FROM cells GROUP BY g),
-    cm AS (SELECT s, SUM(o)::BIGINT AS c FROM cells GROUP BY s),
-    nn AS (SELECT SUM(o)::BIGINT AS n FROM cells),
-    grid AS (
-        SELECT rm.g, cm.s, rm.r, cm.c, COALESCE(cells.o, 0)::BIGINT AS o
-        FROM rm CROSS JOIN cm
-        LEFT JOIN cells ON cells.g = rm.g AND cells.s = cm.s
-    ),
-    terms AS (
-        SELECT g, s,
-               ((o * nn.n - r * c)::DOUBLE * (o * nn.n - r * c)::DOUBLE)
-               / (nn.n * r * c)::DOUBLE AS term
-        FROM grid CROSS JOIN nn
-    ),
-    folded AS (
-        SELECT list_reduce(list_prepend(0.0, list(term ORDER BY g, s)),
-                           (a, x) -> a + x) AS chi2
-        FROM terms
-    ),
-    dims AS (
-        SELECT (SELECT COUNT(*) FROM rm)::BIGINT AS nr,
-               (SELECT COUNT(*) FROM cm)::BIGINT AS nc,
-               (SELECT n FROM nn)::BIGINT AS n
-    )
-    SELECT ROUND(folded.chi2, 6) AS chi2,
-           ((dims.nr - 1) * (dims.nc - 1))::BIGINT AS dof,
-           ROUND(SQRT(folded.chi2
-                      / (dims.n * LEAST(dims.nr - 1, dims.nc - 1))::DOUBLE),
-                 6) AS v
-    FROM folded CROSS JOIN dims
-    """,
-)
-def cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cramér's V between document language and source — the EFFECT-SIZE
-    readout the chi2_independence significance test doesn't give (is the
-    lang×source association big enough to stratify sampling by?).  Same
-    exact-integer contingency discipline: (O·N − R·C)²/(N·R·C) per cell
-    from BIGINT counts, a (lang, source)-ordered IEEE fold for the χ²
-    sum, and V = √(χ²/(N·min(r−1, c−1))) the closed-form double.
-
-    Plan: one groupBy(lang, source) corpus collapse; margins, grid, and
-    fold on the ≤|langs|·|sources| frame."""
-    d = load_table(spark, sf_dir, "documents")
-    cells = (
-        d.groupBy(F.col("lang").alias("g"), F.col("source").alias("s"))
-        .agg(F.count("*").cast("long").alias("o"))
-        .localCheckpoint(eager=True)
-    )
-    rm = cells.groupBy("g").agg(F.sum("o").cast("long").alias("r"))
-    cm = cells.groupBy("s").agg(F.sum("o").cast("long").alias("c"))
-    nn = cells.agg(F.sum("o").cast("long").alias("n"))
-    grid = (
-        rm.crossJoin(F.broadcast(cm))
-        .join(cells, ["g", "s"], "left")
-        .select(
-            "g", "s", "r", "c",
-            F.coalesce(F.col("o"), F.lit(0)).cast("long").alias("o"),
-        )
-    )
-    x = (F.col("o") * F.col("n") - F.col("r") * F.col("c")).cast("double")
-    terms = grid.crossJoin(F.broadcast(nn)).select(
-        "g", "s",
-        ((x * x) / (F.col("n") * F.col("r") * F.col("c")).cast("double")).alias("term"),
-    )
-    folded = terms.agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("g", "s", "term"))),
-            F.lit(0.0),
-            lambda acc, st: acc + st["term"],
-        ).alias("chi2")
-    )
-    dims = (
-        rm.agg(F.count("*").cast("long").alias("nr"))
-        .crossJoin(F.broadcast(cm.agg(F.count("*").cast("long").alias("nc"))))
-        .crossJoin(F.broadcast(nn))
-    )
-    return folded.crossJoin(F.broadcast(dims)).select(
-        F.round("chi2", 6).alias("chi2"),
-        ((F.col("nr") - 1) * (F.col("nc") - 1)).cast("long").alias("dof"),
-        F.round(
-            F.sqrt(
-                F.col("chi2")
-                / (
-                    F.col("n") * F.least(F.col("nr") - 1, F.col("nc") - 1)
-                ).cast("double")
-            ),
-            6,
-        ).alias("v"),
-    )
-
-
-@query(
-    "ewma_control",
-    """
-    WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day,
-               SUM(FLOOR(value * 100.0 + 0.5)::BIGINT)::BIGINT AS x
-        FROM events GROUP BY 1
-    ),
-    ys AS (
-        SELECT list(strftime(day, '%Y-%m-%d') ORDER BY day) AS days,
-               list(CAST(x AS DOUBLE) ORDER BY day) AS ys
-        FROM daily
-    ),
-    folded AS (
-        SELECT days, ys,
-               list_reduce(
-                   list_prepend([ys[1]], list_transform(ys[2:], y -> [y])),
-                   (a, y) -> list_append(a, a[-1] + 0.25 * (y[1] - a[-1]))
-               ) AS es
-        FROM ys
-    ),
-    mom AS (
-        SELECT COUNT(*)::BIGINT AS n, SUM(x)::HUGEINT AS s,
-               SUM((x * x)::HUGEINT) AS ss
-        FROM daily
-    ),
-    lim AS (
-        SELECT ROUND(3.0 * SQRT(((n * ss - s * s)::DOUBLE) / n / (n - 1))
-                         * SQRT(1.0 / 7.0), 6) AS limit3,
-               ROUND((s::DOUBLE) / n, 6) AS mu
-        FROM mom
-    )
-    SELECT t.day, t.x,
-           ROUND(t.e, 6) AS ewma,
-           (ROUND(ABS(t.e - (SELECT (s::DOUBLE) / n FROM mom)), 6)
-            > (SELECT limit3 FROM lim)) AS out_of_control,
-           (SELECT mu FROM lim) AS mu,
-           (SELECT limit3 FROM lim) AS limit3
-    FROM (
-        SELECT unnest(days) AS day,
-               unnest(list_transform(ys, v -> v::BIGINT)) AS x,
-               unnest(es) AS e
-        FROM folded
-    ) t
-    """,
-)
-def ewma_control(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EWMA control chart over daily revenue (λ=1/4, L=3) — the
-    small-shift drift detector that complements ts_anomalies' one-shot
-    MAD screen and changepoint_cusum's cumulative sum: the EWMA line
-    e_t = e_{t−1} + λ(x_t − e_{t−1}) reacts to sustained small shifts a
-    3σ point rule misses.  λ is an exact binary fraction and the fold is
-    day-ordered with the update written textually identically in both
-    engines (the ets/hw ordered-IEEE-fold discipline) so every e_t is
-    bit-identical; σ comes from exact HUGEINT moments, and the
-    out-of-control cut compares ROUNDED |e_t − μ| against the ROUNDED
-    asymptotic limit 3σ√(λ/(2−λ)) — never raw multi-op doubles (the
-    weighted_sample k-boundary lesson).
-
-    Scale: one groupBy(day) corpus collapse; fold and chart on the
-    bounded ≤|days| frame."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(F.to_date("ts").alias("day")).agg(
-        F.sum(F.floor(F.col("value") * 100.0 + 0.5).cast("long"))
-        .cast("long")
-        .alias("x")
-    ).localCheckpoint(eager=True)
-    ys = daily.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "x"))),
-            lambda s: F.date_format(s["day"], "yyyy-MM-dd"),
-        ).alias("days"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "x"))),
-            lambda s: s["x"].cast("double"),
-        ).alias("ys"),
-    )
-    init = F.array(F.element_at("ys", 1))
-    rest = F.transform(
-        F.slice(F.col("ys"), 2, F.size("ys")), lambda v: F.array(v)
-    )
-    es = F.aggregate(
-        rest,
-        init,
-        lambda a, y: F.concat(
-            a,
-            F.array(
-                F.element_at(a, -1)
-                + 0.25 * (F.element_at(y, 1) - F.element_at(a, -1))
-            ),
-        ),
-    )
-    folded = ys.select("days", "ys", es.alias("es"))
-    mom = daily.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum(F.col("x").cast("decimal(38,0)")).cast("decimal(38,0)").alias("s"),
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("ss"),
-    )
-    lim = mom.select(
-        F.round(
-            3.0
-            * F.sqrt(
-                (F.col("n") * F.col("ss") - F.col("s") * F.col("s")).cast("double")
-                / F.col("n")
-                / (F.col("n") - 1)
-            )
-            * F.sqrt(F.lit(1.0) / 7.0),
-            6,
-        ).alias("limit3"),
-        F.round(F.col("s").cast("double") / F.col("n"), 6).alias("mu"),
-        (F.col("s").cast("double") / F.col("n")).alias("mu_raw"),
-    )
-    rows = folded.select(
-        F.posexplode(F.arrays_zip("days", "ys", "es")).alias("pos", "z")
-    ).select(
-        F.col("z.days").alias("day"),
-        F.col("z.ys").cast("long").alias("x"),
-        F.col("z.es").alias("e"),
-    )
-    return rows.crossJoin(F.broadcast(lim)).select(
-        "day", "x",
-        F.round("e", 6).alias("ewma"),
-        (F.round(F.abs(F.col("e") - F.col("mu_raw")), 6) > F.col("limit3"))
-        .alias("out_of_control"),
-        "mu", "limit3",
-    )
-
-
-@query(
-    "shuffle_skew_report",
-    """
-    WITH kc AS (
-        SELECT l_partkey AS k, COUNT(*)::BIGINT AS cnt
-        FROM lineitem GROUP BY 1
-    ),
-    coc AS (
-        SELECT cnt, COUNT(*)::BIGINT AS freq FROM kc GROUP BY cnt
-    ),
-    walked AS (
-        SELECT cnt, SUM(freq) OVER (ORDER BY cnt)::BIGINT AS cum,
-               (SELECT SUM(freq)::BIGINT FROM coc) AS tot
-        FROM coc
-    ),
-    ginisrc AS (
-        SELECT SUM((2 * i - n - 1) * cnt)::BIGINT AS gnum,
-               MAX(n)::BIGINT AS k_cnt, SUM(cnt)::BIGINT AS n_rows
-        FROM (SELECT cnt,
-                     ROW_NUMBER() OVER (ORDER BY cnt, k)::BIGINT AS i,
-                     COUNT(*) OVER ()::BIGINT AS n
-              FROM kc)
-    ),
-    mom AS (
-        SELECT COUNT(*)::BIGINT AS k_cnt, SUM(cnt)::HUGEINT AS s,
-               SUM((cnt * cnt)::HUGEINT) AS ss, MAX(cnt)::BIGINT AS mx
-        FROM kc
-    )
-    SELECT mom.k_cnt AS n_keys, ginisrc.n_rows,
-           mom.mx AS max_cnt,
-           (SELECT MIN(cnt) FROM walked
-            WHERE cum >= (tot * 500 + 999) // 1000)::BIGINT AS p50_cnt,
-           (SELECT MIN(cnt) FROM walked
-            WHERE cum >= (tot * 990 + 999) // 1000)::BIGINT AS p99_cnt,
-           ROUND(mom.mx::DOUBLE / ginisrc.n_rows, 6) AS top1_share,
-           ROUND(ginisrc.gnum::DOUBLE / (ginisrc.k_cnt::DOUBLE * ginisrc.n_rows),
-                 6) AS gini,
-           ROUND(SQRT((mom.k_cnt * mom.ss - mom.s * mom.s)::DOUBLE
-                      / mom.k_cnt / (mom.k_cnt - 1))
-                 / ((mom.s::DOUBLE) / mom.k_cnt), 6) AS cv
-    FROM mom CROSS JOIN ginisrc
-    """,
-)
-def shuffle_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew diagnosis for l_partkey — the report you run BEFORE
-    shuffling 100 TB on a key: per-key row counts reduced to max / exact
-    p50 / exact p99 / top-1 share / Gini / coefficient of variation.  A
-    Gini near 0 and p99≈p50 say hash partitioning is safe; a fat top-1
-    share says salt THIS key (salted_join_demo is the companion fix).
-    Counts are exact BIGINTs, the percentiles use the histogram_quantiles
-    integer permille walk on the count-of-counts grid, Gini's numerator
-    Σ(2i−K−1)·cnt is an exact integer over the sorted counts (tie order
-    irrelevant — equal values contribute equally under any permutation),
-    and only the three display ratios are doubles.
-
-    Scale: one groupBy(key) with map-side combine; everything else runs
-    on the K-row counts frame (and the permille walk on the even smaller
-    count-of-counts grid)."""
-    from pyspark.sql import Window as W
-
-    li = load_table(spark, sf_dir, "lineitem")
-    kc = li.groupBy(F.col("l_partkey").alias("k")).agg(
-        F.count("*").cast("long").alias("cnt")
-    ).localCheckpoint(eager=True)
-    coc = kc.groupBy("cnt").agg(F.count("*").cast("long").alias("freq"))
-    walked = coc.select(
-        "cnt",
-        F.sum("freq").over(W.orderBy("cnt")).cast("long").alias("cum"),
-        F.sum("freq").over(W.partitionBy()).cast("long").alias("tot"),
-    )
-
-    def perc(perm: int):
-        rank = F.expr(f"(tot * {perm} + 999) div 1000")
-        return F.min(F.when(F.col("cum") >= rank, F.col("cnt"))).cast("long")
-
-    pcts = walked.agg(perc(500).alias("p50_cnt"), perc(990).alias("p99_cnt"))
-    ranked = kc.select(
-        "cnt",
-        F.row_number().over(W.orderBy("cnt", "k")).cast("long").alias("i"),
-        F.count("*").over(W.partitionBy()).cast("long").alias("n"),
-    )
-    gini = ranked.agg(
-        F.sum((2 * F.col("i") - F.col("n") - 1) * F.col("cnt"))
-        .cast("long")
-        .alias("gnum"),
-        F.max("n").cast("long").alias("k_cnt"),
-        F.sum("cnt").cast("long").alias("n_rows"),
-    )
-    mom = kc.agg(
-        F.count("*").cast("long").alias("k_cnt2"),
-        F.sum(F.col("cnt").cast("decimal(38,0)")).cast("decimal(38,0)").alias("s"),
-        F.sum((F.col("cnt") * F.col("cnt")).cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("ss"),
-        F.max("cnt").cast("long").alias("mx"),
-    )
-    return (
-        mom.crossJoin(F.broadcast(gini))
-        .crossJoin(F.broadcast(pcts))
-        .select(
-            F.col("k_cnt2").alias("n_keys"),
-            "n_rows",
-            F.col("mx").alias("max_cnt"),
-            "p50_cnt", "p99_cnt",
-            F.round(F.col("mx").cast("double") / F.col("n_rows"), 6)
-            .alias("top1_share"),
-            F.round(
-                F.col("gnum").cast("double")
-                / (F.col("k_cnt").cast("double") * F.col("n_rows")),
-                6,
-            ).alias("gini"),
-            F.round(
-                F.sqrt(
-                    (F.col("k_cnt2") * F.col("ss") - F.col("s") * F.col("s"))
-                    .cast("double")
-                    / F.col("k_cnt2")
-                    / (F.col("k_cnt2") - 1)
-                )
-                / (F.col("s").cast("double") / F.col("k_cnt2")),
-                6,
-            ).alias("cv"),
-        )
-    )
-
-
-@query(
-    "isotonic_calibration",
-    """
-    WITH deciles AS (
-        SELECT decile,
-               SUM(is_pos)::BIGINT AS pos, COUNT(*)::BIGINT AS cnt
-        FROM (
-            SELECT NTILE(10) OVER (ORDER BY n_chars, doc_id) AS decile,
-                   CASE WHEN source IN ('src0','src1','src2','src3','src4')
-                        THEN 1 ELSE 0 END AS is_pos
-            FROM documents
-        )
-        GROUP BY decile
-    ),
-    cums AS (
-        SELECT decile, pos, cnt,
-               SUM(pos) OVER (ORDER BY decile)::BIGINT AS cpos,
-               SUM(cnt) OVER (ORDER BY decile)::BIGINT AS ccnt
-        FROM deciles
-    ),
-    spans AS (
-        -- avg of the span j..k = (cpos_k - cpos_{j-1}) / (ccnt_k - ccnt_{j-1})
-        SELECT j.decile AS j, k.decile AS k,
-               (k.cpos - j.cpos + j.pos)::DOUBLE
-               / (k.ccnt - j.ccnt + j.cnt)::DOUBLE AS avg_jk
-        FROM cums j JOIN cums k ON j.decile <= k.decile
-    ),
-    inner_min AS (
-        SELECT j, i.decile AS i, MIN(avg_jk) AS m
-        FROM spans JOIN cums i ON spans.j <= i.decile AND i.decile <= spans.k
-        GROUP BY j, i.decile
-    ),
-    fit AS (SELECT i AS decile, MAX(m) AS iso FROM inner_min GROUP BY i)
-    SELECT d.decile::BIGINT AS decile, d.pos, d.cnt,
-           ROUND(d.pos::DOUBLE / d.cnt, 6) AS raw_rate,
-           ROUND(f.iso, 6) AS isotonic_rate
-    FROM deciles d JOIN fit f ON d.decile = f.decile
-    """,
-)
-def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Isotonic (monotone non-decreasing) calibration of the per-decile
-    curated-source rate over doc length — the regression step after
-    nb_calibration's diagnostic: fit the best monotone curve to the
-    bucket rates (weighted least squares ⇒ pool-adjacent-violators).
-    Instead of replaying the sequential PAV fold, BOTH engines use the
-    exact minimax characterization of the isotonic fit,
-
-        iso_i = max_{j≤i} min_{k≥i} avg(y_j..y_k)
-
-    (Robertson-Wright-Dykstra eq. 1.9) — pure joins over the bounded
-    decile frame: O(B²) span averages, O(B²) min/max, B = 10.  Span
-    averages divide the SAME exact integers in both engines, so every
-    candidate double is bit-identical and the max/min selection cannot
-    diverge.
-
-    Scale: a global NTILE is a single-partition window, so the Spark
-    side derives the SAME bucket ids scalably — global_rank =
-    cum_lower(value) [broadcast grid] + row_number within the value
-    [window partitioned by value, parallel], then Spark's exact ntile
-    law bucket(rank) with larger-buckets-first; the oracle keeps
-    DuckDB's native NTILE, which doubles as a cross-check that the
-    closed-form law IS ntile.  The fit runs on the B-row frame."""
-    from pyspark.sql import Window as W
-
-    d = load_table(spark, sf_dir, "documents")
-    pos = F.col("source").isin("src0", "src1", "src2", "src3", "src4")
-    grid = (
-        d.groupBy("n_chars")
-        .agg(F.count("*").cast("long").alias("vcnt"))
-        .select(
-            "n_chars",
-            (F.sum("vcnt").over(W.orderBy("n_chars")) - F.col("vcnt"))
-            .cast("long")
-            .alias("cum_lower"),
-            F.sum("vcnt").over(W.partitionBy()).cast("long").alias("n"),
-        )
-    )
-    ranked = (
-        d.select("doc_id", "n_chars", pos.cast("int").alias("is_pos"))
-        .withColumn(
-            "rn",
-            F.row_number().over(W.partitionBy("n_chars").orderBy("doc_id")),
-        )
-        .join(F.broadcast(grid), "n_chars")
-        .select(
-            "is_pos",
-            (F.col("cum_lower") + F.col("rn")).cast("long").alias("grank"),
-            "n",
-        )
-    )
-    # Spark/DuckDB ntile law, B=10: q=n div B, r=n mod B; the first r
-    # buckets hold q+1 rows, the rest q
-    q = F.expr("n div 10")
-    r = F.col("n") % 10
-    decile = F.when(
-        F.col("grank") <= r * (q + 1),
-        F.expr("(grank + (n div 10)) div ((n div 10) + 1)"),
-    ).otherwise(
-        r + F.expr("(grank - (n % 10) * ((n div 10) + 1) + (n div 10) - 1) div (n div 10)")
-    )
-    deciles = (
-        ranked.select(decile.cast("int").alias("decile"), "is_pos")
-        .groupBy("decile")
-        .agg(
-            F.sum("is_pos").cast("long").alias("pos"),
-            F.count("*").cast("long").alias("cnt"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    cums = deciles.select(
-        "decile", "pos", "cnt",
-        F.sum("pos").over(W.orderBy("decile")).cast("long").alias("cpos"),
-        F.sum("cnt").over(W.orderBy("decile")).cast("long").alias("ccnt"),
-    )
-    j = cums.select(
-        F.col("decile").alias("j"), F.col("pos").alias("jpos"),
-        F.col("cnt").alias("jcnt"), F.col("cpos").alias("jcpos"),
-        F.col("ccnt").alias("jccnt"),
-    )
-    k = cums.select(
-        F.col("decile").alias("k"), F.col("cpos").alias("kcpos"),
-        F.col("ccnt").alias("kccnt"),
-    )
-    spans = j.join(k, F.col("j") <= F.col("k")).select(
-        "j", "k",
-        (
-            (F.col("kcpos") - F.col("jcpos") + F.col("jpos")).cast("double")
-            / (F.col("kccnt") - F.col("jccnt") + F.col("jcnt")).cast("double")
-        ).alias("avg_jk"),
-    )
-    i = cums.select(F.col("decile").alias("i"))
-    inner = (
-        spans.join(i, (F.col("j") <= F.col("i")) & (F.col("i") <= F.col("k")))
-        .groupBy("j", "i")
-        .agg(F.min("avg_jk").alias("m"))
-    )
-    fit = inner.groupBy("i").agg(F.max("m").alias("iso"))
-    return deciles.join(fit, deciles["decile"] == fit["i"]).select(
-        F.col("decile").cast("long").alias("decile"),
-        "pos", "cnt",
-        F.round(F.col("pos").cast("double") / F.col("cnt"), 6).alias("raw_rate"),
-        F.round("iso", 6).alias("isotonic_rate"),
-    )
-
-
-@query(
-    "matrix_profile_daily",
-    f"""
-    WITH {_DAILY_CTE},
-    idx AS (
-        SELECT x, ROW_NUMBER() OVER (ORDER BY day)::BIGINT AS i,
-               COUNT(*) OVER ()::BIGINT AS n
-        FROM daily
-    ),
-    win AS (
-        SELECT w.i AS w, SUM(v.x)::BIGINT AS s1,
-               SUM((v.x * v.x)::HUGEINT) AS s2
-        FROM (SELECT i FROM idx WHERE i <= (SELECT MAX(n) FROM idx) - 4) w
-        JOIN idx v ON v.i BETWEEN w.i AND w.i + 4
-        GROUP BY w.i
-    ),
-    cross_sum AS (
-        SELECT a.i AS wa, b.i AS wb, SUM((va.x * vb.x)::HUGEINT) AS sxy
-        FROM (SELECT i FROM idx WHERE i <= (SELECT MAX(n) FROM idx) - 4) a
-        JOIN (SELECT i FROM idx WHERE i <= (SELECT MAX(n) FROM idx) - 4) b
-          ON abs(a.i - b.i) >= 3
-        JOIN idx va ON va.i BETWEEN a.i AND a.i + 4
-        JOIN idx vb ON vb.i = b.i + (va.i - a.i)
-        GROUP BY a.i, b.i
-    ),
-    dists AS (
-        SELECT cs.wa, cs.wb,
-               ROUND(sqrt(greatest(2.0 * 5 * (1.0 -
-                   (5 * cs.sxy - wa.s1 * wb.s1)::DOUBLE
-                   / sqrt((5 * wa.s2 - wa.s1 * wa.s1)::DOUBLE)
-                   / sqrt((5 * wb.s2 - wb.s1 * wb.s1)::DOUBLE)), 0.0)), 6)
-                   AS d
-        FROM cross_sum cs
-        JOIN win wa ON wa.w = cs.wa
-        JOIN win wb ON wb.w = cs.wb
-    )
-    SELECT wa::BIGINT AS pos, d AS mp, wb::BIGINT AS motif_pos
-    FROM (
-        SELECT wa, wb, d,
-               ROW_NUMBER() OVER (PARTITION BY wa ORDER BY d ASC, wb ASC) AS rn
-        FROM dists
-    ) WHERE rn = 1
-    """,
-)
-def matrix_profile_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matrix profile (Yeh et al. 2016) of the daily revenue series,
-    window m=5: for every subsequence, the z-normalized distance to its
-    nearest non-trivial neighbor (exclusion zone |i−j| ≥ 3) — low values
-    are MOTIFS (repeated weekly patterns), high values are DISCORDS
-    (novel weeks), the modern time-series mining primitive beside the
-    classical tests.  Every window/cross sum is an exact BIGINT/HUGEINT
-    moment; the correlation-form distance √(2m(1−ρ)) divides the same
-    integers in both engines, and the nearest-neighbor argmin orders by
-    the ROUNDED distance with the position tiebreak (the
-    weighted_sample cut discipline).  greatest(·, 0) guards the ρ→1
-    negative-zero edge.
-
-    Scale: the corpus collapses in one groupBy(day); the O(w²·m) pair
-    grid runs on the bounded ≤|days| frame (the pettitt contract)."""
-    from pyspark.sql import Window as W
-
-    daily = _daily_frame(spark, sf_dir).select("day", "x")
-    idx = daily.select(
-        "x",
-        F.row_number().over(W.orderBy("day")).cast("long").alias("i"),
-        F.count("*").over(W.partitionBy()).cast("long").alias("n"),
-    ).localCheckpoint(eager=True)
-    starts = idx.filter(F.col("i") <= F.col("n") - 4).select(
-        F.col("i").alias("w")
-    )
-    vals = idx.select(F.col("i").alias("vi"), F.col("x").alias("vx"))
-    win = (
-        starts.join(
-            vals,
-            (F.col("vi") >= F.col("w")) & (F.col("vi") <= F.col("w") + 4),
-        )
-        .groupBy("w")
-        .agg(
-            F.sum("vx").cast("long").alias("s1"),
-            F.sum((F.col("vx") * F.col("vx")).cast("decimal(38,0)"))
-            .cast("decimal(38,0)")
-            .alias("s2"),
-        )
-    )
-    a = starts.select(F.col("w").alias("wa"))
-    b = starts.select(F.col("w").alias("wb"))
-    va = vals.select(F.col("vi").alias("ai"), F.col("vx").alias("ax"))
-    vb = vals.select(F.col("vi").alias("bi"), F.col("vx").alias("bx"))
-    cross = (
-        a.join(b, F.abs(F.col("wa") - F.col("wb")) >= 3)
-        .join(va, (F.col("ai") >= F.col("wa")) & (F.col("ai") <= F.col("wa") + 4))
-        .join(vb, F.col("bi") == F.col("wb") + (F.col("ai") - F.col("wa")))
-        .groupBy("wa", "wb")
-        .agg(
-            F.sum((F.col("ax") * F.col("bx")).cast("decimal(38,0)"))
-            .cast("decimal(38,0)")
-            .alias("sxy")
-        )
-    )
-    wa = win.select(
-        F.col("w").alias("wa"), F.col("s1").alias("s1a"), F.col("s2").alias("s2a")
-    )
-    wb = win.select(
-        F.col("w").alias("wb"), F.col("s1").alias("s1b"), F.col("s2").alias("s2b")
-    )
-    rho = (
-        (5 * F.col("sxy") - F.col("s1a") * F.col("s1b")).cast("double")
-        / F.sqrt((5 * F.col("s2a") - F.col("s1a") * F.col("s1a")).cast("double"))
-        / F.sqrt((5 * F.col("s2b") - F.col("s1b") * F.col("s1b")).cast("double"))
-    )
-    dists = (
-        cross.join(wa, "wa")
-        .join(wb, "wb")
-        .select(
-            "wa", "wb",
-            F.round(
-                F.sqrt(F.greatest(2.0 * 5 * (1.0 - rho), F.lit(0.0))), 6
-            ).alias("d"),
-        )
-    )
-    wmin = W.partitionBy("wa").orderBy(F.col("d").asc(), F.col("wb").asc())
-    return (
-        dists.withColumn("rn", F.row_number().over(wmin))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("wa").cast("long").alias("pos"),
-            F.col("d").alias("mp"),
-            F.col("wb").cast("long").alias("motif_pos"),
-        )
-    )
-
-
-@query(
-    "ar2_fit",
-    f"""
-    WITH {_DAILY_CTE},
-    idx AS (
-        SELECT x, ROW_NUMBER() OVER (ORDER BY day)::BIGINT AS i,
-               COUNT(*) OVER ()::BIGINT AS n,
-               SUM(x) OVER ()::BIGINT AS s
-        FROM daily
-    ),
-    -- n²-scaled autocovariances: ĉ_k ∝ Σ (n·x_t − S)(n·x_{{t+k}} − S),
-    -- exact HUGEINT (the n² factor cancels in every ratio below)
-    c AS (
-        SELECT
-            (SELECT SUM(((a.n * a.x - a.s) * (a.n * a.x - a.s))::HUGEINT)
-             FROM idx a) AS c0,
-            (SELECT SUM(((a.n * a.x - a.s) * (b.n * b.x - b.s))::HUGEINT)
-             FROM idx a JOIN idx b ON b.i = a.i + 1) AS c1,
-            (SELECT SUM(((a.n * a.x - a.s) * (b.n * b.x - b.s))::HUGEINT)
-             FROM idx a JOIN idx b ON b.i = a.i + 2) AS c2
-    )
-    SELECT ROUND(c1::DOUBLE / c0::DOUBLE, 6) AS r1,
-           ROUND(c2::DOUBLE / c0::DOUBLE, 6) AS r2,
-           ROUND((c1::DOUBLE / c0::DOUBLE)
-                 * (1.0 - c2::DOUBLE / c0::DOUBLE)
-                 / (1.0 - (c1::DOUBLE / c0::DOUBLE) * (c1::DOUBLE / c0::DOUBLE)),
-                 6) AS phi1,
-           ROUND((c2::DOUBLE / c0::DOUBLE
-                  - (c1::DOUBLE / c0::DOUBLE) * (c1::DOUBLE / c0::DOUBLE))
-                 / (1.0 - (c1::DOUBLE / c0::DOUBLE) * (c1::DOUBLE / c0::DOUBLE)),
-                 6) AS phi2
-    FROM c
-    """,
-)
-def ar2_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Yule-Walker AR(2) fit of the daily revenue series — the
-    autoregressive companion of the forecasting ladder (trend OLS → ETS
-    → Holt-Winters) and the lag-2 PACF in closed form (φ₂ IS the
-    partial autocorrelation at lag 2):
-
-        φ₁ = r₁(1−r₂)/(1−r₁²)      φ₂ = (r₂−r₁²)/(1−r₁²)
-
-    The autocovariances are EXACT integer sums of (n·x_t − S)(n·x_{t+k}
-    − S) — the n²-scaling clears the fractional mean and cancels in
-    every ratio — so r₁, r₂ and both coefficients are closed forms over
-    identical integers in both engines.
-
-    Scale: one groupBy(day); the lag joins run on the bounded frame."""
-    from pyspark.sql import Window as W
-
-    daily = _daily_frame(spark, sf_dir).select("day", "x")
-    idx = daily.select(
-        "x",
-        F.row_number().over(W.orderBy("day")).cast("long").alias("i"),
-        F.count("*").over(W.partitionBy()).cast("long").alias("n"),
-        F.sum("x").over(W.partitionBy()).cast("long").alias("s"),
-    ).localCheckpoint(eager=True)
-    dev = idx.select(
-        "i", ((F.col("n") * F.col("x") - F.col("s")).cast("decimal(38,0)")).alias("d")
-    )
-
-    def ck(k: int):
-        a = dev.select(F.col("i").alias("ia"), F.col("d").alias("da"))
-        b = dev.select(F.col("i").alias("ib"), F.col("d").alias("db"))
-        return (
-            a.join(b, F.col("ib") == F.col("ia") + k)
-            .agg(
-                F.sum((F.col("da") * F.col("db")).cast("decimal(38,0)"))
-                .cast("decimal(38,0)")
-                .alias(f"c{k}")
-            )
-        )
-
-    c = ck(0).crossJoin(ck(1)).crossJoin(ck(2))
-    r1 = F.col("c1").cast("double") / F.col("c0").cast("double")
-    r2 = F.col("c2").cast("double") / F.col("c0").cast("double")
-    return c.select(
-        F.round(r1, 6).alias("r1"),
-        F.round(r2, 6).alias("r2"),
-        F.round(r1 * (1.0 - r2) / (1.0 - r1 * r1), 6).alias("phi1"),
-        F.round((r2 - r1 * r1) / (1.0 - r1 * r1), 6).alias("phi2"),
-    )
-
-
-def _shesd_oracle_sql(k: int = 3) -> str:
-    """Seasonal-hybrid ESD replay: per-weekday 2×median removal (exact
-    order statistics), then k unrolled MATERIALIZED ESD rounds on the
-    residuals — the _esd_oracle_sql pattern over the daily frame.
-    Spark weekday convention (dayofweek 1=Sunday) = DuckDB dayofweek+1."""
-    parts = [
-        """daily AS MATERIALIZED (
-        SELECT CAST(ts AS DATE) AS day,
-               dayofweek(CAST(ts AS DATE)) + 1 AS wd,
-               SUM(FLOOR(value * 100.0 + 0.5)::BIGINT)::BIGINT AS x
-        FROM events GROUP BY 1, 2
-    )""",
-        """wmed AS MATERIALIZED (
-        SELECT wd,
-               (SELECT x FROM (SELECT x, ROW_NUMBER() OVER (ORDER BY x) AS r,
-                                      COUNT(*) OVER () AS m
-                               FROM daily i WHERE i.wd = o.wd)
-                WHERE r = (m + 1) // 2)
-             + (SELECT x FROM (SELECT x, ROW_NUMBER() OVER (ORDER BY x) AS r,
-                                      COUNT(*) OVER () AS m
-                               FROM daily i WHERE i.wd = o.wd)
-                WHERE r = (m + 2) // 2) AS med2
-        FROM (SELECT DISTINCT wd FROM daily) o
-    )""",
-        """vals AS MATERIALIZED (
-        SELECT strftime(d.day, '%Y-%m-%d') AS day,
-               (2 * d.x - w.med2)::BIGINT AS v
-        FROM daily d JOIN wmed w ON w.wd = d.wd
-    )""",
-    ]
-    excl = ""
-    picks = []
-    for i in range(1, k + 1):
-        parts.append(
-            f"""st{i} AS MATERIALIZED (
-        SELECT COUNT(*)::BIGINT AS n, SUM(v)::BIGINT AS s,
-               SUM(v * v)::HUGEINT AS ss
-        FROM vals{excl}
-    )"""
-        )
-        parts.append(
-            f"""pick{i} AS MATERIALIZED (
-        SELECT {i} AS round, day, v,
-               abs(v - s::DOUBLE / n)
-               / sqrt((ss - s * (s::DOUBLE / n)) / (n - 1)) AS z
-        FROM vals, st{i}{excl}
-        ORDER BY abs(v * n - s) DESC, v ASC, day ASC LIMIT 1
-    )"""
-        )
-        picks.append(f"SELECT * FROM pick{i}")
-        prev = " UNION ALL ".join(
-            f"SELECT day FROM pick{j}" for j in range(1, i + 1)
-        )
-        excl = f" WHERE day NOT IN ({prev})"
-    un = " UNION ALL ".join(picks)
-    return (
-        "WITH "
-        + ",\n    ".join(parts)
-        + f"""
-    SELECT round::INT AS round, day, v AS resid2, ROUND(z, 6) AS z
-    FROM ({un}) ORDER BY round"""
-    )
-
-
-@query("anomaly_shesd", _shesd_oracle_sql())
-def anomaly_shesd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonal-hybrid ESD (the Twitter AnomalyDetection recipe:
-    Hochenbaum et al. 2017) on daily revenue — remove the WEEKDAY
-    seasonal median, then run generalized ESD on the residuals, so a
-    legitimately-busy Monday is not flagged while a quiet Monday IS.
-    The seasonal removal is exact: resid2 = 2·x − med2(weekday), with
-    med2 the sum of the weekday's two middle order statistics (no float
-    median; the x − seasonal − median(series) form telescopes to
-    x − med_weekday, so resid2 stays integer).  Each ESD round argmaxes
-    the exact BIGINT key |v·n − Σ| (σ is round-constant) with
-    value/day tiebreaks; z is the one closed-form double.
-
-    Scale: one groupBy(day, weekday); medians and the 3 ESD rounds run
-    on the bounded ≤|days| frame (the pettitt contract)."""
-    from pyspark.sql import Window as W
-
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        F.to_date("ts").alias("day"),
-        F.dayofweek(F.to_date("ts")).alias("wd"),
-    ).agg(
-        F.sum(F.floor(F.col("value") * 100.0 + 0.5).cast("long"))
-        .cast("long")
-        .alias("x")
-    )
-    ww = W.partitionBy("wd").orderBy("x")
-    ranked = daily.select(
-        "day", "wd", "x",
-        F.row_number().over(ww).cast("long").alias("r"),
-        F.count("*").over(W.partitionBy("wd")).cast("long").alias("m"),
-    )
-    m1 = ranked.filter(F.col("r") == F.floor((F.col("m") + 1) / 2)).select(
-        "wd", F.col("x").alias("xa")
-    )
-    m2 = ranked.filter(F.col("r") == F.floor((F.col("m") + 2) / 2)).select(
-        "wd", F.col("x").alias("xb")
-    )
-    wmed = m1.join(m2, "wd").select(
-        "wd", (F.col("xa") + F.col("xb")).cast("long").alias("med2")
-    )
-    vals = (
-        daily.join(F.broadcast(wmed), "wd")
-        .select(
-            F.date_format("day", "yyyy-MM-dd").alias("day"),
-            (2 * F.col("x") - F.col("med2")).cast("long").alias("v"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    picked: list[str] = []
-    out_rows = []
-    for rnd in range(1, 4):
-        rem = vals.filter(~F.col("day").isin(picked)) if picked else vals
-        st = rem.agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("v").cast("long").alias("s"),
-            F.sum((F.col("v") * F.col("v")).cast("decimal(38,0)"))
-            .cast("decimal(38,0)")
-            .alias("ss"),
-        ).collect()[0]
-        n, s, ss = st.n, int(st.s), int(st.ss)
-        pick = (
-            rem.select(
-                "day", "v",
-                (
-                    F.abs(F.col("v") - F.lit(s) / F.lit(n))
-                    / F.sqrt(
-                        (F.lit(ss) - F.lit(s) * (F.lit(s) / F.lit(n)))
-                        / F.lit(n - 1)
-                    )
-                ).alias("z"),
-                F.abs(F.col("v") * F.lit(n) - F.lit(s)).alias("key"),
-            )
-            .orderBy(F.col("key").desc(), F.col("v").asc(), F.col("day").asc())
-            .limit(1)
-            .collect()[0]
-        )
-        out_rows.append((rnd, pick.day, pick.v, float(pick.z)))
-        picked.append(pick.day)
-    out = spark.createDataFrame(
-        out_rows, "round int, day string, resid2 long, z double"
-    )
-    return out.select(
-        "round", "day", "resid2", F.round("z", 6).alias("z")
-    ).orderBy("round")
-
-
 # Logistic approximation of the normal CDF (Bowling et al. 2009):
 # Phi(z) ~= 1/(1+exp(-(0.07056 z^3 + 1.5976 z))), |error| < 1.4e-4 —
 # literal constants, so the two-sided p = 2/(1+exp(0.07056|t|^3+1.5976|t|))
 # is the same IEEE expression in both engines.
 _PHI2_SQL = "2.0 / (1.0 + exp(0.07056 * {t} * {t} * {t} + 1.5976 * {t}))"
-
-
-@query(
-    "welch_bh",
-    f"""
-    WITH g AS (
-        SELECT source, COUNT(*)::BIGINT AS n1, SUM(n_chars)::BIGINT AS s1,
-               SUM((n_chars * n_chars)::HUGEINT) AS ss1
-        FROM documents GROUP BY source
-    ),
-    tot AS (
-        SELECT COUNT(*)::BIGINT AS n, SUM(n_chars)::BIGINT AS s,
-               SUM((n_chars * n_chars)::HUGEINT) AS ss,
-               COUNT(DISTINCT source)::BIGINT AS m
-        FROM documents
-    ),
-    t AS (
-        SELECT source, n1,
-               ROUND(s1::DOUBLE / n1, 6) AS mean_chars,
-               (s1::DOUBLE / n1 - (tot.s - s1)::DOUBLE / (tot.n - n1))
-               / sqrt(((n1 * ss1 - s1 * s1)::DOUBLE / n1 / (n1 - 1)) / n1
-                      + (((tot.n - n1) * (tot.ss - ss1)
-                          - (tot.s - s1) * (tot.s - s1))::DOUBLE
-                         / (tot.n - n1) / (tot.n - n1 - 1)) / (tot.n - n1))
-                   AS t_stat,
-               tot.m AS m
-        FROM g CROSS JOIN tot
-    ),
-    p AS (
-        SELECT source, n1, mean_chars, ROUND(t_stat, 6) AS t_stat,
-               ROUND({_PHI2_SQL.format(t='abs(ROUND(t_stat, 6))')}, 6)
-                   AS p_approx, m
-        FROM t
-    ),
-    ranked AS (
-        SELECT *, ROW_NUMBER() OVER (ORDER BY p_approx ASC, source ASC)
-                      ::BIGINT AS rnk
-        FROM p
-    ),
-    k AS (
-        SELECT COALESCE(MAX(CASE WHEN p_approx * m * 10 <= rnk THEN rnk END), 0)
-                   AS kk
-        FROM ranked
-    )
-    SELECT source, n1 AS n, mean_chars, t_stat, p_approx, rnk,
-           (rnk <= (SELECT kk FROM k)) AS rejected
-    FROM ranked
-    """,
-)
-def welch_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source Welch two-sample t (each source's doc length vs the
-    REST of the corpus — complement moments by exact integer
-    subtraction, no second scan) with Benjamini-Hochberg FDR control at
-    q = 0.1 over the 20-test family — the parametric sibling of
-    mann_whitney plus the multiple-testing step every fleet-wide screen
-    needs (20 sources tested at α=0.05 yields ~1 false alarm; BH caps
-    the false-discovery RATE instead).  The normal CDF uses the Bowling
-    2009 logistic approximation (literal constants, same IEEE tree both
-    engines); the BH step-up compares p·m·10 ≤ rank — exact rational
-    threshold, no q/m division — on ROUNDED p with source tiebreaks.
-
-    Scale: one groupBy(source) + one global aggregate; everything else
-    on the |sources| frame."""
-    from pyspark.sql import Window as W
-
-    d = load_table(spark, sf_dir, "documents")
-    g = d.groupBy("source").agg(
-        F.count("*").cast("long").alias("n1"),
-        F.sum("n_chars").cast("long").alias("s1"),
-        F.sum((F.col("n_chars") * F.col("n_chars")).cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("ss1"),
-    )
-    tot = d.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("n_chars").cast("long").alias("s"),
-        F.sum((F.col("n_chars") * F.col("n_chars")).cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("ss"),
-        F.countDistinct("source").cast("long").alias("m"),
-    )
-    j = g.crossJoin(F.broadcast(tot))
-    n1, s1, ss1 = F.col("n1"), F.col("s1"), F.col("ss1")
-    n2 = F.col("n") - n1
-    s2 = F.col("s") - s1
-    ss2 = (F.col("ss") - ss1).cast("decimal(38,0)")
-    v1 = (n1 * ss1 - s1 * s1).cast("double") / n1 / (n1 - 1)
-    v2 = (n2 * ss2 - s2 * s2).cast("double") / n2 / (n2 - 1)
-    t_stat = (s1.cast("double") / n1 - s2.cast("double") / n2) / F.sqrt(
-        v1 / n1 + v2 / n2
-    )
-    at = F.abs(F.round(t_stat, 6))
-    p = F.round(2.0 / (1.0 + F.exp(0.07056 * at * at * at + 1.5976 * at)), 6)
-    scored = j.select(
-        "source",
-        F.col("n1").alias("n"),
-        F.round(s1.cast("double") / n1, 6).alias("mean_chars"),
-        F.round(t_stat, 6).alias("t_stat"),
-        p.alias("p_approx"),
-        "m",
-    )
-    ranked = scored.withColumn(
-        "rnk",
-        F.row_number()
-        .over(W.orderBy(F.col("p_approx").asc(), F.col("source").asc()))
-        .cast("long"),
-    )
-    k = ranked.agg(
-        F.coalesce(
-            F.max(
-                F.when(
-                    F.col("p_approx") * F.col("m") * 10 <= F.col("rnk"),
-                    F.col("rnk"),
-                )
-            ),
-            F.lit(0),
-        ).alias("kk")
-    )
-    return ranked.crossJoin(F.broadcast(k)).select(
-        "source", "n", "mean_chars", "t_stat", "p_approx", "rnk",
-        (F.col("rnk") <= F.col("kk")).alias("rejected"),
-    )
 
 
 @query(
@@ -4369,937 +182,6 @@ def poisson_rate_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(z, 6).alias("z"),
         F.round(2.0 / (1.0 + F.exp(0.07056 * az * az * az + 1.5976 * az)), 6)
         .alias("p_approx"),
-    )
-
-
-@query(
-    "cuped_adjustment",
-    """
-    WITH bounds AS (
-        SELECT CAST(MIN(ts) AS DATE) AS d0, CAST(MAX(ts) AS DATE) AS d1
-        FROM events
-    ),
-    u AS (
-        SELECT user_id,
-               (('0x' || substr(md5('cuped:' || user_id::VARCHAR), 1, 8))::BIGINT
-                % 2 = 0) AS treated,
-               SUM(CASE WHEN CAST(ts AS DATE) - (SELECT d0 FROM bounds)
-                             < ((SELECT d1 FROM bounds) - (SELECT d0 FROM bounds) + 1) // 2
-                        THEN FLOOR(value * 100.0 + 0.5)::BIGINT ELSE 0 END)::BIGINT AS x,
-               SUM(CASE WHEN CAST(ts AS DATE) - (SELECT d0 FROM bounds)
-                             >= ((SELECT d1 FROM bounds) - (SELECT d0 FROM bounds) + 1) // 2
-                        THEN FLOOR(value * 100.0 + 0.5)::BIGINT ELSE 0 END)::BIGINT AS y
-        FROM events GROUP BY user_id
-    ),
-    mom AS (
-        SELECT COUNT(*)::BIGINT AS n, SUM(x)::BIGINT AS sx, SUM(y)::BIGINT AS sy,
-               SUM((x * y)::HUGEINT) AS sxy, SUM((x * x)::HUGEINT) AS sxx
-        FROM u
-    ),
-    th AS (
-        SELECT (n * sxy - sx * sy)::DOUBLE / (n * sxx - sx * sx)::DOUBLE AS theta,
-               sx::DOUBLE / n AS mx
-        FROM mom
-    ),
-    adj AS (
-        SELECT treated, COUNT(*)::BIGINT AS n_g,
-               list_reduce(list_prepend(0.0,
-                   list(y - th.theta * (x - th.mx) ORDER BY user_id)),
-                   (a, v) -> a + v) AS s_adj,
-               SUM(y)::BIGINT AS s_raw
-        FROM u, th GROUP BY treated
-    )
-    SELECT t.n_g AS n_treated, c.n_g AS n_control,
-           ROUND((t.s_raw::DOUBLE / t.n_g - c.s_raw::DOUBLE / c.n_g) / 100.0, 6)
-               AS raw_effect,
-           ROUND((t.s_adj / t.n_g - c.s_adj / c.n_g) / 100.0, 6)
-               AS cuped_effect,
-           ROUND((SELECT theta FROM th), 6) AS theta
-    FROM (SELECT * FROM adj WHERE treated) t,
-         (SELECT * FROM adj WHERE NOT treated) c
-    """,
-)
-def cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED variance reduction (Deng et al. 2013) for the md5-coin A/B
-    split: per-user PRE-period spend is the covariate, POST-period spend
-    the metric, θ = cov(x,y)/var(x) from exact decimal-38/HUGEINT
-    moments, adjusted metric ỹ = y − θ(x − x̄) — the standard trick that
-    cuts experiment variance by the covariate's R².  The adjusted-sum
-    fold is user_id-ORDERED in both engines (θ·(x−x̄) is float, so the
-    per-group sum must not depend on aggregation order); raw effect uses
-    integer sums only.  Complements diff_in_diff (same midpoint split,
-    observational form) and ab_test_zscore.
-
-    Scale: one groupBy(user_id) corpus collapse, one moment aggregate,
-    one bounded two-group fold."""
-    from fusionspark.operators.dedup import md5_hash32
-
-    e = load_table(spark, sf_dir, "events")
-    b = e.agg(
-        F.min(F.to_date("ts")).alias("d0"), F.max(F.to_date("ts")).alias("d1")
-    ).collect()[0]
-    half = (b.d1 - b.d0).days + 1
-    cents = F.floor(F.col("value") * 100.0 + 0.5).cast("long")
-    pre = F.datediff(F.to_date("ts"), F.lit(b.d0)) < half // 2
-    u = (
-        e.groupBy("user_id")
-        .agg(
-            F.sum(F.when(pre, cents).otherwise(0)).cast("long").alias("x"),
-            F.sum(F.when(~pre, cents).otherwise(0)).cast("long").alias("y"),
-        )
-        .select(
-            "user_id", "x", "y",
-            (md5_hash32(F.concat(F.lit("cuped:"), F.col("user_id").cast("string")))
-             % 2 == 0).alias("treated"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    mom = u.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum((F.col("x") * F.col("y")).cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("sxy"),
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("sxx"),
-    )
-    th = mom.select(
-        (
-            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-            / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-        ).alias("theta"),
-        (F.col("sx").cast("double") / F.col("n")).alias("mx"),
-    )
-    adj = (
-        u.crossJoin(F.broadcast(th))
-        .groupBy("treated")
-        .agg(
-            F.count("*").cast("long").alias("n_g"),
-            F.aggregate(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                "user_id",
-                                (
-                                    F.col("y")
-                                    - F.col("theta") * (F.col("x") - F.col("mx"))
-                                ).alias("v"),
-                            )
-                        )
-                    ),
-                    lambda s: s["v"],
-                ),
-                F.lit(0.0),
-                lambda a, v: a + v,
-            ).alias("s_adj"),
-            F.sum("y").cast("long").alias("s_raw"),
-        )
-    )
-    t = adj.filter(F.col("treated")).select(
-        F.col("n_g").alias("n_treated"),
-        F.col("s_adj").alias("sa_t"),
-        F.col("s_raw").alias("sr_t"),
-    )
-    c = adj.filter(~F.col("treated")).select(
-        F.col("n_g").alias("n_control"),
-        F.col("s_adj").alias("sa_c"),
-        F.col("s_raw").alias("sr_c"),
-    )
-    return (
-        t.crossJoin(c)
-        .crossJoin(F.broadcast(th))
-        .select(
-            "n_treated", "n_control",
-            F.round(
-                (
-                    F.col("sr_t").cast("double") / F.col("n_treated")
-                    - F.col("sr_c").cast("double") / F.col("n_control")
-                )
-                / 100.0,
-                6,
-            ).alias("raw_effect"),
-            F.round(
-                (
-                    F.col("sa_t") / F.col("n_treated")
-                    - F.col("sa_c") / F.col("n_control")
-                )
-                / 100.0,
-                6,
-            ).alias("cuped_effect"),
-            F.round("theta", 6).alias("theta"),
-        )
-    )
-
-
-@query(
-    "simpson_diversity",
-    """
-    WITH wc AS (
-        SELECT source, w.w AS word, COUNT(*)::BIGINT AS c
-        FROM (SELECT source,
-                     list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
-              FROM documents) d,
-             unnest(d.ws) AS w(w)
-        GROUP BY source, w.w
-    ),
-    s AS (
-        SELECT source, SUM((c * (c - 1))::HUGEINT) AS lam_num,
-               SUM(c)::BIGINT AS n, COUNT(*)::BIGINT AS n_types
-        FROM wc GROUP BY source
-    )
-    SELECT source, n, n_types,
-           ROUND(lam_num::DOUBLE / (n::DOUBLE * (n - 1)), 6) AS simpson_lambda,
-           ROUND(1.0 - lam_num::DOUBLE / (n::DOUBLE * (n - 1)), 6)
-               AS simpson_diversity,
-           ROUND((n::DOUBLE * (n - 1)) / lam_num::DOUBLE, 6) AS inv_simpson
-    FROM s
-    """,
-)
-def simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simpson's diversity of each source's word distribution — the
-    UNBIASED small-sample form λ = Σ nᵢ(nᵢ−1)/(N(N−1)) (the probability
-    two tokens drawn without replacement are the same word), with 1−λ
-    (Gini-Simpson) and the inverse-Simpson effective vocabulary size.
-    Completes the lexical-diversity panel: zipf_fit (law), heaps_law
-    (growth), vocab_gini (inequality), ngram_diversity (n-gram types) —
-    Simpson is the one that is EXACTLY rational (integer numerator and
-    denominator; the three displays are the only doubles).
-
-    Scale: one token explode → one (source, word) groupBy with map-side
-    combine; the diversity arithmetic runs on the per-source frame."""
-    d = load_table(spark, sf_dir, "documents")
-    wc = (
-        d.select(
-            "source",
-            F.explode(
-                F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-            ).alias("word"),
-        )
-        .groupBy("source", "word")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
-    s = wc.groupBy("source").agg(
-        F.sum((F.col("c") * (F.col("c") - 1)).cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("lam_num"),
-        F.sum("c").cast("long").alias("n"),
-        F.count("*").cast("long").alias("n_types"),
-    )
-    lam = F.col("lam_num").cast("double") / (
-        F.col("n").cast("double") * (F.col("n") - 1)
-    )
-    return s.select(
-        "source", "n", "n_types",
-        F.round(lam, 6).alias("simpson_lambda"),
-        F.round(1.0 - lam, 6).alias("simpson_diversity"),
-        F.round(
-            (F.col("n").cast("double") * (F.col("n") - 1))
-            / F.col("lam_num").cast("double"),
-            6,
-        ).alias("inv_simpson"),
-    )
-
-
-@query(
-    "sprt_monitor",
-    """
-    WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day,
-               SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS x,
-               SUM(CASE WHEN event_type IN ('purchase', 'click') THEN 1 ELSE 0 END)::BIGINT AS n
-        FROM events GROUP BY 1
-    ),
-    walked AS (
-        SELECT strftime(day, '%Y-%m-%d') AS day,
-               SUM(x) OVER (ORDER BY day)::BIGINT AS cx,
-               SUM(n - x) OVER (ORDER BY day)::BIGINT AS cnx
-        FROM daily
-    ),
-    llr AS (
-        SELECT day, cx, cnx,
-               ROUND(cx * ln(1.125) + cnx * ln(0.875), 6) AS llr
-        FROM walked
-    )
-    SELECT day, cx AS conversions, cnx AS non_conversions, llr,
-           CASE WHEN llr >= ROUND(ln(19.0), 6) THEN 'accept_h1'
-                WHEN llr <= ROUND(ln(1.0 / 19.0), 6) THEN 'accept_h0'
-                ELSE 'continue' END AS decision
-    FROM llr
-    """,
-)
-def sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald's sequential probability ratio test over the daily purchase
-    share of purchase+click traffic — the ALWAYS-VALID monitor that lets
-    an experiment stop the day the evidence crosses a boundary instead
-    of waiting for a fixed horizon (peeking at a z-test inflates α;
-    SPRT's boundaries ln(19), ln(1/19) give α=β=0.05 at H₀ p=1/2 vs H₁
-    p=9/16).  The hypotheses are EXACT BINARY FRACTIONS so the two
-    likelihood ratios are the exact doubles 1.125 and 0.875 in both
-    engines (a 0.55/0.5 formulation would hit the DuckDB decimal-literal
-    ulp trap); llr_t = cx_t·ln(1.125) + cnx_t·ln(0.875) with cx/cnx
-    exact cumulative counts — one multiply-add per day, identical IEEE
-    tree both engines; the boundary compare is ROUNDED-vs-ROUNDED.
-
-    Scale: one groupBy(day) corpus collapse; the cumulative walk runs on
-    the bounded frame.  The streaming twin is the same plan under a
-    tumbling-window readStream."""
-    from pyspark.sql import Window as W
-
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(F.to_date("ts").alias("day")).agg(
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("long")
-        .alias("x"),
-        F.sum(
-            F.when(F.col("event_type").isin("purchase", "click"), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("n"),
-    )
-    w = W.orderBy("day")
-    walked = daily.select(
-        F.date_format("day", "yyyy-MM-dd").alias("day"),
-        F.sum("x").over(w).cast("long").alias("cx"),
-        F.sum(F.col("n") - F.col("x")).over(w).cast("long").alias("cnx"),
-    )
-    llr = F.round(
-        F.col("cx") * F.log(F.lit(1.125)) + F.col("cnx") * F.log(F.lit(0.875)),
-        6,
-    )
-    hi = F.round(F.log(F.lit(19.0)), 6)
-    lo = F.round(F.log(F.lit(1.0) / 19.0), 6)
-    return walked.select(
-        "day",
-        F.col("cx").alias("conversions"),
-        F.col("cnx").alias("non_conversions"),
-        llr.alias("llr"),
-    ).withColumn(
-        "decision",
-        F.when(F.col("llr") >= hi, "accept_h1")
-        .when(F.col("llr") <= lo, "accept_h0")
-        .otherwise("continue"),
-    )
-
-
-@query(
-    "hill_tail_index",
-    """
-    WITH topk AS (
-        SELECT n_chars AS x,
-               ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id ASC) AS i
-        FROM documents
-        QUALIFY i <= 100
-    ),
-    xk AS (SELECT x AS xk FROM topk WHERE i = 100),
-    folded AS (
-        SELECT list_reduce(list_prepend(0.0,
-                   list(ln(x::DOUBLE / (SELECT xk FROM xk)) ORDER BY i)),
-                   (a, v) -> a + v) AS s
-        FROM topk WHERE i < 100
-    )
-    SELECT 100::BIGINT AS k,
-           (SELECT xk FROM xk)::BIGINT AS x_k,
-           ROUND(folded.s / 99.0, 6) AS alpha_inv,
-           ROUND(99.0 / folded.s, 6) AS alpha
-    FROM folded
-    """,
-)
-def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hill estimator of the doc-length tail index (Hill 1975) — the
-    heavy-tail diagnosis beside zipf_fit's rank law: α̂⁻¹ = mean of
-    ln(x_i/x_k) over the k−1 largest order statistics above the k-th.
-    α < 2 means infinite variance (plan reservoir/quantile ops
-    accordingly); the corpus's partition-size planning reads this.  The
-    top-k cut is exact-integer (value DESC, id ASC ranks); each log term
-    divides the same two integers in both engines; the sum is a
-    rank-ORDERED IEEE fold.
-
-    Scale: one TakeOrdered(k) — k rows cross partitions; the fold is on
-    the bounded top-k frame."""
-    from pyspark.sql import Window as W
-
-    d = load_table(spark, sf_dir, "documents")
-    topk = (
-        d.select(
-            F.col("n_chars").alias("x"),
-            F.row_number()
-            .over(W.orderBy(F.col("n_chars").desc(), F.col("doc_id").asc()))
-            .alias("i"),
-        )
-        .filter(F.col("i") <= 100)
-        .localCheckpoint(eager=True)
-    )
-    xk = topk.filter(F.col("i") == 100).select(F.col("x").alias("xk"))
-    folded = (
-        topk.filter(F.col("i") < 100)
-        .crossJoin(F.broadcast(xk))
-        .agg(
-            F.aggregate(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                "i",
-                                F.log(
-                                    F.col("x").cast("double") / F.col("xk")
-                                ).alias("v"),
-                            )
-                        )
-                    ),
-                    lambda s: s["v"],
-                ),
-                F.lit(0.0),
-                lambda a, v: a + v,
-            ).alias("s")
-        )
-    )
-    return folded.crossJoin(F.broadcast(xk)).select(
-        F.lit(100).cast("long").alias("k"),
-        F.col("xk").cast("long").alias("x_k"),
-        F.round(F.col("s") / 99.0, 6).alias("alpha_inv"),
-        F.round(99.0 / F.col("s"), 6).alias("alpha"),
-    )
-
-
-@query(
-    "mad_by_type",
-    """
-    WITH v AS (
-        SELECT event_type, FLOOR(value * 100.0 + 0.5)::BIGINT AS x
-        FROM events
-    ),
-    med AS (
-        SELECT event_type,
-               (SELECT x FROM (SELECT x, ROW_NUMBER() OVER (ORDER BY x) AS r,
-                                      COUNT(*) OVER () AS m
-                               FROM v i WHERE i.event_type = o.event_type)
-                WHERE r = (m + 1) // 2)
-             + (SELECT x FROM (SELECT x, ROW_NUMBER() OVER (ORDER BY x) AS r,
-                                      COUNT(*) OVER () AS m
-                               FROM v i WHERE i.event_type = o.event_type)
-                WHERE r = (m + 2) // 2) AS med2
-        FROM (SELECT DISTINCT event_type FROM v) o
-    ),
-    dev AS (
-        SELECT v.event_type, abs(2 * v.x - m.med2)::BIGINT AS d
-        FROM v JOIN med m ON m.event_type = v.event_type
-    ),
-    mad AS (
-        SELECT event_type,
-               (SELECT d FROM (SELECT d, ROW_NUMBER() OVER (ORDER BY d) AS r,
-                                      COUNT(*) OVER () AS m
-                               FROM dev i WHERE i.event_type = o.event_type)
-                WHERE r = (m + 1) // 2)
-             + (SELECT d FROM (SELECT d, ROW_NUMBER() OVER (ORDER BY d) AS r,
-                                      COUNT(*) OVER () AS m
-                               FROM dev i WHERE i.event_type = o.event_type)
-                WHERE r = (m + 2) // 2) AS mad4
-        FROM (SELECT DISTINCT event_type FROM dev) o
-    )
-    SELECT m.event_type,
-           ROUND(m.med2 / 2.0 / 100.0, 6) AS median_value,
-           ROUND(d.mad4 / 4.0 / 100.0, 6) AS mad_value,
-           ROUND(d.mad4 / 4.0 / 100.0 * 1.4826, 6) AS sigma_robust
-    FROM med m JOIN mad d ON d.event_type = m.event_type
-    """,
-)
-def mad_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type median and MAD, EXACT: both medians are sums of
-    the two middle order statistics (med2 = 2·median of cents; the
-    deviation median runs on the integer |2x − med2|, so mad4 = 4·MAD·100
-    stays integer until the two display divisions).  σ ≈ 1.4826·MAD is
-    the robust scale every outlier screen consumes (ts_anomalies uses
-    the global form; this is the per-group table).
-
-    Scale: two rank windows PARTITIONED BY type (parallel across groups;
-    the skew bound is the largest group, the same bound any per-group
-    order statistic has)."""
-    from pyspark.sql import Window as W
-
-    e = load_table(spark, sf_dir, "events")
-    v = e.select(
-        "event_type", F.floor(F.col("value") * 100.0 + 0.5).cast("long").alias("x")
-    )
-
-    def med2_of(df, col, out):
-        ww = W.partitionBy("event_type").orderBy(col)
-        ranked = df.select(
-            "event_type", F.col(col),
-            F.row_number().over(ww).cast("long").alias("r"),
-            F.count("*").over(W.partitionBy("event_type")).cast("long").alias("m"),
-        )
-        m1 = ranked.filter(F.col("r") == F.floor((F.col("m") + 1) / 2)).select(
-            "event_type", F.col(col).alias("a")
-        )
-        m2 = ranked.filter(F.col("r") == F.floor((F.col("m") + 2) / 2)).select(
-            "event_type", F.col(col).alias("b")
-        )
-        return m1.join(m2, "event_type").select(
-            "event_type", (F.col("a") + F.col("b")).cast("long").alias(out)
-        )
-
-    med = med2_of(v, "x", "med2")
-    dev = v.join(F.broadcast(med), "event_type").select(
-        "event_type", F.abs(2 * F.col("x") - F.col("med2")).cast("long").alias("d")
-    )
-    mad = med2_of(dev, "d", "mad4")
-    return med.join(mad, "event_type").select(
-        "event_type",
-        F.round(F.col("med2") / 2.0 / 100.0, 6).alias("median_value"),
-        F.round(F.col("mad4") / 4.0 / 100.0, 6).alias("mad_value"),
-        F.round(F.col("mad4") / 4.0 / 100.0 * 1.4826, 6).alias("sigma_robust"),
-    )
-
-
-@query(
-    "theil_index",
-    """
-    WITH rev AS (
-        SELECT user_id,
-               SUM(CASE WHEN event_type = 'purchase'
-                        THEN floor(value * 1e6)::BIGINT ELSE 0 END)::BIGINT AS x
-        FROM events GROUP BY user_id
-    ),
-    pos AS (SELECT user_id, x FROM rev WHERE x > 0),
-    tot AS (SELECT COUNT(*)::BIGINT AS n, SUM(x)::BIGINT AS s FROM pos),
-    folded AS (
-        SELECT list_reduce(list_prepend(0.0,
-                   list((x::DOUBLE * tot.n / tot.s)
-                        * ln(x::DOUBLE * tot.n / tot.s) ORDER BY user_id)),
-                   (a, v) -> a + v) AS t_sum,
-               MAX(tot.n)::BIGINT AS n
-        FROM pos, tot
-    )
-    SELECT n AS n_users, ROUND(t_sum / n, 6) AS theil_t,
-           ROUND(1.0 - exp(-t_sum / n), 6) AS atkinson1
-    FROM folded
-    """,
-)
-def theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil T inequality index of per-user purchase revenue — the
-    entropy-based member of the inequality panel (revenue_gini measures
-    rank concentration; Theil is DECOMPOSABLE across subgroups, which a
-    per-segment rollup exploits), with Atkinson(ε=1) = 1 − e^{−T} as the
-    welfare reading.  Each term (x/μ)·ln(x/μ) uses x·n/S — a ratio of
-    exact integers, so both engines feed ln the same double — and the
-    sum is a user-ORDERED IEEE fold; zero-revenue users are excluded
-    (the standard treatment: x·ln x → 0 but the index is defined on
-    positive incomes).
-
-    Scale: one groupBy(user) corpus collapse, one bounded fold."""
-    e = load_table(spark, sf_dir, "events")
-    rev = e.groupBy("user_id").agg(
-        F.sum(
-            F.when(
-                F.col("event_type") == "purchase",
-                F.floor(F.col("value") * 1e6).cast("long"),
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("x")
-    )
-    pos = rev.filter(F.col("x") > 0)
-    tot = pos.agg(
-        F.count("*").cast("long").alias("n"), F.sum("x").cast("long").alias("s")
-    )
-    term = (F.col("x").cast("double") * F.col("n") / F.col("s")) * F.log(
-        F.col("x").cast("double") * F.col("n") / F.col("s")
-    )
-    folded = (
-        pos.crossJoin(F.broadcast(tot))
-        .agg(
-            F.aggregate(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("user_id", term.alias("v")))
-                    ),
-                    lambda st: st["v"],
-                ),
-                F.lit(0.0),
-                lambda a, v: a + v,
-            ).alias("t_sum"),
-            F.max("n").cast("long").alias("n"),
-        )
-    )
-    return folded.select(
-        F.col("n").alias("n_users"),
-        F.round(F.col("t_sum") / F.col("n"), 6).alias("theil_t"),
-        F.round(1.0 - F.exp(-F.col("t_sum") / F.col("n")), 6).alias("atkinson1"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round 11: experimentation / survival / causal completions
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "logrank_test",
-    """
-    WITH c AS (
-        SELECT o_custkey, o_custkey % 2 AS g,
-               MIN(CAST(o_orderdate AS DATE)) AS t0,
-               MAX(CAST(o_orderdate AS DATE)) AS t1
-        FROM orders GROUP BY 1, 2
-    ),
-    hz AS (SELECT MAX(t1) AS h FROM c),
-    cd AS (
-        SELECT g, date_diff('day', t0, t1)::BIGINT AS t,
-               CASE WHEN date_diff('day', t1, (SELECT h FROM hz)) > 90
-                    THEN 1 ELSE 0 END::BIGINT AS ev
-        FROM c
-    ),
-    tl AS (
-        SELECT t,
-               SUM(CASE WHEN g = 0 THEN 1 ELSE 0 END)::BIGINT AS m0,
-               SUM(CASE WHEN g = 1 THEN 1 ELSE 0 END)::BIGINT AS m1,
-               SUM(CASE WHEN g = 0 THEN ev ELSE 0 END)::BIGINT AS d0,
-               SUM(CASE WHEN g = 1 THEN ev ELSE 0 END)::BIGINT AS d1
-        FROM cd GROUP BY t
-    ),
-    risk AS (
-        SELECT t, d0, d1,
-               (SELECT SUM(m0) FROM tl)::BIGINT
-                 - (SUM(m0) OVER (ORDER BY t
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    - m0)::BIGINT AS n0,
-               (SELECT SUM(m1) FROM tl)::BIGINT
-                 - (SUM(m1) OVER (ORDER BY t
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    - m1)::BIGINT AS n1
-        FROM tl
-    ),
-    ev AS (
-        SELECT t, d0, d1, n0, n1, d0 + d1 AS d, n0 + n1 AS n
-        FROM risk WHERE d0 + d1 > 0 AND n0 + n1 > 1
-    ),
-    folded AS (
-        SELECT SUM(d1)::BIGINT AS o1,
-               list_reduce(list_prepend([0.0, 0.0],
-                   list([(d * n1)::DOUBLE / n,
-                         (d * n1 * n0 * (n - d))::DOUBLE
-                           / (n * n * (n - 1))] ORDER BY t)),
-                   (a, x) -> [a[1] + x[1], a[2] + x[2]]) AS s
-        FROM ev
-    ),
-    sizes AS (
-        SELECT SUM(CASE WHEN g = 0 THEN 1 ELSE 0 END)::BIGINT AS n0_total,
-               SUM(CASE WHEN g = 1 THEN 1 ELSE 0 END)::BIGINT AS n1_total
-        FROM cd
-    )
-    SELECT sizes.n0_total, sizes.n1_total, folded.o1,
-           ROUND(folded.s[1], 6) AS e1,
-           ROUND(folded.s[2], 6) AS var1,
-           CASE WHEN folded.s[2] > 0.0
-                THEN ROUND((folded.o1 - folded.s[1]) / sqrt(folded.s[2]), 6)
-           END AS z
-    FROM folded, sizes
-    """,
-)
-def logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log-rank (Mantel-Cox) two-group survival comparison — completes the
-    survival family begun by survival_km: customers split by key parity,
-    duration = first→last order span, churn event = last order > 90 days
-    before the corpus horizon.  At each event time t the test compares
-    observed group-1 events d1_t against the hypergeometric expectation
-    d_t·n1_t/n_t and variance d_t·n1_t·n0_t·(n_t−d_t)/(n_t²·(n_t−1));
-    z = (O1 − E1)/√V is the curve-separation readout A/B survival
-    analyses (retention experiments) run on.
-
-    Parity: every per-time term is ONE correctly-rounded division of two
-    exact BIGINT products (no intermediate float arithmetic — IEEE
-    division of exact integers is deterministic, unlike libm), the
-    at-risk counts come from integer reverse-cumulative windows, and E1/V
-    are t-ASC ordered folds (survival_km discipline).  sqrt is
-    IEEE-correctly-rounded, so z is bit-identical given identical (O1,
-    E1, V).
-
-    Scale: the corpus collapses to per-customer (min, max) with map-side
-    combine, then to the bounded per-day timeline (≤ calendar span rows);
-    the windows and folds run on the timeline only — the single-partition
-    window is over thousands of rows at ANY corpus size."""
-    from pyspark.sql import Window as W
-
-    o = load_table(spark, sf_dir, "orders")
-    c = o.groupBy("o_custkey").agg(
-        F.min(F.to_date("o_orderdate")).alias("t0"),
-        F.max(F.to_date("o_orderdate")).alias("t1"),
-    ).select((F.col("o_custkey") % 2).alias("g"), "t0", "t1")
-    hz = c.agg(F.max("t1").alias("h"))
-    cd = c.crossJoin(F.broadcast(hz)).select(
-        "g",
-        F.datediff("t1", "t0").cast("long").alias("t"),
-        F.when(F.datediff("h", "t1") > 90, F.lit(1)).otherwise(F.lit(0))
-        .cast("long").alias("ev"),
-    )
-    tl = cd.groupBy("t").agg(
-        F.sum(F.when(F.col("g") == 0, 1).otherwise(0)).cast("long").alias("m0"),
-        F.sum(F.when(F.col("g") == 1, 1).otherwise(0)).cast("long").alias("m1"),
-        F.sum(F.when(F.col("g") == 0, F.col("ev")).otherwise(0)).cast("long").alias("d0"),
-        F.sum(F.when(F.col("g") == 1, F.col("ev")).otherwise(0)).cast("long").alias("d1"),
-    )
-    wcum = W.orderBy("t").rowsBetween(W.unboundedPreceding, W.currentRow)
-    wall = W.orderBy("t").rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    risk = tl.select(
-        "t", "d0", "d1",
-        (F.sum("m0").over(wall) - (F.sum("m0").over(wcum) - F.col("m0")))
-        .cast("long").alias("n0"),
-        (F.sum("m1").over(wall) - (F.sum("m1").over(wcum) - F.col("m1")))
-        .cast("long").alias("n1"),
-    )
-    ev = risk.withColumn("d", F.col("d0") + F.col("d1")).withColumn(
-        "n", F.col("n0") + F.col("n1")
-    ).filter((F.col("d") > 0) & (F.col("n") > 1))
-    e1_t = (F.col("d") * F.col("n1")).cast("double") / F.col("n")
-    v_t = (
-        F.col("d") * F.col("n1") * F.col("n0") * (F.col("n") - F.col("d"))
-    ).cast("double") / (F.col("n") * F.col("n") * (F.col("n") - 1))
-    folded = ev.agg(
-        F.sum("d1").cast("long").alias("o1"),
-        F.aggregate(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct("t", e1_t.alias("e"), v_t.alias("v"))
-                    )
-                ),
-                lambda s: F.array(s["e"], s["v"]),
-            ),
-            F.array(F.lit(0.0), F.lit(0.0)),
-            lambda a, x: F.array(
-                F.element_at(a, 1) + F.element_at(x, 1),
-                F.element_at(a, 2) + F.element_at(x, 2),
-            ),
-        ).alias("s"),
-    )
-    sizes = cd.agg(
-        F.sum(F.when(F.col("g") == 0, 1).otherwise(0)).cast("long").alias("n0_total"),
-        F.sum(F.when(F.col("g") == 1, 1).otherwise(0)).cast("long").alias("n1_total"),
-    )
-    return folded.crossJoin(F.broadcast(sizes)).select(
-        "n0_total", "n1_total", "o1",
-        F.round(F.element_at("s", 1), 6).alias("e1"),
-        F.round(F.element_at("s", 2), 6).alias("var1"),
-        F.when(
-            F.element_at("s", 2) > 0.0,
-            F.round(
-                (F.col("o1") - F.element_at("s", 1))
-                / F.sqrt(F.element_at("s", 2)),
-                6,
-            ),
-        ).alias("z"),
-    )
-
-
-# z-quantiles for ab_power_mde as exact integer ratios: both engines parse
-# the integer literals exactly and IEEE division is correctly rounded, so
-# the constants are bit-identical (the DuckDB decimal-literal 1-ulp trap
-# from COVERAGE.md §cross-SF does not apply to INT/INT division).
-# z_{0.975} and z_{0.80} to 16 significant digits.
-_Z_ALPHA_NUM = 1959963984540054  # / 1e15 = 1.959963984540054
-_Z_BETA_NUM = 841621233572914  # / 1e15 = 0.841621233572914
-_Z_DEN = 10**15
-
-
-@query(
-    "ab_power_mde",
-    f"""
-    WITH assign AS (
-        SELECT user_id, user_id % 2 AS variant,
-               MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                   AS converted
-        FROM events GROUP BY user_id
-    ),
-    wide AS (
-        SELECT
-            SUM(CASE WHEN variant = 0 THEN 1 ELSE 0 END)::BIGINT AS n0,
-            SUM(CASE WHEN variant = 0 THEN converted ELSE 0 END)::BIGINT AS c0,
-            SUM(CASE WHEN variant = 1 THEN 1 ELSE 0 END)::BIGINT AS n1,
-            SUM(CASE WHEN variant = 1 THEN converted ELSE 0 END)::BIGINT AS c1
-        FROM assign
-    )
-    SELECT n0, c0, n1, c1,
-           ROUND((c0 + c1)::DOUBLE / (n0 + n1), 6) AS p_pool,
-           ROUND(({_Z_ALPHA_NUM}::DOUBLE / {_Z_DEN}
-                  + {_Z_BETA_NUM}::DOUBLE / {_Z_DEN})
-                 * sqrt(((c0 + c1)::DOUBLE / (n0 + n1))
-                        * (1.0::DOUBLE - (c0 + c1)::DOUBLE / (n0 + n1))
-                        * (1.0::DOUBLE / n0 + 1.0::DOUBLE / n1)), 6)
-               AS mde_abs
-    FROM wide
-    """,
-)
-def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Minimum detectable effect of the running experiment — the power
-    companion to ab_test_zscore's readout: at alpha=0.05 (two-sided) and
-    power 0.80, the smallest absolute conversion-rate lift this sample
-    can reliably detect is (z_{{0.975}} + z_{{0.80}}) · sqrt(p̄(1−p̄)(1/n0 +
-    1/n1)).  Pipelines gate launch decisions on MDE-vs-observed-lift, not
-    on the z alone (an insignificant z with MDE >> the business-relevant
-    lift means "underpowered", not "no effect").
-
-    Parity: the z quantiles are INT/INT divisions (bit-identical on both
-    engines — decimal literals are not, COVERAGE.md cross-SF notes); all
-    other inputs are four exact BIGINTs; sqrt is IEEE-correctly-rounded;
-    the expression tree is written in the same operation order in both
-    engines.  Scale: one per-user collapse + one 4-integer aggregate."""
-    e = load_table(spark, sf_dir, "events")
-    assign = e.groupBy("user_id").agg(
-        F.max((F.col("event_type") == "purchase").cast("int")).alias("converted")
-    ).select((F.col("user_id") % 2).alias("variant"), "converted")
-    wide = assign.agg(
-        F.sum(F.when(F.col("variant") == 0, 1).otherwise(0)).cast("long").alias("n0"),
-        F.sum(F.when(F.col("variant") == 0, F.col("converted")).otherwise(0)).cast("long").alias("c0"),
-        F.sum(F.when(F.col("variant") == 1, 1).otherwise(0)).cast("long").alias("n1"),
-        F.sum(F.when(F.col("variant") == 1, F.col("converted")).otherwise(0)).cast("long").alias("c1"),
-    )
-    pp = (F.col("c0") + F.col("c1")).cast("double") / (F.col("n0") + F.col("n1"))
-    zsum = (
-        F.lit(_Z_ALPHA_NUM).cast("double") / F.lit(_Z_DEN)
-        + F.lit(_Z_BETA_NUM).cast("double") / F.lit(_Z_DEN)
-    )
-    mde = zsum * F.sqrt(
-        pp * (F.lit(1.0) - pp)
-        * (F.lit(1.0) / F.col("n0") + F.lit(1.0) / F.col("n1"))
-    )
-    return wide.select(
-        "n0", "c0", "n1", "c1",
-        F.round(pp, 6).alias("p_pool"),
-        F.round(mde, 6).alias("mde_abs"),
-    )
-
-
-@query(
-    "post_strat_ate",
-    """
-    WITH u AS (
-        SELECT c_custkey, seg, w,
-               2000 * (ascii(substr(seg, 1, 1)) % 5) + c_custkey % 1000
-                 + w * (1000 + (c_custkey % 7) * 50) AS y
-        FROM (
-            SELECT c_custkey, c_mktsegment AS seg,
-                   CASE WHEN ('0x' || substr(md5('ate:' || c_custkey::VARCHAR),
-                                             1, 8))::BIGINT % 100
-                             < 30 + 10 * (ascii(substr(c_mktsegment, 1, 1)) % 5)
-                        THEN 1 ELSE 0 END AS w
-            FROM customer
-        )
-    ),
-    strata AS (
-        SELECT seg,
-               SUM(w)::BIGINT AS n1,
-               SUM(1 - w)::BIGINT AS n0,
-               SUM(CASE WHEN w = 1 THEN y ELSE 0 END)::BIGINT AS s1,
-               SUM(CASE WHEN w = 0 THEN y ELSE 0 END)::BIGINT AS s0
-        FROM u GROUP BY seg
-    ),
-    keep AS (SELECT * FROM strata WHERE n1 > 0 AND n0 > 0),
-    tot AS (
-        SELECT SUM(n1 + n0)::BIGINT AS n,
-               SUM(n1)::BIGINT AS nt, SUM(n0)::BIGINT AS nc,
-               SUM(s1)::BIGINT AS st, SUM(s0)::BIGINT AS sc,
-               COUNT(*)::BIGINT AS n_strata
-        FROM keep
-    ),
-    folded AS (
-        SELECT list_reduce(list_prepend(0.0,
-                   list(((n1 + n0)::DOUBLE / (SELECT n FROM tot))
-                        * (s1::DOUBLE / n1 - s0::DOUBLE / n0)
-                        ORDER BY seg)),
-                   (a, x) -> a + x) AS ate
-        FROM keep
-    )
-    SELECT tot.nt AS n_treat, tot.nc AS n_ctrl, tot.n_strata,
-           ROUND(folded.ate / 100.0, 6) AS ate,
-           ROUND((tot.st::DOUBLE / tot.nt - tot.sc::DOUBLE / tot.nc)
-                 / 100.0, 6) AS naive_diff
-    FROM folded, tot
-    """,
-)
-def post_strat_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Post-stratification average-treatment-effect estimator — completes
-    the causal family (diff_in_diff's panel form, propensity_match's
-    nearest-control form, cuped_adjustment's variance reduction).  The
-    derived corpus plants a REAL confound: treatment probability varies
-    BY STRATUM (30%–70%, md5 coin against a segment-dependent threshold)
-    and the outcome baseline also varies by stratum (2000·segcode cents),
-    so the naive treated-vs-control difference absorbs the baseline
-    imbalance while the stratified estimator Σ_s (n_s/N)(ȳ₁s − ȳ₀s)
-    removes it and recovers the planted lift 1000 + 50·(key mod 7) cents
-    (estimand ≈ $11.50; the pytest asserts recovery AND that the naive
-    diff is biased away from it).
-
-    Parity: all outcomes are exact integer cents (fully derived — no
-    float input anywhere); per-stratum means are single divisions of
-    exact BIGINT sums; the stratum fold is seg-ASC ordered; strata with
-    an empty arm are excluded by an integer gate.  Scale: one
-    groupBy(seg) — the stratum frame is |segments| rows at any corpus
-    size; nothing else shuffles."""
-    from fusionspark.operators.dedup import md5_hash32
-
-    c = load_table(spark, sf_dir, "customer")
-    segcode = F.ascii(F.substring("c_mktsegment", 1, 1)) % 5
-    w = F.when(
-        md5_hash32(F.concat(F.lit("ate:"), F.col("c_custkey").cast("string")))
-        % 100
-        < 30 + 10 * segcode,
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    y = (
-        2000 * segcode.cast("long")
-        + F.col("c_custkey") % 1000
-        + w * (F.lit(1000) + (F.col("c_custkey") % 7) * 50)
-    )
-    u = c.select(F.col("c_mktsegment").alias("seg"), w.alias("w"), y.alias("y"))
-    strata = u.groupBy("seg").agg(
-        F.sum("w").cast("long").alias("n1"),
-        F.sum(1 - F.col("w")).cast("long").alias("n0"),
-        F.sum(F.when(F.col("w") == 1, F.col("y")).otherwise(0)).cast("long").alias("s1"),
-        F.sum(F.when(F.col("w") == 0, F.col("y")).otherwise(0)).cast("long").alias("s0"),
-    ).filter((F.col("n1") > 0) & (F.col("n0") > 0))
-    tot = strata.agg(
-        F.sum(F.col("n1") + F.col("n0")).cast("long").alias("n"),
-        F.sum("n1").cast("long").alias("nt"),
-        F.sum("n0").cast("long").alias("nc"),
-        F.sum("s1").cast("long").alias("st"),
-        F.sum("s0").cast("long").alias("sc"),
-        F.count("*").cast("long").alias("n_strata"),
-    )
-    term = (
-        (F.col("n1") + F.col("n0")).cast("double") / F.col("n")
-    ) * (
-        F.col("s1").cast("double") / F.col("n1")
-        - F.col("s0").cast("double") / F.col("n0")
-    )
-    folded = strata.crossJoin(F.broadcast(tot)).agg(
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("seg", term.alias("v")))),
-                lambda s: s["v"],
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        ).alias("ate"),
-        F.max("nt").cast("long").alias("n_treat"),
-        F.max("nc").cast("long").alias("n_ctrl"),
-        F.max("n_strata").cast("long").alias("n_strata"),
-        F.max("st").cast("long").alias("st"),
-        F.max("sc").cast("long").alias("sc"),
-    )
-    return folded.select(
-        "n_treat", "n_ctrl", "n_strata",
-        F.round(F.col("ate") / 100.0, 6).alias("ate"),
-        F.round(
-            (
-                F.col("st").cast("double") / F.col("n_treat")
-                - F.col("sc").cast("double") / F.col("n_ctrl")
-            )
-            / 100.0,
-            6,
-        ).alias("naive_diff"),
     )
 
 
@@ -5399,562 +281,6 @@ def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return test.select(
         "n_cal", "n_test", "qhat",
         F.round(F.col("covered").cast("double") / F.col("n_test"), 6).alias("coverage"),
-    )
-
-
-@query(
-    "psi_drift",
-    """
-    WITH ev AS (
-        SELECT epoch_us(ts) AS t, FLOOR(value * 100.0 + 0.5)::BIGINT AS x
-        FROM events
-    ),
-    mid AS (SELECT (MIN(t) + MAX(t)) // 2 AS m FROM ev),
-    ref AS (SELECT x FROM ev WHERE t <= (SELECT m FROM mid)),
-    cur AS (SELECT x FROM ev WHERE t > (SELECT m FROM mid)),
-    rr AS (
-        SELECT x, ROW_NUMBER() OVER (ORDER BY x) AS rk,
-               COUNT(*) OVER () AS n
-        FROM ref
-    ),
-    bounds AS (
-        SELECT k.k AS k, MAX(rr.x)::BIGINT AS b
-        FROM rr JOIN (SELECT unnest(generate_series(1, 9)) AS k) k
-          ON rr.rk = (k.k * rr.n) // 10
-        GROUP BY k.k
-    ),
-    rbin AS (
-        SELECT (SELECT COUNT(*) FROM bounds WHERE b < ref.x)::BIGINT AS bin
-        FROM ref
-    ),
-    cbin AS (
-        SELECT (SELECT COUNT(*) FROM bounds WHERE b < cur.x)::BIGINT AS bin
-        FROM cur
-    ),
-    grid AS (SELECT unnest(generate_series(0, 9)) AS bin),
-    cnts AS (
-        SELECT grid.bin::BIGINT AS bin,
-               COALESCE(r.n, 0)::BIGINT AS ref_n,
-               COALESCE(c.n, 0)::BIGINT AS cur_n
-        FROM grid
-        LEFT JOIN (SELECT bin, COUNT(*)::BIGINT AS n FROM rbin GROUP BY bin) r
-               ON r.bin = grid.bin
-        LEFT JOIN (SELECT bin, COUNT(*)::BIGINT AS n FROM cbin GROUP BY bin) c
-               ON c.bin = grid.bin
-    ),
-    tot AS (
-        SELECT SUM(ref_n)::BIGINT AS nr, SUM(cur_n)::BIGINT AS nc FROM cnts
-    ),
-    folded AS (
-        SELECT list_reduce(list_prepend(0.0,
-            list(((ref_n + 1)::DOUBLE / (nr + 10) - (cur_n + 1)::DOUBLE / (nc + 10))
-                 * ln(((ref_n + 1) * (nc + 10))::DOUBLE
-                      / ((cur_n + 1) * (nr + 10)))
-                 ORDER BY bin)),
-            (a, x) -> a + x) AS psi
-        FROM cnts, tot
-        GROUP BY nr, nc
-    ),
-    tots AS (SELECT nr, nc FROM tot)
-    SELECT tots.nr AS n_ref, tots.nc AS n_cur,
-           ROUND(folded.psi, 6) + 0.0 AS psi
-    FROM folded, tots
-    """,
-)
-def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population Stability Index — THE production feature-drift monitor
-    (credit-scoring lineage, now the default ML-monitoring metric): the
-    event-value distribution's later time-half scored against its
-    earlier half over the earlier half's decile bins, PSI = Σ (p_i −
-    q_i)·ln(p_i/q_i).  Convention: PSI < 0.1 stable, 0.1-0.25 shifting,
-    > 0.25 action.  Laplace-smoothed proportions ((c+1)/(n+10)) keep
-    empty bins finite — the standard production guard, replayed
-    identically in the oracle.
-
-    Parity: bin boundaries are EXACT rank picks (rk = ⌊k·n/10⌋ over the
-    reference half, integer arithmetic), bin assignment is an integer
-    boundary count, and each bin's term is built from exact integers
-    with ONE ln of an integer ratio; the 10-term sum is a bin-ordered
-    fold.  The emitted psi carries `+ 0.0` (a zero-drift corpus can
-    round to a signed zero).  Scale: one midpoint scalar, one rank
-    window over the reference half (swap approx_percentile + exact
-    verify past ~1e9 rows), integer bin counts with map-side combine;
-    the 10-row bin frame is where all float math lives."""
-    from pyspark.sql import Window as W
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.unix_micros("ts").alias("t"),
-        F.floor(F.col("value") * 100.0 + 0.5).cast("long").alias("x"),
-    )
-    mid = ev.agg(
-        F.expr("(min(t) + max(t)) div 2").cast("long").alias("m")
-    )
-    e = ev.crossJoin(F.broadcast(mid))
-    ref = e.filter(F.col("t") <= F.col("m")).select("x")
-    cur = e.filter(F.col("t") > F.col("m")).select("x")
-    # r13 whitelist burn-down: boundary ranks come from the VALUE-GRID
-    # cumulative, not a row_number over raw rows — the x at rank
-    # (k*n) div 10 is exactly the smallest grid value whose inclusive
-    # cumulative count reaches that rank (identical output; the only
-    # windows left are over the bounded distinct-cents grid)
-    vg = ref.groupBy("x").agg(F.count("*").cast("long").alias("c"))
-    gw = W.orderBy("x").rowsBetween(W.unboundedPreceding, 0)
-    gr = vg.select("x", F.sum("c").over(gw).cast("long").alias("cum"))
-    nn = ref.agg(F.count("*").cast("long").alias("n"))
-    ks = ev.sparkSession.range(1, 10).select(F.col("id").alias("k"))
-    pos = F.expr("(k * n) div 10")
-    bounds = (
-        gr.crossJoin(F.broadcast(ks))
-        .crossJoin(F.broadcast(nn))
-        .filter((pos >= 1) & (F.col("cum") >= pos))
-        .groupBy("k")
-        .agg(F.min("x").cast("long").alias("b"))
-        .select("b")
-    )
-    barr = bounds.agg(F.array_sort(F.collect_list("b")).alias("bs"))
-
-    def bin_of(df):
-        return (
-            df.crossJoin(F.broadcast(barr))
-            .select(
-                F.aggregate(
-                    "bs",
-                    F.lit(0).cast("long"),
-                    lambda a, b: a + F.when(b < F.col("x"), 1).otherwise(0),
-                ).alias("bin")
-            )
-            .groupBy("bin")
-            .agg(F.count("*").cast("long").alias("n"))
-        )
-    rb, cb = bin_of(ref), bin_of(cur)
-    grid = ev.sparkSession.range(0, 10).select(F.col("id").alias("bin"))
-    cnts = (
-        grid.join(rb.withColumnRenamed("n", "ref_n"), "bin", "left")
-        .join(cb.withColumnRenamed("n", "cur_n"), "bin", "left")
-        .na.fill({"ref_n": 0, "cur_n": 0})
-    )
-    tot = cnts.agg(
-        F.sum("ref_n").cast("long").alias("nr"),
-        F.sum("cur_n").cast("long").alias("nc"),
-    )
-    j = cnts.crossJoin(F.broadcast(tot))
-    term = (
-        (F.col("ref_n") + 1).cast("double") / (F.col("nr") + 10)
-        - (F.col("cur_n") + 1).cast("double") / (F.col("nc") + 10)
-    ) * F.log(
-        ((F.col("ref_n") + 1) * (F.col("nc") + 10)).cast("double")
-        / ((F.col("cur_n") + 1) * (F.col("nr") + 10))
-    )
-    folded = j.agg(
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("bin", term.alias("v")))),
-                lambda s: s["v"],
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        ).alias("psi"),
-        F.max("nr").cast("long").alias("n_ref"),
-        F.max("nc").cast("long").alias("n_cur"),
-    )
-    return folded.select(
-        "n_ref", "n_cur", (F.round("psi", 6) + F.lit(0.0)).alias("psi")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round 11 (cont.): classic closed-form inference — one-way ANOVA, IV/Wald
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "anova_oneway",
-    """
-    WITH v AS (
-        SELECT o_orderpriority AS g, FLOOR(o_totalprice + 0.5)::BIGINT AS v
-        FROM orders
-    ),
-    grp AS (
-        SELECT g, COUNT(*)::BIGINT AS ng, SUM(v)::BIGINT AS sg,
-               SUM(v * v)::BIGINT AS ssg
-        FROM v GROUP BY g
-    ),
-    tot AS (
-        SELECT COUNT(*)::BIGINT AS k, SUM(ng)::BIGINT AS n,
-               SUM(sg)::BIGINT AS s, SUM(ssg)::BIGINT AS ss
-        FROM grp
-    ),
-    terms AS (
-        SELECT g, sg::DOUBLE * sg::DOUBLE / ng AS t,
-               ssg::DOUBLE - sg::DOUBLE * sg::DOUBLE / ng AS w
-        FROM grp
-    ),
-    folded AS (
-        SELECT list_reduce(list_prepend(0.0, list(t ORDER BY g)),
-                           (a, x) -> a + x) AS st,
-               list_reduce(list_prepend(0.0, list(w ORDER BY g)),
-                           (a, x) -> a + x) AS ssw
-        FROM terms
-    )
-    SELECT tot.k AS k, tot.n AS n,
-           (tot.k - 1)::BIGINT AS dof1, (tot.n - tot.k)::BIGINT AS dof2,
-           ROUND(folded.st - tot.s::DOUBLE * tot.s::DOUBLE / tot.n, 6) + 0.0
-               AS ss_between,
-           ROUND(folded.ssw, 6) + 0.0 AS ss_within,
-           ROUND(((folded.st - tot.s::DOUBLE * tot.s::DOUBLE / tot.n)
-                  / (tot.k - 1)) / (folded.ssw / (tot.n - tot.k)), 6) + 0.0
-               AS f_stat,
-           ROUND((folded.st - tot.s::DOUBLE * tot.s::DOUBLE / tot.n)
-                 / ((folded.st - tot.s::DOUBLE * tot.s::DOUBLE / tot.n)
-                    + folded.ssw), 6) + 0.0 AS eta_sq
-    FROM folded, tot
-    """,
-)
-def anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-way ANOVA of order value across the 5 order priorities — the
-    k-group generalization of welch_bh's two-sample t (F(k−1, n−k) =
-    MSB/MSW), the first screen any "does this categorical segment matter"
-    question gets before pairwise drilldowns.  Also emits eta² =
-    SSB/SST, the variance-explained effect size the F alone hides.
-
-    Parity: values are whole dollars (FLOOR(price + 0.5), exact BIGINT);
-    per-group n/s/ss are exact BIGINT sums; every per-group term is
-    s::DOUBLE · s::DOUBLE / n where s < 2^53 (the int64→double
-    conversions are correctly rounded single instructions in both
-    engines); the k-term SSB/SSW sums are g-ordered IEEE folds (the
-    chi2_independence discipline).  ROUNDed outputs carry `+ 0.0`.
-    Scale: one groupBy(priority) with map-side combine; folds run on the
-    k-row group frame — the corpus is scanned once."""
-    o = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderpriority").alias("g"),
-        F.floor(F.col("o_totalprice") + 0.5).cast("long").alias("v"),
-    )
-    grp = o.groupBy("g").agg(
-        F.count("*").cast("long").alias("ng"),
-        F.sum("v").cast("long").alias("sg"),
-        F.sum(F.col("v") * F.col("v")).cast("long").alias("ssg"),
-    )
-    tot = grp.agg(
-        F.count("*").cast("long").alias("k"),
-        F.sum("ng").cast("long").alias("n"),
-        F.sum("sg").cast("long").alias("s"),
-        F.sum("ssg").cast("long").alias("ss"),
-    )
-    sgd = F.col("sg").cast("double")
-    terms = grp.select(
-        "g",
-        (sgd * sgd / F.col("ng")).alias("t"),
-        (F.col("ssg").cast("double") - sgd * sgd / F.col("ng")).alias("w"),
-    )
-    folded = terms.agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("g", "t"))),
-            F.lit(0.0),
-            lambda acc, s: acc + s["t"],
-        ).alias("st"),
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("g", "w"))),
-            F.lit(0.0),
-            lambda acc, s: acc + s["w"],
-        ).alias("ssw"),
-    )
-    j = folded.crossJoin(F.broadcast(tot))
-    sd = F.col("s").cast("double")
-    ssb = F.col("st") - sd * sd / F.col("n")
-    return j.select(
-        "k",
-        "n",
-        (F.col("k") - 1).cast("long").alias("dof1"),
-        (F.col("n") - F.col("k")).cast("long").alias("dof2"),
-        (F.round(ssb, 6) + F.lit(0.0)).alias("ss_between"),
-        (F.round(F.col("ssw"), 6) + F.lit(0.0)).alias("ss_within"),
-        (
-            F.round(
-                (ssb / (F.col("k") - 1)) / (F.col("ssw") / (F.col("n") - F.col("k"))),
-                6,
-            )
-            + F.lit(0.0)
-        ).alias("f_stat"),
-        (F.round(ssb / (ssb + F.col("ssw")), 6) + F.lit(0.0)).alias("eta_sq"),
-    )
-
-
-@query(
-    "iv_wald",
-    """
-    WITH d AS (
-        SELECT FLOOR(o_totalprice * 100.0 + 0.5)::BIGINT AS cents,
-               ('0x' || substr(md5('ivz:' || o_orderkey::VARCHAR), 1, 8))::BIGINT
-                   % 2 AS z,
-               ('0x' || substr(md5('ivx:' || o_orderkey::VARCHAR), 1, 8))::BIGINT
-                   % 100 AS h2
-        FROM orders
-    ),
-    t AS (
-        SELECT cents, z,
-               CASE WHEN cents >= 25000000 THEN 1 ELSE 0 END AS e,
-               CASE WHEN h2 < 10 + 60 * z
-                         + 30 * (CASE WHEN cents >= 25000000 THEN 1 ELSE 0 END)
-                    THEN 1 ELSE 0 END AS x
-        FROM d
-    ),
-    y AS (SELECT z, x, cents % 10000 + 5000 * e + 1000 * x AS y FROM t),
-    s AS (
-        SELECT COUNT(*)::BIGINT AS n,
-               SUM(z)::BIGINT AS n1, SUM(1 - z)::BIGINT AS n0,
-               SUM(z * x)::BIGINT AS sx1, SUM((1 - z) * x)::BIGINT AS sx0,
-               SUM(z * y)::BIGINT AS sy1, SUM((1 - z) * y)::BIGINT AS sy0,
-               SUM(x)::BIGINT AS m1, SUM(1 - x)::BIGINT AS m0,
-               SUM(x * y)::BIGINT AS t1, SUM((1 - x) * y)::BIGINT AS t0
-        FROM y
-    )
-    SELECT n, n1, n0, 1000::BIGINT AS planted_tau_cents,
-           ROUND((sx1 * n0 - sx0 * n1)::DOUBLE / (n1 * n0), 6) AS first_stage,
-           ROUND((sy1 * n0 - sy0 * n1)::DOUBLE / (n1 * n0), 6) AS itt_cents,
-           ROUND((sy1 * n0 - sy0 * n1)::DOUBLE / (sx1 * n0 - sx0 * n1), 6)
-               AS beta_iv_cents,
-           ROUND((t1 * m0 - t0 * m1)::DOUBLE / (m1 * m0), 6) AS beta_naive_cents
-    FROM s
-    """,
-)
-def iv_wald(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Instrumental-variables Wald estimator on a derived encouragement
-    design — the causal tool for when treatment is self-selected but an
-    exogenous nudge exists (the classic draft-lottery / encouragement-
-    email setting).  Derivation: instrument z = md5 coin (exogenous by
-    construction); confounder e = high-value order (cents ≥ 250k, the
-    median cut — carved from the HIGH bits of the price); outcome
-    baseline = cents mod 10000 (the LOW bits — independent of e by
-    construction, so σ_y stays small enough that the planted effect is
-    measurable); treatment uptake P(x=1) = (10 + 60z + 30e)/100 (md5
-    inverse-CDF draw: monotone in z, confounded by e); outcome y =
-    baseline + 5000·e + 1000·x (planted τ = $10).  β_IV = Δy/Δx across
-    instrument arms recovers τ; the naive treated-vs-untreated diff
-    picks up the 5000·e confound through P(e|x=1) > P(e|x=0) — the gate
-    re-proves the bias story every run (first_stage ≈ 0.6, beta_iv ≈
-    1000, beta_naive ≈ 2500).
-
-    Parity: ONE aggregate of conditional exact-BIGINT sums; each output
-    is a single division of exact integers (Wald ratio cross-multiplied:
-    (sy1·n0 − sy0·n1)/(sx1·n0 − sx0·n1) — products ≤ ~1e17 stay in
-    BIGINT; int64→double casts are correctly rounded in both engines).
-    Scale: map-side-combined scalar aggregate, one corpus scan, no
-    shuffle wider than the 11-field sum vector."""
-    from fusionspark.operators.dedup import md5_hash32
-
-    o = load_table(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast("long")
-    z = md5_hash32(F.concat(F.lit("ivz:"), F.col("o_orderkey").cast("string"))) % 2
-    h2 = md5_hash32(F.concat(F.lit("ivx:"), F.col("o_orderkey").cast("string"))) % 100
-    e = F.when(cents >= 25000000, 1).otherwise(0)
-    d = o.select(cents.alias("cents"), z.alias("z"), h2.alias("h2"), e.alias("e"))
-    x = F.when(F.col("h2") < 10 + 60 * F.col("z") + 30 * F.col("e"), 1).otherwise(0)
-    yv = d.select(
-        "z",
-        x.alias("x"),
-        (F.col("cents") % 10000 + 5000 * F.col("e") + 1000 * x).alias("y"),
-    )
-    s = yv.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("z").cast("long").alias("n1"),
-        F.sum(1 - F.col("z")).cast("long").alias("n0"),
-        F.sum(F.col("z") * F.col("x")).cast("long").alias("sx1"),
-        F.sum((1 - F.col("z")) * F.col("x")).cast("long").alias("sx0"),
-        F.sum(F.col("z") * F.col("y")).cast("long").alias("sy1"),
-        F.sum((1 - F.col("z")) * F.col("y")).cast("long").alias("sy0"),
-        F.sum("x").cast("long").alias("m1"),
-        F.sum(1 - F.col("x")).cast("long").alias("m0"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("t1"),
-        F.sum((1 - F.col("x")) * F.col("y")).cast("long").alias("t0"),
-    )
-    return s.select(
-        "n",
-        "n1",
-        "n0",
-        F.lit(1000).cast("long").alias("planted_tau_cents"),
-        F.round(
-            (F.col("sx1") * F.col("n0") - F.col("sx0") * F.col("n1")).cast("double")
-            / (F.col("n1") * F.col("n0")),
-            6,
-        ).alias("first_stage"),
-        F.round(
-            (F.col("sy1") * F.col("n0") - F.col("sy0") * F.col("n1")).cast("double")
-            / (F.col("n1") * F.col("n0")),
-            6,
-        ).alias("itt_cents"),
-        F.round(
-            (F.col("sy1") * F.col("n0") - F.col("sy0") * F.col("n1")).cast("double")
-            / (F.col("sx1") * F.col("n0") - F.col("sx0") * F.col("n1")),
-            6,
-        ).alias("beta_iv_cents"),
-        F.round(
-            (F.col("t1") * F.col("m0") - F.col("t0") * F.col("m1")).cast("double")
-            / (F.col("m1") * F.col("m0")),
-            6,
-        ).alias("beta_naive_cents"),
-    )
-
-
-@query(
-    "granger_causality",
-    """
-    WITH daily AS (
-        SELECT ts::DATE AS d,
-               SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)::BIGINT AS x,
-               SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS y
-        FROM events GROUP BY 1
-    ),
-    pairs AS (
-        SELECT t.y AS yt, p.y AS yl, p.x AS xl, 'clicks->purchases' AS direction
-        FROM daily t JOIN daily p ON p.d = t.d - INTERVAL 1 DAY
-        UNION ALL
-        SELECT t.x AS yt, p.x AS yl, p.y AS xl, 'purchases->clicks' AS direction
-        FROM daily t JOIN daily p ON p.d = t.d - INTERVAL 1 DAY
-    ),
-    s AS (
-        SELECT direction, COUNT(*)::BIGINT AS n,
-               SUM(yt)::BIGINT AS sy, SUM(yl)::BIGINT AS sl, SUM(xl)::BIGINT AS sx,
-               SUM(yt * yt)::BIGINT AS syy, SUM(yl * yl)::BIGINT AS sll,
-               SUM(xl * xl)::BIGINT AS sxx, SUM(yt * yl)::BIGINT AS syl,
-               SUM(yt * xl)::BIGINT AS syx, SUM(yl * xl)::BIGINT AS slx
-        FROM pairs GROUP BY direction
-    ),
-    c AS (
-        SELECT direction, n,
-               (n * syy - sy * sy)::BIGINT AS cyy,
-               (n * sll - sl * sl)::BIGINT AS cll,
-               (n * sxx - sx * sx)::BIGINT AS cxx,
-               (n * syl - sy * sl)::BIGINT AS cyl,
-               (n * syx - sy * sx)::BIGINT AS cyx,
-               (n * slx - sl * sx)::BIGINT AS clx
-        FROM s
-    ),
-    fit AS (
-        SELECT direction, n,
-               (cyl * cxx - cyx * clx)::DOUBLE
-                   / (cll * cxx - clx * clx)::DOUBLE AS b,
-               (cll * cyx - clx * cyl)::DOUBLE
-                   / (cll * cxx - clx * clx)::DOUBLE AS cc,
-               cyy, cll, cyl, cyx
-        FROM c
-    ),
-    rss AS (
-        SELECT direction, n, b, cc,
-               (cyy::DOUBLE - (cyl::DOUBLE * cyl) / cll) / n AS rss_r,
-               (cyy::DOUBLE - b * cyl - cc * cyx) / n AS rss_u
-        FROM fit
-    )
-    SELECT direction, n,
-           ROUND(b, 6) + 0.0 AS beta_own_lag,
-           ROUND(cc, 6) + 0.0 AS beta_cross_lag,
-           ROUND(rss_r, 6) + 0.0 AS rss_restricted,
-           ROUND(rss_u, 6) + 0.0 AS rss_unrestricted,
-           ROUND((rss_r - rss_u) * (n - 3) / rss_u, 6) + 0.0 AS f_stat
-    FROM rss
-    """,
-)
-def granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lag-1 Granger causality between the daily click and purchase
-    series, BOTH directions — the time-series screen for "does knowing
-    yesterday's X improve today's Y forecast beyond Y's own history":
-    F = ((RSS_r − RSS_u)/1) / (RSS_u/(T−3)) comparing y_t ~ a + b·y_{t−1}
-    against y_t ~ a + b·y_{t−1} + c·x_{t−1} (Granger 1969).
-
-    Parity: daily counts are exact BIGINT; the intercept is eliminated by
-    n-scaled CENTERED moments (C_ab = n·S_ab − S_a·S_b, exact BIGINT —
-    ≤ ~4e8 at sf0.1, int64 headroom to ~sf1); the OLS coefficients are
-    single divisions of exact ≤1e17 integers (int64→double conversion is
-    a correctly-rounded instruction in both engines), and RSS/F are one
-    fixed expression tree on those doubles.  Consecutive-day pairs come
-    from a calendar self-join (a gap day drops its pair — deterministic).
-    ROUNDed outputs carry `+ 0.0` (RSS_r − RSS_u ≥ 0 only in exact
-    arithmetic; the FP difference can round to a signed zero).  Scale:
-    one groupBy(day) over the corpus with map-side combine; the join,
-    centering, fit, and F all run on the |days|-row frame."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(F.to_date("ts").alias("d")).agg(
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("long")
-        .alias("x"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("long")
-        .alias("y"),
-    )
-    prev = daily.select(
-        F.date_add("d", 1).alias("d"),
-        F.col("y").alias("yl"),
-        F.col("x").alias("xl"),
-    )
-    base = daily.join(prev, "d")
-    pairs = base.select(
-        F.col("y").alias("yt"), "yl", "xl", F.lit("clicks->purchases").alias(
-            "direction"
-        )
-    ).unionByName(
-        base.select(
-            F.col("x").alias("yt"),
-            F.col("xl").alias("yl"),
-            F.col("yl").alias("xl"),
-            F.lit("purchases->clicks").alias("direction"),
-        )
-    )
-    s = pairs.groupBy("direction").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("yt").cast("long").alias("sy"),
-        F.sum("yl").cast("long").alias("sl"),
-        F.sum("xl").cast("long").alias("sx"),
-        F.sum(F.col("yt") * F.col("yt")).cast("long").alias("syy"),
-        F.sum(F.col("yl") * F.col("yl")).cast("long").alias("sll"),
-        F.sum(F.col("xl") * F.col("xl")).cast("long").alias("sxx"),
-        F.sum(F.col("yt") * F.col("yl")).cast("long").alias("syl"),
-        F.sum(F.col("yt") * F.col("xl")).cast("long").alias("syx"),
-        F.sum(F.col("yl") * F.col("xl")).cast("long").alias("slx"),
-    )
-    c = s.select(
-        "direction",
-        "n",
-        (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).alias("cyy"),
-        (F.col("n") * F.col("sll") - F.col("sl") * F.col("sl")).alias("cll"),
-        (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).alias("cxx"),
-        (F.col("n") * F.col("syl") - F.col("sy") * F.col("sl")).alias("cyl"),
-        (F.col("n") * F.col("syx") - F.col("sy") * F.col("sx")).alias("cyx"),
-        (F.col("n") * F.col("slx") - F.col("sl") * F.col("sx")).alias("clx"),
-    )
-    det = (F.col("cll") * F.col("cxx") - F.col("clx") * F.col("clx")).cast("double")
-    b = (F.col("cyl") * F.col("cxx") - F.col("cyx") * F.col("clx")).cast(
-        "double"
-    ) / det
-    cc = (F.col("cll") * F.col("cyx") - F.col("clx") * F.col("cyl")).cast(
-        "double"
-    ) / det
-    fit = c.select("direction", "n", b.alias("b"), cc.alias("cc"), "cyy", "cll",
-                   "cyl", "cyx")
-    rss_r = (
-        F.col("cyy").cast("double")
-        - (F.col("cyl").cast("double") * F.col("cyl")) / F.col("cll")
-    ) / F.col("n")
-    rss_u = (
-        F.col("cyy").cast("double")
-        - F.col("b") * F.col("cyl")
-        - F.col("cc") * F.col("cyx")
-    ) / F.col("n")
-    rss = fit.select("direction", "n", "b", "cc", rss_r.alias("rss_r"),
-                     rss_u.alias("rss_u"))
-    return rss.select(
-        "direction",
-        "n",
-        (F.round("b", 6) + F.lit(0.0)).alias("beta_own_lag"),
-        (F.round("cc", 6) + F.lit(0.0)).alias("beta_cross_lag"),
-        (F.round("rss_r", 6) + F.lit(0.0)).alias("rss_restricted"),
-        (F.round("rss_u", 6) + F.lit(0.0)).alias("rss_unrestricted"),
-        (
-            F.round(
-                (F.col("rss_r") - F.col("rss_u")) * (F.col("n") - 3)
-                / F.col("rss_u"),
-                6,
-            )
-            + F.lit(0.0)
-        ).alias("f_stat"),
     )
 
 
@@ -9173,8 +3499,6 @@ def gamma_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # studentized-range critical value q_{.05}(k=5, df=inf) / sqrt(2) folded in:
 # we compare |mi - mj| / sqrt(MSW * (1/ni + 1/nj) / 2) against q = 3.858.
 _TUKEY_Q_NUM = 3858
-
-_TUKEY_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 
 @query(

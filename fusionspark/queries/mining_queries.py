@@ -7,8 +7,7 @@ Float-parity discipline (COVERAGE.md round-3 classes): every statistic
 reduces to INTEGER counts first; doubles enter only in final closed-form
 expressions written identically on both engines, and the one genuinely
 sequential float recursion (the KM survival product) runs as an ordered
-array fold with bit-identical left-to-right IEEE ops on both engines
-(the ets_forecast discipline, analytics_queries.py).
+array fold with bit-identical left-to-right IEEE ops on both engines.
 """
 
 from __future__ import annotations
@@ -548,9 +547,8 @@ def rfm_segments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one groupBy(custkey) with map-side combine collapses
     the order corpus; the three NTILE windows run over the CUSTOMER
     table (orders/10 rows).  A global NTILE is a single-partition sort
-    at extreme scale — there the scores switch to the mergeable
-    histogram-quantile cut (histogram_quantiles) with identical
-    segment semantics."""
+    at extreme scale — there the scores would switch to a mergeable
+    histogram-quantile cut with identical segment semantics."""
     o = load_table(spark, sf_dir, "orders")
     hz = o.agg(F.max(F.to_date("o_orderdate")).alias("h"))
     rfm = (

@@ -33,6 +33,19 @@ def _text_id(text: str) -> str:
     return "doc_" + hashlib.sha256(text.encode("utf-8")).hexdigest()[:16]
 
 
+def _fault(exc: Exception, what: str) -> tuple[int, dict]:
+    """The one error rule of routes and tools: a KeyError or ValueError is
+    the client's fault (400); anything else is a server fault (500),
+    logged once with its traceback under the errorId the answer carries."""
+    if isinstance(exc, KeyError):
+        return 400, {"error": f"missing field {exc}"}
+    if isinstance(exc, ValueError):
+        return 400, {"error": str(exc)}
+    error_id = uuid.uuid4().hex
+    log.error("%s failed (errorId %s)", what, error_id, exc_info=exc)
+    return 500, {"error": "internal server error", "errorId": error_id}
+
+
 class Router:
     """Dispatch (method, path, body) → (status, payload)."""
 
@@ -178,16 +191,10 @@ class Router:
             if path == "/mcp/tools" and method == "GET":
                 return 200, self.tool_manifest()
             if path == "/mcp/call" and method == "POST":
-                return 200, self.call_tool(body.get("tool", ""), body.get("args") or {})
+                return self._call(body.get("tool", ""), body.get("args") or {})
             return 404, {"error": f"Not found: {method} {path}"}
-        except KeyError as e:
-            return 400, {"error": f"missing field {e}"}
-        except ValueError as e:
-            return 400, {"error": str(e)}
-        except Exception:  # noqa: BLE001 — protocol boundary: a server fault
-            error_id = uuid.uuid4().hex
-            log.exception("%s %s failed (errorId %s)", method, path, error_id)
-            return 500, {"error": "internal server error", "errorId": error_id}
+        except Exception as e:  # noqa: BLE001 — protocol boundary
+            return _fault(e, f"{method} {path}")
 
     # ── MCP-style tools (MCPServer.js:50-107) ─────────────────────────────
 
@@ -451,13 +458,17 @@ class Router:
         }
 
     def call_tool(self, tool: str, args: dict) -> dict:
+        """{"result": ...}, or {"error": ...} under the routes' error rule."""
+        return self._call(tool, args)[1]
+
+    def _call(self, tool: str, args: dict) -> tuple[int, dict]:
         tools = self._tools()
         if tool not in tools:
-            return {"error": f"Unknown tool: {tool}"}
+            return 404, {"error": f"Unknown tool: {tool}"}
         try:
-            return {"result": tools[tool][1](args)}
+            return 200, {"result": tools[tool][1](args)}
         except Exception as e:  # noqa: BLE001 — protocol boundary
-            return {"error": str(e)}
+            return _fault(e, f"tool {tool}")
 
 
 # ── MCP stdio transport (MCPServer.js:107-127) ────────────────────────────
@@ -492,11 +503,10 @@ def handle_mcp_message(router: Router, msg: dict) -> dict | None:
         params = msg.get("params") or {}
         out = router.call_tool(params.get("name", ""), params.get("arguments") or {})
         if "error" in out:
-            return {
-                "jsonrpc": "2.0",
-                "id": mid,
-                "error": {"code": -32000, "message": out["error"]},
-            }
+            error = {"code": -32000, "message": out["error"]}
+            if "errorId" in out:
+                error["data"] = {"errorId": out["errorId"]}
+            return {"jsonrpc": "2.0", "id": mid, "error": error}
         return {
             "jsonrpc": "2.0",
             "id": mid,

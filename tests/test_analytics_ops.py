@@ -151,26 +151,6 @@ def test_containment_scores_subdocument_one(spark):
     assert jac[(1, 2)] < 1.0
 
 
-def test_grid_proximity_join_boundaries(spark):
-    from fusionspark.operators.joins import grid_proximity_join
-
-    pts = spark.createDataFrame(
-        [
-            (1, 95, 50),    # cell (0,0)
-            (2, 105, 50),   # cell (1,0): 10 apart, crosses the cell edge
-            (3, 95, 150),   # exactly r=100 from point 1 → included (d² = r²)
-            (4, 300, 300),  # isolated
-        ],
-        "id long, x long, y long",
-    )
-    got = {(r.id_a, r.id_b): r.dist_sq
-           for r in grid_proximity_join(pts, radius=100).collect()}
-    assert got[(1, 2)] == 100            # found across the cell edge
-    assert got[(1, 3)] == 10000          # exactly r → boundary-inclusive
-    # (2,3): 10² + 100² = 10100 > r² → excluded even though cells adjoin
-    assert set(got) == {(1, 2), (1, 3)}
-
-
 def test_lpa_two_triangles_with_bridge(spark):
     """Two triangles joined by one bridge edge: LPA must keep them as two
     communities labeled by each triangle's min node id; the isolated node
@@ -194,57 +174,6 @@ def test_lpa_two_triangles_with_bridge(spark):
     assert out[6] == 6  # isolated keeps its own label
 
 
-def _hw_reference(ys):
-    """Textbook additive Holt-Winters (alpha 1/4, beta 1/8, gamma 1/4,
-    weekly ring, classical first-week init) — the pure-Python replay of
-    hw_forecast's fold."""
-    l = sum(ys[:7]) / 7.0
-    t = 0.0
-    s = [y - l for y in ys[:7]]
-    for y in ys[7:]:
-        s0 = s.pop(0)
-        lnew = 0.25 * (y - s0) + 0.75 * (l + t)
-        t = 0.125 * (lnew - l) + 0.875 * t
-        s.append(0.25 * (y - lnew) + 0.75 * s0)
-        l = lnew
-    return l, t, s
-
-
-def test_hw_forecast_matches_reference_replay(spark):
-    """hw_forecast's 9-element array fold equals the scalar textbook
-    recursion on the real daily series, to rounding."""
-    import pytest as _pytest
-
-    from fusionspark.queries.analytics_queries import hw_forecast
-
-    sf = "/root/testdata/sf0.001"
-    e = spark.read.parquet(f"{sf}/events.parquet")
-    daily = (
-        e.groupBy(F.to_date("ts").alias("day")).count().orderBy("day").collect()
-    )
-    ys = [float(r["count"]) for r in daily]
-    assert len(ys) >= 8
-    l, t, s = _hw_reference(ys)
-    got = {r.h: r.forecast for r in hw_forecast(spark, sf).collect()}
-    for h in range(1, 8):
-        want = l + h * t + s[h - 1]
-        assert got[h] == _pytest.approx(want, abs=1e-6)
-
-
-def test_hw_invariant_on_perfectly_seasonal_series():
-    """A zero-trend, exactly weekly-periodic series is a fixed point of
-    the recursion: every horizon's forecast equals mu + seasonal."""
-    pat = [10.0, -5.0, 3.0, 0.0, 7.0, -8.0, -7.0]
-    mu = 100.0
-    ys = [mu + pat[i % 7] for i in range(35)]
-    l, t, s = _hw_reference(ys)
-    assert abs(l - mu) < 1e-9 and abs(t) < 1e-9
-    # the ring is aligned so the h-step forecast mu + s[h-1] reproduces
-    # the pattern value due at step len(ys)+h-1
-    for h in range(1, 8):
-        assert abs((l + h * t + s[h - 1]) - (mu + pat[(len(ys) + h - 1) % 7])) < 1e-9
-
-
 def test_token_fertility_laws(spark):
     """fertility >= 1 (the BPE-ish regex never merges across whitespace),
     bytes/token >= chars/token (UTF-8), and the sums equal token_counts'."""
@@ -265,27 +194,3 @@ def test_token_fertility_laws(spark):
         F.sum("ws_tokens").alias("ws"), F.sum("bpe_tokens").alias("bpe")
     ).collect()[0]
     assert (total_ws, total_bpe) == (tc.ws, tc.bpe)
-
-
-def test_dbscan_planted_blobs(spark):
-    """Two tight well-separated blobs + far-flung noise: DBSCAN must
-    recover exactly two clusters (labels = each blob's min id), blob
-    members are cores (tight blob: everyone has >= 3 eps-neighbors),
-    and the isolated points come back as noise with NULL cluster."""
-    from fusionspark.operators.density import dbscan
-
-    rows = []
-    # blob A around (100, 100), ids 0..5; blob B around (5000, 5000),
-    # ids 10..15; noise ids 100..102 far from everything
-    for i in range(6):
-        rows.append((i, 100 + i * 3, 100 + (i % 2) * 4))
-        rows.append((10 + i, 5000 + i * 3, 5000 + (i % 3) * 3))
-    rows += [(100, 9000, 200), (101, 200, 9000), (102, 9500, 9500)]
-    pts = spark.createDataFrame(rows, "id long, x long, y long")
-    out = {r.id: (r.role, r.cluster) for r in dbscan(pts, d2_max=900, min_pts=3).collect()}
-    assert len(out) == len(rows)
-    for i in range(6):
-        assert out[i] == ("core", 0)
-        assert out[10 + i] == ("core", 10)
-    for nid in (100, 101, 102):
-        assert out[nid] == ("noise", None)

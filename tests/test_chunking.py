@@ -10,7 +10,6 @@ import shutil
 import subprocess
 
 import pytest
-from pyspark.sql import functions as F
 
 from fusionspark.io import load_table
 from fusionspark.operators.chunking import (
@@ -106,28 +105,6 @@ console.log(JSON.stringify(out));
     actual = [split_recursive(t, chunk_size=128, chunk_overlap=20) if len(t) > 128
               else [t] for t in texts]
     assert actual == expected
-
-
-def test_chunk_udtf_matches_mapinpandas(spark, sf_dir):
-    """The SQL-LATERAL UDTF form must produce exactly the chunk rows of
-    the mapInPandas form (same split functions, same boundaries)."""
-    from fusionspark.io import load_table
-    from fusionspark.operators.chunking import chunk_documents, chunk_udtf
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(50)
-    docs.createOrReplaceTempView("docs_udtf_test")
-    spark.udtf.register("chunks_udtf", chunk_udtf("recursive"))
-    via_udtf = spark.sql(
-        "SELECT c.doc_id, c.chunk_idx, c.chunk FROM docs_udtf_test d, "
-        "LATERAL chunks_udtf(d.doc_id, d.text) c"
-    )
-    via_map = chunk_documents(docs, strategy="recursive").select(
-        "doc_id", F.col("chunk_index").alias("chunk_idx"),
-        F.col("chunk_text").alias("chunk"),
-    )
-    a = {(r["doc_id"], r["chunk_idx"]): r["chunk"] for r in via_udtf.collect()}
-    b = {(int(r["doc_id"]), r["chunk_idx"]): r["chunk"] for r in via_map.collect()}
-    assert a and a == b
 
 
 @pytest.mark.parametrize("sf", ["0.001", "0.01", "0.1"])

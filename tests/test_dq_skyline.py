@@ -1,5 +1,6 @@
-"""Invariant tests for the session-7 analytics additions: t-closeness,
-2-D skyline, and the data-quality expectation engine."""
+"""Invariant tests for the 2-D skyline, cumulative users, the
+data-quality checks behind engine.validate, the HITS and SSSP graph
+operators, and engine.optimize."""
 
 from __future__ import annotations
 
@@ -7,50 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from fusionspark.operators import dq
-from fusionspark.queries.analytics_queries import (
-    dq_expectations,
-    skyline_parts,
-    t_closeness,
-)
+from fusionspark.queries.analytics_queries import skyline_parts
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_t_closeness_bounds_and_skew(spark):
-    out = t_closeness(spark, SF).collect()
-    assert out
-    for r in out:
-        assert 0.0 <= r["t_dist"] <= 1.0
-    # report is sorted most-skewed first
-    vals = [r["t_dist"] for r in out]
-    assert vals == sorted(vals, reverse=True)
-
-
-def test_skyline_matches_bruteforce(spark):
-    li = spark.read.parquet(f"{SF}/lineitem.parquet")
-    pts = {
-        r["part"]: (r["price"], r["qty"])
-        for r in li.groupBy(F.col("l_partkey").alias("part"))
-        .agg(
-            F.min(
-                F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast("long")
-            ).alias("price"),
-            F.sum("l_quantity").cast("long").alias("qty"),
-        )
-        .collect()
-    }
-
-    def dominated(b):
-        bp, bq = pts[b]
-        return any(
-            (ap <= bp and aq >= bq and (ap < bp or aq > bq))
-            for a, (ap, aq) in pts.items()
-            if a != b
-        )
-
-    want = {p for p in pts if not dominated(p)}
-    got = {r["part"] for r in skyline_parts(spark, SF).collect()}
-    assert got == want
 
 
 def test_dq_check_counts_violations(spark):
@@ -77,65 +37,14 @@ def test_dq_unique_and_ref_integrity(spark):
     df = spark.createDataFrame(
         [(1, 1), (1, 1), (2, 1), (3, 2)], "k: long, fk: long"
     )
-    dim = spark.createDataFrame([(1,)], "pk: long")
     uniq = dq.dq_unique(df, ["k"], "k_unique").collect()[0]
     assert uniq["n_violations"] == 1 and uniq["passed"] is False
-    ref = dq.dq_ref_integrity(df, "fk", dim, "pk", "fk_in_dim").collect()[0]
-    assert ref["n_violations"] == 1 and ref["n_rows"] == 4
-
-
-def test_dq_expectations_match_direct_recompute(spark):
-    """The suite's counts equal direct recomputation (the synthetic
-    lineitem genuinely has duplicate (l_orderkey, l_linenumber) pairs, so
-    the pk rule SHOULD fail — the suite reports reality, not hope)."""
-    rows = {r["rule"]: r for r in dq_expectations(spark, SF).collect()}
-    assert len(rows) == 6
-    li = spark.read.parquet(f"{SF}/lineitem.parquet")
-    n = li.count()
-    dup = n - li.select("l_orderkey", "l_linenumber").distinct().count()
-    assert rows["lineitem_pk_unique"]["n_violations"] == dup
-    assert rows["lineitem_pk_unique"]["passed"] == (dup == 0)
-    for rule in (
-        "l_quantity_not_null",
-        "l_discount_in_range",
-        "l_returnflag_accepted",
-        "l_quantity_max_50",
-        "l_orderkey_in_orders",
-    ):
-        assert rows[rule]["passed"], rows[rule]
-        assert rows[rule]["n_rows"] == n
 
 
 def test_dq_check_rejects_empty_rules(spark):
     df = spark.createDataFrame([(1,)], "id: long")
     with pytest.raises(ValueError):
         dq.dq_check(df, [])
-
-
-def test_theil_sen_ignores_outlier_day(spark, tmp_path):
-    """y = 10 + 2d with one wild day: the pairwise-median slope stays
-    exactly 2.0 and the intercept median stays 10.0 (OLS would not)."""
-    import pandas as pd
-
-    from fusionspark.queries.analytics_queries import theil_sen_trend
-
-    rows = []
-    eid = 0
-    for d in range(10):
-        y = 1000 if d == 5 else 10 + 2 * d
-        for _ in range(y):
-            rows.append(
-                (eid, pd.Timestamp("2024-03-01") + pd.Timedelta(days=d), 1, "click", 0.0, "{}")
-            )
-            eid += 1
-    pdf = pd.DataFrame(
-        rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
-    )
-    pdf.to_parquet(str(tmp_path / "events.parquet"))
-    out = theil_sen_trend(spark, str(tmp_path)).collect()[0]
-    assert out["n_days"] == 10 and out["n_pairs"] == 45
-    assert out["slope"] == 2.0
-    assert out["intercept"] == 10.0
 
 
 def test_engine_validate_reports_dim_violation(spark, tmp_path):
@@ -202,52 +111,6 @@ def test_server_validate_route_and_mcp_tool(spark, tmp_path):
     assert all(row["passed"] for row in got["result"]["report"])
 
 
-def test_mann_whitney_separated_groups(spark, tmp_path):
-    """purchase = {4,5,6} > click = {1,2,3}: U1 = n1·n2 = 9 exactly and
-    z = 4.5/√5.25 (no ties → zero tie correction)."""
-    import math
-
-    import pandas as pd
-
-    from fusionspark.queries.analytics_queries import mann_whitney
-
-    rows = []
-    for i, v in enumerate([1.0, 2.0, 3.0]):
-        rows.append((i, pd.Timestamp("2024-03-01"), 1, "click", v, "{}"))
-    for i, v in enumerate([4.0, 5.0, 6.0]):
-        rows.append((10 + i, pd.Timestamp("2024-03-01"), 2, "purchase", v, "{}"))
-    pd.DataFrame(
-        rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
-    ).to_parquet(str(tmp_path / "events.parquet"))
-    out = mann_whitney(spark, str(tmp_path)).collect()[0]
-    assert (out["n1"], out["n2"]) == (3, 3)
-    assert out["u1"] == 9.0
-    assert abs(out["z"] - round(4.5 / math.sqrt(5.25), 6)) < 1e-9
-
-
-def test_chi2_known_2x2_table(spark, tmp_path):
-    """2×2 with O = [[10,20],[20,10]]: all E = 15 → χ² = 4·25/15 = 20/3,
-    dof = 1."""
-    import pandas as pd
-
-    from fusionspark.queries.analytics_queries import chi2_independence
-
-    sun, mon = pd.Timestamp("2024-03-03"), pd.Timestamp("2024-03-04")
-    rows = []
-    eid = 0
-    for ts, g, cnt in [(sun, "click", 10), (mon, "click", 20),
-                       (sun, "purchase", 20), (mon, "purchase", 10)]:
-        for _ in range(cnt):
-            rows.append((eid, ts, 1, g, 0.0, "{}"))
-            eid += 1
-    pd.DataFrame(
-        rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
-    ).to_parquet(str(tmp_path / "events.parquet"))
-    out = chi2_independence(spark, str(tmp_path)).collect()[0]
-    assert out["dof"] == 1 and out["n_cells"] == 4
-    assert abs(out["chi2"] - round(20.0 / 3.0, 6)) < 1e-9
-
-
 def test_hits_star_graph(spark):
     """0 → {1,2,3}: node 0 is the only hub, 1-3 are equal authorities."""
     from fusionspark.operators.graph import hits
@@ -258,33 +121,6 @@ def test_hits_star_graph(spark):
     assert out[0] == (1.0, 0.0)
     for i in (1, 2, 3):
         assert out[i] == (0.0, 1.0)
-
-
-def test_bootstrap_ci_brackets_mean_and_is_deterministic(spark):
-    from fusionspark.queries.analytics_queries import bootstrap_ci
-
-    r1 = bootstrap_ci(spark, SF).collect()[0]
-    r2 = bootstrap_ci(spark, SF).collect()[0]
-    assert tuple(r1) == tuple(r2)  # md5-seeded: bit-reproducible
-    assert r1["n_resamples"] == 200
-    assert r1["ci_lo"] <= r1["mean_value"] <= r1["ci_hi"]
-    # 95% CI of a 1000-row mean should be tight but nonzero
-    assert 0.0 < r1["ci_hi"] - r1["ci_lo"] < 10.0
-
-
-def test_median_by_type_matches_numpy(spark):
-    import numpy as np
-
-    from fusionspark.queries.analytics_queries import median_by_type
-
-    ev = spark.read.parquet(f"{SF}/events.parquet").select("event_type", "value")
-    got = {r["event_type"]: (r["median_value"], r["n"]) for r in
-           median_by_type(spark, SF).collect()}
-    pdf = ev.toPandas()
-    for g, sub in pdf.groupby("event_type"):
-        cents = np.floor(sub["value"].to_numpy() * 100.0 + 0.5).astype(np.int64)
-        want = round(float(np.median(cents)) / 100.0, 6)
-        assert got[g] == (want, len(sub)), g
 
 
 def test_cumulative_users_bruteforce(spark):
@@ -337,23 +173,6 @@ def test_engine_optimize_compacts_manifest_collection(spark, tmp_path):
     assert eng2.optimize("c")["compacted"] is False
 
 
-def test_quantiles_by_type_matches_numpy_lower(spark):
-    import math
-
-    import numpy as np
-
-    from fusionspark.queries.analytics_queries import quantiles_by_type
-
-    got = {r["event_type"]: r for r in quantiles_by_type(spark, SF).collect()}
-    pdf = spark.read.parquet(f"{SF}/events.parquet").select("event_type", "value").toPandas()
-    for g, sub in pdf.groupby("event_type"):
-        cents = np.sort(np.floor(sub["value"].to_numpy() * 100.0 + 0.5).astype(np.int64))
-        n = len(cents)
-        for p, col in ((0.5, "p50"), (0.9, "p90"), (0.99, "p99")):
-            want = round(float(cents[math.ceil(p * n) - 1]) / 100.0, 6)
-            assert got[g][col] == want, (g, col)
-
-
 def test_dq_check_rule_name_with_quote(spark):
     """Rule names are data, not SQL: quotes/backslashes in a name must
     flow through to the report verbatim (the selectExpr-interpolation
@@ -364,3 +183,30 @@ def test_dq_check_rule_name_with_quote(spark):
     assert len(out) == 1
     assert out[0].rule == name
     assert out[0].n_violations == 1 and not out[0].passed
+
+
+def test_skyline_matches_bruteforce(spark):
+    li = spark.read.parquet(f"{SF}/lineitem.parquet")
+    pts = {
+        r["part"]: (r["price"], r["qty"])
+        for r in li.groupBy(F.col("l_partkey").alias("part"))
+        .agg(
+            F.min(
+                F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast("long")
+            ).alias("price"),
+            F.sum("l_quantity").cast("long").alias("qty"),
+        )
+        .collect()
+    }
+
+    def dominated(b):
+        bp, bq = pts[b]
+        return any(
+            (ap <= bp and aq >= bq and (ap < bp or aq > bq))
+            for a, (ap, aq) in pts.items()
+            if a != b
+        )
+
+    want = {p for p in pts if not dominated(p)}
+    got = {r["part"] for r in skyline_parts(spark, SF).collect()}
+    assert got == want

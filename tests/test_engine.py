@@ -706,3 +706,21 @@ def test_same_microsecond_writes_keep_distinct_ids(engine, monkeypatch):
     engine.add_message("a1", "t1", "assistant", "hi there")
     convo = engine.get_conversation("a1", "t1")
     assert sorted(m["content"] for m in convo) == ["hello", "hi there"]
+
+
+def test_failed_collision_probe_raises_instead_of_appending(engine, monkeypatch):
+    """A read failure on a written collection is not "not written yet": the
+    upsert and list_collections raise, and no duplicate id lands."""
+    engine.create_collection("p", CollectionConfig(dimensions=4))
+    engine.insert("p", [{"id": "x", "vector": [1, 0, 0, 0]}])
+
+    def broken(collection):
+        raise RuntimeError("storage unreadable")
+
+    monkeypatch.setattr(engine, "_load", broken)
+    with pytest.raises(RuntimeError, match="unreadable"):
+        engine.insert("p", [{"id": "x", "vector": [0, 1, 0, 0]}])
+    with pytest.raises(RuntimeError, match="unreadable"):
+        engine.list_collections()
+    monkeypatch.undo()
+    assert [r["id"] for r in engine._load("p").collect()] == ["x"]

@@ -33,84 +33,6 @@ def test_luhn_expression_equals_textbook(num):
     assert ours == (tot % 10 == 0)
 
 
-@settings(max_examples=100, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 50), st.integers(1, 50)).map(
-            lambda t: (min(t[0], t[1]), t[1])
-        ),
-        min_size=2,
-        max_size=12,
-    )
-)
-def test_isotonic_minimax_equals_pav(buckets):
-    """max_{j<=i} min_{k>=i} avg(y_j..y_k) == pool-adjacent-violators,
-    for arbitrary (pos, cnt) bucket sequences (the identity the
-    isotonic_calibration oracle relies on)."""
-    n = len(buckets)
-    # minimax
-    cpos = [0]
-    ccnt = [0]
-    for p, c in buckets:
-        cpos.append(cpos[-1] + p)
-        ccnt.append(ccnt[-1] + c)
-
-    def avg(j, k):
-        return (cpos[k + 1] - cpos[j]) / (ccnt[k + 1] - ccnt[j])
-
-    minimax = []
-    for i in range(n):
-        best = -math.inf
-        for j in range(i + 1):
-            m = min(avg(j, k) for k in range(i, n))
-            best = max(best, m)
-        minimax.append(best)
-    # PAV
-    pools = []
-    for p, c in buckets:
-        pools.append([p, c])
-        while len(pools) > 1 and (
-            pools[-2][0] * pools[-1][1] >= pools[-1][0] * pools[-2][1]
-        ):
-            b = pools.pop()
-            pools[-1][0] += b[0]
-            pools[-1][1] += b[1]
-    pav = []
-    for p, c in pools:
-        cnt_left = c
-        # expand pool over the buckets it absorbed
-        while cnt_left > 0:
-            take = buckets[len(pav)][1]
-            pav.append(p / c)
-            cnt_left -= take
-    assert len(pav) == n
-    for a, b in zip(minimax, pav):
-        assert abs(a - b) < 1e-9
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    st.lists(st.integers(0, 10_000), min_size=12, max_size=40),
-)
-def test_mann_kendall_invariances(xs):
-    """S flips sign under series reversal; |S| is bounded by n(n-1)/2;
-    a strictly increasing series attains the bound."""
-    def s_stat(v):
-        return sum(
-            (v[j] > v[i]) - (v[j] < v[i])
-            for i in range(len(v))
-            for j in range(i + 1, len(v))
-        )
-
-    n = len(xs)
-    s = s_stat(xs)
-    assert s_stat(list(reversed(xs))) == -s
-    assert abs(s) <= n * (n - 1) // 2
-    inc = sorted(set(xs))
-    if len(inc) >= 2:
-        assert s_stat(inc) == len(inc) * (len(inc) - 1) // 2
-
-
 @settings(max_examples=60, deadline=None)
 @given(
     st.lists(st.integers(1, 1000), min_size=2, max_size=30),

@@ -29,8 +29,8 @@ UNREACHABLE_FAMILIES = {
     # the query registry and its fixtures (DuckDB-oracle contract)
     "queries": ["fusionspark.fixtures", "fusionspark.queries"] + [
         f"fusionspark.queries.{m}_queries"
-        for m in """analytics cdc clustering composition embedding eval extended
-        inference layout mining multimodal pipeline rag relational spectral
+        for m in """analytics cdc clustering composition embedding eval
+        extended layout mining multimodal pipeline rag relational spectral
         text tree url vector""".split()
     ],
     "media": [
@@ -44,8 +44,8 @@ UNREACHABLE_FAMILIES = {
     # batch analytics operators behind registry queries
     "analytics": [
         f"fusionspark.operators.{m}"
-        for m in """cdc density embeddings graph joins layout ranking sampling
-        simjoin sketches urls""".split()
+        for m in """cdc embeddings graph joins layout ranking sampling simjoin
+        sketches urls""".split()
     ],
     # reference ports with no route: wire each to the engine or delete it
     "unwired_ports": [

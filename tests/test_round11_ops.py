@@ -1,8 +1,9 @@
-"""Round-11 operator tests: log-rank test, MDE, post-stratification ATE,
-split-conformal intervals, GRPO advantages, ROUGE eval — each checked
-against an INDEPENDENT pure-Python/textbook recomputation (the third-
-implementation discipline), plus behavioral laws (planted effects,
-coverage bounds, clipped counts)."""
+"""Round-11 operator tests: split-conformal intervals, GRPO advantages,
+ROUGE eval, CDC chunking, PRF expansion, window funnels and the other
+text/mining operators — each checked against an INDEPENDENT
+pure-Python/textbook recomputation (the third-implementation
+discipline), plus behavioral laws (planted effects, coverage bounds,
+clipped counts)."""
 
 from __future__ import annotations
 
@@ -12,135 +13,12 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from fusionspark.queries.analytics_queries import (
-    ab_power_mde,
-    conformal_interval,
-    logrank_test,
-    post_strat_ate,
-)
+from fusionspark.queries.analytics_queries import conformal_interval
 from fusionspark.queries.pipeline_queries import grpo_advantages, rouge_eval
 
 
 def _coin(salt: str, key) -> int:
     return int(hashlib.md5(f"{salt}{key}".encode()).hexdigest()[:8], 16)
-
-
-# ---------------------------------------------------------------------------
-# log-rank
-# ---------------------------------------------------------------------------
-
-
-def test_logrank_textbook_replay(spark, sf_dir):
-    """Pure-Python hypergeometric replay of the full statistic from the
-    same derived (g, t, ev) frame — O1/E1/V/z must match exactly."""
-    from fusionspark.io import load_table
-
-    o = load_table(spark, sf_dir, "orders")
-    c = o.groupBy("o_custkey").agg(
-        F.min(F.to_date("o_orderdate")).alias("t0"),
-        F.max(F.to_date("o_orderdate")).alias("t1"),
-    ).collect()
-    h = max(r.t1 for r in c)
-    data = [
-        (
-            r.o_custkey % 2,
-            (r.t1 - r.t0).days,
-            1 if (h - r.t1).days > 90 else 0,
-        )
-        for r in c
-    ]
-    times = sorted({t for _, t, _ in data})
-    o1 = sum(ev for g, _, ev in data if g == 1)
-    e1 = v = 0.0
-    for t in times:
-        n0 = sum(1 for g, tt, _ in data if g == 0 and tt >= t)
-        n1 = sum(1 for g, tt, _ in data if g == 1 and tt >= t)
-        d0 = sum(ev for g, tt, ev in data if g == 0 and tt == t)
-        d1 = sum(ev for g, tt, ev in data if g == 1 and tt == t)
-        d, n = d0 + d1, n0 + n1
-        if d > 0 and n > 1:
-            e1 += (d * n1) / n
-            v += (d * n1 * n0 * (n - d)) / (n * n * (n - 1))
-    row = logrank_test(spark, sf_dir).collect()[0]
-    assert row.o1 == o1
-    assert row.e1 == round(e1, 6)
-    assert row.var1 == round(v, 6)
-    assert row.z == round((o1 - e1) / math.sqrt(v), 6)
-
-
-def test_logrank_identical_groups_z_near_zero(spark, sf_dir):
-    """Parity split of a symmetric population: |z| stays small (the
-    key-parity groups share the duration distribution up to sampling)."""
-    row = logrank_test(spark, sf_dir).collect()[0]
-    assert row.z is not None
-    assert abs(row.z) < 3.0
-
-
-# ---------------------------------------------------------------------------
-# MDE
-# ---------------------------------------------------------------------------
-
-
-def test_mde_closed_form_and_monotonicity(spark, sf_dir):
-    row = ab_power_mde(spark, sf_dir).collect()[0]
-    za = 1959963984540054 / 10**15
-    zb = 841621233572914 / 10**15
-    pp = (row.c0 + row.c1) / (row.n0 + row.n1)
-    expect = (za + zb) * math.sqrt(pp * (1.0 - pp) * (1.0 / row.n0 + 1.0 / row.n1))
-    assert row.mde_abs == round(expect, 6)
-    # quadrupling both arms must halve the MDE (1/sqrt(n) law)
-    half = (za + zb) * math.sqrt(
-        pp * (1.0 - pp) * (1.0 / (4 * row.n0) + 1.0 / (4 * row.n1))
-    )
-    assert abs(half - expect / 2) < 1e-12
-
-
-# ---------------------------------------------------------------------------
-# post-stratification ATE
-# ---------------------------------------------------------------------------
-
-
-def test_post_strat_ate_recovers_planted_lift(spark, sf_dir):
-    """The planted treated lift is 1000 + 50·(custkey mod 7) cents
-    (population mean ≈ $11.50) under a BY-STRATUM confounded assignment
-    (p_treat 30%–70%, baseline 2000·segcode cents): the stratified
-    estimator must land near the estimand while the naive diff absorbs
-    the baseline imbalance; a pure-Python replay must match exactly."""
-    from fusionspark.io import load_table
-
-    rows = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    ).collect()
-    agg: dict[str, list[int]] = {}
-    for r in rows:
-        segcode = ord(r.c_mktsegment[0]) % 5
-        w = 1 if _coin("ate:", r.c_custkey) % 100 < 30 + 10 * segcode else 0
-        y = (
-            2000 * segcode
-            + r.c_custkey % 1000
-            + w * (1000 + (r.c_custkey % 7) * 50)
-        )
-        a = agg.setdefault(r.c_mktsegment, [0, 0, 0, 0])  # n1, n0, s1, s0
-        if w:
-            a[0] += 1
-            a[2] += y
-        else:
-            a[1] += 1
-            a[3] += y
-    keep = {k: v for k, v in agg.items() if v[0] > 0 and v[1] > 0}
-    n = sum(v[0] + v[1] for v in keep.values())
-    ate = 0.0
-    for k in sorted(keep):
-        n1, n0, s1, s0 = keep[k]
-        ate += ((n1 + n0) / n) * (s1 / n1 - s0 / n0)
-    row = post_strat_ate(spark, sf_dir).collect()[0]
-    assert row.ate == round(ate / 100.0, 6)
-    # estimand ≈ $11.50; within-stratum noise is ±(c_custkey%1000) cents
-    assert 7.0 <= row.ate <= 16.0
-    # the confound pushes the naive diff off the estimand by the baseline
-    # imbalance (several dollars of 2000·segcode leakage)
-    assert abs(row.naive_diff - row.ate) > 1.0
-    assert row.n_strata >= 1
 
 
 # ---------------------------------------------------------------------------
@@ -697,182 +575,6 @@ def test_vocab_chao1_planted_spectrum(spark):
 
 
 # ---------------------------------------------------------------------------
-# PSI drift
-# ---------------------------------------------------------------------------
-
-
-def test_psi_detects_planted_drift(spark):
-    """Two time-halves from different value distributions must score
-    PSI > 0.25 (the standard action threshold); identical halves score
-    near 0; and a pure-Python replay of bins + smoothing matches."""
-    import datetime
-    import tempfile
-
-    from fusionspark.queries.analytics_queries import psi_drift
-
-    t0 = datetime.datetime(2025, 1, 1)
-
-    def corpus(shift):
-        rows = []
-        eid = 0
-        for i in range(1000):
-            eid += 1
-            # first half: values 0..99 cents; second half shifted by `shift`
-            half = 0 if i < 500 else 1
-            v = (i * 37 % 100) + shift * half
-            rows.append(
-                (eid, t0 + datetime.timedelta(minutes=i), i % 50, "view",
-                 float(v) / 100.0, "{}")
-            )
-        return spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string,"
-            " value double, props string",
-        )
-
-    with tempfile.TemporaryDirectory() as tmp:
-        corpus(500).write.parquet(f"{tmp}/events.parquet")
-        drifted = psi_drift(spark, tmp).collect()[0]
-    with tempfile.TemporaryDirectory() as tmp:
-        corpus(0).write.parquet(f"{tmp}/events.parquet")
-        stable = psi_drift(spark, tmp).collect()[0]
-    assert drifted.psi > 0.25, drifted
-    assert stable.psi < 0.1, stable
-
-    # replay the binning + smoothing law on the drifted corpus
-    vals = [((i * 37 % 100) + (500 if i >= 500 else 0), i) for i in range(1000)]
-    ref = sorted(v for v, i in vals if i < 500)
-    cur = [v for v, i in vals if i >= 500]
-    n = len(ref)
-    bounds = sorted({ref[(k * n) // 10 - 1] for k in range(1, 10)})
-    def binof(x):
-        return sum(1 for b in bounds if b < x)
-    rc = [0] * 10
-    cc = [0] * 10
-    for v in ref:
-        rc[binof(v)] += 1
-    for v in cur:
-        cc[binof(v)] += 1
-    psi = sum(
-        ((rc[i] + 1) / (n + 10) - (cc[i] + 1) / (len(cur) + 10))
-        * math.log(((rc[i] + 1) * (len(cur) + 10)) / ((cc[i] + 1) * (n + 10)))
-        for i in range(10)
-    )
-    assert drifted.psi == round(psi, 6) + 0.0
-
-
-# ---------------------------------------------------------------------------
-# one-way ANOVA
-# ---------------------------------------------------------------------------
-
-
-def test_anova_textbook_replay(spark, sf_dir):
-    """Pure-Python one-way ANOVA over the same whole-dollar values must
-    reproduce SSB/SSW/F/eta² to float tolerance."""
-    from fusionspark.io import load_table
-    from fusionspark.queries.analytics_queries import anova_oneway
-
-    rows = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderpriority", F.floor(F.col("o_totalprice") + 0.5).alias("v"))
-        .collect()
-    )
-    groups: dict[str, list[int]] = {}
-    for r in rows:
-        groups.setdefault(r.o_orderpriority, []).append(int(r.v))
-    n = sum(len(v) for v in groups.values())
-    k = len(groups)
-    s = sum(sum(v) for v in groups.values())
-    grand = s / n
-    ssb = sum(len(v) * (sum(v) / len(v) - grand) ** 2 for v in groups.values())
-    ssw = sum(
-        sum((x - sum(v) / len(v)) ** 2 for x in v) for v in groups.values()
-    )
-    f = (ssb / (k - 1)) / (ssw / (n - k))
-    got = anova_oneway(spark, sf_dir).collect()[0]
-    assert got.k == k and got.n == n
-    assert got.dof1 == k - 1 and got.dof2 == n - k
-    assert got.ss_between == pytest.approx(ssb, rel=1e-9)
-    assert got.ss_within == pytest.approx(ssw, rel=1e-9)
-    # f_stat / eta_sq are emitted ROUND(·, 6)
-    assert got.f_stat == pytest.approx(f, abs=5.1e-7)
-    assert got.eta_sq == pytest.approx(ssb / (ssb + ssw), abs=5.1e-7)
-
-
-def test_anova_planted_separation(spark):
-    """Three planted groups with means 100/100/200 → F must dwarf the
-    equal-means configuration run on the same values."""
-    import tempfile
-
-    from fusionspark.queries.analytics_queries import anova_oneway
-
-    def run(mk):
-        rows = []
-        for i in range(300):
-            g, v = mk(i)
-            rows.append((i, 7, "O", float(v), None, g))
-        with tempfile.TemporaryDirectory() as d:
-            spark.createDataFrame(
-                rows,
-                "o_orderkey long, o_custkey long, o_orderstatus string,"
-                " o_totalprice double, o_orderdate timestamp,"
-                " o_orderpriority string",
-            ).select(
-                "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-                "o_orderdate", F.col("o_orderpriority"),
-            ).write.mode("overwrite").parquet(f"{d}/orders.parquet")
-            return anova_oneway(spark, d).collect()[0]
-
-    sep = run(lambda i: (f"g{i % 3}", 200 if i % 3 == 2 else 100 + (i % 7)))
-    flat = run(lambda i: (f"g{i % 3}", 100 + (i % 7)))
-    assert sep.f_stat > 100 * max(flat.f_stat, 1e-9)
-    assert 0.0 <= sep.eta_sq <= 1.0
-
-
-# ---------------------------------------------------------------------------
-# IV / Wald
-# ---------------------------------------------------------------------------
-
-
-def test_iv_wald_recovers_planted_tau_and_naive_is_biased(spark, sf_dir):
-    """β_IV must sit within 30% of the planted τ = 1000 while the naive
-    treated-vs-untreated diff is biased above it by the 5000·e confound."""
-    from fusionspark.queries.analytics_queries import iv_wald
-
-    got = iv_wald(spark, sf_dir).collect()[0]
-    assert got.planted_tau_cents == 1000
-    assert 0.4 < got.first_stage < 0.8
-    assert abs(got.beta_iv_cents - 1000) < 300
-    assert got.beta_naive_cents > got.beta_iv_cents + 500
-
-
-def test_iv_wald_pure_python_replay(spark, sf_dir):
-    """Wald ratio recomputed in pure Python from the same md5 draws."""
-    from fusionspark.io import load_table
-    from fusionspark.queries.analytics_queries import iv_wald
-
-    rows = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice"
-    ).collect()
-    n1 = n0 = sx1 = sx0 = sy1 = sy0 = 0
-    for r in rows:
-        cents = math.floor(r.o_totalprice * 100.0 + 0.5)
-        z = _coin("ivz:", r.o_orderkey) % 2
-        h2 = _coin("ivx:", r.o_orderkey) % 100
-        e = 1 if cents >= 25000000 else 0
-        x = 1 if h2 < 10 + 60 * z + 30 * e else 0
-        y = cents % 10000 + 5000 * e + 1000 * x
-        if z:
-            n1, sx1, sy1 = n1 + 1, sx1 + x, sy1 + y
-        else:
-            n0, sx0, sy0 = n0 + 1, sx0 + x, sy0 + y
-    beta = (sy1 * n0 - sy0 * n1) / (sx1 * n0 - sx0 * n1)
-    got = iv_wald(spark, sf_dir).collect()[0]
-    assert got.n1 == n1 and got.n0 == n0
-    assert got.beta_iv_cents == pytest.approx(beta, abs=1e-6)
-
-
-# ---------------------------------------------------------------------------
 # WOE / IV
 # ---------------------------------------------------------------------------
 
@@ -1164,88 +866,3 @@ def test_perceptron_converges_on_separable_corpus(spark):
         ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
         out = perceptron_quality(spark, d).collect()
     assert all((r.pred == 1) == (r.label == 1) for r in out)
-
-
-# ---------------------------------------------------------------------------
-# Granger
-# ---------------------------------------------------------------------------
-
-
-def test_granger_numpy_ols_replay(spark, sf_dir):
-    """F recomputed via numpy least-squares on the same consecutive-day
-    (y_t, y_{t-1}, x_{t-1}) frame, both directions."""
-    import numpy as np
-
-    from fusionspark.io import load_table
-    from fusionspark.queries.analytics_queries import granger_causality
-
-    e = load_table(spark, sf_dir, "events").select(
-        F.to_date("ts").alias("d"), "event_type"
-    ).collect()
-    days: dict = {}
-    for r in e:
-        t = days.setdefault(r.d, [0, 0])
-        if r.event_type == "click":
-            t[0] += 1
-        elif r.event_type == "purchase":
-            t[1] += 1
-    ds = sorted(days)
-    got = {r.direction: r for r in granger_causality(spark, sf_dir).collect()}
-    for direction, (yi, xi) in {
-        "clicks->purchases": (1, 0),
-        "purchases->clicks": (0, 1),
-    }.items():
-        rows = [
-            (days[d][yi], days[p][yi], days[p][xi])
-            for d, p in zip(ds[1:], ds)
-            if (d - p).days == 1
-        ]
-        yt = np.array([r[0] for r in rows], dtype=float)
-        yl = np.array([r[1] for r in rows], dtype=float)
-        xl = np.array([r[2] for r in rows], dtype=float)
-        n = len(rows)
-        Xu = np.column_stack([np.ones(n), yl, xl])
-        Xr = np.column_stack([np.ones(n), yl])
-        bu, *_ = np.linalg.lstsq(Xu, yt, rcond=None)
-        br, *_ = np.linalg.lstsq(Xr, yt, rcond=None)
-        rss_u = float(((yt - Xu @ bu) ** 2).sum())
-        rss_r = float(((yt - Xr @ br) ** 2).sum())
-        f = (rss_r - rss_u) * (n - 3) / rss_u
-        g = got[direction]
-        assert g.n == n
-        assert g.beta_own_lag == pytest.approx(bu[1], abs=1e-5)
-        assert g.beta_cross_lag == pytest.approx(bu[2], abs=1e-5)
-        assert g.rss_restricted == pytest.approx(rss_r, rel=1e-6)
-        assert g.rss_unrestricted == pytest.approx(rss_u, rel=1e-6)
-        assert g.f_stat == pytest.approx(f, rel=1e-4)
-
-
-def test_granger_planted_causality_is_directional(spark):
-    """Planted lag-1 coupling purchases_t = clicks_{t-1} + small noise:
-    the clicks→purchases F must dwarf the reverse direction."""
-    import datetime
-    import tempfile
-
-    from fusionspark.queries.analytics_queries import granger_causality
-
-    base = datetime.datetime(2024, 1, 1)
-    rows = []
-    eid = 0
-    clicks = [10 + _coin("g:", t) % 40 for t in range(40)]
-    for t in range(40):
-        day = base + datetime.timedelta(days=t)
-        for _ in range(clicks[t]):
-            rows.append((eid, day, 1, "click", 1.0, "{}")); eid += 1
-        n_purch = (clicks[t - 1] if t > 0 else 10) + _coin("n:", t) % 3
-        for _ in range(n_purch):
-            rows.append((eid, day, 2, "purchase", 1.0, "{}")); eid += 1
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string,"
-            " value double, props string",
-        ).write.mode("overwrite").parquet(f"{d}/events.parquet")
-        got = {r.direction: r for r in granger_causality(spark, d).collect()}
-    assert got["clicks->purchases"].f_stat > 10 * max(
-        got["purchases->clicks"].f_stat, 1.0
-    )

@@ -300,6 +300,39 @@ def test_router_status_codes(srv_engine, monkeypatch, caplog):
     assert len(logged) == 1 and "engine bug" in logged[0].exc_text
 
 
+def test_tool_faults_follow_the_route_rule(srv_engine, monkeypatch, caplog):
+    """A tool call answers like a route: a client fault is a 400, a server
+    fault a 500 (an MCP error) with an errorId whose traceback is logged
+    once, through /mcp/call and through the MCP transport."""
+    import logging
+
+    from fusionspark.server import handle_mcp_message
+
+    r = Router(srv_engine)
+    r.route("POST", "/api/collections", {"name": "w", "dimensions": 4})
+    status, out = r.route("POST", "/mcp/call",
+                          {"tool": "fusionspark_search", "args": {}})
+    assert status == 400 and "collection" in out["error"]
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("engine bug")
+
+    monkeypatch.setattr(srv_engine, "search", broken)
+    args = {"collection": "w", "query": "anything"}
+    with caplog.at_level(logging.ERROR, logger="fusionspark.server"):
+        status, out = r.route("POST", "/mcp/call",
+                              {"tool": "fusionspark_search", "args": args})
+        reply = handle_mcp_message(r, {
+            "jsonrpc": "2.0", "id": 1, "method": "tools/call",
+            "params": {"name": "fusionspark_search", "arguments": args},
+        })
+    assert status == 500 and out["error"] == "internal server error"
+    assert reply["error"]["message"] == "internal server error"
+    for error_id in (out["errorId"], reply["error"]["data"]["errorId"]):
+        logged = [rec for rec in caplog.records if error_id in rec.getMessage()]
+        assert len(logged) == 1 and "engine bug" in logged[0].exc_text
+
+
 def test_default_ids_survive_a_restart():
     """/api/insert, /api/rag/ingest and the MCP ingest tool default ids
     from the text alone, so two processes with different hash seeds agree."""

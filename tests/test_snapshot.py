@@ -262,6 +262,36 @@ def test_import_jsonl_defaults_ts_ttl_and_stale_rebuild(engine, tmp_path):
     _assert_resident_equals_exact(engine, "imp", ALL[:2], k=30)
 
 
+def test_null_ts_or_ttl_rows_never_expire(engine, tmp_path):
+    """Rows of an attached Delta table with a NULL ts or ttl_ms never
+    expire, like import_jsonl's default ttl_ms 0: the snapshot, the Spark
+    path and ResidentIndex blocks return both and hide the expired row."""
+    from fusionspark.storage.delta import write_delta_table
+
+    now = int(time.time() * 1000)
+    rows = [("no_ts", _vec(1), "a", {}, None, None, 60_000),
+            ("no_ttl", _vec(2), "b", {}, None, now, None),
+            ("expired", _vec(3), "c", {}, None, now - 10_000, 1)]
+    table = str(tmp_path / "ext")
+    write_delta_table(engine.spark, engine.spark.createDataFrame(
+        rows, "id string, vector array<float>, content string, "
+        "metadata map<string,string>, tenant_id string, ts long, ttl_ms long",
+    ), table)
+    engine.attach_delta("ext", table, dimensions=DIM)
+
+    hits = engine.search("ext", query_vector=QUERIES[0])
+    assert "ext" in engine._snapshots
+    assert sorted(h["id"] for h in hits) == ["no_ts", "no_ttl"]
+    _assert_same_hits(hits, _on_spark(engine, "search", "ext",
+                                      query_vector=QUERIES[0]))
+    with mock.patch.object(sv, "SNAPSHOT_MEM_FRACTION", 0.0):
+        other = FusionSparkEngine(engine.spark, engine.root, engine.embedder)
+        assert other.load_resident("ext")["mode"] == "blocks"
+        _assert_same_hits(
+            other.search("ext", query_vector=QUERIES[0], resident=True), hits)
+        other.unload_resident("ext")
+
+
 # ── every interactive read from the snapshot ─────────────────────────────
 
 TEXT_QUERIES = ["alpha gamma", "C++ and a.b", "émile æther delta", "a an the"]

@@ -1,6 +1,8 @@
-"""Round-10 rank/distribution statistics: independent pure-Python
-recomputation of each statistic from the raw parquet (a third
-implementation besides the Spark query and its DuckDB oracle)."""
+"""Round-10 pipeline queries (compaction plans, DP noise, weighted
+sampling, perplexity, Luhn, feature MI, Burrows delta) and the Poisson
+rate test: independent
+pure-Python recomputation from the raw parquet (a third implementation
+besides the Spark query and its DuckDB oracle)."""
 
 from __future__ import annotations
 
@@ -22,216 +24,6 @@ def _one(spark, name):
     load_all()
     fn, _ = REGISTRY[name]
     return fn(spark, SF).collect()[0]
-
-
-def _avg_ranks(vals):
-    order = sorted(range(len(vals)), key=lambda i: vals[i])
-    r = [0.0] * len(vals)
-    i = 0
-    while i < len(order):
-        j = i
-        while j + 1 < len(order) and vals[order[j + 1]] == vals[order[i]]:
-            j += 1
-        avg = (i + j) / 2 + 1
-        for k in range(i, j + 1):
-            r[order[k]] = avg
-        i = j + 1
-    return r
-
-
-def _pearson(xs, ys):
-    n = len(xs)
-    sx, sy = sum(xs), sum(ys)
-    sxy = sum(a * b for a, b in zip(xs, ys))
-    sxx = sum(a * a for a in xs)
-    syy = sum(b * b for b in ys)
-    return (n * sxy - sx * sy) / math.sqrt(n * sxx - sx * sx) / math.sqrt(
-        n * syy - sy * sy
-    )
-
-
-def test_spearman_matches_pure_python(spark):
-    rows = _rows(
-        f"""SELECT FLOOR(l_quantity*100.0+0.5)::BIGINT,
-                   FLOOR(l_extendedprice*100.0+0.5)::BIGINT,
-                   FLOOR(l_discount*100.0+0.5)::BIGINT
-            FROM read_parquet('{SF}/lineitem.parquet')"""
-    )
-    xs, ys, zs = zip(*rows)
-    rho = lambda a, b: _pearson(_avg_ranks(a), _avg_ranks(b))  # noqa: E731
-    got = _one(spark, "spearman_corr")
-    assert got.rho_qty_price == pytest.approx(rho(xs, ys), abs=2e-6)
-    assert got.rho_qty_disc == pytest.approx(rho(xs, zs), abs=2e-6)
-    assert got.rho_price_disc == pytest.approx(rho(ys, zs), abs=2e-6)
-
-
-def _daily():
-    return _rows(
-        f"""SELECT CAST(ts AS DATE) AS day,
-                   SUM(FLOOR(value*100.0+0.5)::BIGINT)::BIGINT AS x,
-                   COUNT(*)::BIGINT AS c
-            FROM read_parquet('{SF}/events.parquet')
-            GROUP BY 1 ORDER BY 1"""
-    )
-
-
-def test_kendall_tau_matches_pure_python(spark):
-    d = _daily()
-    nc = nd = n1 = n2 = 0
-    for i in range(len(d)):
-        for j in range(i + 1, len(d)):
-            dx, dc = d[i][1] - d[j][1], d[i][2] - d[j][2]
-            nc += dx * dc > 0
-            nd += dx * dc < 0
-            n1 += dx == 0
-            n2 += dc == 0
-    n0 = len(d) * (len(d) - 1) // 2
-    got = _one(spark, "kendall_tau_daily")
-    assert (got.n0, got.nc, got.nd, got.n1, got.n2) == (n0, nc, nd, n1, n2)
-    assert got.tau_b == pytest.approx(
-        (nc - nd) / math.sqrt(n0 - n1) / math.sqrt(n0 - n2), abs=2e-6
-    )
-
-
-def test_mann_kendall_matches_pure_python(spark):
-    d = _daily()
-    xs = [r[1] for r in d]
-    s = sum(
-        (xs[j] > xs[i]) - (xs[j] < xs[i])
-        for i in range(len(xs))
-        for j in range(i + 1, len(xs))
-    )
-    n = len(xs)
-    from collections import Counter
-
-    tie = sum(t * (t - 1) * (2 * t + 5) for t in Counter(xs).values() if t > 1)
-    var18 = n * (n - 1) * (2 * n + 5) - tie
-    got = _one(spark, "mann_kendall")
-    assert got.s_stat == s and got.var18 == var18
-    num = s - 1 if s > 0 else s + 1 if s < 0 else 0
-    assert got.z == pytest.approx(num / math.sqrt(var18 / 18.0), abs=2e-6)
-
-
-def test_runs_test_matches_pure_python(spark):
-    d = _daily()
-    xs = [r[1] for r in d]
-    srt = sorted(xs)
-    n = len(xs)
-    med2 = srt[(n + 1) // 2 - 1] + srt[(n + 2) // 2 - 1]
-    signs = [1 if 2 * x > med2 else 0 for x in xs if 2 * x != med2]
-    r = 1 + sum(signs[i] != signs[i - 1] for i in range(1, len(signs)))
-    n1, n2 = sum(signs), len(signs) - sum(signs)
-    got = _one(spark, "runs_test")
-    assert (got.r, got.n1, got.n2) == (r, n1, n2)
-    mu = 2 * n1 * n2 / (n1 + n2) + 1
-    var = 2 * n1 * n2 * (2 * n1 * n2 - n1 - n2) / (
-        (n1 + n2) ** 2 * (n1 + n2 - 1)
-    )
-    assert got.z == pytest.approx((r - mu) / math.sqrt(var), abs=2e-6)
-
-
-def test_ks_two_sample_matches_pure_python(spark):
-    rows = _rows(
-        f"""SELECT lang, n_chars FROM read_parquet('{SF}/documents.parquet')
-            WHERE lang IN ('en','zh')"""
-    )
-    a = sorted(v for lg, v in rows if lg == "en")
-    b = sorted(v for lg, v in rows if lg == "zh")
-    n, m = len(a), len(b)
-    d_num = 0
-    for v in sorted(set(a) | set(b)):
-        fa = sum(1 for x in a if x <= v)
-        fb = sum(1 for x in b if x <= v)
-        d_num = max(d_num, abs(fa * m - fb * n))
-    got = _one(spark, "ks_two_sample")
-    assert (got.n, got.m, got.d_num) == (n, m, d_num)
-    dd = d_num / (n * m)
-    assert got.d == pytest.approx(dd, abs=2e-6)
-    assert got.p_approx == pytest.approx(
-        2 * math.exp(-2 * dd * dd * n * m / (n + m)), abs=2e-6
-    )
-
-
-def test_cramers_v_matches_pure_python(spark):
-    rows = _rows(
-        f"SELECT lang, source, COUNT(*) FROM "
-        f"read_parquet('{SF}/documents.parquet') GROUP BY 1, 2"
-    )
-    from collections import defaultdict
-
-    o = {(g, s): c for g, s, c in rows}
-    rm = defaultdict(int)
-    cm = defaultdict(int)
-    for (g, s), c in o.items():
-        rm[g] += c
-        cm[s] += c
-    n = sum(o.values())
-    chi2 = sum(
-        (o.get((g, s), 0) * n - rm[g] * cm[s]) ** 2 / (n * rm[g] * cm[s])
-        for g in sorted(rm)
-        for s in sorted(cm)
-    )
-    got = _one(spark, "cramers_v")
-    assert got.dof == (len(rm) - 1) * (len(cm) - 1)
-    assert got.chi2 == pytest.approx(chi2, abs=2e-5)
-    assert got.v == pytest.approx(
-        math.sqrt(chi2 / (n * min(len(rm) - 1, len(cm) - 1))), abs=2e-6
-    )
-
-
-def test_ewma_control_matches_pure_python(spark):
-    d = _daily()
-    xs = [float(r[1]) for r in d]
-    es = [xs[0]]
-    for x in xs[1:]:
-        es.append(es[-1] + 0.25 * (x - es[-1]))
-    n = len(xs)
-    s, ss = sum(int(x) for x in xs), sum(int(x) * int(x) for x in xs)
-    mu = s / n
-    limit3 = round(3 * math.sqrt((n * ss - s * s) / n / (n - 1))
-                   * math.sqrt(1 / 7), 6)
-    from fusionspark.queries import REGISTRY, load_all
-
-    load_all()
-    got = sorted(REGISTRY["ewma_control"][0](spark, SF).collect(),
-                 key=lambda r: r.day)
-    assert len(got) == n
-    for row, e, (day, x, _c) in zip(got, es, d):
-        assert row.day == day.strftime("%Y-%m-%d")
-        assert row.x == x
-        assert row.ewma == round(e, 6)  # bit-identical fold, then round
-        assert row.out_of_control == (round(abs(e - mu), 6) > limit3)
-    # the chart must actually flag something on a planted shift: the
-    # law, not the fixture — a +10 sigma constant shift mid-series
-    # pushes the ewma out of the 3-sigma-sqrt(lambda/(2-lambda)) band
-    sigma = math.sqrt((n * ss - s * s) / n / (n - 1))
-    planted = xs[: n // 2] + [x + 10 * sigma for x in xs[n // 2:]]
-    pe = [planted[0]]
-    for x in planted[1:]:
-        pe.append(pe[-1] + 0.25 * (x - pe[-1]))
-    pmu = sum(planted) / n
-    assert any(abs(e - pmu) > limit3 for e in pe)
-
-
-def test_shuffle_skew_report_matches_pure_python(spark):
-    rows = _rows(
-        f"""SELECT l_partkey, COUNT(*)::BIGINT FROM
-            read_parquet('{SF}/lineitem.parquet') GROUP BY 1"""
-    )
-    cnts = sorted(c for _k, c in rows)
-    k, n = len(cnts), sum(cnts)
-    from fusionspark.queries import REGISTRY, load_all
-
-    load_all()
-    got = REGISTRY["shuffle_skew_report"][0](spark, SF).collect()[0]
-    assert (got.n_keys, got.n_rows, got.max_cnt) == (k, n, cnts[-1])
-    def pct(perm):
-        rank = (k * perm + 999) // 1000
-        return cnts[rank - 1]
-    assert (got.p50_cnt, got.p99_cnt) == (pct(500), pct(990))
-    gnum = sum((2 * (i + 1) - k - 1) * c for i, c in enumerate(cnts))
-    assert got.gini == pytest.approx(gnum / (k * n), abs=2e-6)
-    assert got.top1_share == pytest.approx(cnts[-1] / n, abs=2e-6)
 
 
 def test_compaction_plan_is_ffd_and_feasible(spark):
@@ -259,50 +51,6 @@ def test_compaction_plan_is_ffd_and_feasible(spark):
             bins.append(r.size_bytes)
             want[r.source] = len(bins)
     assert {r.source: r.bin_id for r in got} == want
-
-
-def test_isotonic_calibration_laws(spark):
-    """The fitted curve must (a) be non-decreasing, (b) equal the PAV
-    solution computed by an independent pool-adjacent-violators fold,
-    (c) preserve the weighted mean (a PAV invariant)."""
-    from fusionspark.queries import REGISTRY, load_all
-
-    load_all()
-    got = sorted(
-        REGISTRY["isotonic_calibration"][0](spark, SF).collect(),
-        key=lambda r: r.decile,
-    )
-    iso = [r.isotonic_rate for r in got]
-    assert iso == sorted(iso)
-    # independent PAV
-    pools = [[r.pos, r.cnt] for r in got]
-    merged = []
-    for p in pools:
-        merged.append(p)
-        while len(merged) > 1 and (
-            merged[-2][0] * merged[-1][1] >= merged[-1][0] * merged[-2][1]
-        ):
-            b = merged.pop()
-            merged[-1][0] += b[0]
-            merged[-1][1] += b[1]
-    # expand pools back to buckets
-    expanded = []
-    idx = 0
-    for pos, cnt in merged:
-        # pool spans buckets until its cnt is consumed
-        acc = 0
-        while acc < cnt:
-            acc += got[idx].cnt
-            expanded.append(pos / cnt)
-            idx += 1
-    assert len(expanded) == len(iso)
-    for a, b in zip(iso, expanded):
-        assert a == pytest.approx(b, abs=2e-6)
-    # weighted mean preserved
-    n = sum(r.cnt for r in got)
-    assert sum(e * r.cnt for e, r in zip(expanded, got)) / n == pytest.approx(
-        sum(r.pos for r in got) / n, abs=1e-12
-    )
 
 
 def test_dp_noise_is_exact_inverse_cdf(spark):
@@ -516,97 +264,6 @@ def test_burrows_delta_separates_planted_styles(spark):
     assert got[("s1", "s2")] < got[("s2", "s3")]
 
 
-def test_matrix_profile_matches_pure_python(spark):
-    d = _daily()
-    xs = [r[1] for r in d]
-    m, excl = 5, 3
-    n_w = len(xs) - m + 1
-
-    def dist(i, j):
-        a, b = xs[i:i + m], xs[j:j + m]
-        s1a, s1b = sum(a), sum(b)
-        s2a, s2b = sum(v * v for v in a), sum(v * v for v in b)
-        sxy = sum(p * q for p, q in zip(a, b))
-        rho = (m * sxy - s1a * s1b) / math.sqrt(m * s2a - s1a * s1a) \
-            / math.sqrt(m * s2b - s1b * s1b)
-        return round(math.sqrt(max(2.0 * m * (1.0 - rho), 0.0)), 6)
-
-    want = {}
-    for i in range(n_w):
-        cands = sorted(
-            (dist(i, j), j + 1) for j in range(n_w) if abs(i - j) >= excl
-        )
-        want[i + 1] = cands[0]
-    from fusionspark.queries import REGISTRY, load_all
-
-    load_all()
-    got = REGISTRY["matrix_profile_daily"][0](spark, SF).collect()
-    assert len(got) == n_w
-    for r in got:
-        assert (r.mp, r.motif_pos) == want[r.pos], r.pos
-    # discord law: the max-mp window is the series' most novel week
-    assert max(r.mp for r in got) >= min(r.mp for r in got)
-
-
-def test_ar2_fit_matches_pure_python(spark):
-    d = _daily()
-    xs = [r[1] for r in d]
-    n, s = len(xs), sum(xs)
-    dev = [n * x - s for x in xs]
-    c0 = sum(v * v for v in dev)
-    c1 = sum(a * b for a, b in zip(dev, dev[1:]))
-    c2 = sum(a * b for a, b in zip(dev, dev[2:]))
-    r1, r2 = c1 / c0, c2 / c0
-    got = _one(spark, "ar2_fit")
-    assert got.r1 == pytest.approx(r1, abs=2e-6)
-    assert got.r2 == pytest.approx(r2, abs=2e-6)
-    assert got.phi1 == pytest.approx(r1 * (1 - r2) / (1 - r1 * r1), abs=2e-6)
-    assert got.phi2 == pytest.approx((r2 - r1 * r1) / (1 - r1 * r1), abs=2e-6)
-    # stationarity sanity for the fitted model on real data
-    assert abs(got.phi2) < 1 and abs(got.phi1) < 2
-
-
-def test_welch_bh_matches_pure_python(spark):
-    rows = _rows(
-        f"SELECT source, n_chars FROM read_parquet('{SF}/documents.parquet')"
-    )
-    from collections import defaultdict
-
-    g = defaultdict(list)
-    for s, v in rows:
-        g[s].append(v)
-    N = len(rows)
-    S = sum(v for _s, v in rows)
-    SS = sum(v * v for _s, v in rows)
-    m = len(g)
-
-    def phi2(t):
-        return 2.0 / (1.0 + math.exp(0.07056 * t**3 + 1.5976 * t))
-
-    ps = {}
-    for s, vs in g.items():
-        n1, s1, ss1 = len(vs), sum(vs), sum(v * v for v in vs)
-        n2, s2, ss2 = N - n1, S - s1, SS - ss1
-        v1 = (n1 * ss1 - s1 * s1) / n1 / (n1 - 1)
-        v2 = (n2 * ss2 - s2 * s2) / n2 / (n2 - 1)
-        t = (s1 / n1 - s2 / n2) / math.sqrt(v1 / n1 + v2 / n2)
-        ps[s] = round(phi2(abs(round(t, 6))), 6)
-    order = sorted(ps.items(), key=lambda kv: (kv[1], kv[0]))
-    kk = max((i + 1 for i, (_s, p) in enumerate(order)
-              if p * m * 10 <= i + 1), default=0)
-    from fusionspark.queries import REGISTRY, load_all
-
-    load_all()
-    got = REGISTRY["welch_bh"][0](spark, SF).collect()
-    assert len(got) == m
-    for r in got:
-        assert r.p_approx == ps[r.source]
-        assert r.rejected == (r.rnk <= kk)
-    # BH is a step-up: the rejected set is a prefix of the p-ordering
-    rej = sorted(r.rnk for r in got if r.rejected)
-    assert rej == list(range(1, len(rej) + 1))
-
-
 def test_poisson_rate_test_matches_pure_python(spark):
     rows = _rows(
         f"""SELECT SUM(CASE WHEN event_type='purchase' THEN 1 ELSE 0 END),
@@ -622,159 +279,3 @@ def test_poisson_rate_test_matches_pure_python(spark):
         2.0 / (1.0 + math.exp(0.07056 * abs(z) ** 3 + 1.5976 * abs(z))),
         abs=2e-6,
     )
-
-
-def test_cuped_reduces_variance_law(spark):
-    """CUPED's point: on a synthetic experiment where the pre-period
-    covariate explains most outcome variance and the true effect is
-    planted, the adjusted effect must sit closer to truth than the raw
-    difference when randomization is unlucky.  Checked via the exact
-    identity: cuped_effect = raw_effect - theta*(mean_x_t - mean_x_c)."""
-    rows = _rows(
-        f"""SELECT user_id,
-                   SUM(CASE WHEN CAST(ts AS DATE) - (SELECT CAST(MIN(ts) AS DATE)
-                             FROM read_parquet('{SF}/events.parquet'))
-                            < 15 THEN FLOOR(value*100.0+0.5)::BIGINT ELSE 0 END),
-                   SUM(CASE WHEN CAST(ts AS DATE) - (SELECT CAST(MIN(ts) AS DATE)
-                             FROM read_parquet('{SF}/events.parquet'))
-                            >= 15 THEN FLOOR(value*100.0+0.5)::BIGINT ELSE 0 END)
-            FROM read_parquet('{SF}/events.parquet') GROUP BY user_id"""
-    )
-    import hashlib
-
-    xs = {u: x for u, x, _y in rows}
-    treated = {
-        u: int(hashlib.md5(f"cuped:{u}".encode()).hexdigest()[:8], 16) % 2 == 0
-        for u, _x, _y in rows
-    }
-    got = _one(spark, "cuped_adjustment")
-    t_x = [xs[u] for u in xs if treated[u]]
-    c_x = [xs[u] for u in xs if not treated[u]]
-    gap_x = (sum(t_x) / len(t_x) - sum(c_x) / len(c_x)) / 100.0
-    # identity: adjusted = raw - theta * pre-period imbalance
-    assert got.cuped_effect == pytest.approx(
-        got.raw_effect - got.theta * gap_x, abs=5e-5
-    )
-    assert got.n_treated == len(t_x) and got.n_control == len(c_x)
-
-
-def test_simpson_diversity_matches_pure_python(spark):
-    rows = _rows(
-        f"SELECT source, text FROM read_parquet('{SF}/documents.parquet')"
-    )
-    from collections import Counter, defaultdict
-
-    cnt = defaultdict(Counter)
-    for s, t in rows:
-        cnt[s].update(w for w in t.lower().split(" ") if w)
-    from fusionspark.queries import REGISTRY, load_all
-
-    load_all()
-    got = {r.source: r for r in
-           REGISTRY["simpson_diversity"][0](spark, SF).collect()}
-    for s, c in cnt.items():
-        n = sum(c.values())
-        lam = sum(v * (v - 1) for v in c.values()) / (n * (n - 1))
-        assert got[s].n == n and got[s].n_types == len(c)
-        assert got[s].simpson_lambda == pytest.approx(lam, abs=2e-6)
-        assert got[s].inv_simpson == pytest.approx(1 / lam, abs=2e-4)
-
-
-def test_sprt_monitor_matches_pure_python(spark):
-    d = _rows(
-        f"""SELECT CAST(ts AS DATE) AS day,
-                   SUM(CASE WHEN event_type='purchase' THEN 1 ELSE 0 END),
-                   SUM(CASE WHEN event_type IN ('purchase','click') THEN 1 ELSE 0 END)
-            FROM read_parquet('{SF}/events.parquet') GROUP BY 1 ORDER BY 1"""
-    )
-    cx = cnx = 0
-    want = {}
-    hi, lo = round(math.log(19.0), 6), round(math.log(1 / 19.0), 6)
-    for day, x, n in d:
-        cx += x
-        cnx += n - x
-        llr = round(cx * math.log(1.125) + cnx * math.log(0.875), 6)
-        dec = ("accept_h1" if llr >= hi else
-               "accept_h0" if llr <= lo else "continue")
-        want[day.strftime("%Y-%m-%d")] = (cx, cnx, llr, dec)
-    from fusionspark.queries import REGISTRY, load_all
-
-    load_all()
-    got = REGISTRY["sprt_monitor"][0](spark, SF).collect()
-    assert len(got) == len(want)
-    for r in got:
-        assert (r.conversions, r.non_conversions, r.llr, r.decision) \
-            == want[r.day]
-    # the monitor is a cumulative walk: llr path, once a boundary is hit,
-    # stays interpretable — and with purchases ~ half of purchase+click
-    # traffic at p0=1/2 vs p1=9/16 the path must trend NEGATIVE (h0-ward)
-    last = sorted(got, key=lambda r: r.day)[-1]
-    assert last.llr < 0
-
-
-def test_hill_tail_index_matches_pure_python(spark):
-    vals = sorted(
-        (v for (v,) in _rows(
-            f"SELECT n_chars FROM read_parquet('{SF}/documents.parquet')")),
-        reverse=True,
-    )
-    xk = vals[99]
-    s = 0.0
-    for x in vals[:99]:
-        s += math.log(x / xk)
-    got = _one(spark, "hill_tail_index")
-    assert (got.k, got.x_k) == (100, xk)
-    assert got.alpha_inv == pytest.approx(s / 99, abs=2e-6)
-    assert got.alpha == pytest.approx(99 / s, abs=2e-6)
-
-
-def test_mad_by_type_matches_pure_python(spark):
-    rows = _rows(
-        f"""SELECT event_type, FLOOR(value*100.0+0.5)::BIGINT
-            FROM read_parquet('{SF}/events.parquet')"""
-    )
-    from collections import defaultdict
-
-    g = defaultdict(list)
-    for t, x in rows:
-        g[t].append(x)
-
-    def med2(vs):
-        s = sorted(vs)
-        n = len(s)
-        return s[(n + 1) // 2 - 1] + s[(n + 2) // 2 - 1]
-
-    from fusionspark.queries import REGISTRY, load_all
-
-    load_all()
-    got = {r.event_type: r for r in
-           REGISTRY["mad_by_type"][0](spark, SF).collect()}
-    assert set(got) == set(g)
-    for t, vs in g.items():
-        m2 = med2(vs)
-        mad4 = med2([abs(2 * x - m2) for x in vs])
-        assert got[t].median_value == round(m2 / 2 / 100, 6)
-        assert got[t].mad_value == round(mad4 / 4 / 100, 6)
-        assert got[t].sigma_robust == pytest.approx(
-            mad4 / 4 / 100 * 1.4826, abs=2e-6
-        )
-
-
-def test_theil_index_matches_pure_python(spark):
-    rows = _rows(
-        f"""SELECT user_id, SUM(CASE WHEN event_type='purchase'
-                   THEN floor(value*1e6)::BIGINT ELSE 0 END)
-            FROM read_parquet('{SF}/events.parquet') GROUP BY user_id"""
-    )
-    xs = sorted((u, x) for u, x in rows if x > 0)
-    n, s = len(xs), sum(x for _u, x in xs)
-    t = 0.0
-    for _u, x in xs:
-        r = x * n / s
-        t += r * math.log(r)
-    got = _one(spark, "theil_index")
-    assert got.n_users == n
-    assert got.theil_t == pytest.approx(t / n, abs=2e-6)
-    assert got.atkinson1 == pytest.approx(1 - math.exp(-t / n), abs=2e-6)
-    # law: Theil of a constant distribution is 0; of any real one, > 0
-    assert got.theil_t > 0

@@ -21,7 +21,7 @@ sf = "/root/testdata/sf0.1"
 #: r13 burn-down rewrote SEVEN of the original nine entries onto grid
 #: forms (operators/ranking.py::ntile_exact for NTILE designs —
 #: nb_calibration, curriculum_shards, ccnet_buckets; value-grid
-#: cumulative order-statistic picks for rank-pick designs — psi_drift,
+#: cumulative order-statistic picks for rank-pick designs —
 #: conformal_interval, range_bounds_plan; prefix_sum_exact's two-pass
 #: parallel scan for systematic_sample), all output-identical and
 #: strict ×3-SF re-gated.  r14 closed the last two (context_pack,
@@ -261,22 +261,11 @@ load_all()
 audit("tpch_q19_pushdown", REGISTRY["tpch_disjunctive_revenue"][0](spark, sf))
 
 # 11. round-6 session-4 plan claims
-ev_full = load_table(spark, sf, "events")
-
 from fusionspark.operators.keyword import tfidf_pairs
 audit("tfidf_pairs", tfidf_pairs(d))
 
-from fusionspark.operators.joins import grid_proximity_join
-pts = ev_full.select("user_id").distinct().select(
-    F.col("user_id").alias("id"),
-    (F.col("user_id") * 37 % 10000).alias("x"),
-    (F.col("user_id") * 61 % 10000).alias("y"),
-)
-audit("grid_proximity", grid_proximity_join(pts, 100))
-
 audit("incremental_rollup", REGISTRY["incremental_rollup"][0](spark, sf))
 audit("tpch_q2", REGISTRY["tpch_min_cost_supplier"][0](spark, sf))
-audit("cohort_weekly", REGISTRY["cohort_weekly"][0](spark, sf))
 
 # 12. round-8 session-3 plan claims
 # weighted sample: global top-K must be TakeOrdered (partial per-partition
@@ -361,18 +350,6 @@ import re as _re
 print("== doc_keywords: partitioned_window:",
       bool(_re.search(r"hashpartitioning\(doc_id#\d+L?, 32\)", p)),
       "group_limit_pushdown:", "WindowGroupLimit" in p)
-
-# histogram_quantiles: one bin groupBy; cumulative window over grid bins
-hq = REGISTRY["histogram_quantiles"][0](spark, sf)
-buf = _io.StringIO()
-with _ctx.redirect_stdout(buf):
-    hq.explain("formatted")
-p = buf.getvalue()
-# two BNL joins by design, both with tiny broadcast sides: the 1-row n
-# scalar and the 4-row threshold frame vs grid bins (a theta-join over a
-# bounded grid, not the corpus); formatted plans mention each node twice
-print("== histogram_quantiles: cartesian:", "CartesianProduct" in p,
-      f"bnl_nodes={p.count('BroadcastNestedLoopJoin') // 2} (2 = n-scalar + 4-row thresholds, both broadcast)")
 
 # 14. round-8 session-6 plan claims
 # frequent_pairs: apriori prefilter must be a BROADCAST join; the basket
@@ -467,29 +444,6 @@ print("== skyline_parts: local_phase:", "SPARK_PARTITION_ID" in p,
       "windows:", len(_re.findall(r"\(\d+\) Window", p)),
       "cartesian:", "CartesianProduct" in p)
 
-# dq_expectations: the four row rules fold into ONE aggregate over one
-# lineitem scan (no join, no window); uniqueness adds one distinct agg;
-# ref integrity one broadcast anti-join
-dqx = _R["dq_expectations"][0](spark, sf)
-buf = _io.StringIO()
-with _ctx.redirect_stdout(buf):
-    dqx.explain("formatted")
-p = buf.getvalue()
-print("== dq_expectations: broadcast_anti:", "BroadcastHashJoin" in p and "LeftAnti" in p,
-      "cartesian:", "CartesianProduct" in p,
-      "scans:", p.count("Scan parquet"))
-
-# t_closeness: one groupBy(day,type) exchange; global histogram + scalar
-# broadcast; top-10 TakeOrdered
-tc = _R["t_closeness"][0](spark, sf)
-buf = _io.StringIO()
-with _ctx.redirect_stdout(buf):
-    tc.explain("formatted")
-p = buf.getvalue()
-print("== t_closeness: take_ordered:", "TakeOrderedAndProject" in p,
-      "broadcasts:", p.count("BroadcastExchange") >= 2,
-      "cartesian:", "CartesianProduct" in p)
-
 # 16. round-8 session-7 batch-2 plan claims
 # neardup_prefix: candidate join keys on the shingle string; all joins
 # equi; the verify join carries candidate ids + shingles only, never
@@ -507,18 +461,6 @@ print("== neardup_prefix: equi_joins:", any(k in p for k in
       "text_in_exchange_key:", any("text#" in a for a in ex_args),
       "group_limit_or_rank:", "Window" in p,
       "single_partition_exchange:", "SinglePartition" in p)
-
-# mann_whitney / theil_sen / chi2 / bootstrap: the corpus side must be a
-# single groupBy; windows and pair grids run on bounded frames
-for qn in ("mann_whitney", "theil_sen_trend", "chi2_independence", "bootstrap_ci"):
-    qq = _R[qn][0](spark, sf)
-    buf = _io.StringIO()
-    with _ctx.redirect_stdout(buf):
-        qq.explain("formatted")
-    p = buf.getvalue()
-    print(f"== {qn}: corpus_scans:", p.count("Scan parquet"),
-          "cartesian:", "CartesianProduct" in p,
-          "bnl_nodes:", p.count("BroadcastNestedLoopJoin") // 2)
 
 # hits_docs: every half-step an equi-join + fold; no cartesian
 hd = _R["hits_docs"][0](spark, sf)
@@ -542,18 +484,6 @@ print("== bmp_features: exchanges:", p.count("Exchange"),
       "mapInPandas:", "MapInPandas" in p or "mapInPandas" in p)
 
 # 17. r8 late additions (VERDICT r8 #7)
-# quantiles_by_type: ONE corpus exchange (the (type, cents) groupBy);
-# the cumulative walk + threshold cuts run on the bounded grid
-qt = _R["quantiles_by_type"][0](spark, sf)
-buf = _io.StringIO()
-with _ctx.redirect_stdout(buf):
-    qt.explain("formatted")
-p = buf.getvalue()
-print("== quantiles_by_type: exchanges:",
-      p.count("Exchange") - p.count("BroadcastExchange"),
-      "cartesian:", "CartesianProduct" in p,
-      "window_on_grid:", "Window" in p)
-
 # cube_orders: one Expand + one aggregate exchange; exact-cents sum
 co = _R["cube_orders"][0](spark, sf)
 buf = _io.StringIO()
@@ -601,11 +531,9 @@ print("== lang_id_trained: broadcasts:", p.count("BroadcastExchange") >= 2,
       "cartesian:", "CartesianProduct" in p,
       "text_in_exchange_key:", any("text#" in a for a in ex_args))
 
-# r9 second wave: dbscan (blocked equi-join, no cartesian), rake (token
-# shuffles only), mmr (TakeOrdered + broadcast pair self-join),
-# lang_id_trained covered above
+# r9 second wave: rake (token shuffles only), mmr (TakeOrdered +
+# broadcast pair self-join), lang_id_trained covered above
 for qn, checks in (
-    ("dbscan_users", ("cartesian", "equi")),
     ("rake_keywords", ("cartesian", "text")),
     ("mmr_rerank", ("cartesian",)),
     ("hilbert_pruning", ("cartesian",)),
@@ -622,15 +550,11 @@ for qn, checks in (
           "text_in_exchange_key:", any("text#" in a for a in ex_args))
 
 # ── round 10 additions ────────────────────────────────────────────────────
-# spearman: rank tables join back on value keys; no cartesian, no text
-# in any exchange; the moment pass is one partial_agg aggregate
+# no cartesian, no text in any exchange
 for qn, label in (
-    ("spearman_corr", "rank joins"),
     ("entity_resolution", "block equi-join + CC"),
     ("kn_perplexity", "broadcast LM"),
     ("robots_rules", "broadcast rules"),
-    ("ks_two_sample", "value-grid walk"),
-    ("shuffle_skew_report", "counts frame"),
     ("exif_metadata", "metadata-plane map"),
     ("mime_sniff", "expression sniff"),
 ):
@@ -661,19 +585,18 @@ print("== mime_sniff python nodes:",
 # exchange key (text never shuffles).  window_funnel: the 3-type filter
 # must PUSH to the scan and the only wide exchange is user_id.
 # skipgram_pairs: the per-word threshold join must BROADCAST.
-# logrank/mann_whitney: bounded-frame windows, no cartesian.
+# mann_whitney_u / conformal_interval: bounded-frame windows, no
+# cartesian.
 # rouge_eval: (doc_id, gram) equi-joins, no doc-pair comparison.
 # prf_expansion: feedback side broadcasts; term-keyed candidate join.
 for qn, label in (
     ("cdc_chunking", "Arrow chunker + hash dedup"),
     ("window_funnel", "ordered funnel fold"),
     ("skipgram_pairs", "thinned pair self-join"),
-    ("logrank_test", "timeline hypergeometric"),
     ("mann_whitney_u", "value-grid rank sum"),
     ("rouge_eval", "clipped gram join"),
     ("prf_expansion", "feedback offer weights"),
     ("grpo_advantages", "group standardization"),
-    ("post_strat_ate", "stratum fold"),
     ("conformal_interval", "calibration quantile"),
     ("png_interlaced", "Adam7 round-trip"),
     ("gif_interlaced", "4-pass round-trip"),
@@ -752,44 +675,6 @@ for qn, label in (
     ("qini_curve", "decile qini"),
     ("systematic_sample", "PPS grid crossing"),
     ("entropy_rate", "markov plug-in"),
-):
-    qq = _R[qn][0](spark, sf)
-    buf = _io.StringIO()
-    with _ctx.redirect_stdout(buf):
-        qq.explain("formatted")
-    p = buf.getvalue()
-    ex_args = _re.findall(r"\(\d+\) Exchange[^\n]*\nInput[^\n]*\nArguments: ([^\n]*)", p)
-    print(f"== {qn} ({label}): cartesian:", "CartesianProduct" in p,
-          "text_in_exchange_key:",
-          any(_re.search(r"(?<![A-Za-z])text#", a) for a in ex_args),
-          "payload_in_exchange_key:", any("payload#" in a for a in ex_args),
-          "broadcasts:", p.count("BroadcastExchange"),
-          "python_nodes:", len(_re.findall(r"\(\d+\) MapInPandas", p)))
-
-# ── round 13 additions: inference_queries ────────────────────────────────
-# All collapse the corpus through ONE map-side-combined groupBy/aggregate
-# onto a bounded grid (distinct cents, days, dow strata, 27 patterns, 64
-# dims) before any window/join; the only BroadcastNestedLoop sites are
-# 1-row scalar broadcasts (tot frames — the histogram_quantiles class).
-# morans_i's pair join is the grid_proximity_join bounded 9x fan-out.
-for qn, label in (
-    ("ordinal_association", "day pair grid"),
-    ("jonckheere_terpstra", "5 cumulative grid windows"),
-    ("wilcoxon_signed_rank", "doubled midrank grid"),
-    ("cliffs_delta", "dominance grid"),
-    ("cochran_armitage", "dose fold"),
-    ("mantel_haenszel", "7-strata pivot"),
-    ("bartlett_test", "pivoted moments"),
-    ("theil_u", "35-cell pivot"),
-    ("cvm_two_sample", "128-bit grid fold"),
-    ("kpss_test", "partial-sum walk"),
-    ("permutation_entropy", "27-pattern pivot"),
-    ("bowker_symmetry", "transition pivot"),
-    ("graph_assortativity", "edge-degree joins"),
-    ("embedding_dim_stats", "posexplode moments"),
-    ("morans_i", "grid-blocked spatial pairs"),
-    ("pass_at_k", "per-user fold"),
-    ("ece_calibration", "14-cell pivot"),
 ):
     qq = _R[qn][0](spark, sf)
     buf = _io.StringIO()
