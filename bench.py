@@ -112,10 +112,9 @@ def bench_queries(spark):
     import numpy as np
 
     from fusionspark.operators.knn import id_sql_type
-    from fusionspark.operators.serving import ResidentIndex, ResidentIVF
+    from fusionspark.operators.serving import ResidentIndex
 
     resident = {"idx": ResidentIndex.build(corpus100k)}
-    rivf = {"idx": ResidentIVF.build(corpus100k, n_centroids=64)}
     _prows = probes1k.select("probe_id", "probe_embedding").collect()
     probe_batch = (
         [r[0] for r in _prows],
@@ -286,11 +285,6 @@ def bench_queries(spark):
             "stage string, rows long",
         )
 
-    def ivf_100k_resident():
-        # pruned resident search: nProbe=8 of 64 lists — each partition
-        # GEMMs only its routed lists (1/8 of the exact pair count)
-        return rivf["idx"].search(probes1k, k=10, n_probe=8)
-
     def ivf_build_100k():
         # build + persist the IVF index: shuffle-free assignment map,
         # partitionBy(centroid_id) write
@@ -403,10 +397,8 @@ def bench_queries(spark):
         "ngram_novelty",
         # round 8: families newly driver-attested this round — measured so
         # BENCH history starts the same round their correctness row does
-        "semdedup",
         "cdc_apply",
         "zorder_pruning",
-        "ann_matryoshka",
         # round 8 (session 3): spectral family — exact-integer covariance
         # (one Arrow GEMM pass, 4096-row shuffle), 8-round power-method
         # PCA, zero-shuffle per-doc PC1 projection
@@ -508,7 +500,6 @@ def bench_queries(spark):
         "knn_100k": knn_100k_scan,
         "ivf_build_100k": ivf_build_100k,
         "ivf_100k": ivf_100k,
-        "ivf_100k_resident": ivf_100k_resident,
     }
     for name in picks:
         fn, _sql = REGISTRY[name]
@@ -583,33 +574,6 @@ def recall_curves(spark, ctx) -> dict:
                 lambda b=bands: srp_knn(corpus, probes200, k=10, n_bits=24, bands=b),
                 probe200_ids,
             )
-        # IVF-PQ: coarse pruning + 8-byte ADC codes + tie-kept exact refine
-        # of the ADC top-100 — the scan-IO story (codes are 32× smaller
-        # than the float32 vectors they index) with the accuracy cost
-        # measured, not guessed.  Codes persist once beside the IVF lists
-        # (the production layout — setup cost, like ivf_build_100k); the
-        # timed entry is the search.  This corpus is PQ-adversarial (sin
-        # structure collapses 100k vectors to ~2.4k distinct code words),
-        # so the measured ~0.86 is a floor, not a ceiling.
-        from fusionspark.operators.ann import (
-            ivf_pq_search,
-            pq_codebooks_lloyd,
-            pq_encode,
-        )
-
-        cbs = pq_codebooks_lloyd(corpus, m=8, ksub=64, iters=4, sample_n=2048)
-        codes_path = f"{ivf_path}_codes"
-        pq_encode(
-            spark.read.parquet(f"{ivf_path}/data"), cbs, extra_cols=["centroid_id"]
-        ).write.mode("overwrite").partitionBy("centroid_id").parquet(codes_path)
-        score(
-            "ivfpq_100k_nprobe8_refine100",
-            lambda: ivf_pq_search(
-                spark, ivf_path, probes200, cbs, k=10, n_probe=8,
-                refine_r=100, codes_path=codes_path,
-            ),
-            probe200_ids,
-        )
     except Exception as e:  # noqa: BLE001 — recall is reporting, not the gate
         print(f"# recall: ERROR {e}", file=sys.stderr)
     return out

@@ -30,12 +30,9 @@ import threading
 import time
 from dataclasses import dataclass, field
 
-import numpy as np
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fusionspark.functions import vector as V
 from fusionspark.operators import fusion as fusion_ops
 from fusionspark.operators.chunking import chunk_documents
 from fusionspark.operators.context import pack_rows
@@ -138,7 +135,6 @@ class FusionSparkEngine:
         self._snapshots: dict[str, Snapshot] = {}
         self._oversize: dict[str, object] = {}
         self._resident: dict[str, dict] = {}
-        self._resident_ivf: dict[str, dict] = {}
         self._locks: dict[str, threading.RLock] = {}  # writes, mirrors, rebuilds
         # catalog edits and writes; taken last, after any collection lock
         self._catalog_lock = threading.RLock()
@@ -466,25 +462,15 @@ class FusionSparkEngine:
 
     # ── index lifecycle (V6 analogue) ─────────────────────────────────────
 
-    def build_index(
-        self,
-        collection: str,
-        n_centroids: int | None = None,
-        pq: bool = False,
-        pq_m: int = 4,
-        pq_ksub: int = 16,
-    ) -> dict:
+    def build_index(self, collection: str, n_centroids: int | None = None) -> dict:
         """Persist an IVF partition-pruned layout for the collection — the
         Spark analogue of the reference's build-once HNSW graph
         (HNSWIndex.js:245-320).  Defaults to ~√N centroids (executor-sized
         lists).  Cosine only (the reference's default metric).  The index
         carries the full row payload, so approximate search filters and
         hydrates from the pruned lists without touching the base table.
-
-        pq=True additionally trains Lloyd-refined PQ codebooks and persists
-        m-byte codes partitioned beside the lists (`codes/`), enabling the
-        ADC search path in search_many(method="ivf_pq") — 32-64× less list
-        IO than the float payloads at scale."""
+        Only `search(approximate=True)` on a collection above the snapshot
+        limit reads it; one that fits is answered from its snapshot."""
         import math
 
         from fusionspark.operators.ann import persist_ivf
@@ -518,21 +504,6 @@ class FusionSparkEngine:
             "at_mutation": tok,
             "built_at": int(time.time() * 1000),
         }
-        if pq:
-            from fusionspark.operators.ann import pq_codebooks_lloyd, pq_encode
-
-            cbs = pq_codebooks_lloyd(
-                df, m=pq_m, ksub=pq_ksub, id_col="id", vector_col="vector"
-            )
-            np.save(os.path.join(self.root, f"index={collection}.pq.npy"), cbs)
-            pq_encode(
-                self.spark.read.parquet(f"{path}/data"),
-                cbs, id_col="id", vector_col="vector",
-                extra_cols=["centroid_id"],
-            ).write.mode("overwrite").partitionBy("centroid_id").parquet(
-                f"{path}/codes"
-            )
-            index["pq"] = {"m": pq_m, "ksub": pq_ksub}
         with self._catalog_lock:
             cfg["index"] = index
             self._save_catalog()
@@ -579,16 +550,16 @@ class FusionSparkEngine:
         that fits (`fits_driver`: its rows × dim × 8 matrix bytes plus content
         bytes, with every other loaded snapshot, within SNAPSHOT_MEM_FRACTION
         of the driver host's MemAvailable) becomes a driver `Snapshot` in one
-        Arrow pass — the copy every interactive read (search with or without
-        `resident`, recall, retrieve, build_context) is served from with no
-        Spark job.  Reads load it on first use too, so calling this is only
-        a warm-up.  Freshness: insert, upsert, delete and forget mirror into
-        it under the collection lock; any other token change (ingest,
-        imports, another engine's manifest commit, external Delta commits)
-        makes the next read reload it, while search_many raises.  Larger
-        collections get `ResidentIndex` blocks in the Python workers for
-        search(resident=True) (string-id ties in hash order; stale → exact);
-        their other reads run on Spark."""
+        Arrow pass — the copy every interactive read (search whatever its
+        `resident` and `approximate` flags, recall, retrieve, build_context)
+        is served from with no Spark job.  Reads load it on first use too,
+        so calling this is only a warm-up.  Freshness: insert, upsert,
+        delete and forget mirror into it under the collection lock; any
+        other token change (ingest, imports, another engine's manifest
+        commit, external Delta commits) makes the next read reload it.
+        Larger collections get `ResidentIndex` blocks in the Python workers
+        for search(resident=True) (string-id ties in hash order; stale →
+        exact); their other reads run on Spark."""
         with self._lock(collection):
             if self._load_snapshot(collection) is not None:
                 snap = self._snapshots[collection]
@@ -637,17 +608,23 @@ class FusionSparkEngine:
         once, under the collection lock, however many reads find it missing
         or stale.  None while the collection is over the size limit (checked
         once per token)."""
+        snap = self._fresh_snapshot(collection)
+        if snap is not None:
+            return snap
+        with self._lock(collection):
+            snap = self._fresh_snapshot(collection)
+            if snap is not None:
+                return snap
+            if self._oversize.get(collection) == self._mutation_token(collection):
+                return None
+            return self._load_snapshot(collection)
+
+    def _fresh_snapshot(self, collection: str) -> Snapshot | None:
+        """The collection's Snapshot if it is fresh, else None (no reload)."""
         snap = self._snapshots.get(collection)
         if snap is not None and snap.token == self._mutation_token(collection):
             return snap
-        with self._lock(collection):
-            tok = self._mutation_token(collection)
-            snap = self._snapshots.get(collection)
-            if snap is not None and snap.token == tok:
-                return snap
-            if self._oversize.get(collection) == tok:
-                return None
-            return self._load_snapshot(collection)
+        return None
 
     def unload_resident(self, collection: str) -> None:
         """Release the collection's resident copies (no-op if not loaded);
@@ -655,58 +632,16 @@ class FusionSparkEngine:
         self._snapshots.pop(collection, None)
         self._oversize.pop(collection, None)
         self._unload_blocks(collection)
-        ivf = self._resident_ivf.pop(collection, None)
-        if ivf is not None:
-            ivf["idx"].unpersist()
 
     def _unload_blocks(self, collection: str) -> None:
         ent = self._resident.pop(collection, None)
         if ent is not None:
             ent["idx"].unpersist()
 
-    def load_resident_ivf(
-        self, collection: str, n_centroids: int | None = None
-    ) -> dict:
-        """Approximate resident serving: lists grouped by centroid in
-        memory, searches GEMM only the routed lists (the resident sibling
-        of build_index's partition-pruned parquet layout; cosine only,
-        like the reference's default metric).  Same freshness contract as
-        load_resident; serve through search_many(method='resident_ivf')."""
-        import math
-
-        from fusionspark.operators.serving import ResidentIVF
-
-        cfg = self._catalog[collection]
-        if cfg["metric"] != "cosine":
-            raise ValueError("resident IVF supports the cosine metric only")
-        tok = self._mutation_token(collection)  # before the read, see build_index
-        df = self._load(collection)
-        k = n_centroids or max(2, int(math.sqrt(max(df.count(), 4))))
-        idx = ResidentIVF.build(
-            df, n_centroids=k, id_col="id", vector_col="vector"
-        )
-        old = self._resident_ivf.pop(collection, None)
-        if old is not None:
-            old["idx"].unpersist()
-        self._resident_ivf[collection] = {
-            "idx": idx,
-            "n_centroids": k,
-            "at_mutation": tok,
-        }
-        return {
-            "collection": collection,
-            "n_centroids": k,
-            "at_mutation": tok,
-        }
-
-    def _resident_fresh(self, collection: str):
-        """The fresh Snapshot or ResidentIndex, else None (no reload)."""
-        tok = self._mutation_token(collection)
-        snap = self._snapshots.get(collection)
-        if snap is not None and snap.token == tok:
-            return snap
+    def _blocks_fresh(self, collection: str) -> ResidentIndex | None:
+        """The collection's fresh ResidentIndex blocks, else None."""
         ent = self._resident.get(collection)
-        if ent is not None and ent["at_mutation"] == tok:
+        if ent is not None and ent["at_mutation"] == self._mutation_token(collection):
             return ent["idx"]
         return None
 
@@ -769,163 +704,60 @@ class FusionSparkEngine:
         """§3.1: exact top-k with PRE-filtering (better recall than the
         reference's post-filter, SURVEY V7): tenant, metadata and TTL.
         A collection that fits the driver is answered from its `Snapshot`
-        with no Spark job, `resident` or not (ties by real id); a missing
-        or stale snapshot is reloaded first (see load_resident).
-        approximate=True (without `resident`) searches a fresh build_index()
-        IVF layout instead (partition-pruned scan, same pre-filter
-        semantics).  Above the size limit, resident=True searches fresh
-        ResidentIndex blocks and everything else is an exact Spark scan; a
-        missing copy or a stale index falls back to that scan — never a
-        silent wrong answer."""
+        with no Spark job, whatever the flags say (ties by real id; an exact
+        answer is a valid answer to `approximate`); a missing or stale
+        snapshot is reloaded first (see load_resident).  Above the size
+        limit: resident=True searches fresh ResidentIndex blocks,
+        approximate=True a fresh build_index() IVF layout (partition-pruned
+        scan, same pre-filter semantics), and everything else is an exact
+        Spark scan; missing blocks or a stale index fall back to that scan —
+        never a silent wrong answer.  The Spark paths hold the collection
+        lock, so a concurrent rewrite never swaps the files mid-read."""
         cfg = self._catalog[collection]
         if query_vector is None:
             query_vector = self.embedder(query_text or "", cfg["dimensions"])
         now = int(time.time() * 1000)
-        ivf = (approximate and not resident and cfg["metric"] == "cosine"
-               and self._index_fresh(collection))
-        snap = None if ivf else self._snapshot(collection)
+        snap = self._snapshot(collection)
         if snap is not None:
             return snap.hits(query_vector, top_k,
                              snap.attrs.mask(tenant_id, metadata_filter, now))
-        probes = self._probe(query_vector)
-        ridx = self._resident_fresh(collection) if resident else None
-        if ridx is not None:
-            out = ridx.search(probes, k=top_k, merge="driver", pre_filter=(
-                block_filter(tenant_id, metadata_filter, now)))
-            # the string-id decode join loses row order; rank carries it
-            return _hits(sorted(out.collect(), key=lambda r: r["rank"]))
-        if ivf:
-            from fusionspark.operators.ann import ivf_search_persisted
+        with self._lock(collection):  # no rewrite swaps the files mid-read
+            probes = self._probe(query_vector)
+            blocks = self._blocks_fresh(collection) if resident else None
+            if blocks is not None:
+                out = blocks.search(probes, k=top_k, merge="driver", pre_filter=(
+                    block_filter(tenant_id, metadata_filter, now)))
+                # the string-id decode join loses row order; rank carries it
+                return _hits(sorted(out.collect(), key=lambda r: r["rank"]))
+            if (approximate and not resident and cfg["metric"] == "cosine"
+                    and self._index_fresh(collection)):
+                from fusionspark.operators.ann import ivf_search_persisted
 
-            out = ivf_search_persisted(
-                self.spark,
-                os.path.join(self.root, f"index={collection}"),
-                probes, k=top_k,
-                n_probe=min(n_probe, cfg["index"]["n_centroids"]),
-                id_col="id", vector_col="vector",
-                pre_filter=_visible(now, tenant_id, metadata_filter),
+                out = ivf_search_persisted(
+                    self.spark,
+                    os.path.join(self.root, f"index={collection}"),
+                    probes, k=top_k,
+                    n_probe=min(n_probe, cfg["index"]["n_centroids"]),
+                    id_col="id", vector_col="vector",
+                    pre_filter=_visible(now, tenant_id, metadata_filter),
+                )
+                return [
+                    {"id": r["id"], "score": r["sim"], "distance": 1.0 - r["sim"],
+                     "rank": r["rnk"]}
+                    for r in out.collect()
+                ]
+            df = self._load(collection).filter(_visible(now, tenant_id, metadata_filter))
+            out = knn(
+                df, probes, k=top_k, metric=cfg["metric"],
+                vector_col="vector", id_col="id", dim=cfg["dimensions"],
             )
-            return [
-                {"id": r["id"], "score": r["sim"], "distance": 1.0 - r["sim"],
-                 "rank": r["rnk"]}
-                for r in out.collect()
-            ]
-        df = self._load(collection).filter(_visible(now, tenant_id, metadata_filter))
-        out = knn(
-            df, probes, k=top_k, metric=cfg["metric"],
-            vector_col="vector", id_col="id",
-        )
-        return _hits(out.collect())
+            return _hits(out.collect())
 
     def _probe(self, vec) -> DataFrame:
         """One-row probe DataFrame (array<float>, like the stored vectors)."""
         return self.spark.createDataFrame(
             [("q0", [float(x) for x in vec])],
             "probe_id: string, probe_embedding: array<float>",
-        )
-
-    def search_many(
-        self,
-        collection: str,
-        probes: DataFrame,
-        top_k: int = 10,
-        approximate: bool = False,
-        n_probe: int = 8,
-        probe_id_col: str = "probe_id",
-        probe_vector_col: str = "probe_embedding",
-        method: str = "ivf",
-        refine_r: int = 50,
-    ) -> DataFrame:
-        """Batch search: a DataFrame of probes in, a DataFrame of
-        (probe_id, id, sim/score, rank) out — nothing collects to the
-        driver, so a million-probe batch is one distributed job (the
-        reference answers probes one loop iteration at a time).  Exact path
-        = GEMM k-NN; approximate paths over a fresh build_index() layout
-        (stale index raises — a silent exact fallback would surprise at
-        this scale; rebuild or pass approximate=False):
-        method="ivf" = distributed pruned-list exact rerank;
-        method="ivf_pq" = ADC over the persisted m-byte codes with
-        tie-kept exact refine of the top `refine_r` (needs
-        build_index(pq=True)).
-        method="resident" (with approximate=False) = exact search over a
-        fresh load_resident() copy (Snapshot: numpy on the collected probes;
-        ResidentIndex: one Spark stage), no per-batch table scan; a stale
-        or missing copy raises for the same no-silent-fallback reason.
-        method="resident_ivf" = pruned search over a fresh
-        load_resident_ivf() list cache (each partition GEMMs only its
-        routed lists; cosine only), same staleness contract."""
-        cfg = self._catalog[collection]
-        if method == "resident":
-            if approximate:
-                raise ValueError("method='resident' is an exact path")
-            ridx = self._resident_fresh(collection)
-            if ridx is None:
-                raise ValueError(
-                    f"resident index for {collection!r} is stale or "
-                    "missing; call load_resident() first (batch search "
-                    "will not silently fall back to an exact scan)"
-                )
-            return ridx.search(
-                probes, k=top_k,
-                probe_id_col=probe_id_col,
-                probe_vector_col=probe_vector_col,
-            )
-        if method == "resident_ivf":
-            ent = self._resident_ivf.get(collection)
-            if ent is None or ent["at_mutation"] != self._mutation_token(collection):
-                raise ValueError(
-                    f"resident IVF index for {collection!r} is stale or "
-                    "missing; call load_resident_ivf() first (batch search "
-                    "will not silently fall back to an exact scan)"
-                )
-            return ent["idx"].search(
-                probes, k=top_k,
-                n_probe=min(n_probe, ent["n_centroids"]),
-                probe_id_col=probe_id_col,
-                probe_vector_col=probe_vector_col,
-            )
-        if approximate:
-            if cfg["metric"] != "cosine":
-                raise ValueError("approximate batch search is cosine-only")
-            if not self._index_fresh(collection):
-                raise ValueError(
-                    f"index for {collection!r} is stale or missing; call "
-                    "build_index() first (batch search will not silently "
-                    "fall back to an exact scan)"
-                )
-            path = os.path.join(self.root, f"index={collection}")
-            if method == "ivf_pq":
-                from fusionspark.operators.ann import ivf_pq_search
-
-                if "pq" not in cfg["index"]:
-                    raise ValueError(
-                        f"no PQ codes for {collection!r}; call "
-                        "build_index(pq=True) first"
-                    )
-                cbs = np.load(f"{path}.pq.npy")
-                return ivf_pq_search(
-                    self.spark, path, probes, cbs,
-                    codes_path=f"{path}/codes", k=top_k,
-                    n_probe=min(n_probe, cfg["index"]["n_centroids"]),
-                    refine_r=refine_r,
-                    id_col="id", vector_col="vector",
-                    probe_id_col=probe_id_col,
-                    probe_vector_col=probe_vector_col,
-                )
-            from fusionspark.operators.ann import ivf_search_distributed
-
-            return ivf_search_distributed(
-                self.spark,
-                path,
-                probes, k=top_k,
-                n_probe=min(n_probe, cfg["index"]["n_centroids"]),
-                id_col="id", vector_col="vector",
-                probe_id_col=probe_id_col, probe_vector_col=probe_vector_col,
-            )
-        return knn(
-            self._load(collection), probes, k=top_k, metric=cfg["metric"],
-            vector_col="vector", id_col="id", strategy="numpy",
-            probe_id_col=probe_id_col, probe_vector_col=probe_vector_col,
         )
 
     # ── hybrid retrieve (§3.2) ────────────────────────────────────────────
@@ -952,15 +784,16 @@ class FusionSparkEngine:
             vec = [(h["id"], h["score"]) for h in snap.hits(qvec, n)]
             kw = keyword_rank(snap.ids, snap.content, query, n)
         else:
-            df = self._load(collection)
-            vec = [(r["id"], r["score"]) for r in knn(
-                df, self._probe(qvec), k=n, metric=cfg["metric"],
-                vector_col="vector", id_col="id",
-            ).collect()]
-            kw = [(r["id"], r["score"]) for r in keyword_search(
-                df.withColumn("text", F.coalesce("content", F.lit(""))),
-                query, top_k=n, id_col="id",
-            ).collect()]
+            with self._lock(collection):  # see search
+                df = self._load(collection)
+                vec = [(r["id"], r["score"]) for r in knn(
+                    df, self._probe(qvec), k=n, metric=cfg["metric"],
+                    vector_col="vector", id_col="id", dim=cfg["dimensions"],
+                ).collect()]
+                kw = [(r["id"], r["score"]) for r in keyword_search(
+                    df.withColumn("text", F.coalesce("content", F.lit(""))),
+                    query, top_k=n, id_col="id",
+                ).collect()]
         return fusion_ops.rrf_rank(
             {"vector": vec, "keyword": kw}, top_k=top_k,
             weights=weights or {"vector": 0.5, "keyword": 0.5},
@@ -1222,11 +1055,13 @@ class FusionSparkEngine:
             hits = snap.hits(qvec, top_k, snap.attrs.mask(None, None, now),
                              content=True)
         else:
-            hits = knn(
-                self._load(collection).filter(_visible(now)), self._probe(qvec),
-                k=top_k, metric=cfg["metric"], vector_col="vector", id_col="id",
-                keep_cols=("content",),
-            ).collect()
+            with self._lock(collection):  # see search
+                hits = knn(
+                    self._load(collection).filter(_visible(now)),
+                    self._probe(qvec), k=top_k, metric=cfg["metric"],
+                    vector_col="vector", id_col="id", dim=cfg["dimensions"],
+                    keep_cols=("content",),
+                ).collect()
         if not hits:
             return {"prompt": query, "sources": [], "chunks": []}
         packed = pack_rows(

@@ -112,14 +112,6 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, 
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Register each table as a temp view (mirrors the DuckDB oracle setup)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
-
-
 def write_bucketed(
     df: DataFrame,
     name: str,

@@ -668,61 +668,6 @@ def ivf_search_distributed(
     )
 
 
-def kmeans_centroids(
-    corpus: DataFrame,
-    k: int,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-) -> DataFrame:
-    """MLlib-trained centroids for IVF (better cluster geometry than the
-    deterministic first-k choice; the north-star's 'MLlib for embeddings'
-    scale path).  Seeded, so reproducible within a Spark version — but NOT
-    oracle-replicable, so query-gate code keeps deterministic_centroids.
-
-    Returns the same (centroid_id, centroid) shape, so it drops into
-    ivf_assign / ivf_knn unchanged.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = corpus.select(
-        F.col(id_col), array_to_vector(F.col(vector_col).cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=k, seed=seed, maxIter=10).fit(feats)
-    spark = corpus.sparkSession
-    centers = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    return spark.createDataFrame(
-        centers, "centroid_id: bigint, centroid: array<float>"
-    )
-
-
-def ivf_knn_kmeans(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 10,
-    n_centroids: int = 8,
-    n_probe: int = 2,
-    seed: int = 42,
-    **kwargs,
-) -> DataFrame:
-    """IVF search over KMeans-trained lists (same plan as ivf_knn with a
-    learned codebook)."""
-    centroids = kmeans_centroids(
-        corpus,
-        n_centroids,
-        seed,
-        kwargs.get("id_col", "vec_id"),
-        kwargs.get("vector_col", "embedding"),
-    )
-    return ivf_knn(
-        corpus, probes, k=k, n_centroids=n_centroids, n_probe=n_probe,
-        centroids=centroids, **kwargs,
-    )
-
-
 # ── SRP-LSH (signed-random-projection) bucketed ANN ───────────────────────
 
 
@@ -955,9 +900,7 @@ def pq_codebooks(
     """Deterministic PQ codebooks: the first `ksub` corpus vectors by id,
     L2-normalized, sliced into m subvectors — the same determinism contract
     as deterministic_centroids, so a SQL oracle replays training exactly.
-    Returns (m, ksub, dsub) float64.  At scale, refine with per-subspace
-    Lloyd iterations over a sample (pq_codebooks_lloyd) — identical shapes
-    and downstream plan."""
+    Returns (m, ksub, dsub) float64."""
     import numpy as np
 
     rows = (
@@ -972,46 +915,6 @@ def pq_codebooks(
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     dsub = dim // m
     return V.reshape(ksub, m, dsub).transpose(1, 0, 2).copy()
-
-
-def pq_codebooks_lloyd(
-    corpus: DataFrame,
-    m: int = 4,
-    ksub: int = 16,
-    iters: int = 5,
-    sample_n: int = 2048,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-):
-    """Lloyd-refined codebooks: deterministic init (pq_codebooks) then
-    `iters` k-means rounds per subspace over the first `sample_n` vectors
-    by id (deterministic sample; at 100 TB a hash-sample with the same
-    driver-side fit — codebooks are KB-sized, training them is never the
-    bottleneck).  Empty clusters keep their previous centroid."""
-    import numpy as np
-
-    cbs = pq_codebooks(corpus, m, ksub, id_col, vector_col)
-    rows = (
-        corpus.orderBy(F.col(id_col).asc())
-        .limit(sample_n)
-        .select(vector_col)
-        .collect()
-    )
-    V = np.asarray([list(r[0]) for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(V, axis=1)
-    norms[norms == 0] = 1.0
-    V = (V / norms[:, None]).reshape(len(rows), m, -1)
-    for j in range(m):
-        X = V[:, j, :]
-        C = cbs[j]
-        for _ in range(iters):
-            d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-            a = d.argmin(1)
-            for c in range(ksub):
-                mask = a == c
-                if mask.any():
-                    C[c] = X[mask].mean(0)
-    return cbs
 
 
 def pq_encode(
@@ -1079,7 +982,6 @@ def pq_adc_topk(
     probe_id_col: str = "probe_id",
     probe_vector_col: str = "probe_embedding",
     routing_recs: list[tuple] | None = None,
-    keep_ties: bool = False,
 ) -> DataFrame:
     """ADC top-k over PQ codes: per probe, a (m × ksub) inner-product table
     against the L2-normalized probe is built ONCE (driver-side — tables are
@@ -1087,17 +989,12 @@ def pq_adc_topk(
     vector payload is read at all.  Partition-local partial top-k (boundary
     ties widened) feeds the global per-probe window; the shuffle carries
     (probe_id, id, asim) only.  Returns (probe_id, vec_id, asim, rnk) —
-    `asim` approximates cosine; chain pq_refine for exact re-ranking.
+    `asim` approximates cosine.
 
     `routing_recs` (IVF-PQ): (probe_id, probe_vec, centroid_id) triples
     from _route_probes; codes_df must then carry `centroid_id`, and each
     row scores only against the probes routed to its list — the per-list
-    sibling of _numpy_rerank's GEMM routing.
-
-    `keep_ties` (candidate mode, for pq_refine): ADC scores are DISCRETE —
-    vectors sharing a code word score identically — so a row_number cut at
-    k drops tied true neighbors arbitrarily.  rank() keeps the whole tied
-    boundary group; the exact refine then orders them."""
+    sibling of _numpy_rerank's GEMM routing."""
     import numpy as np
     import pandas as pd
 
@@ -1169,177 +1066,13 @@ def pq_adc_topk(
         [id_col, "codes"] if route_idx is None else [id_col, "centroid_id", "codes"]
     )
     scored = codes_df.select(*in_cols).mapInPandas(run, schema=out_schema)
-    if keep_ties:
-        wk = Window.partitionBy(probe_id_col).orderBy(F.col("sim").desc())
-        ranked = scored.withColumn("rnk", F.rank().over(wk))
-    else:
-        wk = Window.partitionBy(probe_id_col).orderBy(
-            F.col("sim").desc(), F.col(id_col).asc()
-        )
-        ranked = scored.withColumn("rnk", F.row_number().over(wk))
-    return ranked.filter(F.col("rnk") <= k).select(
-        probe_id_col, id_col, F.col("sim").alias("asim"), "rnk"
-    )
-
-
-def pq_refine(
-    adc_topr: DataFrame,
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-    probe_vector_col: str = "probe_embedding",
-) -> DataFrame:
-    """Exact-cosine re-rank of the ADC top-R candidate set (IVF-PQ's
-    'refine' stage): the candidate list is small (R per probe plus tied
-    boundary groups), so the join back to vector payloads touches
-    R×n_probes rows, not the corpus.  Probe vectors ship in the kernel
-    closure (KB-sized) and scoring is one vectorized Arrow pass — the
-    unrolled cosine expression de-codegens at 64 dims and runs ~4× slower
-    interpreted."""
-    import numpy as np
-    import pandas as pd
-
-    from fusionspark.operators.knn import id_sql_type
-
-    pvecs = {
-        r[0]: np.asarray(list(r[1]), dtype=np.float64)
-        for r in probes.select(probe_id_col, probe_vector_col).collect()
-    }
-    for pid, v in pvecs.items():
-        n = np.linalg.norm(v)
-        pvecs[pid] = v / (n or 1.0)
-
-    cand = adc_topr.select(probe_id_col, id_col).join(
-        corpus.select(id_col, vector_col), id_col
-    )
-    out_schema = (
-        f"{probe_id_col} {id_sql_type(adc_topr, probe_id_col)}, "
-        f"{id_col} {id_sql_type(adc_topr, id_col)}, sim double"
-    )
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vector_col]]
-            )
-            norms = np.linalg.norm(E, axis=1)
-            norms[norms == 0] = 1.0
-            En = E / norms[:, None]
-            P = np.stack([pvecs[p] for p in pdf[probe_id_col]])
-            sims = (En * P).sum(1)
-            yield pd.DataFrame(
-                {
-                    probe_id_col: pdf[probe_id_col],
-                    id_col: pdf[id_col],
-                    "sim": sims,
-                }
-            )
-
-    scored = cand.mapInPandas(run, schema=out_schema)
     wk = Window.partitionBy(probe_id_col).orderBy(
         F.col("sim").desc(), F.col(id_col).asc()
     )
-    return (
-        scored.withColumn("rnk", F.row_number().over(wk))
-        .filter(F.col("rnk") <= k)
-        .select(probe_id_col, id_col, "sim", "rnk")
+    ranked = scored.withColumn("rnk", F.row_number().over(wk))
+    return ranked.filter(F.col("rnk") <= k).select(
+        probe_id_col, id_col, F.col("sim").alias("asim"), "rnk"
     )
-
-
-def ivf_pq_search(
-    spark: SparkSession,
-    path: str,
-    probes: DataFrame,
-    codebooks,
-    codes_path: str | None = None,
-    k: int = 10,
-    n_probe: int = 2,
-    refine_r: int = 0,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-    probe_vector_col: str = "probe_embedding",
-) -> DataFrame:
-    """IVF-PQ over a `persist_ivf` layout: coarse routing prunes to n_probe
-    partitions (PartitionFilters on centroid_id), ADC scores the pruned
-    codes, and `refine_r` > 0 re-ranks the ADC top-R exactly.  When a
-    pre-encoded `codes_path` exists it is read instead of encoding on the
-    fly (the production layout: codes live beside the IVF lists, 32-64×
-    smaller than the vectors they index)."""
-    crows = _collect_centroids(spark.read.parquet(f"{path}/centroids"))
-    recs = _route_probes(probes, crows, n_probe, probe_id_col, probe_vector_col)
-    wanted = sorted({r[2] for r in recs})
-    data = spark.read.parquet(f"{path}/data").filter(
-        F.col("centroid_id").isin(wanted)
-    )
-    if codes_path is not None:
-        codes = spark.read.parquet(codes_path).filter(
-            F.col("centroid_id").isin(wanted)
-        )
-    else:
-        codes = pq_encode(
-            data, codebooks, id_col, vector_col, extra_cols=["centroid_id"]
-        )
-    r = max(refine_r, k)
-    adc = pq_adc_topk(
-        codes,
-        probes,
-        codebooks,
-        r,
-        id_col,
-        probe_id_col,
-        probe_vector_col,
-        routing_recs=recs,
-        # candidate mode: ADC scores are discrete (shared code words tie),
-        # so the refine stage must see the whole tied boundary group
-        keep_ties=refine_r > 0,
-    )
-    if refine_r <= 0:
-        return adc.filter(F.col("rnk") <= k)
-    return pq_refine(
-        adc, data, probes, k, id_col, vector_col, probe_id_col, probe_vector_col
-    )
-
-
-def ivf_append(
-    spark: SparkSession,
-    path: str,
-    new_df: DataFrame,
-    codebooks=None,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-) -> None:
-    """Append a new batch to a persisted IVF layout (and its PQ codes)
-    WITHOUT touching existing lists — the FAISS add-with-frozen-quantizer
-    contract: assignment runs the same zero-shuffle map against the FROZEN
-    centroids, so existing rows' list membership never changes and the
-    write appends whole-list files into the partition directories.  The
-    incremental sibling of dedup's persist_minhash_index/minhash_lookup:
-    per-ingest cost is O(batch), the corpus is never re-read.  Index
-    quality drifts as the data distribution leaves the frozen centroids —
-    monitor per-list growth and rebuild on skew, exactly as production
-    IVF deployments do."""
-    crows = _collect_centroids(spark.read.parquet(f"{path}/centroids"))
-    assigned = _assign_from_rows(new_df, crows, vector_col).drop("c_sim")
-    (
-        assigned.repartition(F.col("centroid_id"))
-        .write.mode("append")
-        .partitionBy("centroid_id")
-        .parquet(f"{path}/data")
-    )
-    if codebooks is not None:
-        (
-            pq_encode(assigned, codebooks, id_col, vector_col,
-                      extra_cols=["centroid_id"])
-            .write.mode("append")
-            .partitionBy("centroid_id")
-            .parquet(f"{path}/codes")
-        )
 
 
 # ── scalar quantization (SQ8) ─────────────────────────────────────────────
@@ -1559,196 +1292,4 @@ def sq8_knn(
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("probe_id", id_col, "score", F.col("rnk").cast("int").alias("rnk"))
-    )
-
-
-# ── binary quantization (1-bit codes, Hamming prefilter) ──────────────────
-
-
-def bq_encode(
-    df: DataFrame, vec_col: str = "embedding", dim: int = 64
-) -> DataFrame:
-    """1-bit-per-dimension codes: bit_i = (x_i > 0), packed into two 32-bit
-    halves (code_lo = dims 1-32, code_hi = dims 33-64) so the shifted values
-    never touch the sign bit of a signed 64-bit integer on either engine.
-    32× smaller than float32 — the cheapest quantizer in the family
-    (PQ > SQ8 > BQ in fidelity and in cost).  Zero-shuffle Arrow map; codes
-    are exact integers, so the DuckDB oracle replays them bit-for-bit.
-
-    Reference parity: the reference stores full float vectors only
-    (HNSWIndex.js:196); quantized sidecars are the scale path for a corpus
-    whose raw embeddings don't fit the page cache."""
-    import numpy as np
-    import pandas as pd
-
-    if dim > 64:
-        raise ValueError("bq_encode packs at most 64 dims into two 32-bit words")
-    lo_n = min(dim, 32)
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-        + ["code_lo bigint", "code_hi bigint"]
-    )
-
-    def enc(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            bits = E > 0.0
-            lo = np.zeros(len(pdf), dtype=np.int64)
-            for i in range(lo_n):
-                lo |= bits[:, i].astype(np.int64) << i
-            hi = np.zeros(len(pdf), dtype=np.int64)
-            for i in range(lo_n, dim):
-                hi |= bits[:, i].astype(np.int64) << (i - 32)
-            out = pdf.copy()
-            out["code_lo"] = lo
-            out["code_hi"] = hi
-            yield out
-
-    return df.mapInPandas(enc, schema=out_schema)
-
-
-def bq_knn(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 10,
-    m: int = 40,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Two-stage search over 1-bit codes: Hamming-distance candidate select
-    (top-m per probe; ties → lower id) over the packed codes — the scan
-    touches 16 bytes/row instead of 256, and the distance is two XOR+POPCNT
-    ops inside whole-stage codegen — then an exact float rerank of the m
-    candidates only (top-k by cosine desc, id asc).
-
-    Scale shape: the probe side broadcasts (codes + vectors are tiny);
-    the corpus is scanned once, code-width, with no embedding payload in
-    the candidate stage; the rerank joins the m·|probes| candidate ids back
-    to the corpus (broadcast hash join on the candidate side), so full
-    vectors are read for candidates only."""
-    from pyspark.sql.window import Window
-
-    from fusionspark.functions import vector as V
-
-    codes = bq_encode(corpus.select(id_col, vec_col), vec_col, dim).select(
-        id_col, "code_lo", "code_hi"
-    )
-    p = probes.select(
-        F.col("probe_id"), F.col("probe_embedding")
-    )
-    pcodes = bq_encode(
-        p.withColumnRenamed("probe_embedding", vec_col), vec_col, dim
-    ).select(
-        "probe_id",
-        F.col("code_lo").alias("plo"),
-        F.col("code_hi").alias("phi"),
-    )
-    ham = (
-        F.bit_count(F.col("code_lo").bitwiseXOR(F.col("plo")))
-        + F.bit_count(F.col("code_hi").bitwiseXOR(F.col("phi")))
-    ).cast("int")
-    w_m = Window.partitionBy("probe_id").orderBy(
-        F.col("ham").asc(), F.col(id_col).asc()
-    )
-    cands = (
-        codes.crossJoin(F.broadcast(pcodes))
-        .select("probe_id", id_col, ham.alias("ham"))
-        .withColumn("rn", F.row_number().over(w_m))
-        .filter(F.col("rn") <= m)
-        .select("probe_id", id_col)
-    )
-    rer = (
-        corpus.select(id_col, vec_col)
-        .join(F.broadcast(cands), id_col)
-        .join(F.broadcast(p), "probe_id")
-        .withColumn(
-            "sim",
-            V.cosine_similarity(F.col(vec_col), F.col("probe_embedding"), dim),
-        )
-    )
-    w_k = Window.partitionBy("probe_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        rer.withColumn("rnk", F.row_number().over(w_k))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "probe_id",
-            id_col,
-            F.round("sim", 6).alias("sim"),
-            F.col("rnk").cast("long").alias("rnk"),
-        )
-    )
-
-
-# ── Matryoshka (prefix-dimension) two-stage search ────────────────────────
-
-
-def matryoshka_knn(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 10,
-    m: int = 50,
-    prefix_dim: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Matryoshka-style two-stage search (Kusupati et al., "Matryoshka
-    Representation Learning"): score on the first `prefix_dim` dimensions
-    only (prefix_dim mul-adds per pair instead of dim — parquet still reads
-    the whole array element, so at 100 TB you'd materialize the prefix as
-    its own sidecar column at write time to cut scan IO too), take top-m
-    per probe, then rerank those candidates with the full-dimension cosine.
-    With MRL-trained embeddings the prefix ordering is already ~correct,
-    so small m recovers exact top-k.
-
-    Scale shape: identical plan family to bq_knn — broadcast probes, one
-    corpus scan (prefix arithmetic inside codegen), candidate ids join back
-    broadcast for the full-width rerank."""
-    from pyspark.sql.window import Window
-
-    from fusionspark.functions import vector as V
-
-    p = probes.select("probe_id", "probe_embedding")
-    coarse_sim = V.cosine_similarity(
-        F.col(vec_col), F.col("probe_embedding"), prefix_dim
-    )
-    w_m = Window.partitionBy("probe_id").orderBy(
-        F.col("csim").desc(), F.col(id_col).asc()
-    )
-    cands = (
-        corpus.select(id_col, vec_col)
-        .crossJoin(F.broadcast(p))
-        .select("probe_id", id_col, coarse_sim.alias("csim"))
-        .withColumn("rn", F.row_number().over(w_m))
-        .filter(F.col("rn") <= m)
-        .select("probe_id", id_col)
-    )
-    rer = (
-        corpus.select(id_col, vec_col)
-        .join(F.broadcast(cands), id_col)
-        .join(F.broadcast(p), "probe_id")
-        .withColumn(
-            "sim",
-            V.cosine_similarity(F.col(vec_col), F.col("probe_embedding"), dim),
-        )
-    )
-    w_k = Window.partitionBy("probe_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        rer.withColumn("rnk", F.row_number().over(w_k))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "probe_id",
-            id_col,
-            F.round("sim", 6).alias("sim"),
-            F.col("rnk").cast("long").alias("rnk"),
-        )
     )

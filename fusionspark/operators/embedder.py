@@ -124,17 +124,6 @@ def embed_texts(
     return distinct.mapInPandas(run, schema=EMBED_SCHEMA)
 
 
-def embed_documents(
-    documents: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Attach embeddings to documents via the distinct-text table (broadcast
-    join back — embeddings table is |distinct texts|, not |rows|)."""
-    emb = embed_texts(documents, text_col)
-    return documents.join(
-        F.broadcast(emb), documents[text_col] == emb["text"], "left"
-    ).select(documents[id_col], emb["embedding"])
-
-
 def _js_hash(text: str) -> int:
     """BaseEmbedder._hash (providers.js:45-51): JS 31-bit rolling hash over
     the first 500 chars with `| 0` overflow — the reference's cache key."""
@@ -239,39 +228,3 @@ class HTTPEmbedder:
     def __call__(self, text: str, dimensions: int | None = None) -> list[float]:
         """engine.embedder protocol (dimensions is fixed by the provider)."""
         return self.embed(text)
-
-
-def ollama_embed(text: str, dimensions: int = DIMENSIONS) -> list[float]:
-    """Convenience one-shot Ollama call (providers.js:54-66); requires a
-    running local Ollama — use HTTPEmbedder for batch/cached embedding."""
-    return HTTPEmbedder("ollama", dimensions=dimensions).embed(text)
-
-
-def embed_with_cache(
-    texts: DataFrame,
-    cache_path: str,
-    text_col: str = "text",
-    dimensions: int = DIMENSIONS,
-    embed_fn: Callable[[str, int], list[float]] = mock_embed,
-) -> DataFrame:
-    """V8 cache-table semantics at Spark altitude: a persistent parquet
-    cache of (text, embedding) replaces the reference's in-process Map —
-    only texts NOT in the cache are embedded (distinct-text Arrow batch),
-    new rows are appended, and the result covers every input text.  The
-    anti-join is the cache lookup; at 100 TB the cache is just another
-    table, so the lookup shuffles keys, never payloads."""
-    spark = texts.sparkSession
-    distinct = texts.select(F.col(text_col).alias("text")).distinct()
-    try:
-        cached = spark.read.parquet(cache_path).select("text", "embedding")
-        misses = distinct.join(cached.select("text"), "text", "left_anti")
-    except Exception:  # noqa: BLE001 — cache not created yet
-        cached = None
-        misses = distinct
-    new = embed_texts(misses, "text", dimensions, embed_fn)
-    new.write.mode("append").parquet(cache_path)
-    return (
-        spark.read.parquet(cache_path)
-        .select("text", "embedding")
-        .join(distinct, "text")
-    )

@@ -107,6 +107,7 @@ def knn(
     pre_filter: Column | None = None,
     strategy: str = "window",
     keep_cols: tuple[str, ...] = (),
+    dim: int | None = None,
 ) -> DataFrame:
     """Exact k-NN for every probe row.
 
@@ -118,7 +119,9 @@ def knn(
     in one Arrow pass — highest throughput for many probes).
 
     `keep_cols` carries corpus columns through to each hit ("window"
-    only), so a caller needs no join back by id.
+    only), so a caller needs no join back by id.  `dim`, the vector width
+    when the caller knows it, saves `score_probes` a `.first()` job to
+    read it from the corpus.
     """
     if keep_cols and strategy != "window":
         raise ValueError("keep_cols needs strategy='window'")
@@ -129,7 +132,8 @@ def knn(
         )
     else:
         scored = score_probes(
-            corpus, probes, metric, vector_col, probe_vector_col, pre_filter
+            corpus, probes, metric, vector_col, probe_vector_col, pre_filter,
+            dim,
         )
         # drop the vector payloads before the top-k shuffle — the window
         # exchange should carry (ids, distance), not the embeddings

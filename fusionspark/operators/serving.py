@@ -8,11 +8,11 @@ Two resident forms, chosen per collection by size:
   collection into the server process: the original string ids, a float64
   matrix (row-normalized for cosine), the `content` texts, `ts`/`ttl_ms` as
   int64 and tenant plus each metadata key as categorical code arrays.  The
-  engine answers every interactive read from it with no Spark job: exact
-  and resident search, recall, both branches of hybrid retrieve and the
-  RAG context (vectorised tenant/metadata/TTL masks, the exact top-k
-  below, and the driver twins of keyword scoring, RRF and the token-budget
-  pack next to their Spark operators).  Snapshots are immutable: a write
+  engine answers every interactive read from it with no Spark job: search
+  (whatever its `resident` and `approximate` flags), recall, both branches
+  of hybrid retrieve and the RAG context (vectorised tenant/metadata/TTL
+  masks, the exact top-k below, and the driver twins of keyword scoring,
+  RRF and the token-budget pack next to their Spark operators).  Snapshots are immutable: a write
   builds a new one from the old plus the rows it already holds on the
   driver, and a reader keeps whichever reference it took, so it never sees
   half a write.  One freshness rule: each snapshot carries the collection's
@@ -56,7 +56,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["ResidentIndex", "ResidentIVF", "Snapshot", "fits_driver"]
+__all__ = ["ResidentIndex", "Snapshot", "fits_driver"]
 
 _METRICS = ("cosine", "dot", "euclidean")
 
@@ -343,12 +343,18 @@ def _codes(values, cats: dict | None = None):
 
 
 def _meta_codes(maps) -> dict:
-    """metadata key -> categorical column over the rows' maps."""
+    """metadata key -> categorical column over the rows' maps, in one pass
+    (each key's code array is allocated once, when the key first occurs)."""
+    n = len(maps)
     cols: dict = {}
     for i, m in enumerate(maps):
         for key, v in (m or {}).items():
-            cols.setdefault(key, [None] * len(maps))[i] = v
-    return {key: _codes(col) for key, col in cols.items()}
+            if key not in cols:
+                cols[key] = (np.full(n, -1, dtype=np.int32), {})
+            if v is not None:
+                codes, cats = cols[key]
+                codes[i] = cats.setdefault(v, len(cats))
+    return cols
 
 
 def _concat_codes(a, b, na: int, nb: int):
@@ -525,28 +531,14 @@ class Snapshot:
         """Drop every row of the tenant (None: the untenanted rows)."""
         return self._take(~self.attrs.tenant_is(tenant_id))
 
-    def search(self, probes: DataFrame, k: int = 10,
-               probe_id_col: str = "probe_id",
-               probe_vector_col: str = "probe_embedding") -> DataFrame:
-        """`ResidentIndex.search`'s (probe_id, id, distance, score, rank)
-        DataFrame over every row; the probes are collected, scored here."""
-        from fusionspark.operators.knn import id_sql_type
-
-        rows = probes.select(probe_id_col, probe_vector_col).collect()
-        D, R = self.topk([r[1] for r in rows], k)
-        return _result_df(
-            probes.sparkSession, [r[0] for r in rows], D, self.ids[R],
-            probe_id_col, "id", id_sql_type(probes, probe_id_col), "string",
-        )
-
     def hits(self, query_vector, k: int, mask=None,
              content: bool = False) -> list[dict]:
         """The engine search's hits (id, score, distance, rank; with
         `content`, each row's text too) for one query vector, rounded
         through float32 like the exact path's array<float> probe."""
-        D, R = self.topk(np.asarray([query_vector], np.float32), k, mask)
+        D, R = self.topk(np.asarray(query_vector, np.float32), k, mask)
         out = []
-        for rank, (d, row) in enumerate(zip(D[0].tolist(), R[0].tolist()), 1):
+        for rank, (d, row) in enumerate(zip(D.tolist(), R.tolist()), 1):
             h = {"id": self.ids[row], "score": 1.0 - d, "distance": d,
                  "rank": rank}
             if content:
@@ -554,11 +546,11 @@ class Snapshot:
             out.append(h)
         return out
 
-    def topk(self, P, k: int, mask=None):
-        """(D, R): per probe, the top-k (distance ASC, id ASC) over the rows
-        in `mask` (all rows if None), as (Q, kk) distances and row numbers
+    def topk(self, p, k: int, mask=None):
+        """(D, R): the top-k (distance ASC, id ASC) of probe `p` over the
+        rows in `mask` (all rows if None), as distances and row numbers
         sorted by rank."""
-        P = np.asarray(P, dtype=np.float64).reshape(-1, self.M.shape[1])
+        P = np.asarray(p, dtype=np.float64).reshape(1, self.M.shape[1])
         if self._keys is None:
             # unique int64 sort keys in (id, row) order, NULL ids first as
             # in Spark's ASC: the kernel's id tie-break on them is the
@@ -573,17 +565,9 @@ class Snapshot:
         if mask is not None and not mask.all():
             rows = np.flatnonzero(mask)
             M, keys, v2 = M[rows], keys[rows], v2[rows]
-        Q, kk = P.shape[0], min(k, len(keys))
-        D, K = np.empty((Q, kk)), np.empty((Q, kk), dtype=np.int64)
-        # probe chunks bound the (chunk, rows) transients like a
-        # ResidentIndex strip at WARM_Q probes
-        step = max(1, TILE_ROWS * WARM_Q // max(len(keys), 1))
-        for s in range(0, Q, step):
-            d, i = _scored_topk(P[s:s + step], M, keys, k, self.metric, v2)
-            for qi in range(d.shape[0]):
-                o = np.lexsort((i[qi], d[qi]))
-                D[s + qi], K[s + qi] = d[qi][o], i[qi][o]
-        return D, order[K]
+        d, i = _scored_topk(P, M, keys, k, self.metric, v2)
+        o = np.lexsort((i[0], d[0]))
+        return d[0][o], order[i[0][o]]
 
 
 class ResidentIndex:
@@ -807,181 +791,3 @@ class ResidentIndex:
     def unpersist(self) -> None:
         for p in self._parts:
             p.unpersist()
-
-
-class ResidentIVF:
-    """Resident IVF: blocks are grouped by centroid list (hash-partitioned
-    on centroid_id at build), and a search computes GEMMs only for the
-    lists its probes route to — the resident sibling of
-    ivf_search_persisted's partition-pruned parquet scan.  Routing and
-    assignment reuse the attested IVF rules (deterministic_centroids +
-    max-cosine / lowest-id ties), so results match ivf_knn for the same
-    (n_centroids, n_probe)."""
-
-    def __init__(self, spark, rdd, crows, id_col, vector_col, id_sql_type,
-                 decode=None):
-        self.spark = spark
-        self.rdd = rdd
-        self.crows = crows
-        self.id_col = id_col
-        self.vector_col = vector_col
-        self.id_sql_type = id_sql_type
-        self._decode = decode
-
-    @classmethod
-    def build(
-        cls,
-        corpus: DataFrame,
-        n_centroids: int = 64,
-        id_col: str = "vec_id",
-        vector_col: str = "embedding",
-        n_partitions: int | None = None,
-    ) -> "ResidentIVF":
-        kind = _id_kind(corpus, id_col)
-        from fusionspark.operators.ann import (
-            _assign_from_rows,
-            _collect_centroids,
-            deterministic_centroids,
-        )
-        from fusionspark.operators.knn import id_sql_type
-
-        id_t = id_sql_type(corpus, id_col)
-        decode = None
-        block_id = id_col
-        if kind == "string":
-            # centroid selection + assignment key on the int64 surrogates
-            # for string-keyed corpora (deterministic: xxhash64 of content)
-            corpus, decode = _encode_string_ids(corpus, id_col)
-            block_id = "__rid64"
-        crows = _collect_centroids(
-            deterministic_centroids(corpus, n_centroids, block_id, vector_col)
-        )
-        assigned = _assign_from_rows(
-            corpus.select(block_id, vector_col), crows, vector_col
-        )
-        n_parts = n_partitions or min(
-            n_centroids, corpus.sparkSession.sparkContext.defaultParallelism
-        )
-        # hash-partition whole lists together so a probe's n_probe lists
-        # touch at most n_probe partitions
-        placed = assigned.repartition(n_parts, "centroid_id")
-
-        def to_blocks(it: Iterator) -> Iterator[dict]:
-            by_cid: dict[int, list] = {}
-            for r in it:
-                by_cid.setdefault(r["centroid_id"], []).append(r)
-            if by_cid:
-                yield {
-                    cid: _block_of(rows, block_id, vector_col, "cosine")
-                    for cid, rows in by_cid.items()
-                }
-
-        rdd = placed.rdd.mapPartitions(to_blocks).persist(
-            StorageLevel.MEMORY_ONLY
-        )
-        rdd.count()
-        return cls(
-            corpus.sparkSession, rdd, crows, id_col, vector_col, id_t, decode
-        )
-
-    def search(
-        self,
-        probes: DataFrame,
-        k: int = 10,
-        n_probe: int = 8,
-        probe_id_col: str = "probe_id",
-        probe_vector_col: str = "probe_embedding",
-    ) -> DataFrame:
-        """Probes route to their n_probe max-cosine lists (driver-side,
-        same fold as _route_probes); each partition scores only its routed
-        lists.  Unrouted (probe, partition) slots pad with +inf distance, so
-        the merge is the same rectangular fold as the exact index."""
-        from fusionspark.operators.knn import id_sql_type
-
-        rows = probes.select(probe_id_col, probe_vector_col).collect()
-        probe_ids = [r[probe_id_col] for r in rows]
-        probe_t = id_sql_type(probes, probe_id_col)
-        P = np.asarray([r[probe_vector_col] for r in rows], dtype=np.float64)
-        pn = np.linalg.norm(P, axis=1)
-        pn[pn == 0] = 1.0
-        Pn = P / pn[:, None]
-        Q = len(probe_ids)
-
-        # driver-side routing: same scoring rule as _route_probes (max
-        # cosine, ties to lower centroid_id), vectorized across probes with
-        # the SAME left-to-right float64 fold per element — `acc = acc +
-        # P[:,i]*c_i` is elementwise, so each probe sees the identical
-        # operation sequence as the per-probe Python fold
-        n_c = len(self.crows)
-        cids = np.asarray([c[0] for c in self.crows], dtype=np.int64)
-        cnorms = np.asarray([c[2] for c in self.crows])
-        d = P.shape[1]
-        acc = np.zeros(Q)
-        for i in range(d):
-            acc = acc + P[:, i] * P[:, i]
-        pnorm = np.sqrt(acc)
-        sims = np.empty((Q, n_c))
-        for j, (_cid, cvec, _cn) in enumerate(self.crows):
-            accj = np.zeros(Q)
-            for i in range(d):
-                accj = accj + P[:, i] * cvec[i]
-            denom = pnorm * cnorms[j]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims[:, j] = np.where(denom > 0, accj / denom, 0.0)
-        arr = np.empty((Q, n_c), dtype=[("s", "f8"), ("c", "i8")])
-        arr["s"] = -sims
-        arr["c"] = cids
-        arr.sort(axis=1, order=["s", "c"])
-        best = arr["c"][:, : min(n_probe, n_c)]
-        routing: dict[int, list[int]] = {}
-        for qi in range(Q):
-            for cid in best[qi]:
-                routing.setdefault(int(cid), []).append(qi)
-        routing = {cid: np.asarray(qis) for cid, qis in routing.items()}
-
-        def kernel(it: Iterator[dict]) -> Iterator[tuple]:
-            for blocks in it:
-                Dk = np.full((Q, k), np.inf)
-                Ik = np.full((Q, k), -1, dtype=np.int64)
-                touched = False
-                for cid, (ids, Vn, _) in blocks.items():
-                    qis = routing.get(cid)
-                    if qis is None:
-                        continue
-                    touched = True
-                    D = 1.0 - Pn[qis] @ Vn.T
-                    dsel, isel = _row_topk(D, ids, k)
-                    kk = dsel.shape[1]
-                    sub_d = np.concatenate([Dk[qis], dsel], axis=1)
-                    sub_i = np.concatenate([Ik[qis], isel], axis=1)
-                    arr = np.empty(sub_d.shape, dtype=[("d", "f8"), ("i", "i8")])
-                    arr["d"] = sub_d
-                    arr["i"] = sub_i
-                    arr.sort(axis=1, order=["d", "i"])
-                    Dk[qis] = arr["d"][:, :k]
-                    Ik[qis] = arr["i"][:, :k]
-                if touched:
-                    yield Dk, Ik
-
-        parts = self.rdd.mapPartitions(kernel).collect()
-        if not parts:
-            Dk = np.full((Q, k), np.inf)
-            Ik = np.full((Q, k), -1, dtype=np.int64)
-        else:
-            Dk, Ik = _merge_candidates(parts, k)
-        res = _result_df(
-            self.spark, probe_ids, Dk, Ik, probe_id_col, self.id_col,
-            probe_t, "long" if self._decode is not None else self.id_sql_type,
-        )
-        if self._decode is not None:
-            res = (
-                self._decode.join(
-                    F.broadcast(res.withColumnRenamed(self.id_col, "__rid64")),
-                    "__rid64",
-                )
-                .select(probe_id_col, self.id_col, "distance", "score", "rank")
-            )
-        return res
-
-    def unpersist(self) -> None:
-        self.rdd.unpersist()

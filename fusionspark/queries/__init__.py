@@ -90,7 +90,6 @@ def load_all() -> None:
         cdc_queries,
         clustering_queries,
         composition_queries,
-        embedding_queries,
         eval_queries,
         layout_queries,
         extended_queries,

@@ -252,27 +252,27 @@ def test_attach_delta_freshness_follows_external_commits(spark, tmp_path):
     eng.attach_delta("pin0", t, version=0)       # pinned
     eng.load_resident("live")
     eng.load_resident("pin0")
-    assert eng._resident_fresh("live") is not None
-    assert eng._resident_fresh("pin0") is not None
+    assert eng._fresh_snapshot("live") is not None
+    assert eng._fresh_snapshot("pin0") is not None
 
     # external commit: the unpinned resident cache must go stale...
     write_delta_table(
         spark, _engine_table_df(spark, 12, 16), t, mode="append"
     )
-    assert eng._resident_fresh("live") is None
-    # ...and the serve-many path refuses rather than serving the stale
-    # snapshot
-    probes = spark.createDataFrame(
-        [("p", [0.0] * 64)], "id: string, vector: array<float>"
-    )
-    with pytest.raises(ValueError, match="stale or missing"):
-        eng.search_many("live", probes, method="resident", approximate=False)
+    assert eng._fresh_snapshot("live") is None
+    # ...and search reloads it rather than serving the stale snapshot
+    from fusionspark.operators.embedder import mock_embed
+
+    stale = eng._snapshots["live"]
+    hits = eng.search("live", query_vector=mock_embed("doc 14", 64), top_k=20)
+    assert len(hits) == 16 and hits[0]["id"] == "14"
+    assert eng._snapshots["live"] is not stale
     # the pinned attach is unaffected
-    assert eng._resident_fresh("pin0") is not None
+    assert eng._fresh_snapshot("pin0") is not None
 
     # rebuild picks up the new snapshot and is fresh again
     eng.load_resident("live")
-    assert eng._resident_fresh("live") is not None
+    assert eng._fresh_snapshot("live") is not None
     # the exact path already sees the new rows (follow-latest read)
     sizes = {c["name"]: c["size"] for c in eng.list_collections()}
     assert sizes["live"] == 16 and sizes["pin0"] == 12

@@ -129,28 +129,6 @@ def test_http_embedder_distributed_via_embed_texts(spark):
     assert len(out) == 2  # distinct texts only
 
 
-def test_embed_with_cache_appends_only_misses(spark, tmp_path):
-    from fusionspark.operators.embedder import embed_with_cache
-
-    calls = []
-
-    def counting_embed(text, dim):
-        calls.append(text)
-        return [float(len(text))] * dim
-
-    path = str(tmp_path / "emb_cache")
-    df1 = spark.createDataFrame([("a",), ("b",)], "text: string")
-    out1 = embed_with_cache(df1, path, dimensions=2, embed_fn=counting_embed)
-    assert out1.count() == 2
-
-    df2 = spark.createDataFrame([("a",), ("c",)], "text: string")
-    out2 = {r["text"] for r in embed_with_cache(df2, path, dimensions=2, embed_fn=counting_embed).collect()}
-    assert out2 == {"a", "c"}
-    # cache now holds a,b,c
-    cached = {r["text"] for r in spark.read.parquet(path).collect()}
-    assert cached == {"a", "b", "c"}
-
-
 def test_mock_embed_batch_bit_exact():
     """The vectorized batch fold must be bit-identical to the scalar
     reference port for every input shape: empty, short, long, unicode."""

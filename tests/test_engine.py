@@ -4,6 +4,8 @@ pipeline tests (/root/reference/test/fusionpact.test.js:85-136,318-336,
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from fusionspark.engine import CollectionConfig, FusionSparkEngine
@@ -12,6 +14,18 @@ from fusionspark.engine import CollectionConfig, FusionSparkEngine
 @pytest.fixture()
 def engine(spark, tmp_path):
     return FusionSparkEngine(spark, str(tmp_path / "store"))
+
+
+def _jobs(spark, fn):
+    """(fn(), ids of the Spark jobs it ran), via a fresh job group."""
+    sc = spark.sparkContext
+    group = f"engine-test-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_collection_crud_and_dimension_check(engine):
@@ -251,10 +265,23 @@ def test_insert_upserts_existing_ids(engine):
     assert engine._load("u").filter(F.col("id") == "x").count() == 2
 
 
-def test_build_index_and_approximate_search(engine):
-    """V6 analogue: build_index persists an IVF layout; approximate search
-    prunes to nProbe lists with the same pre-filter semantics, and a stale
-    index falls back to exact search instead of answering from old data."""
+@pytest.mark.parametrize("fits", [True, False], ids=["fits", "over_limit"])
+def test_build_index_and_approximate_search(engine, spark, monkeypatch, fits):
+    """V6 analogue: build_index persists an IVF layout.  A collection that
+    fits answers approximate search exactly from its snapshot with no Spark
+    job; over the snapshot limit approximate search prunes to nProbe lists
+    with the same pre-filter semantics, and a stale index falls back to
+    exact search instead of answering from old data."""
+    import fusionspark.operators.ann as ann
+
+    if not fits:
+        import fusionspark.operators.serving as sv
+
+        monkeypatch.setattr(sv, "SNAPSHOT_MEM_FRACTION", 0.0)
+    ivf_reads = []  # one entry per search the IVF layout served
+    ivf = ann.ivf_search_persisted
+    monkeypatch.setattr(ann, "ivf_search_persisted",
+                        lambda *a, **kw: ivf_reads.append(1) or ivf(*a, **kw))
     engine.create_collection("iv", CollectionConfig(dimensions=4))
     base = {0: [1, 0, 0, 0], 1: [0, 1, 0, 0], 2: [0, 0, 1, 0], 3: [0, 0, 0, 1]}
     entries = []
@@ -271,7 +298,10 @@ def test_build_index_and_approximate_search(engine):
 
     q = [1.0, 0.05, 0.0, 0.0]
     exact = engine.search("iv", query_vector=q, top_k=3)
-    approx = engine.search("iv", query_vector=q, top_k=3, approximate=True, n_probe=1)
+    approx, jobs = _jobs(spark, lambda: engine.search(
+        "iv", query_vector=q, top_k=3, approximate=True, n_probe=1))
+    assert ("iv" in engine._snapshots) == fits
+    assert (jobs == []) == fits
     assert [h["id"] for h in approx] == [h["id"] for h in exact]
     assert abs(approx[0]["score"] - exact[0]["score"]) < 1e-9
 
@@ -279,51 +309,19 @@ def test_build_index_and_approximate_search(engine):
     only_t1 = engine.search("iv", query_vector=q, top_k=5, tenant_id="t1",
                             approximate=True, n_probe=1)
     assert only_t1 and all(int(h["id"].split("_")[0]) % 2 == 1 for h in only_t1)
+    assert len(ivf_reads) == (0 if fits else 2)
 
     # mutation staleness: the new best match only appears via exact fallback
     engine.insert("iv", [{"id": "fresh", "vector": q, "tenant_id": "t1"}])
     post = engine.search("iv", query_vector=q, top_k=1, approximate=True)
     assert post[0]["id"] == "fresh"
+    assert len(ivf_reads) == (0 if fits else 2)
 
     # rebuilding re-freshens the index and it serves again
     engine.build_index("iv", n_centroids=4)
     again = engine.search("iv", query_vector=q, top_k=1, approximate=True, n_probe=1)
     assert again[0]["id"] == "fresh"
-
-
-def test_search_many_batch_parity(engine, spark):
-    """Batch search returns per-probe top-k matching single-probe search,
-    exact and (index-fresh) approximate; a stale index raises instead of
-    silently degrading."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    engine.create_collection("bm", CollectionConfig(dimensions=4))
-    base = {0: [1, 0, 0, 0], 1: [0, 1, 0, 0], 2: [0, 0, 1, 0], 3: [0, 0, 0, 1]}
-    engine.insert("bm", [
-        {"id": f"{j}_{c}", "vector": [x + 0.01 * j for x in v]}
-        for c, v in base.items() for j in range(6)
-    ])
-    probes = spark.createDataFrame(
-        [(c, [float(x) for x in v]) for c, v in base.items()],
-        "probe_id: bigint, probe_embedding: array<float>",
-    )
-    batch = engine.search_many("bm", probes, top_k=3)
-    got = {r["probe_id"]: [] for r in batch.collect()}
-    for r in sorted(batch.collect(), key=lambda r: (r["probe_id"], r["rank"])):
-        got[r["probe_id"]].append(r["id"])
-    for c, v in base.items():
-        single = engine.search("bm", query_vector=v, top_k=3)
-        assert got[c] == [h["id"] for h in single]
-
-    with _pytest.raises(ValueError, match="stale or missing"):
-        engine.search_many("bm", probes, top_k=3, approximate=True)
-    engine.build_index("bm", n_centroids=4)
-    approx = engine.search_many("bm", probes, top_k=3, approximate=True, n_probe=1)
-    ga = {}
-    for r in sorted(approx.collect(), key=lambda r: (r["probe_id"], r["rnk"])):
-        ga.setdefault(r["probe_id"], []).append(r["id"])
-    assert ga == got
+    assert len(ivf_reads) == (0 if fits else 3)
 
 
 def test_insert_replace_is_tenant_scoped(spark, tmp_path):
@@ -372,40 +370,6 @@ def test_manifest_upsert_history_is_single_commit(spark, tmp_path):
     assert t.version() == before + 1
     assert t.history()[-1]["op"] == "upsert"
     assert eng._load("c").count() == 1
-
-
-def test_build_index_pq_and_adc_search(engine, spark):
-    """build_index(pq=True) persists codes beside the lists; the ivf_pq
-    batch path answers through ADC + exact refine and matches the exact
-    top-k on a well-separated corpus; missing codes raise."""
-    import pytest as _pytest
-
-    engine.create_collection("pq", CollectionConfig(dimensions=4))
-    base = {0: [1, 0, 0, 0], 1: [0, 1, 0, 0], 2: [0, 0, 1, 0], 3: [0, 0, 0, 1]}
-    engine.insert("pq", [
-        {"id": f"{j}_{c}", "vector": [x + 0.01 * j for x in v]}
-        for c, v in base.items() for j in range(6)
-    ])
-    probes = spark.createDataFrame(
-        [(c, [float(x) for x in v]) for c, v in base.items()],
-        "probe_id: bigint, probe_embedding: array<float>",
-    )
-    engine.build_index("pq", n_centroids=4)  # no PQ codes yet
-    with _pytest.raises(ValueError, match="no PQ codes"):
-        engine.search_many("pq", probes, top_k=3, approximate=True,
-                           method="ivf_pq")
-    info = engine.build_index("pq", n_centroids=4, pq=True, pq_m=2, pq_ksub=4)
-    assert info["pq"] == {"m": 2, "ksub": 4}
-
-    exact = engine.search_many("pq", probes, top_k=3)
-    out = engine.search_many("pq", probes, top_k=3, approximate=True,
-                             method="ivf_pq", n_probe=2, refine_r=12)
-    ge, ga = {}, {}
-    for r in sorted(exact.collect(), key=lambda r: (r["probe_id"], r["rank"])):
-        ge.setdefault(r["probe_id"], []).append(r["id"])
-    for r in sorted(out.collect(), key=lambda r: (r["probe_id"], r["rnk"])):
-        ga.setdefault(r["probe_id"], []).append(r["id"])
-    assert ga == ge  # refine is exact; candidates cover the separated clusters
 
 
 def test_resident_search_matches_exact(engine):
@@ -465,46 +429,6 @@ def test_resident_stale_falls_back_to_exact(engine):
     engine.unload_resident("s")  # idempotent
 
 
-def test_search_many_resident_parity(engine, spark):
-    """search_many(method='resident') == the exact batch path row-for-row
-    (same ids and scores per rank), and raises on a stale/missing index."""
-    import pytest as _pytest
-
-    import math
-
-    engine.create_collection("bm", CollectionConfig(dimensions=4))
-    # tie-free vectors: boundary ties on a string-keyed resident corpus
-    # legally break on surrogate order (documented deviation), so parity
-    # is asserted on a corpus with distinct similarities
-    engine.insert("bm", [
-        {"id": f"v{i}",
-         "vector": [math.sin(i + 1), math.cos(2 * i + 1), 1.0, 0.0]}
-        for i in range(40)
-    ])
-    probes = spark.createDataFrame(
-        [("p0", [1.0, 0.0, 1.0, 0.0]), ("p1", [4.0, 2.0, 1.0, 0.0])],
-        "probe_id: string, probe_embedding: array<float>",
-    )
-    with _pytest.raises(ValueError, match="stale or missing"):
-        engine.search_many("bm", probes, method="resident")
-    engine.load_resident("bm")
-    res = {
-        (r["probe_id"], r["rank"]): (r["id"], r["score"])
-        for r in engine.search_many("bm", probes, top_k=5,
-                                    method="resident").collect()
-    }
-    exact = {
-        (r["probe_id"], r["rank"]): (r["id"], r["score"])
-        for r in engine.search_many("bm", probes, top_k=5).collect()
-    }
-    assert res.keys() == exact.keys()
-    for key, (i, s) in exact.items():
-        assert res[key][0] == i
-        assert abs(res[key][1] - s) < 1e-9
-    with _pytest.raises(ValueError, match="exact path"):
-        engine.search_many("bm", probes, method="resident", approximate=True)
-
-
 def test_resident_auto_append_on_insert(engine):
     """A raw append into a collection with a fresh resident snapshot
     extends it in place — the serve-many path sees new rows WITHOUT a
@@ -516,58 +440,19 @@ def test_resident_auto_append_on_insert(engine):
     engine.insert("ra", [{"id": "b", "vector": [0.9, 0.1, 0, 0]}])
     # snapshot caught up with the mutation counter — still fresh
     assert engine._snapshots["ra"].token == before + 1
-    assert engine._resident_fresh("ra") is not None
+    assert engine._fresh_snapshot("ra") is not None
     hits = engine.search("ra", query_vector=[1, 0, 0, 0], top_k=5, resident=True)
     assert [h["id"] for h in hits] == ["a", "b"]
     # a replace-collision upsert mirrors into the snapshot as well: it
     # stays fresh and answers like the exact scan
     engine.insert("ra", [{"id": "a", "vector": [0, 1, 0, 0]}])
-    assert engine._resident_fresh("ra") is not None
+    assert engine._fresh_snapshot("ra") is not None
     hits2 = engine.search("ra", query_vector=[0, 1, 0, 0], top_k=5, resident=True)
     assert hits2[0]["id"] == "a"
     exact = engine.search("ra", query_vector=[0, 1, 0, 0], top_k=5)
     assert [h["id"] for h in hits2] == [h["id"] for h in exact]
     for e, g in zip(exact, hits2):
         assert abs(e["score"] - g["score"]) < 1e-9
-
-
-def test_search_many_resident_ivf(engine, spark):
-    """method='resident_ivf': pruned resident search matches the exact
-    batch path at n_probe == n_centroids (all lists scanned), raises on a
-    stale/missing index, and staleness invalidates after mutation."""
-    import math
-
-    import pytest as _pytest
-
-    engine.create_collection("ri", CollectionConfig(dimensions=4))
-    engine.insert("ri", [
-        {"id": f"v{i}",
-         "vector": [math.sin(i + 1), math.cos(2 * i + 1), 1.0, 0.0]}
-        for i in range(30)
-    ])
-    probes = spark.createDataFrame(
-        [("p0", [1.0, 0.0, 1.0, 0.0]), ("p1", [0.0, 1.0, 1.0, 0.0])],
-        "probe_id: string, probe_embedding: array<float>",
-    )
-    with _pytest.raises(ValueError, match="stale or missing"):
-        engine.search_many("ri", probes, method="resident_ivf")
-    info = engine.load_resident_ivf("ri", n_centroids=4)
-    assert info["n_centroids"] == 4
-    got = {
-        (r["probe_id"], r["rank"]): r["id"]
-        for r in engine.search_many(
-            "ri", probes, top_k=5, method="resident_ivf", n_probe=4
-        ).collect()
-    }
-    exact = {
-        (r["probe_id"], r["rank"]): r["id"]
-        for r in engine.search_many("ri", probes, top_k=5).collect()
-    }
-    assert got == exact  # all lists scanned → exact
-    engine.insert("ri", [{"id": "new", "vector": [0, 0, 0, 1.0]}])
-    with _pytest.raises(ValueError, match="stale or missing"):
-        engine.search_many("ri", probes, method="resident_ivf")
-    engine.unload_resident("ri")  # releases both exact and IVF caches
 
 
 def test_analyze_spectrum_and_clusters(engine):

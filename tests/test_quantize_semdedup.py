@@ -1,6 +1,5 @@
-"""Binary quantization, Matryoshka rerank, and SemDedup tests: code
-packing laws, self-hit + recall bounds, the keep rule on a crafted
-duplicate group, and the broadcast-only plan contracts."""
+"""SemDedup and SQ8 tests: the keep rule on a crafted duplicate group,
+idempotence, and the SQ8 kernel strategies."""
 
 from __future__ import annotations
 
@@ -8,59 +7,6 @@ from pyspark.sql import functions as F
 
 from fusionspark.io import load_table
 from fusionspark.operators import dedup
-from fusionspark.operators.ann import bq_encode, bq_knn, matryoshka_knn
-from fusionspark.operators.knn import knn, self_probes
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_bq_encode_packs_sign_bits(spark):
-    rows = [
-        (1, [1.0] * 64),                      # all positive -> both halves full
-        (2, [-1.0] * 64),                     # none positive -> 0/0
-        (3, [1.0, -1.0] * 32),                # even dims set -> 0x55555555
-        (4, [-1.0] * 32 + [1.0] * 32),        # only the hi half set
-    ]
-    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
-    out = {r["vec_id"]: (r["code_lo"], r["code_hi"]) for r in bq_encode(df).collect()}
-    assert out[1] == (0xFFFFFFFF, 0xFFFFFFFF)
-    assert out[2] == (0, 0)
-    assert out[3] == (0x55555555, 0x55555555)
-    assert out[4] == (0, 0xFFFFFFFF)
-    # zero-shuffle Arrow map
-    assert "Exchange" not in _plan(bq_encode(df))
-
-
-def test_bq_knn_self_hit_and_recall(spark, sf_dir):
-    corpus = load_table(spark, sf_dir, "embeddings")
-    probes = self_probes(corpus, 5)
-    approx = bq_knn(corpus, probes, k=10, m=40)
-    rows = approx.collect()
-    # a probe's own code matches exactly (Hamming 0) -> always rank 1
-    for r in rows:
-        if r["rnk"] == 1:
-            assert r["vec_id"] == r["probe_id"]
-    exact = knn(corpus, probes, k=10)
-    ex = {(r["probe_id"], r["vec_id"]) for r in exact.collect()}
-    ap = {(r["probe_id"], r["vec_id"]) for r in rows}
-    recall = len(ex & ap) / len(ex)
-    assert recall >= 0.5  # 1-bit codes on random (non-MRL) vectors
-
-
-def test_matryoshka_self_hit_and_recall(spark, sf_dir):
-    corpus = load_table(spark, sf_dir, "embeddings")
-    probes = self_probes(corpus, 5)
-    approx = matryoshka_knn(corpus, probes, k=10, m=50, prefix_dim=16)
-    rows = approx.collect()
-    for r in rows:
-        if r["rnk"] == 1:
-            assert r["vec_id"] == r["probe_id"]
-    exact = knn(corpus, probes, k=10)
-    ex = {(r["probe_id"], r["vec_id"]) for r in exact.collect()}
-    ap = {(r["probe_id"], r["vec_id"]) for r in rows}
-    assert len(ex & ap) / len(ex) >= 0.5
 
 
 def test_semdedup_keeps_least_prototypical(spark):
@@ -90,16 +36,6 @@ def test_semdedup_idempotent(spark, sf_dir):
     kept = dedup.semdedup(corpus, threshold=0.3, n_centroids=8)
     n_kept = kept.count()
     assert 0 < n_kept < corpus.count()
-
-
-def test_bq_and_matryoshka_plans_broadcast_only(spark, sf_dir):
-    corpus = load_table(spark, sf_dir, "embeddings")
-    probes = self_probes(corpus, 5)
-    for df in (bq_knn(corpus, probes), matryoshka_knn(corpus, probes)):
-        plan = _plan(df)
-        assert "BroadcastExchange" in plan
-        # no shuffle join anywhere: candidate cut + rerank are broadcast
-        assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
 def test_sq8_kernel_strategies_bit_identical(spark, sf_dir):

@@ -1,6 +1,8 @@
 """Reachability ratchet: every module of the package is imported, directly
 or transitively, from a front door, or belongs to a family still listed
-for deletion (ROADMAP item 5).  AST only — no Spark, nothing imported.
+for deletion (ROADMAP item 6); and every top-level function and class of
+a reachable module is named by package code (or listed with a reason).
+AST only — no Spark, nothing imported.
 
 Function-local imports count: the engine imports most operators inside
 the method that uses them.  ``__spark_entry__.py`` is not a front door; it
@@ -29,7 +31,7 @@ UNREACHABLE_FAMILIES = {
     # the query registry and its fixtures (DuckDB-oracle contract)
     "queries": ["fusionspark.fixtures", "fusionspark.queries"] + [
         f"fusionspark.queries.{m}_queries"
-        for m in """analytics cdc clustering composition embedding eval
+        for m in """analytics cdc clustering composition eval
         extended layout mining multimodal pipeline rag relational spectral
         text tree url vector""".split()
     ],
@@ -124,3 +126,75 @@ def test_listed_modules_exist():
     modules = _modules()
     listed = set().union(*UNREACHABLE_FAMILIES.values())
     assert listed - set(modules) == set()
+
+
+# ── function-level ratchet ────────────────────────────────────────────────
+
+# Top-level definitions of reachable modules that no other code of the
+# package names, each with the reason it stays.  Shrink it; never grow it.
+UNNAMED_DEFINITIONS = {
+    "fusionspark.io.write_bucketed": (
+        "builds the bucketed base that tests/test_cdc.py runs the listed "
+        "`cdc` family on; goes with that family"
+    ),
+    "fusionspark.operators.keyword.persist_keyword_index": (
+        "writes the posting lists that `keyword_search_indexed` of the "
+        "listed `text_queries` family reads; goes with that family"
+    ),
+}
+
+
+def _names(tree: ast.AST) -> list[tuple[str, int]]:
+    """(name, line) of every identifier the code mentions: names,
+    attributes and imported names with their aliases.  Strings, and so
+    docstrings, do not count."""
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            out.append((node.id, node.lineno))
+        elif isinstance(node, ast.Attribute):
+            out.append((node.attr, node.lineno))
+        elif isinstance(node, ast.ImportFrom):
+            out.extend((n, node.lineno) for a in node.names
+                       for n in (a.name, a.asname) if n)
+    return out
+
+
+def _unnamed_definitions() -> set[str]:
+    """Top-level functions and classes of the modules a front door reaches
+    that no package module names outside their own body.  A front door's
+    public names and decorated definitions (registered by their decorator)
+    are roots.  Test-only uses do not count."""
+    modules = _modules()
+    trees = {}
+    for m, path in modules.items():
+        with open(path, encoding="utf-8") as f:
+            trees[m] = ast.parse(f.read())
+    named: dict[str, list[tuple[str, int]]] = {}
+    for m, tree in trees.items():
+        for name, line in _names(tree):
+            named.setdefault(name, []).append((m, line))
+    out = set()
+    for m in _reachable(modules):
+        for d in trees[m].body:
+            if not isinstance(d, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef)):
+                continue
+            if d.decorator_list or (m in FRONT_DOORS
+                                    and not d.name.startswith("_")):
+                continue
+            if not any(o != m or not d.lineno <= line <= d.end_lineno
+                       for o, line in named.get(d.name, ())):
+                out.add(f"{m}.{d.name}")
+    return out
+
+
+def test_unnamed_definitions_are_listed():
+    assert _unnamed_definitions() - set(UNNAMED_DEFINITIONS) == set(), (
+        "definitions no package code names; wire them in or delete them"
+    )
+
+
+def test_listed_definitions_are_still_unnamed():
+    """A listed definition that was deleted or wired in leaves the list."""
+    assert set(UNNAMED_DEFINITIONS) - _unnamed_definitions() == set()

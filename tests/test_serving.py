@@ -1,4 +1,4 @@
-"""Resident serving index: parity with the attested knn/ivf kernels, tie
+"""Resident serving index: parity with the attested knn kernel, tie
 determinism, merge-strategy equivalence, and input validation."""
 
 from __future__ import annotations
@@ -7,9 +7,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from fusionspark.operators.ann import ivf_knn
 from fusionspark.operators.knn import knn, self_probes
-from fusionspark.operators.serving import ResidentIndex, ResidentIVF
+from fusionspark.operators.serving import ResidentIndex
 
 
 @pytest.fixture(scope="module")
@@ -113,25 +112,6 @@ def test_duplicate_vector_ties_break_by_id(spark):
         p.unpersist()
 
 
-def test_resident_ivf_matches_ivf_knn(spark, corpus, probes):
-    rivf = ResidentIVF.build(corpus, n_centroids=16)
-    try:
-        got = rivf.search(probes, k=5, n_probe=4).toPandas()
-        ref = ivf_knn(
-            corpus, probes, k=5, n_centroids=16, n_probe=4
-        ).toPandas()
-        g = {
-            (r.probe_id, r.vec_id, r.rank): 1.0 - r.distance
-            for r in got.itertuples()
-        }
-        r = {(x.probe_id, x.vec_id, x.rnk): x.sim for x in ref.itertuples()}
-        assert g.keys() == r.keys()
-        for key, sim in r.items():
-            assert g[key] == pytest.approx(sim, abs=1e-9)
-    finally:
-        rivf.unpersist()
-
-
 def _assert_tie_aware_match(got: dict, ref: dict) -> None:
     """Per-probe top-k equality up to boundary ties: distance multisets must
     match exactly (1e-9), and any id present in only one side must sit at
@@ -175,21 +155,6 @@ def test_string_ids_supported(spark, corpus, probes):
         _assert_tie_aware_match(_pairs(out), _pairs(knn(scorpus, sprobes, k=5, strategy="numpy")))
     finally:
         idx.unpersist()
-
-
-def test_string_ids_resident_ivf(spark, corpus, probes):
-    scorpus = corpus.select(
-        F.concat(F.lit("v"), F.col("vec_id")).alias("vec_id"), "embedding"
-    )
-    rivf = ResidentIVF.build(scorpus, n_centroids=16)
-    try:
-        out = rivf.search(probes, k=5, n_probe=16)  # all lists → exact
-        assert dict(out.dtypes)["vec_id"] == "string"
-        _assert_tie_aware_match(
-            _pairs(out), _pairs(knn(scorpus, probes, k=5, strategy="numpy"))
-        )
-    finally:
-        rivf.unpersist()
 
 
 def test_unsupported_id_type_rejected(spark):

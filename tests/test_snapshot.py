@@ -6,6 +6,7 @@ freshness across engines, and the import and append write paths."""
 
 from __future__ import annotations
 
+import gc
 import itertools
 import json
 import math
@@ -153,7 +154,7 @@ def test_writes_keep_snapshot_exact(engine, spark, metric):
 
     cfg = engine._catalog["w"]
     mirrored = engine._snapshots["w"]
-    assert engine._resident_fresh("w") is mirrored
+    assert engine._fresh_snapshot("w") is mirrored
     assert len(mirrored) == 62 + 5 - 2
     before = _resident_answers(engine, "w")
     engine.load_resident("w")
@@ -232,7 +233,7 @@ def test_import_jsonl_defaults_ts_ttl_and_stale_rebuild(engine, tmp_path):
     """JSONL rows without ts/ttl_ms get insert()'s defaults, so both exact
     and resident search see them; the import (which does not mirror into
     the snapshot) leaves it stale, and the next resident search rebuilds
-    it in place while search_many refuses."""
+    it in place instead of answering from the stale copy."""
     path = tmp_path / "rows.jsonl"
     with open(path, "w") as f:
         for i in range(20):
@@ -251,11 +252,7 @@ def test_import_jsonl_defaults_ts_ttl_and_stale_rebuild(engine, tmp_path):
         for i in range(20, 30):
             f.write(json.dumps({"id": f"j{i}", "vector": _vec(600 + i)}) + "\n")
     engine.import_jsonl("imp", str(path), dimensions=DIM)
-    assert engine._resident_fresh("imp") is None
-    probes = engine.spark.createDataFrame(
-        [("p", QUERIES[0])], "probe_id: string, probe_embedding: array<float>")
-    with pytest.raises(ValueError, match="stale or missing"):
-        engine.search_many("imp", probes, method="resident")
+    assert engine._fresh_snapshot("imp") is None
     hits = engine.search("imp", query_vector=QUERIES[0], top_k=30, resident=True)
     assert len(hits) == 30
     assert engine._snapshots["imp"] is not snap
@@ -352,7 +349,7 @@ def test_manifest_commit_by_another_engine_is_seen(spark, tmp_path):
     assert a._snapshots["m"] is not snap
     # A's own write mirrors and stays fresh at the new version
     a.insert("m", [{"id": "mine", "vector": QUERIES[1]}])
-    assert a._resident_fresh("m") is not None
+    assert a._fresh_snapshot("m") is not None
     assert a.search("m", query_vector=QUERIES[1], top_k=1)[0]["id"] == "mine"
 
 
@@ -395,3 +392,116 @@ def test_one_row_insert_writes_one_file(engine):
     n = len(files())
     engine.insert("f", [{"id": "b", "vector": _vec(2)}])
     assert len(files()) == n + 1
+
+
+def test_meta_codes_load_time_is_linear():
+    """Snapshot.load codes each metadata key in one pass: twice the rows
+    take at most 2.5× as long (best of 3 runs each), and a row missing a
+    key or holding a NULL value codes as -1."""
+    codes = sv._meta_codes([{"a": "x"}, None, {"a": None, "b": "y"}, {"a": "x"}])
+    assert codes["a"][0].tolist() == [0, -1, -1, 0] and codes["a"][1] == {"x": 0}
+    assert codes["b"][0].tolist() == [-1, -1, 0, -1] and codes["b"][1] == {"y": 0}
+
+    def best(n: int) -> float:
+        maps = [{"cat": f"c{i % 7}", "src": f"s{i % 13}"} for i in range(n)]
+        runs = []
+        for _ in range(3):
+            t = time.perf_counter()
+            sv._meta_codes(maps)
+            runs.append(time.perf_counter() - t)
+        return min(runs)
+
+    gc.disable()  # a full collection of the maps would land in one run
+    try:
+        assert best(80_000) <= 2.5 * best(40_000)
+    finally:
+        gc.enable()
+
+
+def test_spark_reads_pass_the_catalog_dimensions(engine, spark, monkeypatch):
+    """Above the snapshot limit, search, retrieve and build_context hand
+    knn the catalog's `dimensions`: each read runs one Spark job fewer
+    than with knn left to read the width from the corpus (`.first()`)."""
+    import fusionspark.engine as eng_mod
+
+    monkeypatch.setattr(sv, "SNAPSHOT_MEM_FRACTION", 0.0)
+    _populate(engine, "dm", "cosine")
+    engine.search("dm", query_vector=QUERIES[0])  # finds it does not fit
+    knn = eng_mod.knn
+
+    def knn_without_dim(*args, dim=None, **kw):
+        return knn(*args, **kw)
+
+    reads = [
+        ("search", lambda: engine.search("dm", query_vector=QUERIES[0])),
+        ("retrieve", lambda: engine.retrieve("dm", "alpha gamma")),
+        ("build_context", lambda: engine.build_context("dm", "alpha gamma")),
+    ]
+    for name, read in reads:
+        with_dim, jobs = _jobs(spark, read)
+        with mock.patch.object(eng_mod, "knn", knn_without_dim):
+            without_dim, jobs_without = _jobs(spark, read)
+        assert with_dim == without_dim, name
+        assert len(jobs) == len(jobs_without) - 1, name
+
+
+def test_spark_reads_during_colliding_upserts(engine, monkeypatch):
+    """Above the snapshot limit, two threads run exact searches while a
+    third upserts a colliding id (each upsert a parquet rewrite that
+    renames the live directory away): no read raises, and every answer
+    equals the model before or after some write."""
+    import numpy as np
+
+    monkeypatch.setattr(sv, "SNAPSHOT_MEM_FRACTION", 0.0)
+    engine.create_collection("race", CollectionConfig(dimensions=DIM))
+    rows = {f"r{i}": _vec(i) for i in range(12)}
+    engine.insert("race", [{"id": i, "vector": v} for i, v in rows.items()])
+    versions = [_vec(300 + n) for n in range(6)]
+
+    def model(x_vec) -> list[tuple[str, float]]:
+        ids = sorted(rows) + (["x"] if x_vec is not None else [])
+        V = np.asarray([rows[i] for i in sorted(rows)]
+                       + ([x_vec] if x_vec is not None else []), np.float32)
+        V = V.astype(np.float64)
+        q = np.asarray(QUERIES[0], np.float32).astype(np.float64)
+        s = V @ q / (np.linalg.norm(V, axis=1) * np.linalg.norm(q))
+        return sorted(zip(ids, s.tolist()), key=lambda t: (-t[1], t[0]))
+
+    states = [model(None)] + [model(v) for v in versions]
+    done = threading.Event()
+    answers: list = []
+    errors: list = []
+
+    def writer() -> None:
+        try:
+            for v in versions:
+                engine.insert("race", [{"id": "x", "vector": v}])
+        except Exception as e:  # noqa: BLE001 — reported by the assert
+            errors.append(e)
+        finally:
+            done.set()
+
+    def reader() -> None:
+        # two readers, so that some read is mid-scan when a rewrite lands
+        while not done.is_set():
+            try:
+                answers.append(engine.search("race", query_vector=QUERIES[0],
+                                             top_k=20))
+            except Exception as e:  # noqa: BLE001 — reported by the assert
+                errors.append(e)
+
+    threads = [threading.Thread(target=writer)] + [
+        threading.Thread(target=reader) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not errors and not any(t.is_alive() for t in threads)
+    assert len(answers) >= 2
+    for got in answers:
+        pairs = [(h["id"], h["score"]) for h in got]
+        assert any(
+            [i for i, _ in pairs] == [i for i, _ in want]
+            and all(abs(a[1] - b[1]) < 1e-9 for a, b in zip(pairs, want))
+            for want in states
+        ), pairs
