@@ -24,14 +24,14 @@ def create(
     root: str | None = None,
     embedder: str = "mock",
     spark=None,
-    storage: str = "parquet",
     **provider_kw,
 ):
     """One-call factory mirroring the reference's `create()` entry point
     (src/index.js:83-118): a ready engine with the chosen embedding
-    provider ('mock' | 'ollama' | 'openai').  storage='manifest' turns on
-    the concurrent-writer commit protocol (storage/manifest.py).  Returns
-    the engine; the HTTP/tool surface wraps it via
+    provider ('mock' | 'ollama' | 'openai').  Every collection it owns is
+    a manifest table (storage/manifest.py): atomic commits for concurrent
+    writers, each reclaiming the files it replaced, and no time travel.
+    Returns the engine; the HTTP/tool surface wraps it via
     fusionspark.server.serve(engine)."""
     import tempfile
 
@@ -48,7 +48,6 @@ def create(
         spark,
         root or tempfile.mkdtemp(prefix="fusionspark-"),
         embedder=embed_fn,
-        storage=storage,
     )
 
 

@@ -9,17 +9,18 @@ reference's entry points (SURVEY §3):
   AgentMemory.remember/recall/forget              remember / recall / forget
   RAGPipeline.ingest/buildContext                 ingest / build_context
 
-Storage is a directory of Parquet tables (one per collection) plus a JSON
-catalog — the table format IS the serialization (SURVEY S7).  Pass
-storage='manifest' for the concurrent-writer ACID layer
-(storage/manifest.py: immutable files, atomic versioned manifests,
-file-level copy-on-write deletes, time travel — Delta's commit protocol
-without the dependency).  Every operation compiles to the DataFrame plans
-in fusionspark.operators.*.
+Storage is one manifest table per collection plus a JSON catalog — the
+table format IS the serialization (SURVEY S7).  storage/manifest.py holds
+immutable Parquet files under atomic versioned manifests (Delta's commit
+protocol without the dependency): concurrent writers, file-level
+copy-on-write deletes, and each commit reclaims the files and manifest it
+superseded.  Every operation compiles to the DataFrame plans in
+fusionspark.operators.*.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
 import os
@@ -41,6 +42,7 @@ from fusionspark.operators.embedder import embed_texts, mock_embed
 from fusionspark.operators.keyword import keyword_rank, keyword_search
 from fusionspark.operators.knn import knn
 from fusionspark.operators.serving import ResidentIndex, Snapshot, block_filter, fits_driver
+from fusionspark.storage import ManifestTable
 
 log = logging.getLogger(__name__)
 
@@ -104,25 +106,23 @@ def _checked_vector(col, dim: int):
     )
 
 
+def _locked_read(fn):
+    """Run fn(self, collection, ...) under the collection lock (see
+    FusionSparkEngine._lock): its Spark read never meets a reclaimed file."""
+
+    @functools.wraps(fn)
+    def locked(self, collection: str, *args, **kw):
+        with self._lock(collection):
+            return fn(self, collection, *args, **kw)
+
+    return locked
+
+
 class FusionSparkEngine:
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        embedder=mock_embed,
-        storage: str = "parquet",
-    ):
-        """storage: 'parquet' (default — one live directory per collection,
-        single-writer rename-swap mutations) or 'manifest' (storage/
-        manifest.py — immutable files + atomic versioned manifests, safe
-        for CONCURRENT writers, file-level copy-on-write deletes, time
-        travel).  Same API and results either way."""
-        if storage not in ("parquet", "manifest"):
-            raise ValueError(f"unknown storage {storage!r}")
+    def __init__(self, spark: SparkSession, root: str, embedder=mock_embed):
         self.spark = spark
         self.root = root
         self.embedder = embedder
-        self.storage = storage
         os.makedirs(root, exist_ok=True)
         self._catalog_path = os.path.join(root, "_catalog.json")
         self._catalog: dict[str, dict] = {}
@@ -183,7 +183,8 @@ class FusionSparkEngine:
         """S6 (FusionEngine.js:118-144)."""
         out = []
         for name, cfg in list(self._catalog.items()):
-            n = self._load(name).count() if self._written(name) else 0
+            with self._lock(name):
+                n = self._load(name).count() if self._written(name) else 0
             out.append({"name": name, "size": n, **cfg})
         return out
 
@@ -242,9 +243,7 @@ class FusionSparkEngine:
                 "table (read-only) — mutate it through its own writer"
             )
 
-    def _table(self, collection: str):
-        from fusionspark.storage import ManifestTable
-
+    def _table(self, collection: str) -> ManifestTable:
         return ManifestTable(self.spark, self._path(collection))
 
     def _written(self, collection: str) -> bool:
@@ -253,9 +252,7 @@ class FusionSparkEngine:
         cfg = self._catalog.get(collection) or {}
         if cfg.get("external_delta"):
             return True
-        if self.storage == "manifest":
-            return self._table(collection).exists()
-        return os.path.isdir(self._path(collection))
+        return self._table(collection).exists()
 
     def _load(self, collection: str) -> DataFrame:
         cfg = self._catalog.get(collection) or {}
@@ -265,11 +262,12 @@ class FusionSparkEngine:
             return read_delta(
                 self.spark, cfg["external_delta"], cfg.get("pinned_version")
             )
-        if self.storage == "manifest":
-            return self._table(collection).read()
-        return self.spark.read.parquet(self._path(collection))
+        return self._table(collection).read()
 
     def _lock(self, collection: str) -> threading.RLock:
+        """Serialises this engine's writes, snapshot mirrors and rebuilds of
+        the collection, and its Spark reads: a commit deletes the files it
+        superseded, so a read holds the lock from `_load` to its last action."""
         return self._locks.setdefault(collection, threading.RLock())
 
     def _write(self, collection: str, store, mirror) -> None:
@@ -280,29 +278,19 @@ class FusionSparkEngine:
             fresh = snap is not None and snap.token == self._mutation_token(collection)
             store()
             tok = self._mutation_token(collection)
-            if fresh and self._one_write_on(snap.token, tok):
+            # exactly our one commit: if another engine's landed too, the
+            # mirror would miss it, so the snapshot goes stale instead
+            if fresh and tok == snap.token + 1:
                 self._snapshots[collection] = mirror(snap).at(tok)
 
-    def _one_write_on(self, before, after) -> bool:
-        """Whether token `after` is exactly this engine's one write past
-        `before`: in manifest storage another engine's commit may have
-        landed too, and a cache mirroring only ours must then go stale."""
-        if self.storage == "manifest":
-            return after == [before[0] + 1, before[1] + 1]
-        return after == before + 1
-
-    def _append(self, collection: str, df: DataFrame) -> None:
+    def _append(self, collection: str, df: DataFrame) -> int:
+        """Append df's rows (creating the table on the first write); returns
+        how many landed, from the staged files' footers."""
         with self._lock(collection):
-            if self.storage == "manifest":
-                from fusionspark.storage import ManifestTable
-
-                t = self._table(collection)
-                if not t.exists():
-                    ManifestTable.create(self.spark, self._path(collection), df.schema)
-                t.append(df)
-            else:
-                df.write.mode("append").parquet(self._path(collection))
-            self._bump(collection)
+            t = self._table(collection)
+            if not t.exists():
+                ManifestTable.create(self.spark, t.path, df.schema)
+            return t.append(df)[1]
 
     # ── mutation (S2, S4) ─────────────────────────────────────────────────
 
@@ -325,15 +313,11 @@ class FusionSparkEngine:
         collision scope is each entry's effective tenant (entry override,
         else the batch default), matched null-safely — so tenant A
         re-inserting id "x" never deletes tenant B's (or the global NULL
-        tenant's) row "x".  In manifest storage the upsert is ONE atomic
-        commit (ManifestTable.upsert: copy-on-write removal + append in the
-        same manifest version); in plain-parquet storage a colliding batch
-        lands as survivors ∪ new rows through the ONE crash-safe _rewrite
-        swap (a crash leaves either the old or the new table, never a
-        window with the old row removed and the new one not yet appended;
-        ADVICE r5).  Single-writer semantics in plain-parquet mode, as
-        documented.  replace=False is the raw append (bulk loads where ids
-        are known fresh)."""
+        tenant's) row "x".  The upsert is ONE atomic commit
+        (ManifestTable.upsert: copy-on-write removal + append in the same
+        manifest version), so a crash never leaves the old row removed and
+        the new one not yet appended (ADVICE r5).  replace=False is the raw
+        append (bulk loads where ids are known fresh)."""
         self._guard_writable(collection)
         cfg = self._catalog[collection]
         dim = cfg["dimensions"]
@@ -375,22 +359,15 @@ class FusionSparkEngine:
 
         def store() -> None:
             if hit is not None and self._written(collection):
-                if self.storage == "manifest":
-                    self._table(collection).upsert(df, hit)
-                    return self._bump(collection)
-                if self._load(collection).filter(hit).limit(1).count() > 0:
-                    keep = self._load(collection).filter(
-                        ~F.coalesce(hit, F.lit(False))
-                    )
-                    return self._rewrite(collection, keep.unionByName(df))
+                self._table(collection).upsert(df, hit)
+                return
             tok = self._mutation_token(collection)
             self._append(collection, df)
             # a raw append extends fresh ResidentIndex blocks (HNSWIndex.js:
             # 126-180); any failure leaves them stale → exact fallback
             ent = self._resident.get(collection)
             after = self._mutation_token(collection)
-            if (ent is not None and ent["at_mutation"] == tok
-                    and self._one_write_on(tok, after)):
+            if ent is not None and ent["at_mutation"] == tok and after == tok + 1:
                 try:
                     ent["idx"] = ent["idx"].append(df)
                     ent["at_mutation"] = after
@@ -400,30 +377,6 @@ class FusionSparkEngine:
 
         self._write(collection, store, lambda snap: snap.upsert(rows, replace))
         return len(rows)
-
-    def _rewrite(self, collection: str, keep: DataFrame) -> None:
-        """Rewrite a collection to `keep` with a crash-safe swap: write tmp,
-        live → .old, tmp → live, drop .old (restoring .old if the second
-        rename fails) — at no point is the live directory missing while the
-        catalog still lists it.  In manifest mode the swap is the commit
-        protocol itself: staged files + atomic versioned manifest, safe for
-        concurrent writers (storage/manifest.py)."""
-        with self._lock(collection):
-            self._bump(collection)
-            if self.storage == "manifest":
-                self._table(collection).overwrite(keep)
-                return
-            live = self._path(collection)
-            tmp, old = live + ".tmp", live + ".old"
-            keep.write.mode("overwrite").parquet(tmp)
-            shutil.rmtree(old, ignore_errors=True)
-            os.rename(live, old)
-            try:
-                os.rename(tmp, live)
-            except OSError:
-                os.rename(old, live)
-                raise
-            shutil.rmtree(old, ignore_errors=True)
 
     def delete(
         self, collection: str, ids: list[str], tenant_id: str | None = None
@@ -440,25 +393,9 @@ class FusionSparkEngine:
         self._delete_where(collection, hit, lambda s: s.delete(ids, tenant_id))
 
     def _delete_where(self, collection: str, hit, mirror) -> None:
-        def store() -> None:
-            if self.storage == "manifest":
-                # file-level copy-on-write: only files containing hits rewrite
-                self._table(collection).delete_where(hit)
-                return self._bump(collection)
-            self._rewrite(collection, self._load(collection).filter(~hit))
-
-        self._write(collection, store, mirror)
-
-    def _bump(self, collection: str) -> None:
-        """Mutation counter: an IVF index built at an older count is stale
-        and approximate search falls back to exact (the reference never
-        goes stale — its collection IS the index — so correctness-first
-        fallback is the honest port)."""
-        with self._catalog_lock:
-            if collection in self._catalog:
-                cfg = self._catalog[collection]
-                cfg["mutations"] = cfg.get("mutations", 0) + 1
-                self._save_catalog()
+        # file-level copy-on-write: only files containing hits rewrite
+        self._write(collection, lambda: self._table(collection).delete_where(hit),
+                    mirror)
 
     # ── index lifecycle (V6 analogue) ─────────────────────────────────────
 
@@ -481,23 +418,23 @@ class FusionSparkEngine:
         # token BEFORE the read: if an external Delta commit lands during
         # the build, the stamp is older than the data and the index reads
         # as stale (the safe direction) — never stale-data-marked-fresh
-        tok = self._mutation_token(collection)
-        df = self._load(collection)
-        n = df.count()
-        k = n_centroids or max(2, int(math.sqrt(max(n, 4))))
-        # ordinal centroid ids (collection ids are strings; the partition
-        # column must stay a long) from the first k rows by id —
-        # deterministic like operators/ann.py::deterministic_centroids
-        head = df.orderBy(F.col("id").asc()).limit(k).select("vector").collect()
-        cents = self.spark.createDataFrame(
-            [(i, [float(x) for x in r["vector"]]) for i, r in enumerate(head)],
-            "centroid_id: bigint, centroid: array<float>",
-        )
-        path = os.path.join(self.root, f"index={collection}")
-        persist_ivf(
-            df, path,
-            n_centroids=k, id_col="id", vector_col="vector", centroids=cents,
-        )
+        with self._lock(collection):
+            tok = self._mutation_token(collection)
+            df = self._load(collection)
+            n = df.count()
+            k = n_centroids or max(2, int(math.sqrt(max(n, 4))))
+            # ordinal centroid ids (collection ids are strings; the partition
+            # column must stay a long) from the first k rows by id —
+            # deterministic like operators/ann.py::deterministic_centroids
+            head = df.orderBy(F.col("id").asc()).limit(k).select("vector").collect()
+            cents = self.spark.createDataFrame(
+                [(i, [float(x) for x in r["vector"]]) for i, r in enumerate(head)],
+                "centroid_id: bigint, centroid: array<float>",
+            )
+            persist_ivf(
+                df, os.path.join(self.root, f"index={collection}"),
+                n_centroids=k, id_col="id", vector_col="vector", centroids=cents,
+            )
         index = {
             "n_centroids": k,
             "rows": n,
@@ -510,10 +447,10 @@ class FusionSparkEngine:
         return index
 
     def _mutation_token(self, collection: str):
-        """Freshness key for index/resident caches: cfg['mutations'] for
-        engine-owned collections; in manifest storage [mutations, table
-        version] (an os.listdir), so another engine's commit to the same
-        root makes this engine's caches stale.  For attach_delta collections the
+        """Freshness key for index/resident caches: for engine-owned
+        collections the manifest table version (an os.listdir; -1 before the
+        first write), so another engine's commit to the same root makes this
+        engine's caches stale too.  For attach_delta collections the
         engine never mutates (external commits can't bump the counter),
         so the key is the RESOLVED Delta version — a pinned attach is
         constant, an unpinned (follow-latest) attach re-lists the
@@ -530,13 +467,10 @@ class FusionSparkEngine:
 
             commits, ckpts, _files, v2 = _list_log(cfg["external_delta"])
             return ["delta", max(commits + ckpts + v2)]
-        if self.storage == "manifest":
-            try:
-                version = self._table(collection).version()
-            except FileNotFoundError:  # created, not yet written
-                version = -1
-            return [cfg.get("mutations", 0), version]
-        return cfg.get("mutations", 0)
+        try:
+            return self._table(collection).version()
+        except FileNotFoundError:  # created, not yet written
+            return -1
 
     def _index_fresh(self, collection: str) -> bool:
         idx = self._catalog[collection].get("index")
@@ -645,16 +579,15 @@ class FusionSparkEngine:
             return ent["idx"]
         return None
 
-    # ── manifest-mode maintenance ─────────────────────────────────────────
+    # ── maintenance ───────────────────────────────────────────────────────
 
-    def vacuum(self, collection: str, keep_versions: int = 1) -> int:
-        """Manifest mode: drop old snapshots and unreferenced data files;
-        returns files removed.  No-op (0) in parquet mode, whose rewrite
-        already reclaims space."""
+    def vacuum(self, collection: str) -> int:
+        """Delete what a crashed or lost-race writer left behind (see
+        ManifestTable.vacuum); returns data files removed.  Commits already
+        reclaim what they supersede."""
         self._guard_writable(collection)
-        if self.storage != "manifest":
-            return 0
-        return self._table(collection).vacuum(keep_versions)
+        with self._lock(collection):
+            return self._table(collection).vacuum()
 
     def optimize(
         self,
@@ -662,28 +595,20 @@ class FusionSparkEngine:
         target_file_rows: int = 1_000_000,
         cluster_by: list[str] | None = None,
     ) -> dict:
-        """Manifest mode: OPTIMIZE — compact the append-accumulated small
-        files into right-sized ones (ManifestTable.compact), optionally
-        range-clustered so parquet min/max stats prune scans
-        (Z-ORDER-lite).  Returns the committed version; {'version': -1}
-        no-op in parquet mode (whose rewrites already consolidate)."""
+        """OPTIMIZE: compact the append-accumulated small files into
+        right-sized ones (ManifestTable.compact), optionally range-clustered
+        so parquet min/max stats prune scans (Z-ORDER-lite).  Returns the
+        committed version."""
         self._guard_writable(collection)
-        if self.storage != "manifest":
-            return {"collection": collection, "version": -1, "compacted": False}
-        v = self._table(collection).compact(
-            target_file_rows=target_file_rows, cluster_by=cluster_by
-        )
+        with self._lock(collection):
+            v = self._table(collection).compact(
+                target_file_rows=target_file_rows, cluster_by=cluster_by
+            )
         return {"collection": collection, "version": v, "compacted": True}
-
-    def history(self, collection: str) -> list[dict]:
-        """Manifest mode: the collection's commit log (version/op/rows/ts).
-        Empty in parquet mode."""
-        if self.storage != "manifest":
-            return []
-        return self._table(collection).history()
 
     # ── search (V1-V7, §3.1) ──────────────────────────────────────────────
 
+    @_locked_read
     def get(self, collection: str, id: str) -> dict | None:
         """S3."""
         rows = self._load(collection).filter(F.col("id") == str(id)).limit(1).collect()
@@ -712,7 +637,7 @@ class FusionSparkEngine:
         scan, same pre-filter semantics), and everything else is an exact
         Spark scan; missing blocks or a stale index fall back to that scan —
         never a silent wrong answer.  The Spark paths hold the collection
-        lock, so a concurrent rewrite never swaps the files mid-read."""
+        lock, so no commit reclaims the files mid-read."""
         cfg = self._catalog[collection]
         if query_vector is None:
             query_vector = self.embedder(query_text or "", cfg["dimensions"])
@@ -721,7 +646,7 @@ class FusionSparkEngine:
         if snap is not None:
             return snap.hits(query_vector, top_k,
                              snap.attrs.mask(tenant_id, metadata_filter, now))
-        with self._lock(collection):  # no rewrite swaps the files mid-read
+        with self._lock(collection):  # no commit reclaims the files mid-read
             probes = self._probe(query_vector)
             blocks = self._blocks_fresh(collection) if resident else None
             if blocks is not None:
@@ -824,11 +749,12 @@ class FusionSparkEngine:
             shutil.copy(self._catalog_path, os.path.join(dest, "_catalog.json"))
             for name in list(self._catalog):
                 src = self._path(name)
-                if os.path.isdir(src):
-                    shutil.copytree(
-                        src, os.path.join(dest, os.path.basename(src)),
-                        dirs_exist_ok=True,
-                    )
+                with self._lock(name):  # no commit reclaims files mid-copy
+                    if os.path.isdir(src):
+                        shutil.copytree(
+                            src, os.path.join(dest, os.path.basename(src)),
+                            dirs_exist_ok=True,
+                        )
             return dest
 
         def loop() -> None:
@@ -921,23 +847,24 @@ class FusionSparkEngine:
         coll = "_conversations"
         if coll not in self._catalog:
             return []
-        df = self._load(coll).filter(
-            (F.col("tenant_id") == agent_id)
-            & (F.col("metadata").getItem("thread_id") == thread_id)
-        )
-        if since:
-            df = df.filter(F.col("ts") > since)
-        df = df.select("id", "content", "metadata", "ts")
-        if limit:
-            w = Window.partitionBy(F.lit(1)).orderBy(
-                F.col("ts").desc(), F.col("id").desc()
+        with self._lock(coll):
+            df = self._load(coll).filter(
+                (F.col("tenant_id") == agent_id)
+                & (F.col("metadata").getItem("thread_id") == thread_id)
             )
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= limit)
-                .drop("_rn")
-            )
-        rows = df.orderBy(F.col("ts").asc(), F.col("id").asc()).collect()
+            if since:
+                df = df.filter(F.col("ts") > since)
+            df = df.select("id", "content", "metadata", "ts")
+            if limit:
+                w = Window.partitionBy(F.lit(1)).orderBy(
+                    F.col("ts").desc(), F.col("id").desc()
+                )
+                df = (
+                    df.withColumn("_rn", F.row_number().over(w))
+                    .filter(F.col("_rn") <= limit)
+                    .drop("_rn")
+                )
+            rows = df.orderBy(F.col("ts").asc(), F.col("id").asc()).collect()
         return [
             {
                 "id": r["id"],
@@ -968,14 +895,15 @@ class FusionSparkEngine:
         sequential embed loop, RAGPipeline.js:91-137, and round-1's
         collect-and-reinsert both funnel the corpus through one process).
         Embeddings come from the engine's embed_fn via the distinct-text
-        Arrow batch; the append write is the only action."""
+        Arrow batch; the append write is the only action, and the chunk
+        count comes from the written files' footers."""
         if collection not in self._catalog:
             self.create_collection(collection, CollectionConfig())
         docs = self.spark.createDataFrame([(doc_id, text)], "doc_id: string, text: string")
         chunks = chunk_documents(docs, strategy)
         # one document's chunks: one file per append
-        self._append(collection, self._ingest_entries(chunks, collection).coalesce(1))
-        return chunks.count()
+        return self._append(
+            collection, self._ingest_entries(chunks, collection).coalesce(1))
 
     def _ingest_entries(self, chunks: DataFrame, collection: str) -> DataFrame:
         """chunk rows → engine rows: distinct-text embed + width check +
@@ -1075,6 +1003,7 @@ class FusionSparkEngine:
             "chunks": chunks,
         }
 
+    @_locked_read
     def analyze(self, collection: str, k: int = 0) -> dict:
         """Corpus-health analytics over the collection's vectors (no
         reference analogue — north-star surface over operators/spectral.py
@@ -1119,6 +1048,7 @@ class FusionSparkEngine:
             )
         return out
 
+    @_locked_read
     def validate(self, collection: str) -> list[dict]:
         """Data-quality gate over a collection (operators/dq.py — no
         reference analogue; the reference dim-checks each insert
@@ -1202,6 +1132,7 @@ def collaborative_recall(
 EXPORT_JSON_ROW_CAP = 100_000
 
 
+@_locked_read
 def export_json(self, collection: str, max_rows: int = EXPORT_JSON_ROW_CAP) -> dict:
     """S7: whole-collection JSON export in the reference's shape
     (FusionEngine.js:278-312 / HNSWIndex.js:390-439) — entries with id/
@@ -1275,6 +1206,7 @@ def import_json(self, payload: dict) -> int:
     return self.insert(name, entries) if entries else 0
 
 
+@_locked_read
 def export_jsonl(self, collection: str, path: str) -> int:
     """S7 at scale: per-partition JSONL export — every executor serializes
     its own partition with to_json and writes directly (one line per entry,
@@ -1306,8 +1238,7 @@ def import_jsonl(self, name: str, path: str, dimensions: int = 64, metric: str =
         .withColumn("ts", F.coalesce("ts", F.lit(int(time.time() * 1000))))
         .withColumn("ttl_ms", F.coalesce("ttl_ms", F.lit(0).cast("long")))
     )
-    self._append(name, rows)
-    return rows.count()
+    return self._append(name, rows)
 
 
 FusionSparkEngine.collaborative_recall = collaborative_recall

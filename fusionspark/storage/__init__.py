@@ -1,5 +1,6 @@
-"""Table storage layers: the default plain-parquet layout (engine.py) and
-the manifest-commit table for concurrent writers (storage/manifest.py)."""
+"""Table storage: the manifest-commit table every engine-owned collection
+lives in (storage/manifest.py), and the Delta Lake reader behind
+attach_delta (storage/delta.py)."""
 
 from fusionspark.storage.manifest import ManifestTable
 

@@ -1,7 +1,6 @@
-"""Manifest-commit table: ACID mutations for concurrent writers.
+"""Manifest-commit table: ACID mutations for concurrent writers, and the
+one layout of every engine-owned collection.
 
-The engine's default layout (one live parquet directory per collection,
-mutated with a rename swap — engine.py:_rewrite) is safe for ONE writer.
 SURVEY §1.3 maps the reference's mutation model (FusionEngine.js insert/
 delete over in-memory Maps with a JSON autosave) to Delta-style MERGE /
 DELETE at 100 TB; this module is that commit protocol without the Delta
@@ -16,15 +15,23 @@ dependency, in the shape Delta/Iceberg use:
   the table root) plus the schema; readers list `_manifests/`, take the
   highest version, and read exactly that file set — a half-written
   transaction is invisible because its manifest doesn't exist yet.
-* Commit = `open(v{N+1}.json, O_CREAT|O_EXCL)`: atomic on POSIX and HDFS,
-  so of two racing writers exactly one wins version N+1; the loser re-reads
-  the new snapshot, re-applies its logical operation, and retries at N+2
-  (optimistic concurrency, like Delta's commit loop).  On S3-class object
-  stores swap the O_EXCL create for a conditional PUT — same protocol.
+* Commit = atomic create-if-absent of v{N+1}.json (a hard link of a fully
+  written temp file, made while N is the latest, under a flock that
+  dropping old manifests also takes), so of two racing writers exactly
+  one wins version N+1; the loser re-reads the new snapshot, re-applies
+  its logical operation, and retries at N+2 (optimistic concurrency, like
+  Delta's commit loop).  The flock needs one POSIX filesystem shared by
+  every writer.
 * `delete_where` is file-level copy-on-write: only files that actually
   contain matching rows (found via input_file_name()) are rewritten;
   a 100 TB table with a point delete rewrites one file, not the table.
-* Old snapshots remain readable (time travel) until `vacuum`.
+* Reclaim at commit: once v{N+1} is linked, the writer deletes the data
+  files N listed and N+1 does not, and every older manifest, so disk holds
+  one version (no time travel).  A crash between the link and the
+  deletions leaves garbage for `vacuum`, never a wrong read.  A writer in
+  another process whose base version was reclaimed under it retries over
+  the new version, as after a lost race; a reader there may fail loudly
+  (missing file), never read a mix of versions.
 
 Contract analogues: FusionEngine.js:175-241 (insert/delete),
 Storage.js save/load (the reference's whole-file JSON swap — the
@@ -33,11 +40,15 @@ single-writer ancestor of this protocol).
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import json
 import os
+import shutil
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -72,15 +83,12 @@ class ManifestTable:
         return t
 
     def exists(self) -> bool:
-        return os.path.isdir(self._manifest_dir) and bool(self._versions())
+        return bool(self._versions())
 
     def _versions(self) -> list[int]:
-        try:
-            names = os.listdir(self._manifest_dir)
-        except FileNotFoundError:
-            return []
         return sorted(
-            int(n[1:13]) for n in names if n.startswith("v") and n.endswith(".json")
+            int(n[1:13]) for n in _listdir(self._manifest_dir)
+            if n.startswith("v") and n.endswith(".json")
         )
 
     def version(self) -> int:
@@ -95,20 +103,12 @@ class ManifestTable:
         ) as f:
             return json.load(f)
 
-    def history(self) -> list[dict]:
-        """Commit log, oldest first (version/op/rows/timestamp per entry)."""
-        return [
-            {k: m.get(k) for k in ("version", "op", "rows", "ts_ms", "parent")}
-            for m in (self._manifest(v) for v in self._versions())
-        ]
-
     # ── read ──────────────────────────────────────────────────────────────
 
-    def read(self, version: int | None = None) -> DataFrame:
-        """DataFrame over exactly one snapshot's file set (latest by
-        default; pass `version` for time travel).  Missing-at-commit-time
-        transactions are invisible by construction."""
-        m = self._manifest(self.version() if version is None else version)
+    def read(self) -> DataFrame:
+        """DataFrame over exactly the latest snapshot's file set.
+        Missing-at-commit-time transactions are invisible by construction."""
+        m = self._manifest(self.version())
         files = [os.path.join(self.path, p) for p in m["files"]]
         schema = StructType.fromJson(m["schema"])
         if not files:
@@ -141,12 +141,9 @@ class ManifestTable:
         # Two-phase visibility: the payload is fully written + fsynced into
         # a hidden temp file (the "." prefix keeps it out of _versions()),
         # then LINKED to the version name — os.link is atomic AND fails
-        # with FileExistsError if the version exists, so it is the same
-        # create-if-absent commit point as the previous O_EXCL open, but a
-        # concurrent reader can never observe a visible-yet-empty manifest
-        # (the race a threaded append test caught: O_EXCL created the file
-        # first and wrote the JSON after, so a reader between the two got
-        # JSONDecodeError on zero bytes).
+        # with FileExistsError if the version exists, and a concurrent
+        # reader never observes a visible-yet-empty manifest (which an
+        # O_EXCL create followed by the write would show it).
         tmp = os.path.join(
             self._manifest_dir, f".tmp-{uuid.uuid4().hex}-v{version}.json"
         )
@@ -156,56 +153,103 @@ class ManifestTable:
             f.flush()
             os.fsync(f.fileno())
         try:
-            os.link(tmp, target)
+            # under the lock no manifest is dropped, so a version that was
+            # committed and then reclaimed still shows as a later latest
+            with self._manifest_lock():
+                if self._versions()[-1:] != ([version - 1] if version else []):
+                    raise CommitConflict(f"version {version} already committed")
+                os.link(tmp, target)
         except FileExistsError as e:
             raise CommitConflict(f"version {version} already committed") from e
         finally:
             os.unlink(tmp)
 
+    @contextlib.contextmanager
+    def _manifest_lock(self):
+        """Exclusive flock on `_manifests/` across threads and processes,
+        held to link a version or drop old ones: without it a writer whose
+        base was reclaimed could recreate a dropped version name."""
+        fd = os.open(self._manifest_dir, os.O_RDONLY)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
+            yield
+        finally:
+            os.close(fd)
+
     def _stage(self, df: DataFrame) -> tuple[list[str], int]:
-        """Write df's rows as immutable files under a fresh txn dir;
-        returns (relative file paths, row count).  Nothing is live until a
-        manifest references these files."""
+        """Write df's rows as immutable zstd files under a fresh txn dir;
+        returns (relative file paths, row count from their footers).
+        Nothing is live until a manifest references these files."""
         txn = os.path.join(self._data_dir, f"txn-{uuid.uuid4().hex}")
-        df.write.mode("errorifexists").parquet(txn)
-        rel = []
-        n = 0
-        for name in os.listdir(txn):
-            if name.endswith(".parquet"):
-                rel.append(os.path.relpath(os.path.join(txn, name), self.path))
-        staged = self.spark.read.parquet(txn)
-        n = staged.count()
-        return rel, n
+        df.write.mode("errorifexists").option("compression", "zstd").parquet(txn)
+        files = [os.path.join(txn, n) for n in os.listdir(txn) if n.endswith(".parquet")]
+        n = sum(pq.read_metadata(f).num_rows for f in files)
+        return [os.path.relpath(f, self.path) for f in files], n
 
     def _commit_loop(self, apply_fn, op: str, max_retries: int = 20) -> int:
         """Optimistic-concurrency commit: apply_fn(snapshot_manifest) →
         (files, rows) for the NEXT version; on a lost race, re-read the
-        winner's snapshot and re-apply.  Returns the committed version."""
+        winner's snapshot and re-apply.  A failed apply whose base version
+        moved meanwhile (the winner reclaimed the base's manifest or files)
+        is a lost race too.  Returns the committed version."""
         for _ in range(max_retries):
             base = self.version()
-            m = self._manifest(base)
-            files, rows = apply_fn(m)
+            try:
+                m = self._manifest(base)
+                files, rows = apply_fn(m)
+            except Exception:
+                if self.version() != base:
+                    continue
+                raise
             try:
                 self._write_manifest(base + 1, files, m["schema"], op, rows)
-                return base + 1
             except CommitConflict:
                 continue
+            self._reclaim(m["files"], files, base + 1)
+            return base + 1
         raise CommitConflict(f"lost {max_retries} commit races on {self.path}")
+
+    def _reclaim(self, old: list[str], new: list[str], version: int) -> None:
+        """After v{version} is linked: delete the data files `old` listed and
+        `new` does not, and every manifest older than `version`."""
+        self._remove_files(set(old) - set(new))
+        self._drop_manifests_before(version)
+
+    def _drop_manifests_before(self, version: int) -> None:
+        with self._manifest_lock():
+            for v in self._versions():
+                if v < version:
+                    _unlink(os.path.join(self._manifest_dir, _MANIFEST_FMT.format(v)))
+
+    def _remove_files(self, rels) -> None:
+        """Delete data files with their .crc siblings, then any txn dir that
+        no longer holds a data file."""
+        dirs = set()
+        for rel in rels:
+            d, name = os.path.split(os.path.join(self.path, rel))
+            _unlink(os.path.join(d, name))
+            _unlink(os.path.join(d, f".{name}.crc"))
+            dirs.add(d)
+        for d in dirs:
+            if not any(n.endswith(".parquet") for n in _listdir(d)):
+                shutil.rmtree(d, ignore_errors=True)
 
     # ── mutations ─────────────────────────────────────────────────────────
 
-    def append(self, df: DataFrame) -> int:
-        """Append rows; concurrent appends all land (no lost updates) —
-        staged files are snapshot-independent, so a lost race retries the
-        manifest write alone, not the data write."""
+    def append(self, df: DataFrame) -> tuple[int, int]:
+        """Append rows; returns (committed version, rows appended).
+        Concurrent appends all land (no lost updates) — staged files are
+        snapshot-independent, so a lost race retries the manifest write
+        alone, not the data write."""
         new_files, n = self._stage(df)
-        return self._commit_loop(
+        v = self._commit_loop(
             lambda m: (list(m["files"]) + new_files, n), op="append"
         )
+        return v, n
 
     def overwrite(self, df: DataFrame) -> int:
-        """Replace the table's content atomically (the manifest form of the
-        engine's rename swap — readers see old or new, never a mix)."""
+        """Replace the table's content atomically (readers see old or new,
+        never a mix)."""
         new_files, n = self._stage(df)
         return self._commit_loop(lambda m: (new_files, n), op="overwrite")
 
@@ -314,39 +358,48 @@ class ManifestTable:
 
         return self._commit_loop(apply, op="compact")
 
-    def vacuum(self, keep_versions: int = 1, retain_seconds: float = 600.0) -> int:
-        """Drop manifests older than the newest `keep_versions` and any data
-        file no surviving snapshot references.  Returns files removed.
+    def vacuum(self, retain_seconds: float = 600.0) -> int:
+        """Delete every manifest but the latest, and every data file (with
+        its .crc sibling and emptied txn dir) that the latest does not list:
+        what a crash between a commit and its reclaim, or a writer that
+        staged files and then lost or died, leaves behind.  Returns data
+        files removed.
 
         `retain_seconds` guards in-flight writers: a concurrent append /
         compact / upsert stages its files BEFORE its manifest commit makes
         them referenced, so an unreferenced-but-young file may belong to a
         transaction about to commit.  Deleting it would let that writer
         commit a manifest pointing at missing files — the same hazard
-        Delta's VACUUM retention check exists for — so files whose mtime is
-        within the retention window are skipped.  Pass 0 only when no other
-        writer can be active."""
-        vs = self._versions()
-        keep = vs[-max(1, keep_versions):]
-        referenced: set[str] = set()
-        for v in keep:
-            referenced.update(self._manifest(v)["files"])
-        removed = 0
+        Delta's VACUUM retention check exists for — so files and txn dirs
+        whose mtime is within the retention window are skipped.  Pass 0
+        only when no other writer can be active."""
+        latest = self.version()
+        referenced = set(self._manifest(latest)["files"])
+        self._drop_manifests_before(latest)
         cutoff = time.time() - max(0.0, retain_seconds)
-        for v in vs[: len(vs) - len(keep)]:
-            os.remove(os.path.join(self._manifest_dir, _MANIFEST_FMT.format(v)))
-        for dirpath, _dirs, names in os.walk(self._data_dir):
-            for name in names:
-                fp = os.path.join(dirpath, name)
-                rel = os.path.relpath(fp, self.path)
-                if (
-                    name.endswith(".parquet")
-                    and rel not in referenced
-                    and os.path.getmtime(fp) < cutoff
-                ):
-                    os.remove(fp)
-                    removed += 1
-        return removed
+        stale = []
+        for txn in (os.path.join(self._data_dir, d) for d in _listdir(self._data_dir)):
+            names = [n for n in _listdir(txn) if n.endswith(".parquet")]
+            if not names and os.path.getmtime(txn) < cutoff:  # a dead writer's
+                shutil.rmtree(txn, ignore_errors=True)
+            for n in names:
+                rel = os.path.relpath(os.path.join(txn, n), self.path)
+                if rel not in referenced and os.path.getmtime(os.path.join(txn, n)) < cutoff:
+                    stale.append(rel)
+        self._remove_files(stale)
+        return len(stale)
+
+
+def _unlink(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
+
+
+def _listdir(path: str) -> list[str]:
+    try:
+        return os.listdir(path)
+    except FileNotFoundError:
+        return []
 
 
 def _strip_scheme(p: str) -> str:

@@ -153,10 +153,10 @@ def test_sssp_relaxes_cheaper_longer_path(spark):
 
 def test_engine_optimize_compacts_manifest_collection(spark, tmp_path):
     """Three appends → 3+ small files; optimize() compacts to one file
-    set in a new version with identical rows; parquet mode no-ops."""
+    set in a new version with identical rows."""
     from fusionspark.engine import FusionSparkEngine
 
-    eng = FusionSparkEngine(spark, str(tmp_path / "m"), storage="manifest")
+    eng = FusionSparkEngine(spark, str(tmp_path / "m"))
     eng.create_collection("c", _cfg(4))
     for i in range(3):
         eng.insert("c", [{"id": f"x{i}", "vector": [float(i), 0.0, 0.0, 0.0]}])
@@ -165,12 +165,9 @@ def test_engine_optimize_compacts_manifest_collection(spark, tmp_path):
     assert out["compacted"] and out["version"] > 0
     after = eng._load("c").collect()
     assert sorted(r["id"] for r in after) == sorted(r["id"] for r in before)
-    hist = eng.history("c")
-    assert hist and any(h["op"] == "compact" for h in hist)
-
-    eng2 = FusionSparkEngine(spark, str(tmp_path / "p"))
-    eng2.create_collection("c", _cfg(4))
-    assert eng2.optimize("c")["compacted"] is False
+    t = eng._table("c")
+    assert t.version() == out["version"]
+    assert t._manifest(t.version())["op"] == "compact"
 
 
 def test_dq_check_rule_name_with_quote(spark):

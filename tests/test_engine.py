@@ -218,8 +218,8 @@ def test_export_jsonl_distributed_and_json_cap(engine, spark, tmp_path):
     from pyspark.sql import functions as F
 
     engine.create_collection("big", CollectionConfig(dimensions=4))
-    # append a 1M-row frame straight at the collection path — engine.insert
-    # builds driver-side rows and would dominate the test runtime
+    # append a 1M-row frame straight through the collection's table —
+    # engine.insert builds driver-side rows and would dominate the runtime
     big = spark.range(1_000_000).select(
         F.concat(F.lit("r"), F.col("id")).alias("id"),
         F.array(*[(F.col("id") % 97 + i).cast("float") for i in range(4)]).alias("vector"),
@@ -229,7 +229,7 @@ def test_export_jsonl_distributed_and_json_cap(engine, spark, tmp_path):
         F.lit(1).cast("long").alias("ts"),
         F.lit(0).cast("long").alias("ttl_ms"),
     )
-    big.write.mode("append").parquet(engine._path("big"))
+    assert engine._append("big", big) == 1_000_000
 
     with pytest.raises(ValueError, match="export_json cap"):
         engine.export_json("big")
@@ -327,48 +327,43 @@ def test_build_index_and_approximate_search(engine, spark, monkeypatch, fits):
 def test_insert_replace_is_tenant_scoped(spark, tmp_path):
     """ADVICE r3 (high): an upsert's collision delete must be scoped to the
     inserting tenant — tenant A re-inserting id 'x' must NOT delete tenant
-    B's (or the NULL-tenant's) row 'x'.  Checked in both storage modes."""
-    for storage in ("parquet", "manifest"):
-        eng = FusionSparkEngine(
-            spark, str(tmp_path / f"ts-{storage}"), storage=storage
-        )
-        eng.create_collection("c", CollectionConfig(dimensions=2))
-        eng.insert("c", [{"id": "x", "vector": [1, 0], "content": "A1"}],
-                   tenant_id="A")
-        eng.insert("c", [{"id": "x", "vector": [0, 1], "content": "B1"}],
-                   tenant_id="B")
-        eng.insert("c", [{"id": "x", "vector": [1, 1], "content": "none1"}])
+    B's (or the NULL-tenant's) row 'x'."""
+    eng = FusionSparkEngine(spark, str(tmp_path / "ts"))
+    eng.create_collection("c", CollectionConfig(dimensions=2))
+    eng.insert("c", [{"id": "x", "vector": [1, 0], "content": "A1"}],
+               tenant_id="A")
+    eng.insert("c", [{"id": "x", "vector": [0, 1], "content": "B1"}],
+               tenant_id="B")
+    eng.insert("c", [{"id": "x", "vector": [1, 1], "content": "none1"}])
 
-        # tenant A upserts its own x: B's and the global row survive
-        eng.insert("c", [{"id": "x", "vector": [1, 0], "content": "A2"}],
-                   tenant_id="A")
-        rows = {(r["tenant_id"], r["id"]): r["content"]
-                for r in eng._load("c").collect()}
-        assert rows == {("A", "x"): "A2", ("B", "x"): "B1",
-                        (None, "x"): "none1"}, storage
+    # tenant A upserts its own x: B's and the global row survive
+    eng.insert("c", [{"id": "x", "vector": [1, 0], "content": "A2"}],
+               tenant_id="A")
+    rows = {(r["tenant_id"], r["id"]): r["content"]
+            for r in eng._load("c").collect()}
+    assert rows == {("A", "x"): "A2", ("B", "x"): "B1", (None, "x"): "none1"}
 
-        # per-entry tenant override groups the delete per tenant
-        eng.insert("c", [
-            {"id": "x", "vector": [0, 0], "content": "A3", "tenant_id": "A"},
-            {"id": "x", "vector": [0, 0], "content": "B2", "tenant_id": "B"},
-        ])
-        rows = {(r["tenant_id"], r["id"]): r["content"]
-                for r in eng._load("c").collect()}
-        assert rows == {("A", "x"): "A3", ("B", "x"): "B2",
-                        (None, "x"): "none1"}, storage
+    # per-entry tenant override groups the delete per tenant
+    eng.insert("c", [
+        {"id": "x", "vector": [0, 0], "content": "A3", "tenant_id": "A"},
+        {"id": "x", "vector": [0, 0], "content": "B2", "tenant_id": "B"},
+    ])
+    rows = {(r["tenant_id"], r["id"]): r["content"]
+            for r in eng._load("c").collect()}
+    assert rows == {("A", "x"): "A3", ("B", "x"): "B2", (None, "x"): "none1"}
 
 
 def test_manifest_upsert_history_is_single_commit(spark, tmp_path):
-    """In manifest storage a replacing insert lands as ONE 'upsert' version,
-    not a delete commit followed by an append commit (ADVICE r3 low)."""
-    eng = FusionSparkEngine(spark, str(tmp_path / "atom"), storage="manifest")
+    """A replacing insert lands as ONE 'upsert' version, not a delete
+    commit followed by an append commit (ADVICE r3 low)."""
+    eng = FusionSparkEngine(spark, str(tmp_path / "atom"))
     eng.create_collection("c", CollectionConfig(dimensions=2))
     eng.insert("c", [{"id": "x", "vector": [1, 0]}])
     before = eng._table("c").version()
     eng.insert("c", [{"id": "x", "vector": [0, 1]}])
     t = eng._table("c")
     assert t.version() == before + 1
-    assert t.history()[-1]["op"] == "upsert"
+    assert t._manifest(t.version())["op"] == "upsert"
     assert eng._load("c").count() == 1
 
 
@@ -418,7 +413,7 @@ def test_resident_stale_falls_back_to_exact(engine):
     engine.create_collection("s", CollectionConfig(dimensions=4))
     engine.insert("s", [{"id": "a", "vector": [1, 0, 0, 0]}])
     engine.load_resident("s")
-    engine.insert("s", [{"id": "b", "vector": [1, 0, 0, 0]}])  # bumps mutations
+    engine.insert("s", [{"id": "b", "vector": [1, 0, 0, 0]}])  # moves the table version
     hits = engine.search("s", query_vector=[1, 0, 0, 0], top_k=5, resident=True)
     assert {h["id"] for h in hits} == {"a", "b"}
     # rebuild picks the new row up on the resident path proper
@@ -566,9 +561,80 @@ def test_concurrent_inserts_leave_a_whole_catalog(engine, tmp_path):
     with open(tmp_path / "store" / "_catalog.json") as f:
         on_disk = json.load(f)
     assert sorted(on_disk) == names
-    assert all(on_disk[n]["mutations"] == engine._catalog[n]["mutations"] for n in names)
+    assert on_disk == engine._catalog
     reopened = FusionSparkEngine(engine.spark, str(tmp_path / "store"))
     assert {c["name"]: c["size"] for c in reopened.list_collections()} == dict.fromkeys(names, 3)
+
+
+def test_get_during_colliding_upserts(engine):
+    """Two threads call get while a third upserts a colliding id, each
+    commit deleting the file it replaced: get holds the collection lock
+    through its Spark read, so no read raises, and each returns the row as
+    of some write."""
+    import sys
+    import threading
+
+    engine.create_collection("g", CollectionConfig(dimensions=4))
+    first = [0.0, 0.0, 0.0, 1.0]
+    engine.insert("g", [{"id": f"r{i}", "vector": [1.0, float(i), 0.0, 0.0]}
+                        for i in range(8)] + [{"id": "x", "vector": first}])
+    versions = [[0.0, 0.0, float(n), 1.0] for n in range(1, 7)]
+    done = threading.Event()
+    answers, errors = [], []
+
+    def writer():
+        try:
+            for v in versions:
+                engine.insert("g", [{"id": "x", "vector": v}])
+        except Exception as e:  # noqa: BLE001 — reported by the assert
+            errors.append(e)
+        finally:
+            done.set()
+
+    def reader():
+        while not done.is_set():
+            try:
+                answers.append(list(engine.get("g", "x")["vector"]))
+            except Exception as e:  # noqa: BLE001 — reported by the assert
+                errors.append(e)
+
+    threads = [threading.Thread(target=writer)] + [
+        threading.Thread(target=reader) for _ in range(2)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert errors == [] and answers
+    assert all(a in [first] + versions for a in answers)
+
+
+def test_writes_run_few_spark_jobs(engine, spark):
+    """Spark jobs per write to a written collection.  The staged row count
+    comes from the parquet footers, and ingest and import return it, so
+    no write recounts; before, in the parquet layout, these were insert 4,
+    upsert 5, remember 4 and ingest 5."""
+    engine.create_collection("w", CollectionConfig(dimensions=4))
+    engine.insert("w", [{"id": f"r{i}", "vector": [1.0, float(i), 0.0, 0.0]}
+                        for i in range(50)])
+    engine.remember("a", "first memory")
+    engine.ingest("notes", "d0", "first words. " * 40)
+
+    def jobs(fn):
+        return len(_jobs(spark, fn)[1])
+
+    counts = {
+        "insert": jobs(lambda: engine.insert("w", [{"id": "n", "vector": [0, 1, 0, 0]}])),
+        "upsert": jobs(lambda: engine.insert("w", [{"id": "r3", "vector": [0, 1, 1, 0]}])),
+        "remember": jobs(lambda: engine.remember("a", "second memory")),
+        "ingest": jobs(lambda: engine.ingest("notes", "d1", "more words. " * 40)),
+    }
+    assert counts["insert"] <= 2 and counts["upsert"] <= 4, counts
+    assert counts["remember"] <= 2 and counts["ingest"] <= 3, counts
 
 
 def test_same_microsecond_writes_keep_distinct_ids(engine, monkeypatch):
@@ -595,13 +661,17 @@ def test_same_microsecond_writes_keep_distinct_ids(engine, monkeypatch):
 
 def test_failed_collision_probe_raises_instead_of_appending(engine, monkeypatch):
     """A read failure on a written collection is not "not written yet": the
-    upsert and list_collections raise, and no duplicate id lands."""
+    upsert (its commit loop, with the version unmoved) and list_collections
+    raise, and no duplicate id lands."""
+    from fusionspark.storage import ManifestTable
+
     engine.create_collection("p", CollectionConfig(dimensions=4))
     engine.insert("p", [{"id": "x", "vector": [1, 0, 0, 0]}])
 
-    def broken(collection):
+    def broken(*_args):
         raise RuntimeError("storage unreadable")
 
+    monkeypatch.setattr(ManifestTable, "_cow_rewrite", broken)
     monkeypatch.setattr(engine, "_load", broken)
     with pytest.raises(RuntimeError, match="unreadable"):
         engine.insert("p", [{"id": "x", "vector": [0, 1, 0, 0]}])

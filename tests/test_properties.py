@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from fusionspark.operators import dedup
 
@@ -66,12 +66,15 @@ def test_minhash_salting_invariant_on_random_corpora(spark, texts):
     ),
     chunk_size=st.integers(min_value=16, max_value=120),
 )
+@example("\n\naaaaaaaaaaaaaaa", 16)
 @settings(max_examples=30, deadline=None)
 def test_recursive_chunks_invariants(text, chunk_size):
     """Pure-Python chunker invariants: short text passes through verbatim
     (reference parity, incl. empty input), split outputs are non-empty,
-    and the first chunk is an exact prefix of the input (no overlap is
-    prepended to chunk 0)."""
+    and the first chunk is the input's first text after at most a run of
+    separator characters: no overlap is prepended to chunk 0, and, as in
+    the reference's `current ? current + sep + part : part`, a leading
+    separator is dropped with the empty part before it."""
     from fusionspark.operators.chunking import split_recursive
 
     chunks = split_recursive(text, chunk_size=chunk_size, chunk_overlap=4)
@@ -81,7 +84,8 @@ def test_recursive_chunks_invariants(text, chunk_size):
     assert chunks
     for c in chunks:
         assert c
-    assert text.startswith(chunks[0])
+    k = text.find(chunks[0])
+    assert k >= 0 and set(text[:k]) <= set("\n. ")  # the default separators' chars
 
 
 # ── binary-parser hardening: malformed inputs raise, never hang ───────────

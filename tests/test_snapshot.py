@@ -63,8 +63,7 @@ def _jobs(spark, fn):
 def _on_spark(engine, method, *args, **kw):
     """engine.<method>(...) on the Spark path: a second engine over the same
     root, with no snapshot loaded and none allowed to load."""
-    other = FusionSparkEngine(engine.spark, engine.root, engine.embedder,
-                              storage=engine.storage)
+    other = FusionSparkEngine(engine.spark, engine.root, engine.embedder)
     with mock.patch.object(sv, "SNAPSHOT_MEM_FRACTION", 0.0):
         return getattr(other, method)(*args, **kw)
 
@@ -303,7 +302,7 @@ def test_reads_equal_spark_path(engine, spark, metric):
     runs no Spark job once the snapshot is loaded."""
     _populate(engine, "rd", metric)
     engine.search("rd", query_vector=QUERIES[0])  # loads the snapshot
-    assert engine._snapshots["rd"].token == engine._catalog["rd"]["mutations"]
+    assert engine._snapshots["rd"].token == engine._table("rd").version()
     _assert_resident_equals_exact(engine, "rd", ALL + [(_vec(501), {})])
     for q in TEXT_QUERIES:
         for kw, read in (({"top_k": 5}, "retrieve"),
@@ -335,15 +334,15 @@ def test_recall_equals_spark_path(engine, spark):
 
 
 def test_manifest_commit_by_another_engine_is_seen(spark, tmp_path):
-    """Two engines on one manifest root: B's insert moves the table version
-    past A's snapshot, so A's next search reloads and returns the row."""
+    """Two engines on one root: B's insert moves the table version past
+    A's snapshot, so A's next search reloads and returns the row."""
     root = str(tmp_path / "m")
-    a = FusionSparkEngine(spark, root, storage="manifest")
+    a = FusionSparkEngine(spark, root)
     a.create_collection("m", CollectionConfig(dimensions=DIM))
     a.insert("m", [{"id": f"m{i}", "vector": _vec(i)} for i in range(10)])
     assert a.search("m", query_vector=QUERIES[0], top_k=1)[0]["id"] != "new"
     snap = a._snapshots["m"]
-    b = FusionSparkEngine(spark, root, storage="manifest")
+    b = FusionSparkEngine(spark, root)
     b.insert("m", [{"id": "new", "vector": QUERIES[0]}])
     assert a.search("m", query_vector=QUERIES[0], top_k=1)[0]["id"] == "new"
     assert a._snapshots["m"] is not snap
@@ -447,9 +446,9 @@ def test_spark_reads_pass_the_catalog_dimensions(engine, spark, monkeypatch):
 
 def test_spark_reads_during_colliding_upserts(engine, monkeypatch):
     """Above the snapshot limit, two threads run exact searches while a
-    third upserts a colliding id (each upsert a parquet rewrite that
-    renames the live directory away): no read raises, and every answer
-    equals the model before or after some write."""
+    third upserts a colliding id (each upsert commit deletes the file it
+    replaced): no read raises, and every answer equals the model before or
+    after some write."""
     import numpy as np
 
     monkeypatch.setattr(sv, "SNAPSHOT_MEM_FRACTION", 0.0)
