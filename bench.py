@@ -346,10 +346,9 @@ def bench_queries(spark):
         "tpch_top_customers",
         "rollup_orders",
         "searchall_quota",
-        # round 3: the scale-path near-dups, PNG codec pipeline
+        # round 3: the scale-path near-dups
         "neardup_ngram_lsh",
         "neardup_embedding_ivf",
-        "png_features",
         # round 5: training-pipeline additions (clustering, quality rules,
         # sampling, packing, PII)
         "dedup_clusters",
@@ -363,24 +362,20 @@ def bench_queries(spark):
         "contamination_check",
         "dedup_incremental",
         "corpus_funnel",
-        # round 6: real codecs (JPEG/MP4), sub-document dedup, trainable
-        # quality classifier, PQ compression search
-        "jpeg_features",
-        "mp4_metadata",
+        # round 6: sub-document dedup, trainable quality classifier, PQ
+        # compression search
         "paragraph_dedup",
         "nb_quality",
         "ann_pq",
         "ann_ivf_pq",
         "warc_ingest",
         "bpe_tokenize",
-        "png_resize",
         "curriculum_shards",
         "lm_perplexity",
         "shuffle_shards",
         "quality_consensus",
-        # round 6 (session 3): real video frame decode, unicode hygiene,
-        # entropy signal, URL canonicalization, Q19 disjunctive pushdown
-        "video_frames",
+        # round 6 (session 3): unicode hygiene, entropy signal, URL
+        # canonicalization, Q19 disjunctive pushdown
         "unicode_clean",
         "char_entropy",
         "url_canonical",
@@ -388,7 +383,6 @@ def bench_queries(spark):
         "bm25_search",
         "window_dedup",
         "hll_distinct",
-        "wav_windows",
         "ann_sq8",
         # round 6 (session 4): sparse lexical similarity join, k-core
         # peeling
@@ -432,15 +426,11 @@ def bench_queries(spark):
         "split_leakage",
         "item_cf",
         # round 8 (session 7, batch 2): lossless prefix-filtered exact
-        # similarity join, HITS ordered-fold iterations, real BMP decode
+        # similarity join, HITS ordered-fold iterations
         "neardup_prefix",
         "hits_docs",
-        "bmp_features",
-        # round 9: real MP4/AVC pixel decode (I_PCM IDR frames through the
-        # stsd/avcC/stco container path — the r8 verdict's last codec
-        # boundary closed) and the trained hashed-NB language classifier
-        # (broadcast weight grid + dim-ordered scoring fold)
-        "mp4_video_frames",
+        # round 9: the trained hashed-NB language classifier (broadcast
+        # weight grid + dim-ordered scoring fold)
         "lang_id_trained",
         # round 9 second wave: RAKE phrase extraction, Hilbert-clustered
         # pruning
@@ -454,21 +444,18 @@ def bench_queries(spark):
         "burrows_delta",
         # round 11: content-defined chunking (zero-shuffle Arrow kernel +
         # hash-keyed dedup), ordered funnel fold, PRF query expansion
-        # (BM25 feedback + offer weights), Adam7 PNG round-trip
+        # (BM25 feedback + offer weights)
         "cdc_chunking",
         "window_funnel",
         "prf_expansion",
-        "png_interlaced",
         # round 11 continuation: fixed-point integer TextRank (5 vocab-
         # sized join iterations), exhaustive deterministic RANSAC (day-
         # pair candidates x day votes, all-integer inlier bands), exact
-        # max-plus Viterbi (per-user ordered folds), the QOI codec round
-        # trip (Arrow mapInPandas kernels), nested-fold DTW, and the
-        # doubled-rank Kruskal-Wallis over the distinct-cents grid
+        # max-plus Viterbi (per-user ordered folds), nested-fold DTW, and
+        # the doubled-rank Kruskal-Wallis over the distinct-cents grid
         "textrank_keywords",
         "ransac_trend",
         "viterbi_decode",
-        "qoi_features",
         "dtw_distance",
         "kruskal_wallis",
         # round 12: in-row LCS DP (ROUGE-L), winnowing fingerprint

@@ -283,14 +283,25 @@ class FusionSparkEngine:
             if fresh and tok == snap.token + 1:
                 self._snapshots[collection] = mirror(snap).at(tok)
 
-    def _append(self, collection: str, df: DataFrame) -> int:
-        """Append df's rows (creating the table on the first write); returns
-        how many landed, from the staged files' footers."""
+    def _append(self, collection: str, df: DataFrame, hit=None) -> int | None:
+        """Append df's rows (creating the table on the first write) and
+        return how many landed, from the staged files' footers; or, given
+        `hit`, upsert them over the rows it matches.  Either is one commit
+        that removes no row it does not put back, so a collection over the
+        snapshot limit stays over it: the mark moves to the version linked
+        and the next read skips the size check."""
         with self._lock(collection):
             t = self._table(collection)
-            if not t.exists():
-                ManifestTable.create(self.spark, t.path, df.schema)
-            return t.append(df)[1]
+            tok = self._mutation_token(collection)
+            if hit is not None:
+                v, n = t.upsert(df, hit), None
+            else:
+                if not t.exists():
+                    ManifestTable.create(self.spark, t.path, df.schema)
+                v, n = t.append(df)
+            if self._oversize.get(collection) == tok and v == tok + 1:
+                self._oversize[collection] = v
+            return n
 
     # ── mutation (S2, S4) ─────────────────────────────────────────────────
 
@@ -359,7 +370,7 @@ class FusionSparkEngine:
 
         def store() -> None:
             if hit is not None and self._written(collection):
-                self._table(collection).upsert(df, hit)
+                self._append(collection, df, hit)
                 return
             tok = self._mutation_token(collection)
             self._append(collection, df)
@@ -541,7 +552,7 @@ class FusionSparkEngine:
         """The collection's fresh Snapshot, loading or rebuilding it first —
         once, under the collection lock, however many reads find it missing
         or stale.  None while the collection is over the size limit (checked
-        once per token)."""
+        once per token, and carried forward by _append)."""
         snap = self._fresh_snapshot(collection)
         if snap is not None:
             return snap
@@ -1118,12 +1129,8 @@ def collaborative_recall(
 ) -> dict[str, list[dict]]:
     """M7 (AgentOrchestrator.js:243-268): recall per agent + shared pool."""
     out = {a: self.recall(a, query, mem_type, top_k) for a in agent_ids}
-    try:
-        out["shared"] = self.search(
-            "_memory_shared", query_text=query, top_k=top_k
-        )
-    except Exception:  # noqa: BLE001 — no shared pool yet
-        out["shared"] = []
+    # every agent's shares (no tenant filter); a pool never shared is empty
+    out["shared"] = self.recall(None, query, "shared", top_k)
     return out
 
 

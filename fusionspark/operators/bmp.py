@@ -1,14 +1,13 @@
 """REAL BMP codec (BITMAPINFOHEADER, 24-bit uncompressed BI_RGB) —
-stdlib + numpy only, like the PNG/JPEG/WAV/MP4/AVI siblings.
+stdlib + numpy only, like the JPEG/GIF/QOI siblings.
 
 The deliberately awkward parts of the real format are all exercised:
 rows are stored BOTTOM-UP, pixels are BGR (not RGB), and every row pads
 to a 4-byte boundary (the synthetic geometry is 25 px wide = 75 data
 bytes → 1 pad byte per row, so padding bugs cannot hide).  The pixel
-law is closed-form in (doc_id, pixel, channel), so the DuckDB oracle
-attests the whole encode→parse→unpad→flip→reorder pipeline
-arithmetically without touching BMP bytes (the png_features discipline,
-multimodal_queries.py).
+law is closed-form in (doc_id, pixel, channel), so a test attests the
+whole encode→parse→unpad→flip→reorder pipeline arithmetically without
+touching BMP bytes (tests/test_bmp.py).
 
 The reference stores opaque binary attachments but decodes nothing
 (SURVEY §2: multimodal is beyond-reference); this codec extends the
@@ -104,7 +103,7 @@ def synth_bmp_media(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out["height"].append(h)
             yield pd.DataFrame(out)
 
-    # ids-only spread before the kernel — see synth_png_media
+    # ids-only spread before the kernel — see gif.synth_gif_media
     return d.select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
     ).mapInPandas(

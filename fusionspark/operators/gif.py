@@ -280,7 +280,7 @@ def synth_gif_interlaced_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def gif_feature_stats(media: DataFrame) -> DataFrame:
     """Decode REAL GIF payloads; exact mean + position-weighted checksum
-    (the bmp/png feature contract)."""
+    (the bmp feature contract)."""
     import pandas as pd
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

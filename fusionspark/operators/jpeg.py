@@ -10,9 +10,8 @@ vectorized float64 IDCT, 4:4:4 / 4:2:0 (any h,v ≤ 2) chroma upsampling and
 BT.601 YCbCr→RGB.  Progressive (SOF2), arithmetic coding, and 12-bit depth
 raise loudly.
 
-The encoder exists for the same reason `png_encode` / `wav_encode` do
-(multimodal.py): this container has no other way to produce real JPEG byte
-streams, and round-trip tests + closed-form oracles need deterministic
+The encoder exists because this container has no other way to produce
+real JPEG byte streams, and round-trip tests + closed-form oracles need deterministic
 inputs.  It emits baseline grayscale or YCbCr (4:4:4 or 4:2:0) with
 self-generated canonical Huffman tables (flat code lengths — valid DHT,
 simpler than transcribing the spec's example tables, and the decoder reads
@@ -20,10 +19,10 @@ whatever DHT declares anyway).
 
 Reference parity: the reference engine (FusionpactTech/fusionpact-vectordb)
 has no image codecs at all — this is north-star training-pipeline surface
-(BASELINE.json), the JPEG sibling of the stdlib PNG/WAV codecs.
+(BASELINE.json), the JPEG sibling of the stdlib GIF/BMP/QOI codecs.
 
-Scale shape: decode runs inside Arrow-batched mapInPandas kernels
-(multimodal.py) — per-partition batches, payload bytes never shuffle; the
+Scale shape: decode runs inside Arrow-batched mapInPandas kernels —
+per-partition batches, payload bytes never shuffle; the
 derived features are ordinary columns that push down.
 """
 

@@ -14,7 +14,7 @@ one 1000-executor cluster chews one segment per core.  Extracted columns
 (url, date, mime, body) land as ordinary pushdown-friendly columns and
 feed straight into the dedup/quality operators.
 
-The writer exists for the same reason png/wav/jpeg/mp4 encoders do: this
+The writer exists for the same reason the jpeg encoder does: this
 container has no crawl data, and round-trip tests + closed-form oracles
 need deterministic real byte streams.
 """

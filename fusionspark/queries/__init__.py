@@ -32,9 +32,9 @@ def query(name: str, sql: str | None = None):
 # consecutive zero-red round).  This board is the PROGRESS.md r15 handoff
 # verbatim, priority order never-attested > code-changed re-attests >
 # staleness refresh: the 18 r14 additions (17 eval queries +
-# delta_time_travel — the whole never-attested queue), the 16 rows whose
+# delta_time_travel — the whole never-attested queue), the 5 rows whose
 # code changed in the r14 round6/ranking sweeps that are not refreshed
-# elsewhere, and the 16 remaining r5-stale rows.  The whole board is
+# elsewhere, and the 15 remaining r5-stale rows.  The whole board is
 # pre-certified at the r14 final HEAD: every row except delta_time_travel
 # is inside the definitive 455-era full strict runs at BOTH sf0.01 and
 # sf0.1, and delta_time_travel was gated strict ×3 SFs on landing
@@ -49,13 +49,10 @@ PRIORITY: list[str] = [
     "silhouette_simplified", "pr_auc", "score_ks", "mcc_binary",
     "lift_gains", "brier_decomposition", "mrr_multi", "map_at10",
     "delta_time_travel",
-    # 14 code-changed re-attests (r14 round6_stable sweep + ranking
+    # 5 code-changed re-attests (r14 round6_stable sweep + ranking
     # div/materialization) not refreshed by the r14 board or the r5 slice
     "systematic_sample", "range_bounds_plan", "neardup_containment",
-    "neardup_prefix", "split_leakage", "png_features", "image_features",
-    "jpeg_features",
-    "video_frames", "bmp_features", "gif_features", "gif_interlaced",
-    "png_interlaced", "qoi_features",
+    "neardup_prefix", "split_leakage",
     # 15 remaining r5-stale rows (registry order; includes the two
     # r14-code-changed rows neardup_ngram_lsh / dedup_incremental)
     "neardup_embedding", "neardup_ngram_lsh", "neardup_embedding_ivf",
@@ -94,7 +91,6 @@ def load_all() -> None:
         layout_queries,
         extended_queries,
         mining_queries,
-        multimodal_queries,
         pipeline_queries,
         rag_queries,
         relational_queries,

@@ -63,3 +63,27 @@ def test_decode_rejects_garbage_and_unsupported():
 def test_synth_geometry_constants():
     assert (BMP_W * 3) % 4 != 0  # padding must be load-bearing
     assert BMP_W * BMP_H == 400
+
+
+def test_spark_features_match_law(spark, sf_dir):
+    """End-to-end on Spark: synth → encode → decode → features equals the
+    closed-form law v = (doc_id·13 + 5k + 7c) mod 256 for every document.
+    The checksum Σ v·(3k+c) pins each byte to its (pixel, channel) slot,
+    so a row-flip, BGR/RGB or padding slip cannot match."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from fusionspark.operators.bmp import bmp_feature_stats, synth_bmp_media
+
+    got = {r["media_id"]: r
+           for r in bmp_feature_stats(synth_bmp_media(spark, sf_dir)).collect()}
+    docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"),
+                         columns=["doc_id"]).column("doc_id").to_pylist()
+    assert sorted(got) == sorted(docs)
+    ks = np.arange(BMP_W * BMP_H, dtype=np.int64).reshape(-1, 1)
+    cs = np.arange(3, dtype=np.int64).reshape(1, 3)
+    for doc, row in got.items():
+        v = ((doc * 13 + 5 * ks + 7 * cs) % 256).reshape(-1)
+        assert row["pix_checksum"] == int(np.dot(v, np.arange(v.size)))
+        assert abs(row["mean_intensity"] - v.mean()) < 1e-9

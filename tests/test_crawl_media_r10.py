@@ -1,10 +1,7 @@
-"""Round-10 crawl/media ops: robots.txt REP semantics on planted edge
-cases and magic-byte MIME sniffing against every real writer."""
+"""Round-10 crawl ops: robots.txt REP semantics on planted edge cases,
+and entity resolution against its planted truth."""
 
 from __future__ import annotations
-
-import numpy as np
-from pyspark.sql import functions as F
 
 from fusionspark.operators.urls import parse_robots_rules, robots_decisions
 
@@ -55,47 +52,6 @@ def test_robots_longest_match_and_tie(spark):
         4: ("allow", ""),
         5: ("deny", "/xy"),
     }
-
-
-def test_mime_sniff_every_writer(spark):
-    import hashlib
-    import struct
-
-    from fusionspark.operators.avi import avi_encode
-    from fusionspark.operators.bmp import bmp_encode
-    from fusionspark.operators.gif import gif_encode
-    from fusionspark.operators.jpeg import jpeg_encode
-    from fusionspark.operators.mp4 import _box
-    from fusionspark.operators.multimodal import (
-        mime_sniff_col,
-        png_encode,
-        wav_encode,
-    )
-
-    plane = (np.arange(64, dtype=np.uint8).reshape(8, 8) * 3) % 256
-    qb = np.zeros((1, 8, 8), dtype=np.int64)
-    qb[0, 0, 0] = 1
-    jpg = jpeg_encode(None, qblocks=qb, size=(8, 8))
-    cases = [
-        (png_encode(plane), "image/png"),
-        (jpg, "image/jpeg"),
-        (bmp_encode(np.zeros((2, 2, 3), dtype=np.uint8)), "image/bmp"),
-        (gif_encode(plane), "image/gif"),
-        (wav_encode(np.arange(16), 8000), "audio/wav"),
-        (_box(b"ftyp", b"isom" + struct.pack(">I", 0)), "video/mp4"),
-        (avi_encode([jpg], fps=4, width=8, height=8), "video/avi"),
-        (b"\x00\x00" + hashlib.md5(b"x").digest(), "application/octet-stream"),
-        (b"BMX", "image/bmp"),           # 2-byte sig on a tiny payload
-        (b"RIFF\x00\x00\x00\x00JUNK", "application/octet-stream"),
-        (b"", "application/octet-stream"),
-    ]
-    df = spark.createDataFrame(
-        [(i, bytearray(p), m) for i, (p, m) in enumerate(cases)],
-        "i long, payload binary, want string",
-    )
-    rows = df.select("i", "want", mime_sniff_col("payload").alias("got")).collect()
-    for r in rows:
-        assert r.got == r.want, f"case {r.i}: {r.got} != {r.want}"
 
 
 def test_entity_resolution_planted_truth(spark):

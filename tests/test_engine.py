@@ -135,6 +135,24 @@ def test_collaborative_recall(engine):
     assert out["agent-7"]
 
 
+def test_collaborative_recall_raises_a_failed_shared_search(engine, monkeypatch):
+    """Only a pool never shared to recalls as empty; a failing search of
+    the shared pool propagates."""
+    engine.remember("agent-7", "plan", "episodic")
+    assert engine.collaborative_recall(["agent-7"], "plan")["shared"] == []
+    engine.share("agent-7", "shared plan")
+    search = engine.search
+
+    def failing(collection, **kw):
+        if collection == "_memory_shared":
+            raise RuntimeError("shared pool unreadable")
+        return search(collection, **kw)
+
+    monkeypatch.setattr(engine, "search", failing)
+    with pytest.raises(RuntimeError, match="shared pool unreadable"):
+        engine.collaborative_recall(["agent-7"], "plan")
+
+
 def test_import_restores_tenant_ttl_ts(engine, spark, tmp_path):
     """S7 round trip must preserve tenant isolation and TTL (ADVICE r1):
     imported rows stay visible to tenant-scoped search and keep expiring."""
@@ -477,21 +495,36 @@ def test_analyze_spectrum_and_clusters(engine):
 
 def test_engine_ingest_stream_matches_batch(spark, tmp_path):
     """Continuous RAG ingestion: the streaming sink lands exactly the rows
-    batch ingest produces (same chunk→embed plan per micro-batch)."""
+    batch ingest produces (same chunk→embed plan per micro-batch), and a
+    snapshot loaded before the stream is replaced, so search and retrieve
+    answer over the streamed rows as they do over the batch-built ones."""
     docs = [(f"d{i}", "alpha beta gamma delta. " * (20 + 7 * i)) for i in range(4)]
     src = tmp_path / "docs_src"
     spark.createDataFrame(docs, "doc_id string, text string").coalesce(1).write.parquet(
         str(src)
     )
+    seed = ("s0", "epsilon zeta alpha. " * 12)
 
     batch_eng = FusionSparkEngine(spark, str(tmp_path / "eb"))
-    for d, t in docs:
+    for d, t in [seed] + docs:
         batch_eng.ingest("rag", d, t)
 
     stream_eng = FusionSparkEngine(spark, str(tmp_path / "es"))
+    stream_eng.ingest("rag", *seed)
+    assert stream_eng.load_resident("rag")["mode"] == "snapshot"
+    before = stream_eng._snapshots["rag"]
     stream = spark.readStream.schema("doc_id string, text string").parquet(str(src))
     q = stream_eng.ingest_stream("rag", stream, str(tmp_path / "ck"))
     q.awaitTermination(120)
+
+    for read in (
+        lambda e: e.search("rag", query_text="alpha gamma", top_k=12),
+        lambda e: e.retrieve("rag", "alpha gamma", top_k=12),
+    ):
+        got = read(stream_eng)
+        assert got == read(batch_eng) and got
+    after = stream_eng._snapshots["rag"]
+    assert after is not before and after.token > before.token
 
     want = {
         (r["id"], r["content"], tuple(r["vector"]))

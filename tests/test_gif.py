@@ -114,3 +114,28 @@ def test_interlaced_flag_required_for_deinterlace():
     permuted = plane[_interlace_rows(GIF_H)]
     # encode the permuted rows WITHOUT the flag: decoding returns them as-is
     assert np.array_equal(gif_decode(gif_encode(permuted)), permuted)
+
+
+@pytest.mark.parametrize("interlace, mul, step", [(False, 19, 11), (True, 29, 13)])
+def test_spark_features_match_law(spark, sf_dir, interlace, mul, step):
+    """End-to-end on Spark: synth → LZW encode → decode (and de-interlace)
+    → features equals the closed-form law v = (doc_id·mul + step·k) mod
+    256 on natural pixel positions, for every document.  A decoder that
+    skips de-interlacing keeps the mean but breaks the checksum Σ v·k."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from fusionspark.operators import gif
+
+    synth = gif.synth_gif_interlaced_media if interlace else gif.synth_gif_media
+    got = {r["media_id"]: r
+           for r in gif.gif_feature_stats(synth(spark, sf_dir)).collect()}
+    docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"),
+                         columns=["doc_id"]).column("doc_id").to_pylist()
+    assert sorted(got) == sorted(docs)
+    ks = np.arange(gif.GIF_W * gif.GIF_H, dtype=np.int64)
+    for doc, row in got.items():
+        v = (doc * mul + step * ks) % 256
+        assert row["pix_checksum"] == int(np.dot(v, ks))
+        assert abs(row["mean_intensity"] - v.mean()) < 1e-9

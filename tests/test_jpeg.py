@@ -1,8 +1,8 @@
-"""Baseline JPEG codec tests (operators/jpeg.py) — the T.81 pipeline the
-`jpeg_features` oracle attests end-to-end, exercised here branch by branch:
-DC-only closed form, full-AC exactness vs a direct IDCT, ZRL/EOB runs,
-FDCT lossy bound, 4:4:4 and 4:2:0 color, DRI/RSTn restarts, and loud
-failures on corrupt/unsupported streams."""
+"""Baseline JPEG codec tests (operators/jpeg.py) — the T.81 pipeline
+exercised branch by branch: DC-only closed form (the synth block law),
+full-AC exactness vs a direct IDCT, ZRL/EOB runs, FDCT lossy bound, 4:4:4
+and 4:2:0 color, DRI/RSTn restarts, and loud failures on
+corrupt/unsupported streams."""
 
 from __future__ import annotations
 
@@ -129,18 +129,3 @@ def test_corrupt_and_unsupported_streams_fail_loudly():
     # truncated entropy stream
     with pytest.raises(ValueError):
         jpeg_decode(good[:-20])
-
-
-def test_spark_jpeg_features_match_law(spark):
-    """End-to-end on Spark: synth → encode → decode → features equals the
-    closed-form law (the same equality the DuckDB oracle hashes)."""
-    from fusionspark.operators import multimodal as MM
-
-    m = MM.synth_jpeg_media(spark, "/root/testdata/sf0.001").limit(40)
-    feats = {r["media_id"]: r for r in MM.png_feature_stats(m).collect()}
-    ks = np.arange(MM.JPEG_W * MM.JPEG_H, dtype=np.int64)
-    bs = (ks // MM.JPEG_W // 8) * MM.JPEG_BLOCKS_X + (ks % MM.JPEG_W) // 8
-    for mid, row in feats.items():
-        v = ((mid * 11 + 17 * bs) % 255) - 127 + 128
-        assert row["pix_checksum"] == int(np.dot(v, ks))
-        assert abs(row["mean_intensity"] - v.mean()) < 1e-9

@@ -123,16 +123,9 @@ def test_jpeg_decode_survives_truncation_and_bitflips(tail, cut):
 
 @given(st.binary(min_size=0, max_size=400))
 @settings(max_examples=120, deadline=2000)
-def test_mp4_and_warc_and_wav_parsers_never_hang(data):
-    import pytest
-
-    from fusionspark.operators.mp4 import mp4_parse
-    from fusionspark.operators.multimodal import png_decode, wav_decode
+def test_warc_parser_never_hangs(data):
     from fusionspark.operators.warc import warc_parse
 
-    for fn in (mp4_parse, wav_decode, png_decode):
-        with pytest.raises(Exception):
-            fn(data)
     try:
         recs = warc_parse(data)  # empty/blank-line streams parse to []
         assert recs == [] or isinstance(recs, list)

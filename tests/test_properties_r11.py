@@ -6,7 +6,6 @@ from __future__ import annotations
 import hashlib
 import math
 
-import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -160,29 +159,6 @@ def test_cdc_chunks_partition_the_sequence(word_ids):
         a = {c for c in _cdc_cuts(words) if abs(c - edit) > 4}
         b = {c for c in _cdc_cuts(mutated) if abs(c - edit) > 4}
         assert a == b
-
-
-# ── PNG Adam7 ───────────────────────────────────────────────────────────────
-
-
-@settings(max_examples=60, deadline=None)
-@given(st.integers(1, 40), st.integers(1, 40), st.integers(0, 2**32 - 1))
-def test_adam7_roundtrip_arbitrary_sizes(h, w, seed):
-    """Interlaced encode/decode round-trips for EVERY image size 1..40
-    (empty and partial passes included)."""
-    from fusionspark.operators.multimodal import _ADAM7, png_decode, png_encode
-
-    rng = np.random.default_rng(seed)
-    plane = rng.integers(0, 256, size=(h, w), dtype=np.uint8)
-    assert np.array_equal(png_decode(png_encode(plane, interlace=True)), plane)
-    # pass grid partitions the pixel set
-    seen = set()
-    for x0, y0, dx, dy in _ADAM7:
-        for y in range(y0, h, dy):
-            for x in range(x0, w, dx):
-                assert (y, x) not in seen
-                seen.add((y, x))
-    assert len(seen) == h * w
 
 
 # ── GIF interlace ───────────────────────────────────────────────────────────

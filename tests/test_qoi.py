@@ -132,13 +132,16 @@ def test_rgba_alpha_boundary():
 
 
 def test_spark_query_matches_law(spark, sf_dir):
-    from fusionspark.queries.multimodal_queries import qoi_features_q
+    """End-to-end on Spark: synth → encode → decode → features equals the
+    closed-form per-(pixel, channel) law."""
+    from fusionspark.operators.qoi import qoi_feature_stats, synth_qoi_media
 
-    got = {r["doc_id"]: r for r in qoi_features_q(spark, sf_dir).collect()}
+    feats = qoi_feature_stats(synth_qoi_media(spark, sf_dir))
+    got = {r["media_id"]: r for r in feats.collect()}
     docs = sorted(got)
     for doc in docs[:20]:
         flat = _law_planes(doc, QOI_W * QOI_H).reshape(-1).astype(np.int64)
         mean = float(flat.sum()) / flat.size
         chk = int(np.dot(flat, np.arange(flat.size, dtype=np.int64)))
         assert got[doc]["pix_checksum"] == chk
-        assert abs(got[doc]["mean_intensity"] - round(mean, 6)) < 1e-9
+        assert abs(got[doc]["mean_intensity"] - mean) < 1e-9

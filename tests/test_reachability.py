@@ -1,6 +1,6 @@
 """Reachability ratchet: every module of the package is imported, directly
 or transitively, from a front door, or belongs to a family still listed
-for deletion (ROADMAP item 6); and every top-level function and class of
+for deletion (ROADMAP item 8); and every top-level function and class of
 a reachable module is named by package code (or listed with a reason).
 AST only — no Spark, nothing imported.
 
@@ -32,12 +32,12 @@ UNREACHABLE_FAMILIES = {
     "queries": ["fusionspark.fixtures", "fusionspark.queries"] + [
         f"fusionspark.queries.{m}_queries"
         for m in """analytics cdc clustering composition eval
-        extended layout mining multimodal pipeline rag relational spectral
+        extended layout mining pipeline rag relational spectral
         text tree url vector""".split()
     ],
     "media": [
         f"fusionspark.operators.{m}"
-        for m in "avc avi bmp exif gif jpeg mp4 multimodal qoi warc".split()
+        for m in "bmp gif jpeg qoi warc".split()
     ],
     # training-corpus pipeline
     "corpus": ["fusionspark.corpus_pipeline"] + [

@@ -444,6 +444,40 @@ def test_spark_reads_pass_the_catalog_dimensions(engine, spark, monkeypatch):
         assert len(jobs) == len(jobs_without) - 1, name
 
 
+def test_growing_writes_keep_the_oversize_mark(engine, spark, monkeypatch):
+    """Above the snapshot limit, a commit of this engine that removes no
+    rows (append, upsert, ingest, remember) moves the does-not-fit mark to
+    the version it links: the next read runs as many Spark jobs as a
+    repeat read, with no size check first.  A delete leaves the check to
+    the next read."""
+    monkeypatch.setattr(sv, "SNAPSHOT_MEM_FRACTION", 0.0)
+    _populate(engine, "gr", "cosine")
+    engine.remember("a1", "alpha gamma")
+
+    def search():
+        return engine.search("gr", query_vector=QUERIES[0])
+
+    def recall():
+        return engine.recall("a1", "alpha")
+
+    for read in (search, recall):
+        read()  # finds it does not fit
+    repeat = {read: len(_jobs(spark, read)[1]) for read in (search, recall)}
+    for write, read in [
+        (lambda: engine.insert("gr", [{"id": "n1", "vector": _vec(50)}]), search),
+        (lambda: engine.insert("gr", [{"id": "r1", "vector": _vec(51),
+                                       "tenant_id": "t1"}]), search),
+        (lambda: engine.insert("gr", [{"id": "n2", "vector": _vec(52)}],
+                               replace=False), search),
+        (lambda: engine.ingest("gr", "doc", "alpha beta gamma"), search),
+        (lambda: engine.remember("a1", "beta delta"), recall),
+    ]:
+        write()
+        assert len(_jobs(spark, read)[1]) == repeat[read]
+    engine.delete("gr", ["n1"])
+    assert len(_jobs(spark, search)[1]) > repeat[search]
+
+
 def test_spark_reads_during_colliding_upserts(engine, monkeypatch):
     """Above the snapshot limit, two threads run exact searches while a
     third upserts a colliding id (each upsert commit deletes the file it

@@ -176,11 +176,6 @@ j = (li.join(F.broadcast(o), li.l_orderkey==o.o_orderkey)
       .groupBy("c_custkey").agg(F.sum("l_extendedprice").alias("rev")))
 audit("star_join", j)
 
-# 4. column pruning on media metadata (payload must not be read)
-from fusionspark.operators.multimodal import synth_media
-m = synth_media(spark, sf)
-audit("media_meta", m.groupBy("kind").count())
-
 # 5. keyword scan column pruning
 d = load_table(spark, sf, "documents")
 from fusionspark.operators.keyword import keyword_search
@@ -473,16 +468,6 @@ print("== hits_docs: equi_joins:", any(k in p for k in
       "cartesian:", "CartesianProduct" in p,
       "take_ordered:", "TakeOrderedAndProject" in p)
 
-# bmp_features: the feature scan must read only (media_id, payload) into
-# the Arrow kernel — no full-row shuffle
-bf = _R["bmp_features"][0](spark, sf)
-buf = _io.StringIO()
-with _ctx.redirect_stdout(buf):
-    bf.explain("formatted")
-p = buf.getvalue()
-print("== bmp_features: exchanges:", p.count("Exchange"),
-      "mapInPandas:", "MapInPandas" in p or "mapInPandas" in p)
-
 # 17. r8 late additions (VERDICT r8 #7)
 # cube_orders: one Expand + one aggregate exchange; exact-cents sum
 co = _R["cube_orders"][0](spark, sf)
@@ -495,32 +480,9 @@ print("== cube_orders: expand:", "Expand" in p,
       "cartesian:", "CartesianProduct" in p,
       "pruned_scan:", "o_totalprice" in p and "o_comment" not in p)
 
-# gif_features: Arrow codec kernels (mapInPandas), ids repartitioned
-# across cores before the synth, no corpus-text shuffle
-gf = _R["gif_features"][0](spark, sf)
-buf = _io.StringIO()
-with _ctx.redirect_stdout(buf):
-    gf.explain("formatted")
-p = buf.getvalue()
-ex_args = _re.findall(r"\(\d+\) Exchange[^\n]*\nInput[^\n]*\nArguments: ([^\n]*)", p)
-print("== gif_features: mapInPandas:", "MapInPandas" in p or "mapInPandas" in p,
-      "cartesian:", "CartesianProduct" in p,
-      "text_in_exchange_key:", any("text#" in a for a in ex_args))
-
-# 18. round-9: mp4_video_frames — Arrow codec kernels only; features
-# reduce to scalars before any exchange, payload never in a shuffle key
-mv = _R["mp4_video_frames"][0](spark, sf)
-buf = _io.StringIO()
-with _ctx.redirect_stdout(buf):
-    mv.explain("formatted")
-p = buf.getvalue()
-ex_args = _re.findall(r"\(\d+\) Exchange[^\n]*\nInput[^\n]*\nArguments: ([^\n]*)", p)
-print("== mp4_video_frames: mapInPandas:", "MapInPandas" in p or "mapInPandas" in p,
-      "cartesian:", "CartesianProduct" in p,
-      "payload_in_exchange_key:", any("payload#" in a for a in ex_args))
-
-# lang_id_trained: the weight grid must BROADCAST (hashing trick keeps the
-# model O(langs x dims), never vocab-sized); no cartesian on corpus frames
+# 18. round-9: lang_id_trained — the weight grid must BROADCAST (hashing
+# trick keeps the model O(langs x dims), never vocab-sized); no cartesian
+# on corpus frames
 lid = _R["lang_id_trained"][0](spark, sf)
 buf = _io.StringIO()
 with _ctx.redirect_stdout(buf):
@@ -555,8 +517,6 @@ for qn, label in (
     ("entity_resolution", "block equi-join + CC"),
     ("kn_perplexity", "broadcast LM"),
     ("robots_rules", "broadcast rules"),
-    ("exif_metadata", "metadata-plane map"),
-    ("mime_sniff", "expression sniff"),
 ):
     qq = _R[qn][0](spark, sf)
     buf = _io.StringIO()
@@ -568,17 +528,6 @@ for qn, label in (
           "text_in_exchange_key:", any("text#" in a for a in ex_args),
           "payload_in_exchange_key:", any("payload#" in a for a in ex_args),
           "broadcasts:", p.count("BroadcastExchange"))
-
-# mime_sniff must classify with NO Python eval in the sniff projection:
-# the only Python node is the synth mapInPandas
-q = _R["mime_sniff"][0](spark, sf)
-buf = _io.StringIO()
-with _ctx.redirect_stdout(buf):
-    q.explain("formatted")
-p = buf.getvalue()
-print("== mime_sniff python nodes:",
-      len(_re.findall(r"\(\d+\) MapInPandas", p)),
-      "(must be 1 = the synth; the CASE sniff is codegen'd)")
 
 # ── round 11 additions ────────────────────────────────────────────────────
 # cdc_chunking: the chunker is ONE Arrow kernel; hash is the only
@@ -598,8 +547,6 @@ for qn, label in (
     ("prf_expansion", "feedback offer weights"),
     ("grpo_advantages", "group standardization"),
     ("conformal_interval", "calibration quantile"),
-    ("png_interlaced", "Adam7 round-trip"),
-    ("gif_interlaced", "4-pass round-trip"),
 ):
     qq = _R[qn][0](spark, sf)
     buf = _io.StringIO()
@@ -632,8 +579,6 @@ print("== window_funnel pushed IN filter:",
 # viterbi_decode: one groupBy(user) fold; exact integers end to end.
 # dtw_distance / needleman_wunsch / smith_waterman: nested folds inside
 #   ONE row — no pairwise exchange, no cartesian.
-# qoi_features: Arrow mapInPandas codec kernels; payload never an
-#   exchange key.
 # uplift_stump / decision_stump / kruskal_wallis: distinct-value grids +
 #   cumulative windows; corpus touched by map-side-combined aggregates.
 # systematic_sample / range_bounds_plan / qini_curve: one honest ordered
@@ -665,7 +610,6 @@ for qn, label in (
     ("dtw_distance", "nested in-row DP"),
     ("needleman_wunsch", "global alignment"),
     ("smith_waterman", "local alignment"),
-    ("qoi_features", "QOI codec kernels"),
     ("uplift_stump", "uplift grid split"),
     ("kruskal_wallis", "doubled-rank grid"),
     ("attribution_shapley", "coalition sums"),
