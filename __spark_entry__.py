@@ -7,12 +7,13 @@ there; see fusionspark/queries/*.py.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from fusionspark.queries import REGISTRY, load_all  # noqa: E402
 

@@ -328,24 +328,14 @@ def bench_queries(spark):
         "keyword_search",
         "rrf_fusion",
         "context_pack",
-        "adaptive_weights",
-        "consolidation_decay",
-        "merge_candidates",
-        "conversation_tail",
         "dedup_exact",
         "dedup_minhash",
         "simhash_values",
         "lang_id",
         "token_counts",
         "doc_fingerprint",
-        "tree_parents",
-        "triples_extract",
         "chunks_recursive",
         "mock_embeddings",
-        "tpch_pricing_summary",
-        "tpch_top_customers",
-        "rollup_orders",
-        "searchall_quota",
         # round 3: the scale-path near-dups
         "neardup_ngram_lsh",
         "neardup_embedding_ivf",
@@ -374,25 +364,19 @@ def bench_queries(spark):
         "lm_perplexity",
         "shuffle_shards",
         "quality_consensus",
-        # round 6 (session 3): unicode hygiene, entropy signal, URL
-        # canonicalization, Q19 disjunctive pushdown
+        # round 6 (session 3): unicode hygiene, entropy signal
         "unicode_clean",
         "char_entropy",
-        "url_canonical",
-        "tpch_disjunctive_revenue",
         "bm25_search",
         "window_dedup",
         "hll_distinct",
         "ann_sq8",
-        # round 6 (session 4): sparse lexical similarity join, k-core
-        # peeling
+        # round 6 (session 4): sparse lexical similarity join
         "tfidf_pairs",
-        "kcore_docs",
         "ngram_novelty",
         # round 8: families newly driver-attested this round — measured so
         # BENCH history starts the same round their correctness row does
         "cdc_apply",
-        "zorder_pruning",
         # round 8 (session 3): spectral family — exact-integer covariance
         # (one Arrow GEMM pass, 4096-row shuffle), 8-round power-method
         # PCA, zero-shuffle per-doc PC1 projection
@@ -401,7 +385,6 @@ def bench_queries(spark):
         "pca_doc_scores",
         "kmeans_assign",
         "weighted_sample",
-        "bfs_hops",
         # round 8 (session 5): corpus-distribution diagnostics — word-law
         # fits (one groupBy(word) shuffle each) and the exact-integer
         # centroid-distance screen (one moments partial pass, zero corpus
@@ -426,16 +409,13 @@ def bench_queries(spark):
         "split_leakage",
         "item_cf",
         # round 8 (session 7, batch 2): lossless prefix-filtered exact
-        # similarity join, HITS ordered-fold iterations
+        # similarity join
         "neardup_prefix",
-        "hits_docs",
         # round 9: the trained hashed-NB language classifier (broadcast
         # weight grid + dim-ordered scoring fold)
         "lang_id_trained",
-        # round 9 second wave: RAKE phrase extraction, Hilbert-clustered
-        # pruning
+        # round 9 second wave: RAKE phrase extraction
         "rake_keywords",
-        "hilbert_pruning",
         # round 10: entity resolution e2e (block join + Levenshtein + CC),
         # Kneser-Ney LM (broadcast continuation-count model), Burrows's
         # Delta stylometry (token explode + bounded-cell folds)

@@ -849,10 +849,10 @@ class FusionSparkEngine:
     ) -> list[dict]:
         """M4: messages for (agent, thread) in ts order; `since` (epoch ms)
         and last-`limit` slice like the reference (AgentMemory.js:323-335).
-        The slice is the SAME window plan the attested `conversation_tail`
-        query runs (row_number over (ts, id) desc, then re-sort) — Spark
-        does the sort and the last-N cut; the driver only materializes the
-        already-bounded result (VERDICT r5 #8)."""
+        A `limit` keeps the newest `limit` messages: row_number over
+        (ts, id) descending, then a re-sort into (ts, id) ascending order.
+        Spark does the sort and the last-N cut; the driver only
+        materializes the already-bounded result."""
         from pyspark.sql import Window
 
         coll = "_conversations"

@@ -1,6 +1,6 @@
 """Text expression helpers (SURVEY §2.4, §2.9).
 
-Tokenization / stopwords / query-pattern semantics from
+Tokenization / stopwords / Jaccard semantics from
 /root/reference/src/retrieval/HybridRetriever.js:366-418 and
 /root/reference/src/learning/RecursiveLearningEngine.js:772-800.
 All native Spark SQL functions — no Python in the hot path.
@@ -35,11 +35,6 @@ def search_terms(text: Column | str) -> Column:
     return F.filter(toks, lambda t: (F.length(t) > 2) & ~F.array_contains(stop, t))
 
 
-def word_set(text: Column | str) -> Column:
-    """Distinct token set, for Jaccard (RecursiveLearningEngine.js:793-800)."""
-    return F.array_distinct(tokenize(text))
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """K4: |A∩B| / |A∪B| over word sets (RecursiveLearningEngine.js:795-799);
     0 when the union is empty.
@@ -50,11 +45,6 @@ def jaccard(a: Column, b: Column) -> Column:
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = (F.size(a) + F.size(b)).cast("double") - inter
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-
-
-def query_pattern(query: Column | str, max_tokens: int = 5) -> Column:
-    """X12: sorted first-N tokens joined by '_' (HybridRetriever.js:402-406)."""
-    return F.array_join(F.slice(F.array_sort(tokenize(query)), 1, max_tokens), "_")
 
 
 def token_estimate(text: Column | str) -> Column:
@@ -77,15 +67,3 @@ def term_count(text: Column | str, term: Column | str) -> Column:
     term_c = F.lit(term) if isinstance(term, str) else term
     return F.size(F.regexp_extract_all(F.lower(text), term_c, F.lit(0)))
 
-
-def keyword_overlap(text: Column | str, terms: Column) -> Column:
-    """K3: fraction of terms contained in lower(text)
-    (TreeIndex.js:685-696)."""
-    text = F.col(text) if isinstance(text, str) else text
-    lowered = F.lower(text)
-    hits = F.aggregate(
-        terms,
-        F.lit(0),
-        lambda acc, t: acc + F.when(lowered.contains(t), 1).otherwise(0),
-    )
-    return F.when(F.size(terms) > 0, hits.cast("double") / F.size(terms)).otherwise(F.lit(0.0))

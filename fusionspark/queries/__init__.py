@@ -34,7 +34,7 @@ def query(name: str, sql: str | None = None):
 # staleness refresh: the 18 r14 additions (17 eval queries +
 # delta_time_travel — the whole never-attested queue), the 5 rows whose
 # code changed in the r14 round6/ranking sweeps that are not refreshed
-# elsewhere, and the 15 remaining r5-stale rows.  The whole board is
+# elsewhere, and the 13 remaining r5-stale rows.  The whole board is
 # pre-certified at the r14 final HEAD: every row except delta_time_travel
 # is inside the definitive 455-era full strict runs at BOTH sf0.01 and
 # sf0.1, and delta_time_travel was gated strict ×3 SFs on landing
@@ -53,13 +53,12 @@ PRIORITY: list[str] = [
     # div/materialization) not refreshed by the r14 board or the r5 slice
     "systematic_sample", "range_bounds_plan", "neardup_containment",
     "neardup_prefix", "split_leakage",
-    # 15 remaining r5-stale rows (registry order; includes the two
+    # 13 remaining r5-stale rows (registry order; includes the two
     # r14-code-changed rows neardup_ngram_lsh / dedup_incremental)
     "neardup_embedding", "neardup_ngram_lsh", "neardup_embedding_ivf",
     "dedup_clusters", "c4_filter", "hash_sample", "pack_sequences",
     "pii_redact", "repetition_stats", "vocab_coverage", "domain_mix",
-    "contamination_check", "dedup_incremental", "messages_significant",
-    "merge_candidates",
+    "contamination_check", "dedup_incremental",
 ]
 
 
@@ -86,18 +85,12 @@ def load_all() -> None:
         analytics_queries,
         cdc_queries,
         clustering_queries,
-        composition_queries,
         eval_queries,
-        layout_queries,
-        extended_queries,
         mining_queries,
         pipeline_queries,
         rag_queries,
-        relational_queries,
         spectral_queries,
         text_queries,
-        tree_queries,
-        url_queries,
         vector_queries,
     )
 

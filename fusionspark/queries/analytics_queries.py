@@ -1095,8 +1095,7 @@ def viterbi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the first event pays start + emission, not a transition).
 
     Scale: one groupBy(user) with map-side combine builds per-user
-    sequences (bounded by a user's event count — the conversation_tail
-    contract); the DP is a linear per-row fold, embarrassingly parallel
+    sequences (bounded by a user's event count); the DP is a linear per-row fold, embarrassingly parallel
     across users; the top-200 cut is a TakeOrdered, no global sort."""
     e = load_table(spark, sf_dir, "events")
     e0 = F.lit(None).cast("long")

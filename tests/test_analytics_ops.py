@@ -1,12 +1,11 @@
 """Unit + plan-shape tests for the round-6 session-4 analytics family:
-TF-IDF pair join and k-core peeling."""
+the TF-IDF pair join."""
 
 from __future__ import annotations
 
 import contextlib
 import io as _io
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -45,33 +44,6 @@ def test_tfidf_max_df_drops_boilerplate_terms(spark):
         "doc_id long, text string",
     )
     assert tfidf_pairs(docs, threshold=0.01, min_df=2, max_df=2).count() == 0
-
-
-def test_kcore_k5_plus_tail(spark):
-    from fusionspark.operators.graph import kcore
-
-    # K5 on 0..4 (degree 4 each) + pendant path 4-5-6: the tail peels,
-    # the clique survives as the whole 4-core.
-    edges = [(i, j) for i in range(5) for j in range(i + 1, 5)]
-    edges += [(4, 5), (5, 6)]
-    e = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.doc_id: r.core_degree for r in kcore(e, k=4, max_rounds=8).collect()}
-    assert got == {0: 4, 1: 4, 2: 4, 3: 4, 4: 4}
-
-
-def test_kcore_raises_loudly_on_deep_peel(spark):
-    from fusionspark.operators.graph import kcore
-
-    # a 12-node path peels from both ends, 2 nodes per round — with
-    # max_rounds=2 the 2-core (empty) is NOT reached: loud error, never a
-    # silently-wrong partial answer
-    e = spark.createDataFrame(
-        [(i, i + 1) for i in range(11)], "src long, dst long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        kcore(e, k=2, max_rounds=2)
-    # and with enough rounds it converges to the empty core
-    assert kcore(e, k=2, max_rounds=10).count() == 0
 
 
 def test_session4_plan_shapes(spark, sf_dir):
@@ -149,29 +121,6 @@ def test_containment_scores_subdocument_one(spark):
     jac = {(r.id_a, r.id_b): r.sim
            for r in ngram_minhash_neardup(docs, threshold=0.0).collect()}
     assert jac[(1, 2)] < 1.0
-
-
-def test_lpa_two_triangles_with_bridge(spark):
-    """Two triangles joined by one bridge edge: LPA must keep them as two
-    communities labeled by each triangle's min node id; the isolated node
-    keeps its own label."""
-    from fusionspark.operators.graph import label_propagation
-
-    nodes = spark.createDataFrame([(i,) for i in range(7)], "doc_id long")
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 0),      # triangle A
-         (3, 4), (4, 5), (5, 3),      # triangle B
-         (2, 3)],                     # bridge
-        "src long, dst long",
-    )
-    out = {
-        r["doc_id"]: r["community"]
-        for r in label_propagation(nodes, edges, rounds=4).collect()
-    }
-    assert out[0] == out[1] == out[2] == 0
-    assert out[3] == out[4] == out[5]
-    assert out[3] != 0
-    assert out[6] == 6  # isolated keeps its own label
 
 
 def test_token_fertility_laws(spark):

@@ -1,6 +1,5 @@
 """Invariant tests for the 2-D skyline, cumulative users, the
-data-quality checks behind engine.validate, the HITS and SSSP graph
-operators, and engine.optimize."""
+data-quality checks behind engine.validate, and engine.optimize."""
 
 from __future__ import annotations
 
@@ -111,18 +110,6 @@ def test_server_validate_route_and_mcp_tool(spark, tmp_path):
     assert all(row["passed"] for row in got["result"]["report"])
 
 
-def test_hits_star_graph(spark):
-    """0 → {1,2,3}: node 0 is the only hub, 1-3 are equal authorities."""
-    from fusionspark.operators.graph import hits
-
-    nodes = spark.createDataFrame([(i,) for i in range(4)], "id: long")
-    edges = spark.createDataFrame([(0, 1), (0, 2), (0, 3)], "src: long, dst: long")
-    out = {r["id"]: (r["hub"], r["authority"]) for r in hits(nodes, edges, iters=2).collect()}
-    assert out[0] == (1.0, 0.0)
-    for i in (1, 2, 3):
-        assert out[i] == (0.0, 1.0)
-
-
 def test_cumulative_users_bruteforce(spark):
     from fusionspark.queries.analytics_queries import cumulative_users
 
@@ -134,21 +121,6 @@ def test_cumulative_users_bruteforce(spark):
     for d in days:
         want = pdf.loc[pdf["day"] <= d, "user_id"].nunique()
         assert got[str(d)] == want
-
-
-def test_sssp_relaxes_cheaper_longer_path(spark):
-    """A 2-edge path cheaper than the direct edge must win once rounds
-    allow it — the case unit-weight BFS gets wrong."""
-    from fusionspark.operators.graph import sssp
-
-    edges = spark.createDataFrame(
-        [(0, 1, 10), (0, 2, 1), (2, 1, 2)], "src: long, dst: long, w: long"
-    )
-    seeds = spark.createDataFrame([(0,)], "id: long")
-    d1 = {r["id"]: r["dist"] for r in sssp(seeds, edges, rounds=1).collect()}
-    assert d1[1] == 10  # only the direct edge within 1 round
-    d2 = {r["id"]: r["dist"] for r in sssp(seeds, edges, rounds=2).collect()}
-    assert d2[1] == 3 and d2[2] == 1  # revisited via the cheaper 2-edge path
 
 
 def test_engine_optimize_compacts_manifest_collection(spark, tmp_path):

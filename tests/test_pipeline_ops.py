@@ -756,33 +756,6 @@ def test_char_entropy_docs(spark):
     assert out[3]["distinct_chars"] == 4 and out[3]["n_chars"] == 4
 
 
-def test_url_canonicalize_edges(spark):
-    from fusionspark.operators import urls
-
-    rows = [
-        (1, "HTTP://WWW.Example.COM:80/A/b?utm_x=1#f"),
-        (2, "https://user@sub.host.org:8443/p?id=2&utm_y=z"),
-        (3, "https://one.two.three.net/"),
-        (4, "https://h.io/p?utm_only=1"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, url string")
-    out = {r["doc_id"]: r for r in df.select(
-        "doc_id",
-        urls.canonicalize("url").alias("canon"),
-        urls.url_host("url").alias("host"),
-        urls.registered_domain(urls.url_host("url")).alias("dom"),
-    ).collect()}
-    assert out[1]["canon"] == "http://example.com/A/b"
-    assert out[1]["host"] == "example.com"
-    assert out[2]["canon"] == "https://user@sub.host.org:8443/p?id=2"
-    assert out[2]["host"] == "sub.host.org"
-    assert out[2]["dom"] == "host.org"
-    assert out[3]["canon"] == "https://one.two.three.net/"
-    assert out[3]["dom"] == "three.net"
-    # a query reduced to nothing drops its '?'
-    assert out[4]["canon"] == "https://h.io/p"
-
-
 def test_bm25_ranks_matching_docs(spark):
     from fusionspark.operators.keyword import bm25_search
 
@@ -802,19 +775,6 @@ def test_bm25_ranks_matching_docs(spark):
     assert top[4]["n_terms"] == 5 and top[2]["n_terms"] == 1
     # rarity: 'join' (2 docs) out-scores nothing; scores are positive
     assert all(r["bm25"] > 0 for r in rs)
-
-
-def test_pagerank_mass_conservation(spark):
-    from fusionspark.operators.graph import pagerank
-
-    nodes = spark.range(10).select(F.col("id"))
-    # ring: i -> (i+1) % 10, regular graph -> uniform stationary ranks
-    edges = nodes.select(F.col("id").alias("src"), ((F.col("id") + 1) % 10).alias("dst"))
-    ranks = pagerank(nodes, edges, iters=5, damping=0.85)
-    vals = [r["rank"] for r in ranks.collect()]
-    assert len(vals) == 10
-    assert all(abs(v - 0.1) < 1e-12 for v in vals)   # uniform fixed point
-    assert abs(sum(vals) - 1.0) < 1e-9               # mass conserved (no dangling)
 
 
 def test_hll_registers_merge_by_max(spark):
@@ -955,7 +915,6 @@ def test_round6_session3_plan_shapes(spark, sf_dir):
     and column-expression laws compile WITHOUT any Exchange; the sketch
     probes broadcast their state instead of shuffling the probe stream."""
     from fusionspark.io import load_table
-    from fusionspark.operators import urls
     from fusionspark.operators.packing import assign_split
     from fusionspark.operators.sketches import bloom_build, bloom_probe
     from fusionspark.operators.textstats import (
@@ -970,7 +929,6 @@ def test_round6_session3_plan_shapes(spark, sf_dir):
         char_entropy_docs(d),
         compression_ratio_docs(d),
         assign_split(d.select("doc_id")),
-        d.select(urls.canonicalize(F.concat(F.lit("https://x.com/"), "text"))),
     ):
         assert "Exchange" not in _plan(df)
 
@@ -978,25 +936,6 @@ def test_round6_session3_plan_shapes(spark, sf_dir):
     probes = d.limit(10).select(F.col("doc_id").alias("pid"), F.md5("text").alias("v"))
     plan = _plan(bloom_probe(bloom, probes, F.col("v"), "pid"))
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-
-
-def test_loss_mask_spans_index_rendered_string(spark, sf_dir):
-    """The [start, end) spans must slice exactly the assistant message
-    bodies out of chat_render's rendered strings."""
-    import __spark_entry__ as entry
-
-    qs = entry.queries()
-    rendered = {r["thread_id"]: r["rendered"]
-                for r in qs["chat_render"](spark, sf_dir).collect()}
-    from fusionspark import fixtures as FX
-
-    conv = {(r["thread_id"], r["msg_seq"]): r["content"]
-            for r in FX.conversations_df(spark, sf_dir).collect()}
-    spans = qs["loss_mask_spans"](spark, sf_dir).collect()
-    assert spans
-    for r in spans[:200]:
-        body = rendered[r["thread_id"]][r["span_start"]:r["span_end"]]
-        assert body == conv[(r["thread_id"], r["msg_seq"])]
 
 
 def test_write_token_shards_roundtrip(spark, tmp_path):
@@ -1107,25 +1046,6 @@ def test_dedup_keep_best_prefers_longest(spark, sf_dir):
         best = max(grp, key=lambda r: (nc[r["doc_id"]], -r["doc_id"]))
         assert k == best["doc_id"]
         assert sum(r["is_keeper"] for r in grp) == 1
-
-
-def test_triangle_counts_on_known_graphs(spark):
-    from fusionspark.operators.graph import triangle_counts
-
-    # K4 on {0,1,2,3} plus a pendant path 3-4-5: K4 nodes sit in 3
-    # triangles each (coeff 1 for deg-3 nodes), path nodes in none.
-    k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
-    edges = spark.createDataFrame(
-        k4 + [(3, 4), (4, 5), (5, 4)],  # duplicate orientation collapses
-        "src: long, dst: long",
-    )
-    nodes = spark.range(6).select(F.col("id").alias("doc_id"))
-    out = {r["doc_id"]: r for r in triangle_counts(edges, nodes).collect()}
-    assert [out[i]["n_triangles"] for i in range(6)] == [3, 3, 3, 3, 0, 0]
-    assert out[0]["clustering_coeff"] == 1.0
-    assert out[3]["degree"] == 4  # 3 K4 edges + pendant
-    assert out[3]["clustering_coeff"] == round(2 * 3 / (4 * 3), 6)
-    assert out[5]["degree"] == 1 and out[5]["clustering_coeff"] == 0.0
 
 
 def test_lang_id_trained_learns_planted_vocabulary(spark):

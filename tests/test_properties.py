@@ -143,33 +143,6 @@ def test_unicode_clean_idempotent(s):
     assert py_unicode_clean(once) == once
 
 
-def test_url_canonicalize_idempotent_and_invariant(spark):
-    """canonicalize is a projection over the whole synthetic-URL lattice
-    (www × port × utm × fragment × case): one Spark job canonicalizes all
-    combinations, a second pass must be a fixpoint, and every output is
-    scheme-lowercased, fragment-free, and utm-free."""
-    from fusionspark.operators import urls as U
-
-    rows = []
-    i = 0
-    for www in ("", "WWW."):
-        for port in ("", ":443", ":8443"):
-            for q in ("", "?utm_source=x&id=1&utm_c=z", "?id=1", "?utm_only=1"):
-                for frag in ("", "#frag"):
-                    for scheme in ("HTTPS", "https", "HtTp"):
-                        rows.append((i, f"{scheme}://{www}Host{i}.Example.COM{port}/p/{i}{q}{frag}"))
-                        i += 1
-    df = spark.createDataFrame(rows, "i long, url string")
-    once = df.select("i", U.canonicalize("url").alias("c"))
-    twice = once.select("i", U.canonicalize("c").alias("c2"))
-    merged = once.join(twice, "i").collect()
-    assert merged
-    for r in merged:
-        assert r["c"] == r["c2"]
-        assert r["c"].split("://")[0] in ("https", "http")
-        assert "#" not in r["c"] and "utm_" not in r["c"] and ":443" not in r["c"]
-
-
 def test_kmv_estimate_accuracy_and_merge_law(spark):
     """KMV distinct estimate lands within ~4/sqrt(k) of truth on a
     crafted 10k-distinct set, and the sketch is MERGEABLE: the k-min of
@@ -321,30 +294,3 @@ def test_skyline_window_matches_dominance_on_random_points(spark, pts):
         if not dominated:
             want.add(i)
     assert got == want
-
-
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 6), st.integers(0, 6), st.integers(1, 9)),
-        min_size=1,
-        max_size=20,
-    )
-)
-@settings(**_SETTINGS)
-def test_sssp_rounds_match_bellman_ford_on_random_graphs(spark, edges):
-    """k rounds of the distributed relax == k rounds of textbook
-    Bellman-Ford from seed 0 on ANY small weighted digraph."""
-    from fusionspark.operators.graph import sssp
-
-    df = spark.createDataFrame(edges, "src: long, dst: long, w: long")
-    seeds = spark.createDataFrame([(0,)], "id: long")
-    got = {r["id"]: r["dist"] for r in sssp(seeds, df, rounds=3).collect()}
-    INF = float("inf")
-    dist = {0: 0}
-    for _ in range(3):
-        nd = dict(dist)
-        for s, d, w in edges:
-            if s in dist and dist[s] + w < nd.get(d, INF):
-                nd[d] = dist[s] + w
-        dist = nd
-    assert got == dist

@@ -28,12 +28,11 @@ FRONT_DOORS = (
 # wired to a route; a module missing from it that no front door reaches
 # fails the test.
 UNREACHABLE_FAMILIES = {
-    # the query registry and its fixtures (DuckDB-oracle contract)
-    "queries": ["fusionspark.fixtures", "fusionspark.queries"] + [
+    # the query registry (DuckDB-oracle contract)
+    "queries": ["fusionspark.queries"] + [
         f"fusionspark.queries.{m}_queries"
-        for m in """analytics cdc clustering composition eval
-        extended layout mining pipeline rag relational spectral
-        text tree url vector""".split()
+        for m in """analytics cdc clustering eval mining pipeline rag
+        spectral text vector""".split()
     ],
     "media": [
         f"fusionspark.operators.{m}"
@@ -46,13 +45,7 @@ UNREACHABLE_FAMILIES = {
     # batch analytics operators behind registry queries
     "analytics": [
         f"fusionspark.operators.{m}"
-        for m in """cdc embeddings graph joins layout ranking sampling simjoin
-        sketches urls""".split()
-    ],
-    # reference ports with no route: wire each to the engine or delete it
-    "unwired_ports": [
-        f"fusionspark.operators.{m}"
-        for m in "learning llm memory orchestration tree".split()
+        for m in "cdc embeddings joins ranking sampling simjoin sketches".split()
     ],
 }
 
@@ -198,3 +191,37 @@ def test_unnamed_definitions_are_listed():
 def test_listed_definitions_are_still_unnamed():
     """A listed definition that was deleted or wired in leaves the list."""
     assert set(UNNAMED_DEFINITIONS) - _unnamed_definitions() == set()
+
+
+# ── import-path guard ─────────────────────────────────────────────────────
+
+REPO_DIR = os.path.dirname(PKG_DIR)
+
+
+def _path_scripts() -> list[str]:
+    """The files that put a directory on ``sys.path``: the tests, the
+    tools and the driver entry."""
+    out = [os.path.join(REPO_DIR, "__spark_entry__.py")]
+    for top in ("tests", "tools"):
+        for dirpath, dirnames, filenames in os.walk(os.path.join(REPO_DIR, top)):
+            dirnames[:] = [d for d in dirnames if d != "__pycache__"]
+            out += [os.path.join(dirpath, f) for f in filenames if f.endswith(".py")]
+    return out
+
+
+def test_sys_path_is_derived_from_the_file():
+    """A literal directory on ``sys.path`` makes a copy of the repo import
+    and test another checkout's package; derive it from ``__file__``."""
+    literal = []
+    for path in _path_scripts():
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "insert"
+                    and ast.unparse(node.func.value) == "sys.path"
+                    and any(isinstance(a, ast.Constant) and isinstance(a.value, str)
+                            for a in node.args)):
+                literal.append(f"{os.path.relpath(path, REPO_DIR)}:{node.lineno}")
+    assert literal == []

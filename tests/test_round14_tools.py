@@ -13,9 +13,11 @@ def test_boundary_risk_matches_the_divergence_class():
     """boundary_risk flags exactly doubles whose shortest repr has 7
     fractional digits ending in 5 — the r13 text_quality class — and
     nothing else (large money sums, short reprs, 17-digit irrationals)."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
     from round6_audit import boundary_risk
 
     # genuine class members (dyadic ratios, observed flags)

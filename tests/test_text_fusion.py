@@ -1,15 +1,13 @@
-"""Keyword search, RRF fusion, context packing, memory/learning operator
-tests (mirroring /root/reference/test/fusionpact.test.js:140-223,340-554)."""
+"""Keyword search, RRF fusion and context packing tests (mirroring the
+reference's test/fusionpact.test.js:140-223)."""
 
 from __future__ import annotations
 
 import pytest
 from hypothesis import given, settings, strategies as st
-from pyspark.sql import functions as F
 
-from fusionspark import fixtures as FX
 from fusionspark.io import load_table
-from fusionspark.operators import fusion, memory as mem_ops
+from fusionspark.operators import fusion
 from fusionspark.operators.keyword import extract_terms, keyword_rank, keyword_search
 from fusionspark.operators.context import pack_context, pack_rows
 
@@ -40,6 +38,18 @@ def test_rrf_fusion_prefers_multi_strategy(spark):
     # RRF formula check: doc2 = 0.5/(60+2) + 0.5/(60+1)
     expected = 0.5 / 62 + 0.5 / 61
     assert abs(by_id[2]["fused_score"] - expected) < 1e-12
+    assert [r["doc_id"] for r in out] == [2, 1, 3]
+
+    # unequal weights reorder the single-strategy docs: keyword's rank-2
+    # doc 3 now beats vector's rank-1 doc 1; each score is the closed form
+    # w_v/(60+r_v) + w_k/(60+r_k) over the strategies that list the doc
+    w_v, w_k = 0.3, 0.7
+    out = fusion.rrf_fuse({"vector": a, "keyword": b}, top_k=3,
+                          weights={"vector": w_v, "keyword": w_k}).collect()
+    assert [r["doc_id"] for r in out] == [2, 3, 1]
+    expected = {2: w_v / 62 + w_k / 61, 3: w_k / 62, 1: w_v / 61}
+    for r in out:
+        assert abs(r["fused_score"] - expected[r["doc_id"]]) < 1e-12
 
 
 def test_pack_context_budget(spark):
@@ -49,33 +59,6 @@ def test_pack_context_budget(spark):
     # each row is ceil(400/4)=100 tokens → only 2 rows fit in 250
     assert [r["doc_id"] for r in packed] == [0, 1]
     assert packed[-1]["running_tokens"] == 200
-
-
-def test_tenant_isolation_and_forget(spark, sf_dir):
-    mem = FX.memory_df(spark, sf_dir)
-    only2 = mem.filter(F.col("agent_id") == "agent-2")
-    assert only2.count() > 0
-    after = mem_ops.forget(mem, "agent-2")
-    assert after.filter(F.col("agent_id") == "agent-2").count() == 0
-    assert after.count() == mem.count() - only2.count()
-
-
-def test_conversation_cap(spark, sf_dir):
-    conv = FX.conversations_df(spark, sf_dir)
-    capped = mem_ops.conversation_tail(conv, n=5)
-    worst = (
-        capped.groupBy("agent_id", "thread_id").count().agg(F.max("count")).first()[0]
-    )
-    assert worst <= 5
-
-
-def test_ttl_filter_keeps_unexpired(spark, sf_dir):
-    mem = FX.memory_df(spark, sf_dir)
-    now = F.to_timestamp(F.lit(FX.REF_NOW))
-    kept = mem_ops.ttl_filter(mem, now)
-    # everything with ttl_ms=0 survives
-    assert kept.filter(F.col("ttl_ms") == 0).count() == mem.filter(F.col("ttl_ms") == 0).count()
-    assert kept.count() <= mem.count()
 
 
 def test_keyword_index_matches_scan(spark, sf_dir, tmp_path):

@@ -22,6 +22,7 @@ diffs we have shipped red (r9 raw-double boundary, r10 signed zero):
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -29,7 +30,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from fusionspark.session import get_spark  # noqa: E402

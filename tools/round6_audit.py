@@ -39,13 +39,14 @@ Usage:
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from fusionspark.session import get_spark  # noqa: E402
 

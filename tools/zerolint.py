@@ -14,12 +14,13 @@ Exit 1 if any oracle emits a signed zero anywhere.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from fusionspark.io import TABLES  # noqa: E402
