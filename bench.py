@@ -429,21 +429,12 @@ def bench_queries(spark):
         "window_funnel",
         "prf_expansion",
         # round 11 continuation: fixed-point integer TextRank (5 vocab-
-        # sized join iterations), exhaustive deterministic RANSAC (day-
-        # pair candidates x day votes, all-integer inlier bands), exact
-        # max-plus Viterbi (per-user ordered folds), nested-fold DTW, and
-        # the doubled-rank Kruskal-Wallis over the distinct-cents grid
+        # sized join iterations)
         "textrank_keywords",
-        "ransac_trend",
-        "viterbi_decode",
-        "dtw_distance",
-        "kruskal_wallis",
         # round 12: in-row LCS DP (ROUGE-L), winnowing fingerprint
-        # candidate generation (value-keyed pair join under a df cap),
-        # KMV sketch intersection (fixed 64-row state per set)
+        # candidate generation (value-keyed pair join under a df cap)
         "rouge_l_eval",
         "winnowing_fingerprints",
-        "kmv_intersect",
         # round 14: the heaviest of the 17 eval additions — silhouette
         # (the k-fan-out all-centroid distance frame), NMI (kmeans pass
         # + entropy grid folds), PR-AUC (NB scoring pass + score-grid

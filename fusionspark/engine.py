@@ -91,6 +91,13 @@ def _time_id(prefix: str) -> str:
     return f"{prefix}_{int(time.time() * 1e6)}_{secrets.token_hex(4)}"
 
 
+def _check_top_k(top_k: int) -> None:
+    """Reject a top-k below 1 before any read path sees it: the snapshot
+    kernel and the Spark scan would otherwise answer it differently."""
+    if top_k < 1:
+        raise ValueError(f"top_k must be at least 1, got {top_k}")
+
+
 def _checked_vector(col, dim: int):
     """`col` where its width is `dim`, else a job-failing error (a NULL
     array lands in the error branch too): the executor-side form of
@@ -649,6 +656,7 @@ class FusionSparkEngine:
         Spark scan; missing blocks or a stale index fall back to that scan —
         never a silent wrong answer.  The Spark paths hold the collection
         lock, so no commit reclaims the files mid-read."""
+        _check_top_k(top_k)
         cfg = self._catalog[collection]
         if query_vector is None:
             query_vector = self.embedder(query_text or "", cfg["dimensions"])
@@ -712,6 +720,7 @@ class FusionSparkEngine:
         Spark job); above the limit each branch is a Spark search whose
         2×k candidates are collected.  RRF always runs on the driver
         (fusion.rrf_rank)."""
+        _check_top_k(top_k)
         cfg = self._catalog[collection]
         qvec = self.embedder(query, cfg["dimensions"])
         n = top_k * fusion_ops.OVERFETCH
@@ -986,6 +995,7 @@ class FusionSparkEngine:
         from the `Snapshot` with no Spark job when the collection fits the
         driver, else one Spark search that carries the content.  The pack
         (context.pack_rows) always runs on the driver."""
+        _check_top_k(top_k)
         cfg = self._catalog[collection]
         qvec = self.embedder(query, cfg["dimensions"])
         now = int(time.time() * 1000)

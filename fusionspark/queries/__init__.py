@@ -32,7 +32,7 @@ def query(name: str, sql: str | None = None):
 # consecutive zero-red round).  This board is the PROGRESS.md r15 handoff
 # verbatim, priority order never-attested > code-changed re-attests >
 # staleness refresh: the 18 r14 additions (17 eval queries +
-# delta_time_travel — the whole never-attested queue), the 5 rows whose
+# delta_time_travel — the whole never-attested queue), the 4 rows whose
 # code changed in the r14 round6/ranking sweeps that are not refreshed
 # elsewhere, and the 13 remaining r5-stale rows.  The whole board is
 # pre-certified at the r14 final HEAD: every row except delta_time_travel
@@ -49,10 +49,10 @@ PRIORITY: list[str] = [
     "silhouette_simplified", "pr_auc", "score_ks", "mcc_binary",
     "lift_gains", "brier_decomposition", "mrr_multi", "map_at10",
     "delta_time_travel",
-    # 5 code-changed re-attests (r14 round6_stable sweep + ranking
+    # 4 code-changed re-attests (r14 round6_stable sweep + ranking
     # div/materialization) not refreshed by the r14 board or the r5 slice
-    "systematic_sample", "range_bounds_plan", "neardup_containment",
-    "neardup_prefix", "split_leakage",
+    "systematic_sample", "neardup_containment", "neardup_prefix",
+    "split_leakage",
     # 13 remaining r5-stale rows (registry order; includes the two
     # r14-code-changed rows neardup_ngram_lsh / dedup_incremental)
     "neardup_embedding", "neardup_ngram_lsh", "neardup_embedding_ivf",
@@ -82,7 +82,6 @@ def load_all() -> None:
     """Import every query module (side effect: fills REGISTRY), then move
     PRIORITY names to the front of the registry (see PRIORITY docstring)."""
     from fusionspark.queries import (  # noqa: F401
-        analytics_queries,
         cdc_queries,
         clustering_queries,
         eval_queries,

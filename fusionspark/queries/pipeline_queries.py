@@ -6758,8 +6758,8 @@ def needleman_wunsch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Parity: tokens hash to 32-bit md5 BIGINTs on both engines (string
     equality becomes exact integer equality, and the accumulator/element
-    type constraint of DuckDB's list_reduce is satisfied); the DP is the
-    dtw_distance NESTED fold with gap-penalty boundaries (row start
+    type constraint of DuckDB's list_reduce is satisfied); the DP is a
+    NESTED in-row fold with gap-penalty boundaries (row start
     new[0] = prev[0] + gap — the running -i), all EXACT BIGINT max/+.
     similarity can round to signed zero, hence `+ 0.0`.
 
@@ -7115,8 +7115,7 @@ def linear_shap(spark: SparkSession, sf_dir: str) -> DataFrame:
     features: for a linear scorer, the Shapley value of feature j on a
     doc is EXACTLY w_j * (x_j - E[x_j]) (Lundberg & Lee 2017, linear
     SHAP) — no sampling, no approximation.  The model is a fixed
-    published 16-weight vector (the viterbi_decode trained-elsewhere
-    convention); the query reports each feature's global importance
+    published 16-weight vector (trained elsewhere); the query reports each feature's global importance
     mean(|phi_j|) — the ranking an XAI dashboard shows next to
     perceptron_quality's margins.
 

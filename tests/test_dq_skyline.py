@@ -1,5 +1,5 @@
-"""Invariant tests for the 2-D skyline, cumulative users, the
-data-quality checks behind engine.validate, and engine.optimize."""
+"""Invariant tests for the data-quality checks behind engine.validate,
+and engine.optimize."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from fusionspark.operators import dq
-from fusionspark.queries.analytics_queries import skyline_parts
 
 SF = "/root/testdata/sf0.001"
 
@@ -110,19 +109,6 @@ def test_server_validate_route_and_mcp_tool(spark, tmp_path):
     assert all(row["passed"] for row in got["result"]["report"])
 
 
-def test_cumulative_users_bruteforce(spark):
-    from fusionspark.queries.analytics_queries import cumulative_users
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    pdf = ev.toPandas()
-    pdf["day"] = pdf["ts"].dt.date
-    days = sorted(pdf["day"].unique())
-    got = {r["day"]: r["cum_users"] for r in cumulative_users(spark, SF).collect()}
-    for d in days:
-        want = pdf.loc[pdf["day"] <= d, "user_id"].nunique()
-        assert got[str(d)] == want
-
-
 def test_engine_optimize_compacts_manifest_collection(spark, tmp_path):
     """Three appends → 3+ small files; optimize() compacts to one file
     set in a new version with identical rows."""
@@ -154,28 +140,3 @@ def test_dq_check_rule_name_with_quote(spark):
     assert out[0].n_violations == 1 and not out[0].passed
 
 
-def test_skyline_matches_bruteforce(spark):
-    li = spark.read.parquet(f"{SF}/lineitem.parquet")
-    pts = {
-        r["part"]: (r["price"], r["qty"])
-        for r in li.groupBy(F.col("l_partkey").alias("part"))
-        .agg(
-            F.min(
-                F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast("long")
-            ).alias("price"),
-            F.sum("l_quantity").cast("long").alias("qty"),
-        )
-        .collect()
-    }
-
-    def dominated(b):
-        bp, bq = pts[b]
-        return any(
-            (ap <= bp and aq >= bq and (ap < bp or aq > bq))
-            for a, (ap, aq) in pts.items()
-            if a != b
-        )
-
-    want = {p for p in pts if not dominated(p)}
-    got = {r["part"] for r in skyline_parts(spark, SF).collect()}
-    assert got == want

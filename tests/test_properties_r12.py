@@ -3,8 +3,6 @@ laws that must hold on ARBITRARY inputs, not just the gate corpus."""
 
 from __future__ import annotations
 
-import math
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -84,48 +82,6 @@ def test_nw_single_insertion_costs_one_gap(xs, tok, data):
     pos = data.draw(st.integers(0, len(xs)))
     ins = xs[:pos] + [999] + xs[pos:]  # 999 never matches 0..5
     assert _nw_python(xs, ins) == 2 * len(xs) - 1
-
-
-# ── Viterbi ────────────────────────────────────────────────────────────────
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    st.lists(
-        st.sampled_from(["view", "click", "error", "signup", "purchase"]),
-        min_size=1,
-        max_size=8,
-    )
-)
-def test_viterbi_dp_equals_bruteforce(seq):
-    """The max-plus DP equals the brute-force max over all 2^n state
-    paths for ANY event sequence."""
-    import itertools
-
-    from fusionspark.queries.analytics_queries import (
-        _VIT_EMIT,
-        _VIT_START,
-        _VIT_T,
-    )
-
-    t00, t01, t10, t11 = _VIT_T
-    T = {(0, 0): t00, (0, 1): t01, (1, 0): t10, (1, 1): t11}
-    v0 = _VIT_START[0] + _VIT_EMIT[seq[0]][0]
-    v1 = _VIT_START[1] + _VIT_EMIT[seq[0]][1]
-    for ev in seq[1:]:
-        e0, e1 = _VIT_EMIT[ev]
-        v0, v1 = (
-            max(v0 + t00, v1 + t10) + e0,
-            max(v0 + t01, v1 + t11) + e1,
-        )
-    dp = max(v0, v1)
-    best = -(10**18)
-    for path in itertools.product((0, 1), repeat=len(seq)):
-        sc = _VIT_START[path[0]] + _VIT_EMIT[seq[0]][path[0]]
-        for prev, cur, ev in zip(path, path[1:], seq[1:]):
-            sc += T[(prev, cur)] + _VIT_EMIT[ev][cur]
-        best = max(best, sc)
-    assert dp == best
 
 
 # ── fixed-point TextRank ───────────────────────────────────────────────────

@@ -31,8 +31,8 @@ UNREACHABLE_FAMILIES = {
     # the query registry (DuckDB-oracle contract)
     "queries": ["fusionspark.queries"] + [
         f"fusionspark.queries.{m}_queries"
-        for m in """analytics cdc clustering eval mining pipeline rag
-        spectral text vector""".split()
+        for m in """cdc clustering eval mining pipeline rag spectral text
+        vector""".split()
     ],
     "media": [
         f"fusionspark.operators.{m}"

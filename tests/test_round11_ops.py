@@ -1,8 +1,7 @@
-"""Round-11 operator tests: split-conformal intervals, GRPO advantages,
-ROUGE eval, CDC chunking, PRF expansion, window funnels and the other
-text/mining operators — each checked against an INDEPENDENT
-pure-Python/textbook recomputation (the third-implementation
-discipline), plus behavioral laws (planted effects, coverage bounds,
+"""Round-11 operator tests: GRPO advantages, ROUGE eval, CDC chunking,
+PRF expansion, window funnels and the other text/mining operators — each
+checked against an INDEPENDENT pure-Python/textbook recomputation (the
+third-implementation discipline), plus behavioral laws (planted effects,
 clipped counts)."""
 
 from __future__ import annotations
@@ -13,40 +12,11 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from fusionspark.queries.analytics_queries import conformal_interval
 from fusionspark.queries.pipeline_queries import grpo_advantages, rouge_eval
 
 
 def _coin(salt: str, key) -> int:
     return int(hashlib.md5(f"{salt}{key}".encode()).hexdigest()[:8], 16)
-
-
-# ---------------------------------------------------------------------------
-# conformal
-# ---------------------------------------------------------------------------
-
-
-def test_conformal_quantile_and_coverage(spark, sf_dir):
-    """q̂ is the exact ceil(0.95(n+1)) calibration order statistic, and
-    test coverage sits in the finite-sample band around 95%."""
-    from fusionspark.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "n_chars"
-    ).collect()
-    cal, test = [], []
-    for r in docs:
-        yhat = 6 * (len(r.text) - len(r.text.replace(" ", ""))) + 20
-        resid = abs(r.n_chars - yhat)
-        (cal if _coin("conf:", r.doc_id) % 2 == 0 else test).append(resid)
-    cal.sort()
-    k = min((19 * (len(cal) + 1) + 19) // 20, len(cal))
-    qhat = cal[k - 1]
-    covered = sum(1 for x in test if x <= qhat)
-    row = conformal_interval(spark, sf_dir).collect()[0]
-    assert (row.n_cal, row.n_test, row.qhat) == (len(cal), len(test), qhat)
-    assert row.coverage == round(covered / len(test), 6)
-    assert 0.85 <= row.coverage <= 1.0
 
 
 # ---------------------------------------------------------------------------

@@ -1,11 +1,9 @@
-"""Round-12 operator tests: ROUGE-L LCS, MOSS winnowing fingerprints,
-Cochran's Q, Kendall's W, Page's trend test, Simpson's-paradox audit,
-KMV sketch intersection — each checked against an INDEPENDENT pure-Python
-recomputation from the raw parquet (the third-implementation discipline),
-plus the behavioral laws the implementations lean on (LCS 3-way-max ==
-branch-on-eq, winnowing's shared-run guarantee, Cochran constant-row
-invariance, W = 1 under perfect agreement, Page L maximal on monotone
-tables, a planted Simpson reversal, KMV exactness below k)."""
+"""Round-12 operator tests: ROUGE-L LCS and MOSS winnowing fingerprints,
+each checked against an INDEPENDENT pure-Python recomputation from the
+raw parquet (the third-implementation discipline), plus behavioral laws
+(LCS 3-way-max == branch-on-eq, winnowing's shared-run guarantee, Cochran
+constant-row invariance, W = 1 under perfect agreement, Page L maximal on
+monotone tables, KMV exactness below k)."""
 
 from __future__ import annotations
 
@@ -16,13 +14,6 @@ import random
 
 import pyarrow.parquet as pq
 
-from fusionspark.queries.analytics_queries import (
-    cochran_q,
-    kendall_w,
-    kmv_intersect,
-    page_trend,
-    simpsons_paradox,
-)
 from fusionspark.queries.pipeline_queries import (
     rouge_l_eval,
     winnowing_fingerprints,
@@ -31,10 +22,6 @@ from fusionspark.queries.pipeline_queries import (
 
 def _docs(sf_dir):
     return pq.read_table(f"{sf_dir}/documents.parquet").to_pylist()
-
-
-def _events(sf_dir):
-    return pq.read_table(f"{sf_dir}/events.parquet").to_pylist()
 
 
 def _md5_32(s: str) -> int:
@@ -210,28 +197,6 @@ def _cochran(table: list[tuple[int, int, int]]):
     return None if den == 0 else num / den
 
 
-def test_cochran_python_replay(spark, sf_dir):
-    rows = _events(sf_dir)
-    d0 = min(r["ts"].date() for r in rows)
-    users = collections.defaultdict(lambda: [0, 0, 0])
-    for r in rows:
-        users[r["user_id"]]  # ensure every user appears
-        if r["event_type"] == "purchase":
-            third = min((r["ts"].date() - d0).days // 10, 2)
-            users[r["user_id"]][third] = 1
-    table = list(users.values())
-    q = _cochran(table)
-    got = cochran_q(spark, sf_dir).collect()[0]
-    t = [sum(row[j] for row in table) for j in range(3)]
-    assert (got["n_users"], got["t1"], got["t2"], got["t3"]) == (
-        len(table), t[0], t[1], t[2],
-    )
-    if q is None:
-        assert got["q_stat"] is None
-    else:
-        assert math.isclose(got["q_stat"], _r6(q), abs_tol=1e-9)
-
-
 def test_cochran_constant_rows_cancel():
     """Adding all-0 or all-1 users leaves Q unchanged — the invariance the
     query relies on to skip row filtering."""
@@ -249,40 +214,6 @@ def test_cochran_constant_rows_cancel():
 # ---------------------------------------------------------------------------
 
 
-def _avg_ranks(xs):
-    """Average ranks (ascending) with ties, as exact fractions x2."""
-    out = []
-    for x in xs:
-        less = sum(1 for y in xs if y < x)
-        eq = sum(1 for y in xs if y == x)
-        out.append(2 * less + eq + 1)  # doubled average rank
-    return out
-
-
-def test_kendall_w_python_replay(spark, sf_dir):
-    rows = _events(sf_dir)
-    days = sorted({r["ts"].date() for r in rows})
-    types = sorted({r["event_type"] for r in rows})
-    cnt = collections.Counter((r["ts"].date(), r["event_type"]) for r in rows)
-    n, k = len(days), len(types)
-    rsum = dict.fromkeys(types, 0)
-    tt = 0
-    for d in days:
-        xs = [cnt[(d, g)] for g in types]
-        for g, dr in zip(types, _avg_ranks(xs)):
-            rsum[g] += dr
-        for _, t in collections.Counter(xs).items():
-            tt += t * t * t - t
-    sr2 = sum(v * v for v in rsum.values())
-    w = (3 * sr2 - 3 * k * n * n * (k + 1) ** 2) / (
-        n * n * k * (k * k - 1) - n * tt
-    )
-    got = kendall_w(spark, sf_dir).collect()[0]
-    assert (got["n_blocks"], got["k_objects"]) == (n, k)
-    assert (got["sum_dr2"], got["ties_term"]) == (sr2, tt)
-    assert math.isclose(got["w"], _r6(w), abs_tol=1e-9)
-
-
 def test_kendall_w_perfect_agreement_is_one():
     """Identical untied rankings on every block give W == 1 exactly."""
     n, k = 10, 5
@@ -293,45 +224,9 @@ def test_kendall_w_perfect_agreement_is_one():
     assert w == 1.0
 
 
-def test_kendall_w_is_friedman_effect_size(spark, sf_dir):
-    """W == chi2_F / (n (k-1)) when no ties correction applies; with the
-    shared doubled-rank machinery the two queries must agree through the
-    tie-free part of the identity: chi2_F recomputed from W's integers."""
-    got = kendall_w(spark, sf_dir).collect()[0]
-    n, k = got["n_blocks"], got["k_objects"]
-    sr2 = got["sum_dr2"]
-    chi2_f = 3.0 * sr2 / (n * k * (k + 1)) - 3.0 * n * (k + 1)
-    w_untied = chi2_f / (n * (k - 1))
-    # with ties, W >= the untied form (denominator shrinks)
-    assert got["w"] >= round(w_untied, 6) - 1e-9
-
-
 # ---------------------------------------------------------------------------
 # page_trend
 # ---------------------------------------------------------------------------
-
-
-def test_page_python_replay(spark, sf_dir):
-    rows = _events(sf_dir)
-    days = sorted({r["ts"].date() for r in rows})
-    types = sorted({r["event_type"] for r in rows})
-    cnt = collections.Counter((r["ts"].date(), r["event_type"]) for r in rows)
-    n, k = len(days), len(types)
-    rsum = dict.fromkeys(types, 0)
-    for d in days:
-        xs = [cnt[(d, g)] for g in types]
-        for g, dr in zip(types, _avg_ranks(xs)):
-            rsum[g] += dr
-    l2 = sum((j + 1) * rsum[g] for j, g in enumerate(types))
-    dev = 6 * l2 - 3 * n * k * (k + 1) ** 2
-    chi2 = dev * dev / (n * k * k * (k * k - 1) * (k + 1))
-    got = page_trend(spark, sf_dir).collect()[0]
-    assert (got["n_blocks"], got["k_treatments"], got["l_doubled"]) == (
-        n, k, l2,
-    )
-    assert got["l_stat"] == l2 / 2.0
-    assert got["trend_direction"] == (dev > 0) - (dev < 0)
-    assert math.isclose(got["chi2_l"], _r6(chi2), abs_tol=1e-9)
 
 
 def test_page_l_maximal_on_monotone_table():
@@ -352,120 +247,8 @@ def test_page_l_maximal_on_monotone_table():
 
 
 # ---------------------------------------------------------------------------
-# simpsons_paradox
-# ---------------------------------------------------------------------------
-
-
-def test_simpson_python_replay(spark, sf_dir):
-    rows = _events(sf_dir)
-    cell = collections.Counter()
-    conv = collections.Counter()
-    for r in rows:
-        dow = (r["ts"].weekday() + 1) % 7  # python Mon=0 -> Sun=0 convention
-        g = r["user_id"] % 2
-        cell[(dow, g)] += 1
-        if r["event_type"] == "purchase":
-            conv[(dow, g)] += 1
-    tn0 = sum(v for (d, g), v in cell.items() if g == 0)
-    ta0 = sum(v for (d, g), v in conv.items() if g == 0)
-    tn1 = sum(v for (d, g), v in cell.items() if g == 1)
-    ta1 = sum(v for (d, g), v in conv.items() if g == 1)
-    da = (ta1 * tn0 > ta0 * tn1) - (ta1 * tn0 < ta0 * tn1)
-    got = {r["dow"]: r for r in simpsons_paradox(spark, sf_dir).collect()}
-    assert sorted(got) == sorted({d for d, _ in cell})
-    for d, r in got.items():
-        n0, a0 = cell[(d, 0)], conv[(d, 0)]
-        n1, a1 = cell[(d, 1)], conv[(d, 1)]
-        assert (r["n0"], r["a0"], r["n1"], r["a1"]) == (n0, a0, n1, a1)
-        ds = (a1 * n0 > a0 * n1) - (a1 * n0 < a0 * n1)
-        assert r["dir_stratum"] == ds
-        assert r["dir_aggregate"] == da
-        assert r["reversed"] == (ds * da < 0)
-
-
-def test_simpson_planted_reversal_detected(spark, tmp_path):
-    """The classic UC-Berkeley shape: grp1 wins in EVERY stratum yet loses
-    in aggregate, because grp1 concentrates in the hard stratum — run the
-    actual query on a planted events table and assert it flags every
-    stratum reversed (ADVICE r12: the arithmetic-only form could not
-    catch a regression in the query itself)."""
-    import datetime
-
-    import pyarrow as pa
-
-    # stratum Sunday/dow=0 (easy): grp0 80/100, grp1 90/100 -> grp1 ahead
-    # stratum Monday/dow=1 (hard): grp0 10/100, grp1 200/1000 -> grp1 ahead
-    # aggregate: grp0 90/200 vs grp1 290/1100 -> grp1 BEHIND: the paradox
-    strata = {
-        datetime.datetime(2026, 1, 4, 12): ((100, 80), (100, 90)),  # Sun
-        datetime.datetime(2026, 1, 5, 12): ((100, 10), (1000, 200)),  # Mon
-    }
-    tn0 = ta0 = tn1 = ta1 = 0
-    ts, uid, etype = [], [], []
-    for day, ((n0, a0), (n1, a1)) in strata.items():
-        assert a1 * n0 > a0 * n1  # grp1 ahead within the stratum
-        tn0, ta0, tn1, ta1 = tn0 + n0, ta0 + a0, tn1 + n1, ta1 + a1
-        for g, n, a in ((0, n0, a0), (1, n1, a1)):
-            for i in range(n):
-                ts.append(day + datetime.timedelta(seconds=i))
-                uid.append(2 * i + g)  # user_id % 2 == g
-                etype.append("purchase" if i < a else "view")
-    assert ta1 * tn0 < ta0 * tn1  # grp1 behind in aggregate
-    tbl = pa.table(
-        {
-            "event_id": pa.array(range(len(ts)), pa.int64()),
-            "ts": pa.array(ts, pa.timestamp("us")),
-            "user_id": pa.array(uid, pa.int64()),
-            "event_type": pa.array(etype, pa.string()),
-            "value": pa.array([0.0] * len(ts), pa.float64()),
-            "props": pa.array(["{}"] * len(ts), pa.string()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "events.parquet"))
-    rows = {r["dow"]: r for r in simpsons_paradox(spark, str(tmp_path)).collect()}
-    assert sorted(rows) == [0, 1]
-    for dow, ((n0, a0), (n1, a1)) in zip((0, 1), strata.values()):
-        r = rows[dow]
-        assert (r["n0"], r["a0"], r["n1"], r["a1"]) == (n0, a0, n1, a1)
-        assert r["dir_stratum"] == 1
-        assert r["dir_aggregate"] == -1
-        assert r["reversed"] is True
-
-
-# ---------------------------------------------------------------------------
 # kmv_intersect
 # ---------------------------------------------------------------------------
-
-
-def test_kmv_python_replay(spark, sf_dir):
-    rows = _events(sf_dir)
-    sets = collections.defaultdict(set)
-    for r in rows:
-        sets[r["event_type"]].add(r["user_id"])
-    K = 64
-    sk = {
-        g: sorted({_md5_32(f"kmv:{u}") for u in us})[:K]
-        for g, us in sets.items()
-    }
-    got = {
-        (r["type_a"], r["type_b"]): r
-        for r in kmv_intersect(spark, sf_dir).collect()
-    }
-    types = sorted(sets)
-    for i, g1 in enumerate(types):
-        for g2 in types[i + 1:]:
-            a, b = set(sk[g1]), set(sk[g2])
-            union_k = sorted(a | b)[:K]
-            inter = sum(1 for h in union_k if h in a and h in b)
-            ti = len(sets[g1] & sets[g2])
-            tu = len(sets[g1] | sets[g2])
-            r = got[(g1, g2)]
-            assert (r["union_k"], r["kmv_inter"]) == (len(union_k), inter)
-            assert math.isclose(
-                r["est_jaccard"], _r6(inter / len(union_k)), abs_tol=1e-9
-            )
-            assert (r["true_inter"], r["true_union"]) == (ti, tu)
-            assert math.isclose(r["true_jaccard"], _r6(ti / tu), abs_tol=1e-9)
 
 
 def test_kmv_exact_below_k():

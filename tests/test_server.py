@@ -287,6 +287,31 @@ def test_router_status_codes(srv_engine, monkeypatch, caplog):
     })
     assert status == 400 and "dimension" in out["error"]
 
+    # a top-k below 1 is a 400 on the snapshot path and on the Spark path
+    import fusionspark.operators.serving as sv
+
+    for i, vec in enumerate(([1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0])):
+        r.route("POST", "/api/insert", {
+            "collection": "w", "id": f"t{i}", "vector": vec, "text": "spark doc",
+        })
+    reads = [
+        ("/api/search", {"vector": [1.0, 0.0, 0.0, 0.0]}),
+        ("/api/hybrid-search", {"query": "spark"}),
+        ("/api/rag/query", {"query": "spark"}),
+    ]
+    on_spark = Router(FusionSparkEngine(srv_engine.spark, srv_engine.root))
+    for router, fraction in ((on_spark, 0.0), (r, sv.SNAPSHOT_MEM_FRACTION)):
+        monkeypatch.setattr(sv, "SNAPSHOT_MEM_FRACTION", fraction)
+        for path, body in reads:
+            for top_k in (0, -1):
+                status, out = router.route(
+                    "POST", path, {"collection": "w", "topK": top_k, **body})
+                assert status == 400 and "top_k" in out["error"], (path, top_k)
+        status, out = router.route("POST", "/api/search", {
+            "collection": "w", "topK": 1, **reads[0][1]})
+        assert status == 200 and [h["id"] for h in out] == ["t0"]
+    assert "w" in srv_engine._snapshots and not on_spark.engine._snapshots
+
     def broken(*args, **kwargs):
         raise RuntimeError("engine bug")
 

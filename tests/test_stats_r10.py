@@ -1,6 +1,5 @@
 """Round-10 pipeline queries (compaction plans, DP noise, weighted
-sampling, perplexity, Luhn, feature MI, Burrows delta) and the Poisson
-rate test: independent
+sampling, perplexity, Luhn, feature MI, Burrows delta): independent
 pure-Python recomputation from the raw parquet (a third implementation
 besides the Spark query and its DuckDB oracle)."""
 
@@ -16,14 +15,6 @@ SF = "/root/testdata/sf0.001"
 
 def _rows(sql):
     return duckdb.connect().execute(sql).fetchall()
-
-
-def _one(spark, name):
-    from fusionspark.queries import REGISTRY, load_all
-
-    load_all()
-    fn, _ = REGISTRY[name]
-    return fn(spark, SF).collect()[0]
 
 
 def test_compaction_plan_is_ffd_and_feasible(spark):
@@ -264,18 +255,3 @@ def test_burrows_delta_separates_planted_styles(spark):
     assert got[("s1", "s2")] < got[("s2", "s3")]
 
 
-def test_poisson_rate_test_matches_pure_python(spark):
-    rows = _rows(
-        f"""SELECT SUM(CASE WHEN event_type='purchase' THEN 1 ELSE 0 END),
-                   SUM(CASE WHEN event_type='click' THEN 1 ELSE 0 END)
-            FROM read_parquet('{SF}/events.parquet')"""
-    )
-    n1, n2 = rows[0]
-    z = (n1 - n2) / math.sqrt(n1 + n2)
-    got = _one(spark, "poisson_rate_test")
-    assert (got.n1, got.n2) == (n1, n2)
-    assert got.z == pytest.approx(z, abs=2e-6)
-    assert got.p_approx == pytest.approx(
-        2.0 / (1.0 + math.exp(0.07056 * abs(z) ** 3 + 1.5976 * abs(z))),
-        abs=2e-6,
-    )

@@ -21,8 +21,8 @@ sf = "/root/testdata/sf0.1"
 #: r13 burn-down rewrote SEVEN of the original nine entries onto grid
 #: forms (operators/ranking.py::ntile_exact for NTILE designs —
 #: nb_calibration, curriculum_shards, ccnet_buckets; value-grid
-#: cumulative order-statistic picks for rank-pick designs —
-#: conformal_interval, range_bounds_plan; prefix_sum_exact's two-pass
+#: cumulative order-statistic picks for two rank-pick designs since
+#: deleted; prefix_sum_exact's two-pass
 #: parallel scan for systematic_sample), all output-identical and
 #: strict ×3-SF re-gated.  r14 closed the last two (context_pack,
 #: quality_estimate): their windows were always bounded by the keyword
@@ -422,18 +422,6 @@ ex_args = _re.findall(r"\(\d+\) Exchange[^\n]*\nInput[^\n]*\nArguments: ([^\n]*)
 print("== split_leakage: broadcasts:", p.count("BroadcastExchange") >= 1,
       "text_in_exchange_key:", any("text#" in a for a in ex_args))
 
-# skyline_parts: phase-1 window partitions by spark_partition_id (local
-# skylines), phase-2 is the tiny global window; the part aggregation is
-# the only wide exchange
-sk = _R["skyline_parts"][0](spark, sf)
-buf = _io.StringIO()
-with _ctx.redirect_stdout(buf):
-    sk.explain("formatted")
-p = buf.getvalue()
-print("== skyline_parts: local_phase:", "SPARK_PARTITION_ID" in p,
-      "windows:", len(_re.findall(r"\(\d+\) Window", p)),
-      "cartesian:", "CartesianProduct" in p)
-
 # 16. round-8 session-7 batch-2 plan claims
 # neardup_prefix: candidate join keys on the shingle string; all joins
 # equi; the verify join carries candidate ids + shingles only, never
@@ -504,8 +492,7 @@ for qn, label in (
 # exchange key (text never shuffles).  window_funnel: the 3-type filter
 # must PUSH to the scan and the only wide exchange is user_id.
 # skipgram_pairs: the per-word threshold join must BROADCAST.
-# mann_whitney_u / conformal_interval: bounded-frame windows, no
-# cartesian.
+# mann_whitney_u: bounded-frame windows, no cartesian.
 # rouge_eval: (doc_id, gram) equi-joins, no doc-pair comparison.
 # prf_expansion: feedback side broadcasts; term-keyed candidate join.
 for qn, label in (
@@ -516,7 +503,6 @@ for qn, label in (
     ("rouge_eval", "clipped gram join"),
     ("prf_expansion", "feedback offer weights"),
     ("grpo_advantages", "group standardization"),
-    ("conformal_interval", "calibration quantile"),
 ):
     qq = _R[qn][0](spark, sf)
     buf = _io.StringIO()
@@ -546,13 +532,12 @@ print("== window_funnel pushed IN filter:",
 # ── round-11-continuation operators: same contracts ──────────────────────
 # textrank_keywords: 5 vocab-keyed join iterations; word keys are single
 #   tokens by design (exempt from the doc-text key rule).
-# viterbi_decode: one groupBy(user) fold; exact integers end to end.
-# dtw_distance / needleman_wunsch / smith_waterman: nested folds inside
-#   ONE row — no pairwise exchange, no cartesian.
-# uplift_stump / decision_stump / kruskal_wallis: distinct-value grids +
-#   cumulative windows; corpus touched by map-side-combined aggregates.
-# systematic_sample / range_bounds_plan / qini_curve: one honest ordered
-#   window each (the documented global-sort cost of ranked designs).
+# needleman_wunsch / smith_waterman: nested folds inside ONE row — no
+#   pairwise exchange, no cartesian.
+# decision_stump: distinct-value grid + cumulative windows; corpus
+#   touched by map-side-combined aggregates.
+# systematic_sample: one honest ordered window (the documented
+#   global-sort cost of ranked designs).
 # Round 12 additions:
 # rouge_l_eval: LCS DP as ONE zero-shuffle Arrow kernel (python_nodes=1
 #   — vectorized DP, the cdc_chunk_hashes class); zero joins, zero
@@ -560,35 +545,15 @@ print("== window_funnel pushed IN filter:",
 # winnowing_fingerprints: fingerprint-VALUE-keyed candidate join with a
 #   df cap — the banded-LSH shape, never all-pairs; text never an
 #   exchange key (fingerprints are BIGINTs).
-# cochran_q / kendall_w / page_trend / simpsons_paradox: one map-side-
-#   combined groupBy collapses the stream; statistics evaluate on
-#   day-grid / 1-row frames (page_trend's ROW_NUMBER window runs over 5
-#   rows).
-# kmv_intersect: corpus collapses through distinct(type,user); sketches
-#   are fixed 64-row state per set — the per-type rank window partitions
-#   by type, never a single global sort of the corpus.
 for qn, label in (
     ("rouge_l_eval", "Arrow LCS DP kernel"),
     ("winnowing_fingerprints", "winnowing candidates"),
-    ("cochran_q", "paired binary thirds"),
-    ("kendall_w", "concordance grid"),
-    ("page_trend", "ordered-trend grid"),
-    ("simpsons_paradox", "stratified directions"),
-    ("kmv_intersect", "KMV sketch pairs"),
     ("textrank_keywords", "fixed-point iterations"),
-    ("viterbi_decode", "max-plus user folds"),
-    ("dtw_distance", "nested in-row DP"),
     ("needleman_wunsch", "global alignment"),
     ("smith_waterman", "local alignment"),
-    ("uplift_stump", "uplift grid split"),
-    ("kruskal_wallis", "doubled-rank grid"),
-    ("attribution_shapley", "coalition sums"),
-    ("k_truss", "edge peeling"),
     ("hll_daily_union", "register merge"),
     ("linear_shap", "hashed attributions"),
-    ("qini_curve", "decile qini"),
     ("systematic_sample", "PPS grid crossing"),
-    ("entropy_rate", "markov plug-in"),
 ):
     qq = _R[qn][0](spark, sf)
     buf = _io.StringIO()
